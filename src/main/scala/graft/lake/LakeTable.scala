@@ -569,16 +569,6 @@ final class LakeTable(spark: SparkSession, val path: Path) {
     * `snap`, then apply the DV steady-state policy. Returns the number
     * of NEWLY deleted rows.
     */
-  // Stage-level wall-clock probe for DML decompositions (BENCHNOTES
-  // uses it via scratch drivers); inert unless GRAFT_DEBUG_TIMING is
-  // set, so production paths pay nothing.
-  private def dbgTime[A](label: String)(f: => A): A =
-    if (!sys.env.contains("GRAFT_DEBUG_TIMING")) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"GRAFTTIME $label ${(System.nanoTime() - t0) / 1e9}%.2f"); r
-    }
-
   private def commitMorDeletes(
       snap: Snapshot,
       newDvRows: DataFrame,
@@ -593,8 +583,8 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       // new-delete counts carry the touched set, the deleted total,
       // AND the DV writer's cardinalities
       val nc: Map[String, Long] = newCounts.getOrElse(
-        dbgTime("mor.stats")(cached.groupBy("file").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap))
+        cached.groupBy("file").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap)
       val touchedRel = nc.keySet
       val touched = snap.files.filter(f => touchedRel.contains(f.path))
       val newDeleted = nc.values.sum
@@ -625,12 +615,12 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       import scala.concurrent.ExecutionContext.Implicits.global
       val dvOutF: Future[Option[(String, Map[String, (Int, Long)], Long)]] =
         if (touched.isEmpty) Future.successful(None)
-        else Future(Some(dbgTime("mor.writeDv")(writeDvFile(dvAll, totalCounts))))
+        else Future(Some(writeDvFile(dvAll, totalCounts)))
       val addsF: Future[Seq[AddFile]] = appendDf match {
         case None => Future.successful(Nil)
-        case Some(df) => Future(dbgTime("mor.append")(
+        case Some(df) => Future(
           writeDataFiles(bucketize(df, bucketingOf(snap)),
-            snap.metadata.partitionColumns, "snappy", bucketingOf(snap), mappingOf(snap))))
+            snap.metadata.partitionColumns, "snappy", bucketingOf(snap), mappingOf(snap)))
       }
       val dvOut = Await.result(dvOutF, Duration.Inf)
       val adds = Await.result(addsF, Duration.Inf)
@@ -654,8 +644,8 @@ final class LakeTable(spark: SparkSession, val path: Path) {
         }
       }
       adds.foreach(a => actions += addAction(a))
-      dbgTime("mor.commit")(commitPinned(snap.version, actions.result()))
-      dbgTime("mor.policy")(applyDvPolicy(snap.metadata.configuration))
+      commitPinned(snap.version, actions.result())
+      applyDvPolicy(snap.metadata.configuration)
       newDeleted
     } finally cached.unpersist()
   }
@@ -1235,12 +1225,10 @@ final class LakeTable(spark: SparkSession, val path: Path) {
     */
   private def sourceBucketIds(
       src: DataFrame, exprs: Seq[Column], numBuckets: Int): Set[Int] =
-    dbgTime("merge.bucketIds") {
-      src.select(org.apache.spark.sql.functions.pmod(
-          org.apache.spark.sql.functions.hash(exprs: _*),
-          lit(numBuckets)).as("__graft_bucket"))
-        .distinct().collect().map(_.getInt(0)).toSet
-    }
+    src.select(org.apache.spark.sql.functions.pmod(
+        org.apache.spark.sql.functions.hash(exprs: _*),
+        lit(numBuckets)).as("__graft_bucket"))
+      .distinct().collect().map(_.getInt(0)).toSet
 
   private def pruneToBuckets(snap: Snapshot, ids: Set[Int]): Snapshot =
     snap.copy(files = snap.files.filter(f =>
@@ -1317,7 +1305,7 @@ final class LakeTable(spark: SparkSession, val path: Path) {
     val schema = snap.schema
     val src = alignToSchema(source, schema).cache()
     try {
-      dbgTime("merge.constraints")(enforceConstraints(src, snap))
+      enforceConstraints(src, snap)
       if (mergeModeOf(snap) == "merge-on-read") {
         // upsert ≡ delete every key-matched target row + append all
         // source rows (MergeOps.upsert algebra); record the deletes as
@@ -1596,8 +1584,6 @@ final class LakeTable(spark: SparkSession, val path: Path) {
     // the 8 GB driver-side broadcast hard cap still backstops a
     // pathological under-estimate.
     val srcBytes = src.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (sys.env.contains("GRAFT_DEBUG_TIMING"))
-      println(s"GRAFTSIZE srcBytes=$srcBytes fits=${srcBytes <= 4 * DvBroadcastBytes}")
     val srcFits = srcBytes <= 4 * DvBroadcastBytes
     val srcS = src.withColumn("__graft_s", lit(true))
     val joined =
@@ -1640,13 +1626,13 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       // file grain — file count is metadata-sized, so the collect is
       // safe at any scale.
       val scanToRelMap = snap.files.map(f => scanPathOf(f) -> f.path).toMap
-      val fileStats = dbgTime("mor.stats")(changes.where(tPresent)
+      val fileStats = changes.where(tPresent)
         .groupBy(col("__graft_file"), col("__graft_row"))
         .agg(sum(when(sPresent, 1L).otherwise(0L)).as("__m"),
           max(when(col("__graft_idx") >= 0, 1L).otherwise(0L)).as("__a"))
         .groupBy(col("__graft_file"))
         .agg(sum(col("__a")).as("__claimed"), max(col("__m")).as("__maxm"))
-        .collect())
+        .collect()
       if (spec.matched.nonEmpty) {
         // ANSI cardinality rule — (file, row-index) IS a target row
         // id; counted over ALL matched pairs, claimed or not (a

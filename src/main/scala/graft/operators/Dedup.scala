@@ -698,46 +698,6 @@ object Dedup {
     */
   private[operators] val IsinPruneMaxIds: Int = 4096
 
-  /** ONE-job truncated collect (the plan-pick probe): each task
-    * enumerates its partition up to `cap` and ships rows back only
-    * while the task itself stayed under the cap; the driver sums
-    * counts as task results arrive and drops rows the moment the
-    * total overflows, so memory is cap-bounded at any cluster size
-    * and an oversized frame costs a few cut-short tasks shipping
-    * nothing but a long. (limit().collect() would be wrong twice
-    * here: CollectLimit escalates through multiple jobs — 1
-    * partition, then 4, 16, … — when the frame is SMALLER than the
-    * cap, and its per-task row shipping is partitions × cap in the
-    * worst case.) Returns (total seen — exact only while ≤ cap, rows
-    * — empty when the total overflowed).
-    */
-  private def truncatedCollect(df: DataFrame, cap: Int)
-      : (Long, scala.collection.mutable.ArrayBuffer[
-          org.apache.spark.sql.catalyst.InternalRow]) = {
-    val keep = new scala.collection.mutable.ArrayBuffer[
-      org.apache.spark.sql.catalyst.InternalRow]
-    var total = 0L
-    df.sparkSession.sparkContext.runJob(
-      df.queryExecution.toRdd,
-      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-        val buf = new scala.collection.mutable.ArrayBuffer[
-          org.apache.spark.sql.catalyst.InternalRow]
-        var n = 0L
-        while (it.hasNext && n < cap + 1) {
-          val r = it.next(); n += 1
-          if (n <= cap) buf += r.copy()
-        }
-        if (n > cap) (n, Array.empty[org.apache.spark.sql.catalyst.InternalRow])
-        else (n, buf.toArray)
-      },
-      (_: Int, res: (Long, Array[org.apache.spark.sql.catalyst.InternalRow])) => {
-        total += res._1
-        if (total > cap) keep.clear() else keep ++= res._2
-      })
-    if (total > cap) keep.clear()
-    (total, keep)
-  }
-
   /** Internal→external value normalization, so collected id values
     * feed isin()/Row() literals directly (ids are usually longs;
     * string ids arrive as UTF8String).
@@ -781,11 +741,13 @@ object Dedup {
     par.select(col("id"), kernel(col("t")).as("elems"))
   }
 
-  /** NOTE for pipeline builders: this method runs ONE Spark job
-    * EAGERLY at DataFrame-construction time (the plan-pick probe
-    * below) — it replaces strictly costlier lazy sizing jobs, but a
-    * caller batching many overlap frames before any action still pays
-    * one probe job per frame at build time, not at execution time.
+  /** NOTE for pipeline builders: this method runs ONE bounded
+    * collect EAGERLY at DataFrame-construction time (the plan-pick
+    * probe below: one Spark job, two when the pairs fit but are
+    * unevenly spread) — it replaces strictly costlier lazy sizing
+    * jobs, but a caller batching many overlap frames before any action
+    * still pays one probe per frame at build time, not at execution
+    * time.
     * Callers via `shingleOverlap(compact = false)` /
     * `charNgramOverlap(compact = false)` stay fully lazy.
     */
@@ -794,7 +756,7 @@ object Dedup {
       pairs: DataFrame, compact: Boolean): DataFrame = {
     def fullSets: DataFrame =
       rebalance(raw).select(col("id"), kernel(col("t")).as("elems"))
-    // Plan-pick via a TRUNCATED COLLECT PROBE — the resolution of the
+    // Plan-pick via a BOUNDED COLLECT PROBE — the resolution of the
     // toy-scale/sf10 tension. The two prior gates each lost one
     // regime: eagerly checkpointing the pair frame (r8) was cheap at
     // toy scale but materialized 82M cross-join pairs into ~4 GB of
@@ -803,96 +765,80 @@ object Dedup {
     // sf10-safe but spent 1–2 job floors re-enumerating a sub-second
     // query's pair frame (q23/q45 regressed 2.7–3.2×).
     //
-    // The probe is ONE job: each task enumerates its partition up to
-    // the cap and ships back (truncated count, its rows — but only
-    // when the task itself stayed under the cap). The driver sums the
-    // counts as task results arrive and drops rows the moment the
-    // total overflows, so memory is cap-bounded at any cluster size
-    // and an 82M-pair frame costs a few cut-short tasks shipping
-    // nothing but a long. (limit().collect() would be wrong twice
-    // here: CollectLimit escalates through multiple jobs — 1
-    // partition, then 4, 16, … — when the frame is SMALLER than the
-    // cap, and its per-task row shipping is partitions × cap in the
-    // worst case.)
-    val spark = raw.sparkSession
+    // The probe is ONE BoundedCollect: an 82M-pair frame costs a few
+    // cut-short tasks shipping at most the caps in total.
     val p2 = pairs.select(col("id_a"), col("id_b"))
-    val schema = p2.schema
-    val cap = PairCollectMaxRows
-    val (total, keep) = truncatedCollect(p2, cap)
-    if (total <= cap) {
-      // The frame collected whole — everything at once: an EXACT
-      // distinct-id count (in-memory set, no sizing jobs) and a
-      // LocalRelation pair frame the chosen plan consumes with ZERO
-      // re-enumeration (the compact plan references pairs 3×; against
-      // a lazy cross join each reference re-ran it).
-      val attrs = schema.map(f =>
-        org.apache.spark.sql.catalyst.expressions.AttributeReference(
-          f.name, f.dataType, f.nullable)())
-      val local = SparkBridge.ofRows(spark,
-        org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
-          attrs, keep.toSeq))
-      // 0 pairs: skip BOTH plans — an empty, correctly-typed overlap
-      // frame, no kernel or corpus work (limit(0) folds the whole
-      // subtree to an empty relation at optimization)
-      if (total == 0)
-        return setOverlapOn(fullSets.limit(0), local, hashElements = false)
-      val (dtA, dtB) = (schema(0).dataType, schema(1).dataType)
-      val ids = new scala.collection.mutable.HashSet[Any]
-      keep.foreach { r =>
-        if (!r.isNullAt(0)) ids += extValue(r.get(0, dtA))
-        if (!r.isNullAt(1)) ids += extValue(r.get(1, dtB))
-      }
-      // Prune FIRST, with the driver-known ids (prunedKernelSets), so
-      // the element kernel runs over the PAIRED docs only — never the
-      // corpus. This is what the pre-built-sets shape could not do:
-      // the kernel projection sat below the semi-join, and only
-      // PushDownLeftSemiAntiJoin's mercy (blocked by the rebalance
-      // exchange) decided whether the whole corpus got shingled.
-      if (compact && ids.size <= CompactVerifyMaxIds)
-        setOverlapPruned(
-          prunedKernelSets(raw, kernel, ids, p2.schema.head), local)
-      // no materialize: a LocalRelation needs no lineage cut
-      else setOverlapOn(fullSets, local, hashElements = false)
-    } else {
-      // Overflow — the genuinely-large regime. The pair frame cannot
-      // live on the driver, but its DISTINCT IDS usually can — the
-      // compact gate is CompactVerifyMaxIds (2¹⁷ ids ≈ 1 MB of longs)
-      // anyway — so probe the distinct-id frame with the same
-      // truncated collect. The distinct's partial aggregation makes
-      // every map task's output id-bounded, so the probe job ships at
-      // most nIds rows even under an 82M-pair frame. Two wins over
-      // the old count()-then-semi-join shape when the ids land under
-      // the cap: the corpus scan is pruned with DRIVER-KNOWN ids
-      // (isin / broadcast LocalRelation — no pair re-enumeration
-      // feeding a semi-join), and the pair frame is enumerated
-      // exactly ONCE (its single remaining consumer is the verify
-      // join).
-      val idsDf = p2
-        .select(explode(array(col("id_a"), col("id_b"))).as("id"))
-        .where(col("id").isNotNull).distinct()
-      val (nIds, idRows) = truncatedCollect(idsDf, CompactVerifyMaxIds.toInt)
-      // Parallelism (the sf10 lesson of this branch): a cross-join /
-      // BNLJ pair frame inherits its STREAM side's scan partitioning —
-      // 82M pairs in 2 partitions at sf10 — and everything downstream
-      // (verify join + intersect kernel) would run on those 2 cores.
-      // Rebalance KEYED on (id_a, id_b): hash assignment streams
-      // straight into the exchange, where round-robin repartition must
-      // TimSort every source partition first (sortBeforeRepartition —
-      // measured at sf10, the pre-sort of 82M rows on 2 cores WAS the
-      // query: jstack showed all live cycles in TimSort under
-      // ShuffleExchangeExec).
-      def parPairs = rebalance(pairs, Seq(col("id_a"), col("id_b")))
-      if (compact && nIds <= CompactVerifyMaxIds) {
-        val idType = idsDf.schema.head.dataType
-        val ids = idRows.iterator.map(r => extValue(r.get(0, idType))).toSeq
-        setOverlapPruned(
-          prunedKernelSets(raw, kernel, ids, idsDf.schema.head), parPairs)
-      }
-      // exploded fallback: materialize AFTER the keyed rebalance, so
-      // the checkpoint blocks land spread across the cluster (not 4 GB
-      // in the stream side's 2 scan partitions — the r8 OOM shape) and
-      // every consumer of the materialized frame starts parallel
-      else setOverlapOn(fullSets, materialize(parPairs), hashElements = false)
+    BoundedCollect(p2, PairCollectMaxRows, BoundedCollect.GateBytes) match {
+      case c: BoundedCollect.Collected =>
+        // The frame collected whole — everything at once: an EXACT
+        // distinct-id count (in-memory set, no sizing jobs) and a
+        // LocalRelation pair frame the chosen plan consumes with ZERO
+        // re-enumeration (the compact plan references pairs 3×; against
+        // a lazy cross join each reference re-ran it).
+        val local = c.toFrame(raw.sparkSession)
+        // 0 pairs: skip BOTH plans — an empty, correctly-typed overlap
+        // frame, no kernel or corpus work (limit(0) folds the whole
+        // subtree to an empty relation at optimization)
+        if (c.rows.isEmpty)
+          return setOverlapOn(fullSets.limit(0), local, hashElements = false)
+        val (dtA, dtB) = (c.schema(0).dataType, c.schema(1).dataType)
+        val ids = new scala.collection.mutable.HashSet[Any]
+        c.rows.foreach { r =>
+          if (!r.isNullAt(0)) ids += extValue(r.get(0, dtA))
+          if (!r.isNullAt(1)) ids += extValue(r.get(1, dtB))
+        }
+        // Prune FIRST, with the driver-known ids (prunedKernelSets), so
+        // the element kernel runs over the PAIRED docs only — never the
+        // corpus. This is what the pre-built-sets shape could not do:
+        // the kernel projection sat below the semi-join, and only
+        // PushDownLeftSemiAntiJoin's mercy (blocked by the rebalance
+        // exchange) decided whether the whole corpus got shingled.
+        if (compact && ids.size <= CompactVerifyMaxIds)
+          setOverlapPruned(
+            prunedKernelSets(raw, kernel, ids, p2.schema.head), local)
+        // no materialize: a LocalRelation needs no lineage cut
+        else setOverlapOn(fullSets, local, hashElements = false)
+      case _: BoundedCollect.Overflow =>
+        // Overflow — the genuinely-large regime. The pair frame cannot
+        // live on the driver, but its DISTINCT IDS usually can — the
+        // compact gate is CompactVerifyMaxIds (2¹⁷ ids ≈ 1 MB of longs)
+        // anyway — so probe the distinct-id frame with the same
+        // bounded collect. The distinct's partial aggregation makes
+        // every map task's output id-bounded, so the probe job ships
+        // a bounded id set even under an 82M-pair frame. Two wins over
+        // the old count()-then-semi-join shape when the ids land under
+        // the cap: the corpus scan is pruned with DRIVER-KNOWN ids
+        // (isin / broadcast LocalRelation — no pair re-enumeration
+        // feeding a semi-join), and the pair frame is enumerated
+        // exactly ONCE (its single remaining consumer is the verify
+        // join).
+        val idsDf = p2
+          .select(explode(array(col("id_a"), col("id_b"))).as("id"))
+          .where(col("id").isNotNull).distinct()
+        val idSet = BoundedCollect(idsDf, CompactVerifyMaxIds, BoundedCollect.GateBytes)
+        // Parallelism (the sf10 lesson of this branch): a cross-join /
+        // BNLJ pair frame inherits its STREAM side's scan partitioning —
+        // 82M pairs in 2 partitions at sf10 — and everything downstream
+        // (verify join + intersect kernel) would run on those 2 cores.
+        // Rebalance KEYED on (id_a, id_b): hash assignment streams
+        // straight into the exchange, where round-robin repartition must
+        // TimSort every source partition first (sortBeforeRepartition —
+        // measured at sf10, the pre-sort of 82M rows on 2 cores WAS the
+        // query: jstack showed all live cycles in TimSort under
+        // ShuffleExchangeExec).
+        def parPairs = rebalance(pairs, Seq(col("id_a"), col("id_b")))
+        idSet match {
+          case ids: BoundedCollect.Collected if compact =>
+            val idType = ids.schema.head.dataType
+            setOverlapPruned(prunedKernelSets(raw, kernel,
+              ids.rows.iterator.map(r => extValue(r.get(0, idType))).toSeq,
+              ids.schema.head), parPairs)
+          // exploded fallback: materialize AFTER the keyed rebalance, so
+          // the checkpoint blocks land spread across the cluster (not 4 GB
+          // in the stream side's 2 scan partitions — the r8 OOM shape) and
+          // every consumer of the materialized frame starts parallel
+          case _ => setOverlapOn(fullSets, materialize(parPairs), hashElements = false)
+        }
     }
   }
 
@@ -1172,9 +1118,8 @@ object Dedup {
     * collect).
     *
     * Driver memory bound: the collected probe matrix is capped by
-    * BOTH `maxChunkedProbes` rows and the `maxCollectBytes` byte
-    * budget (~`rows × dims × 8` bytes, dims sniffed from the gate
-    * prefix — Similarity.decideRegime). When nChunks > 1 each chunk
+    * BOTH `maxChunkedProbes` rows and the `maxCollectBytes` budget of
+    * exact row bytes (Similarity.decideRegime). When nChunks > 1 each chunk
     * re-runs `emb`'s full lineage: persist a DERIVED emb (anything
     * that isn't a plain parquet scan) before calling, or the upstream
     * compute repeats per chunk.
@@ -1187,12 +1132,11 @@ object Dedup {
       threshold: Double,
       maxEmbeddedProbes: Int = 1 << 16,
       maxChunkedProbes: Int = 1 << 20,
-      maxCollectBytes: Long = 512L << 20,
-      dims: Option[Int] = None): DataFrame =
+      maxCollectBytes: Long = 512L << 20): DataFrame =
     embeddingNearDupFrames(
       emb.where(probeFilter).select(col(idCol), col(vecCol)), idCol, vecCol,
       emb, idCol, vecCol, threshold, maxEmbeddedProbes, maxChunkedProbes,
-      maxCollectBytes, dims = dims)
+      maxCollectBytes)
 
   /** [[embeddingNearDup]] with probes and corpus as SEPARATE frames
     * (cross-corpus near-dup: decontamination-style "which corpus docs
@@ -1237,58 +1181,36 @@ object Dedup {
       maxEmbeddedProbes: Int = 1 << 16,
       maxChunkedProbes: Int = 1 << 20,
       maxCollectBytes: Long = 512L << 20,
-      allPairs: Boolean = false,
-      dims: Option[Int] = None): DataFrame = {
+      allPairs: Boolean = false): DataFrame = {
     val spark = corpus.sparkSession
     import graft.functions.VectorFunctions
-    val gate = math.max(maxEmbeddedProbes, 0)
-    import org.apache.spark.sql.graftbridge.SparkBridge
     val dec = Similarity.decideRegime(probes, probeIdCol, probeVecCol,
       Some((corpus, corpusIdCol, corpusVecCol)),
-      gate, maxChunkedProbes, maxCollectBytes, knownDims = dims)
+      maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes)
     dec.regime match {
       case Similarity.AnnRegime.Probes(collected) =>
         // EMBEDDED/CHUNKED: per corpus row the graft_probe_matches
         // kernel emits matching probe ids directly, with no joined-row
         // materialization; scoring is bit-identical to the join form
-        // (split norms, dot per pair, zero guard). Null id or vector:
-        // dropped (the join regime's null-condition semantics), never
-        // an NPE on getLong.
-        val usable = collected.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+        // (split norms, dot per pair, zero guard)
         val all = rebalance(
           corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")),
           Seq(col("cand_id")))
-        val chunk = math.max(dec.chunkRows, 1)
-        val nChunks = math.max(1, math.ceil(usable.length.toDouble / chunk).toInt)
-        val frames = (0 until nChunks).map { c =>
-          val lo = (c.toLong * usable.length / nChunks).toInt
-          val hi = ((c + 1).toLong * usable.length / nChunks).toInt
-          val slice = usable.slice(lo, hi)
-          val pIds = slice.map(_.getLong(0))
-          val pVecs = slice.map(_.getSeq[Double](1).toArray)
+        Similarity.chunks(collected, maxEmbeddedProbes).map { case (pIds, pVecs) =>
           val matches = SparkBridge.column(graft.functions.TopKFunctions.ProbeMatches(
             SparkBridge.expression(all("cand_id")),
             SparkBridge.expression(all("cand_vec")),
             pIds, pVecs, threshold, emitAll = allPairs))
           all.select(col("cand_id"), explode(matches).as("probe_id"))
-        }
-        frames.reduce(_.union(_))
+        }.reduce(_.union(_))
           .select(col("probe_id"), col("cand_id").cast("long").as("cand_id"))
       case Similarity.AnnRegime.Corpus(candCollected) =>
         // ROLE SWAP: embed the corpus (reversed kernel over the probe
         // scan; disjoint candidate chunks union directly — no merge)
-        val usable = candCollected.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
         val probeFrame = rebalance(
           probes.select(col(probeIdCol).as("probe_id"), col(probeVecCol).as("probe_vec")),
           Seq(col("probe_id")))
-        val chunk = math.max(dec.chunkRows, 1)
-        val nChunks = math.max(1, math.ceil(usable.length.toDouble / chunk).toInt)
-        (0 until nChunks).map { c =>
-          val lo = (c.toLong * usable.length / nChunks).toInt
-          val hi = ((c + 1).toLong * usable.length / nChunks).toInt
-          val slice = usable.slice(lo, hi)
-          val cIds = slice.map(_.getLong(0))
-          val cVecs = slice.map(_.getSeq[Double](1).toArray)
+        Similarity.chunks(candCollected, maxEmbeddedProbes).map { case (cIds, cVecs) =>
           // kernel DIRECTLY inside the generator (never an aliased
           // array: InferFiltersFromGenerate would duplicate it — the
           // bruteForceTopKFrames role-swap audit caught exactly that)
@@ -1300,8 +1222,7 @@ object Dedup {
         }.reduce(_.union(_))
           .select(col("probe_id").cast("long").as("probe_id"), col("cand_id"))
       case Similarity.AnnRegime.BothOver =>
-        if (gate > 0) Similarity.enforceJoinContract(spark, "embeddingNearDup",
-          dec.effectiveCap)
+        dec.overflow.foreach(Similarity.enforceJoinContract(spark, "embeddingNearDup", _))
         // norms once per SIDE row, dot alone per pair: bit-identical to
         // the cosine kernel (same accumulation, same sqrt-product
         // denominator — Similarity.splitScore scaladoc) at a third of

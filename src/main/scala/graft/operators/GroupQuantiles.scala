@@ -54,12 +54,12 @@ import org.apache.spark.sql.types._
   * not just a slow query.
   *
   * Driver state is GROUP-BOUNDED and the bound is enforced BEFORE any
-  * driver transfer: pass 1 collects through `.limit(maxGroups + 1)`
-  * (CollectLimit — the aggregate still runs fully distributed, but at
-  * most maxGroups+1 stats rows ever reach the driver). Each stats row
-  * carries a serialized KLL sketch (≈2–6 KB at the default k=400), so
-  * the default cap of 10,000 groups bounds pass 1's collect at tens of
-  * MB; raise it knowingly, it is driver memory. Exceeding the cap is
+  * driver transfer: pass 1 collects through [[BoundedCollect]] under
+  * `maxGroups` rows and 64 MB (the aggregate still runs fully
+  * distributed). Each stats row carries a serialized KLL sketch
+  * (≈2–6 KB at the default k=400), so the default cap of 10,000
+  * groups bounds pass 1's collect at tens of MB; raise it knowingly,
+  * it is driver memory. Exceeding either cap is
   * NOT an error: the operator logs a warning and falls back to
   * [[windowExact]] — past ~10k groups per-group sorts parallelize
   * across every core, which is exactly the regime where the window
@@ -98,16 +98,13 @@ object GroupQuantiles {
   }
 
   /** Pass-1 stats frame: per-group n / null / NaN counts + KLL sketch,
-    * all mergeable partials, LIMITED to maxGroups+1 rows so the
-    * driver-side collect is cap-bounded BEFORE it materializes
-    * (CollectLimit — the plan GroupQuantilesSpec pins).
+    * all mergeable partials.
     */
-  private[graft] def statsFrame(
+  private def statsFrame(
       df: DataFrame,
       groupCols: Seq[String],
       valueCol: String,
-      sketchK: Int,
-      maxGroups: Int): DataFrame = {
+      sketchK: Int): DataFrame = {
     val spark = df.sparkSession
     val valueField = df.schema(valueCol)
     val floating = valueField.dataType match {
@@ -121,22 +118,19 @@ object GroupQuantiles {
         count(when(v.isNull, 1)).as("__nulls"),
         count(when(nanCond, 1)).as("__nans"),
         KllFunctions.kllSketch(spark, v, sketchK).as("__sk"))
-      .limit(maxGroups + 1)
   }
 
-  /** Collected pass-1 stats, or None when the group count exceeds the
-    * cap (the limit admits maxGroups+1 rows exactly so overflow is
-    * detectable without ever collecting more than that).
+  /** Pass-1 stats through one bounded collect: the rows when at most
+    * `maxGroups` groups (and 64 MB) came back, else the overflow.
     */
-  private def collectStats(
+  private[graft] def collectStats(
       df: DataFrame,
       groupCols: Seq[String],
       valueCol: String,
       sketchK: Int,
-      maxGroups: Int): Option[Array[Row]] = {
-    val stats = statsFrame(df, groupCols, valueCol, sketchK, maxGroups).collect()
-    if (stats.length > maxGroups) None else Some(stats)
-  }
+      maxGroups: Int): BoundedCollect.Outcome =
+    BoundedCollect(statsFrame(df, groupCols, valueCol, sketchK),
+      maxGroups, BoundedCollect.GateBytes)
 
   def exact(
       df: DataFrame,
@@ -147,10 +141,11 @@ object GroupQuantiles {
       maxGroups: Int = 10000): DataFrame = {
     validate(groupCols, probs)
     collectStats(df, groupCols, valueCol, sketchK, maxGroups) match {
-      case Some(stats) => selectFromStats(df, groupCols, valueCol, probs, stats)
-      case None =>
+      case stats: BoundedCollect.Collected =>
+        selectFromStats(df, groupCols, valueCol, probs, stats.toRows)
+      case over: BoundedCollect.Overflow =>
         log.warn(s"group quantiles on (${groupCols.mkString(", ")}) exceeded " +
-          s"the $maxGroups-group cap — falling back to the window " +
+          s"the pass-1 ${over.describe} — falling back to the window " +
           "formulation (many small groups is its winning regime; raise " +
           "maxGroups knowingly if selection was intended)")
         windowExact(df, groupCols, valueCol, probs)
@@ -183,11 +178,12 @@ object GroupQuantiles {
       windowMaxGroupRows: Long = 1L << 20): DataFrame = {
     validate(groupCols, probs)
     collectStats(df, groupCols, valueCol, sketchK, maxGroups) match {
-      case None =>
+      case _: BoundedCollect.Overflow =>
         // past the cap there are certainly enough groups for the
         // window's per-group sorts to fill the cluster
         windowExact(df, groupCols, valueCol, probs)
-      case Some(stats) =>
+      case collected: BoundedCollect.Collected =>
+        val stats = collected.toRows
         val g = groupCols.length
         val parallelism = df.sparkSession.sparkContext.defaultParallelism
         val maxN = if (stats.isEmpty) 0L else stats.map(_.getLong(g)).max

@@ -188,21 +188,19 @@ object Sampling {
     * row count is strata × k — but strata CARDINALITY IS
     * DATA-DEPENDENT (per-domain quotas make strata ∝ corpus), so the
     * broadcast decision is GATED, never forced: the quota is drawn
-    * through a bounded collect (`limit(maxRows + 1)`, conf
-    * [[Sampling.QuotaBroadcastRowsKey]], default 2²⁰ rows) and, when
-    * it fits that AND a 64 MB byte estimate, embeds as a broadcast
+    * through [[BoundedCollect.joinBack]] (conf
+    * [[Sampling.QuotaBroadcastRowsKey]], default 2²⁰ rows, and 64 MB
+    * of exact row bytes) and, when it fits, embeds as a broadcast
     * LOCAL relation — the corpus then never shuffles (each task
-    * streams its source partition past the in-memory quota set) and
-    * the quota aggregate runs exactly once. Past the BYTE gate the
-    * collected rows still embed (the transfer is already paid) but
-    * without the hint; past the ROW gate the planner sizes the lazy
-    * quota's build side from its own stats (AQE can still promote at
-    * runtime) — the force-under-threshold / planner-above pattern of
-    * the MoR DV anti-join (LakeTable.DvBroadcastBytes); a forced
-    * broadcast here was the one driver-OOM shape left at 10⁷⁺ strata.
-    * On every path the quota aggregate's corpus scan runs ONCE: the
-    * over-row-gate join reuses the gating probe's cached run (r17;
-    * the r16 shape recomputed it inside the join).
+    * streams its source partition past the in-memory quota set). Past
+    * either cap the planner sizes the lazy quota's build side from its
+    * own stats (AQE can still promote at runtime) — the
+    * force-under-threshold / planner-above pattern of the MoR DV
+    * anti-join (LakeTable.DvBroadcastBytes); a forced broadcast here
+    * was the one driver-OOM shape left at 10⁷⁺ strata. On every path
+    * the quota aggregate's corpus scan runs ONCE: the over-gate join
+    * reads the same RDD the gate ran, so its shuffle map stage is
+    * skipped, not recomputed, and no cache is kept.
     *
     * Null-safe on each stratum column (a NULL stratum is a real
     * stratum, same as the samplers), plain equality on the key (null
@@ -238,71 +236,24 @@ object Sampling {
       stratumCols, keyCol)
 
   /** Session conf: max quota rows drawn through the bounded collect
-    * that gates the join-back broadcast (default 2²⁰). The collect is
-    * `limit(maxRows + 1)`, so the driver transfer is bounded by the
-    * conf whatever the strata cardinality turns out to be.
+    * that gates the join-back broadcast (default 2²⁰; bytes are capped
+    * at BoundedCollect.GateBytes), so the driver transfer is bounded
+    * whatever the strata cardinality turns out to be.
     */
   val QuotaBroadcastRowsKey = "spark.graft.quota.broadcastRows"
   private val QuotaBroadcastRowsDefault = 1 << 20
-  /** Byte backstop for the same gate — aligned with the 64 MB
-    * force-broadcast budget the MoR DV anti-join uses
-    * (LakeTable.DvBroadcastBytes): long-URL string keys can blow a
-    * row gate's implied size by 25×.
-    */
-  private val QuotaBroadcastBytes = 64L << 20
 
   private def semiJoinQuota(
       df: DataFrame, quota: DataFrame, stratumCols: Seq[String],
       keyCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val maxRows = spark.conf.getOption(QuotaBroadcastRowsKey)
-      .map(_.toInt).getOrElse(QuotaBroadcastRowsDefault)
+    val maxRows = graft.core.SessionConf.nonNegativeInt(
+      df.sparkSession, QuotaBroadcastRowsKey, QuotaBroadcastRowsDefault)
     // rename the quota side: it is DERIVED from df, and a self-join
     // on same-named columns trips Spark's ambiguous-attribute lint
     val qNames = stratumCols.indices.map(i => s"__q_s$i") :+ "__q_key"
     val cond = stratumCols.zipWithIndex.map { case (s, i) =>
       col(s) <=> col(s"__q_s$i")
     }.reduce(_ && _) && col(keyCol) === col("__q_key")
-    // persist AROUND the gating probe: the bounded collect below runs
-    // the full corpus-scanning quota aggregate, and when the row gate
-    // overflows, the deferred semi join must not run it AGAIN (the r16
-    // shape paid the aggregate twice past the gate — one avoidable
-    // corpus scan at exactly the 10⁷-strata scale the gate exists
-    // for). With the plan cached, the aggregate's shuffle map stage
-    // computes once during the probe; the join's execution reuses the
-    // cached/shuffle-registered partitions.
-    quota.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // bounded collect: the quota result comes back only while under
-    // the row gate (+1 row to detect overflow)
-    val head = quota.limit(maxRows + 1).collect()
-    if (head.length <= maxRows) {
-      // under the row gate: the COMPLETE quota is in hand — the cache
-      // has nothing left to serve, and the join never recomputes the
-      // aggregate (the values embed as a local relation either way)
-      quota.unpersist(blocking = false)
-      val bytes = head.iterator.map(r =>
-        r.toSeq.map {
-          case s: String => 24L + 2L * s.length
-          case _ => 16L
-        }.sum).sum
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(head: _*), quota.schema).toDF(qNames: _*)
-      if (bytes <= QuotaBroadcastBytes) df.join(broadcast(local), cond, "left_semi")
-      else
-        // over the BYTE gate only: still embed the collected rows (no
-        // recompute — the transfer is already paid), but no broadcast
-        // hint; the planner sizes the local relation from its stats
-        // (AQE can still promote at runtime)
-        df.join(local, cond, "left_semi")
-    } else {
-      // over the ROW gate: the planner (and AQE at runtime) sizes the
-      // build side — at 10⁷⁺ strata a shuffled semi join is the
-      // correct plan, not a forced broadcast. The quota stays
-      // persisted so the caller's action reuses the probe's single
-      // aggregate run (strata × k rows of cache — bounded by the same
-      // cardinality that made the join-back shuffle); callers issuing
-      // many over-gate quotas can clear it via catalog.clearCache.
-      df.join(quota.toDF(qNames: _*), cond, "left_semi")
-    }
+    BoundedCollect.joinBack(df, quota.toDF(qNames: _*), cond, "left_semi", maxRows)
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -86,128 +87,78 @@ object Similarity {
   }
 
   /** How an over-gate ANN call will execute, decided by BOUNDED
-    * driver work (see [[decideRegime]]).
+    * driver work (see [[decideRegime]]). Collected rows are
+    * (id BIGINT, vector ARRAY<DOUBLE>).
     */
   private[graft] sealed trait AnnRegime
   private[graft] object AnnRegime {
-    /** the probe side fits the collect cap: embedded (≤ gate rows) or
+    /** the probe side fits the collect caps: embedded (≤ gate rows) or
       * chunked kernels
       */
-    final case class Probes(rows: Array[org.apache.spark.sql.Row]) extends AnnRegime
-    /** probes exceed the cap but the corpus fits: role swap */
-    final case class Corpus(rows: Array[org.apache.spark.sql.Row]) extends AnnRegime
-    /** both sides exceed the cap (or the kernels are disabled) */
+    final case class Probes(rows: Array[InternalRow]) extends AnnRegime
+    /** probes exceed the caps but the corpus fits: role swap */
+    final case class Corpus(rows: Array[InternalRow]) extends AnnRegime
+    /** both sides exceed the caps (or the kernels are disabled) */
     case object BothOver extends AnnRegime
   }
 
-  /** What [[decideRegime]] decided, plus the bounds it decided WITH —
-    * callers chunk by `chunkRows` (the byte-shrunk effective gate, so
-    * each chunk's embedded literal matrix respects the byte budget
-    * too) and report `effectiveCap` in the fail-fast message (the cap
-    * the data actually exceeded, which the byte budget may have set
-    * well below the row cap the caller passed). `fetched` counts rows
-    * driver-transferred (the spec hook for the transfer bound); `dims`
-    * is the sniffed embedding dimension (reused by the LSH join
-    * regime's signature expression instead of a second sizing job).
+  /** What [[decideRegime]] decided, plus the transfer record of each
+    * bounded collect it ran (probes first, then the corpus).
     */
   private[graft] final case class RegimeDecision(
-      regime: AnnRegime,
-      fetched: Long,
-      chunkRows: Int,
-      effectiveCap: Long,
-      dims: Option[Int])
+      regime: AnnRegime, transfers: Seq[BoundedCollect.Outcome]) {
+    /** the last cap that tripped — the bound the fail-fast names */
+    def overflow: Option[BoundedCollect.Overflow] =
+      transfers.collect { case o: BoundedCollect.Overflow => o }.lastOption
+  }
 
-  /** Regime decision + matrix collect for the kernel ANN operators,
-    * with BOUNDED driver transfer on every path:
-    *
-    *  1. sniff the embedding dimension from ONE non-null probe vector
-    *     (a `head(1)` job — the only job the decision adds to the
-    *     kernel-enabled path) and shrink the EFFECTIVE gate to
-    *     `min(maxEmbeddedProbes, maxCollectBytes / (8·dims))` BEFORE
-    *     any matrix moves: the gate prefix itself is rows × dims × 8
-    *     bytes of driver transfer, so a dims-blind gate of 2¹⁶ rows
-    *     means ~2.1 GB at 4096-dim embeddings — the r16 shape
-    *     byte-budgeted only the over-gate cap and never the gate
-    *     collect it paid first. The shrunk gate also bounds each
-    *     chunk's embedded literal matrix (gate × dims × 8 bytes of
-    *     plan shipped per executor), since callers chunk by it.
-    *  2. collect `limit(gate + 1)` probe rows — ≤ gate means EMBEDDED
-    *     and the prefix IS the matrix.
-    *  3. otherwise COUNT the probe side against the effective cap —
-    *     `min(max(maxChunkedProbes, gate), maxCollectBytes/(8·dims))`
-    *     (`limit(cap + 1).count()`, a bounded job transferring one
-    *     long, NOT a matrix) — and collect the full probe matrix only
-    *     when it fits → CHUNKED.
-    *  4. else count the corpus the same way and collect IT when it
-    *     fits → ROLE SWAP. Only the gate prefix is live during this
-    *     collect — the r15 shape held a full cap-sized probe matrix
-    *     while collecting the corpus, transiently doubling the bound.
-    *  5. both over → [[AnnRegime.BothOver]], having driver-transferred
-    *     O(gate) rows + two counts to find out (the r15 shape paid up
-    *     to TWO full cap-sized collects to discover the fallback).
-    *
-    * The byte budget sizes BOTH sides with the sniffed probe dims
-    * (uniform embedding dimension is already splitScore's scoring
-    * precondition). A budget below one row's bytes floors at 1 row —
-    * the cap then routes over-gate calls to role swap / fail-fast
-    * rather than collecting a matrix over budget.
+  /** Regime decision + matrix collect for the kernel ANN operators:
+    * ONE [[BoundedCollect]] of the (id, vector) probe side under
+    * `max(maxChunkedProbes, maxEmbeddedProbes)` rows and
+    * `maxCollectBytes` exact bytes. When it fits, the probes are the
+    * matrix — EMBEDDED when ≤ the gate, else CHUNKED; when it does not
+    * and a corpus is given, one more bounded collect of the corpus under
+    * the same caps decides ROLE SWAP or [[AnnRegime.BothOver]]. The
+    * whole matrix is within the byte budget whenever a kernel regime
+    * runs, so each chunk's embedded literal is too. A gate of 0
+    * disables the kernels (the join spec seam) and collects nothing.
     */
   private[graft] def decideRegime(
       probes: DataFrame, probeIdCol: String, probeVecCol: String,
       corpus: Option[(DataFrame, String, String)],
       maxEmbeddedProbes: Int, maxChunkedProbes: Int,
-      maxCollectBytes: Long,
-      knownDims: Option[Int] = None): RegimeDecision = {
-    // clamped vs Int overflow when a caller passes Int.MaxValue (the
-    // fail-fast message explicitly invites raising the caps)
-    val rawGate = math.min(math.max(maxEmbeddedProbes, 0), Int.MaxValue - 1)
-    if (rawGate == 0) return RegimeDecision(AnnRegime.BothOver, 0L, 0, 0L, None)
-    val pSel = probes.select(
-      col(probeIdCol).cast("long"), col(probeVecCol).cast("array<double>"))
-    // `knownDims` (r18): a caller whose embedding width is STATICALLY
-    // known (a model's fixed dimension) skips the one-row sniff job —
-    // the only Spark job the decision otherwise adds per call. The
-    // value feeds exactly what the sniff fed (the byte-budget row
-    // caps); regimes are spec-pinned result-equal, so a consistent
-    // width yields the identical decision, and the transfer bound
-    // (`fetched`) only ever shrinks by the skipped row.
-    val dims = knownDims.filter(_ > 0).orElse {
-      probes
-        .select(col(probeVecCol).cast("array<double>").as("__v"))
-        .where(col("__v").isNotNull && size(col("__v")) > 0)
-        .select(size(col("__v"))).head(1).headOption.map(_.getInt(0))
+      maxCollectBytes: Long): RegimeDecision = {
+    if (maxEmbeddedProbes <= 0) return RegimeDecision(AnnRegime.BothOver, Nil)
+    val cap = math.max(maxChunkedProbes.toLong, maxEmbeddedProbes.toLong)
+    def matrix(df: DataFrame, idCol: String, vecCol: String) = BoundedCollect(
+      df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>")),
+      cap, maxCollectBytes)
+    matrix(probes, probeIdCol, probeVecCol) match {
+      case p: BoundedCollect.Collected => RegimeDecision(AnnRegime.Probes(p.rows), Seq(p))
+      case p: BoundedCollect.Overflow => corpus match {
+        case Some((c, cIdCol, cVecCol)) => matrix(c, cIdCol, cVecCol) match {
+          case m: BoundedCollect.Collected =>
+            RegimeDecision(AnnRegime.Corpus(m.rows), Seq(p, m))
+          case m: BoundedCollect.Overflow => RegimeDecision(AnnRegime.BothOver, Seq(p, m))
+        }
+        case None => RegimeDecision(AnnRegime.BothOver, Seq(p))
+      }
     }
-    var fetched =
-      if (knownDims.exists(_ > 0)) 0L else dims.size.toLong
-    val byteCapRows = dims.map(d => math.max(1L, maxCollectBytes / (8L * d)))
-      .getOrElse(Long.MaxValue) // no non-null probe vector: row caps govern
-    val gate = math.min(rawGate.toLong, byteCapRows).toInt
-    val head = pSel.limit(gate + 1).collect()
-    fetched += head.length
-    if (head.length <= gate)
-      return RegimeDecision(AnnRegime.Probes(head), fetched, gate, gate, dims)
-    // byteCapRows ≥ gate by construction of gate, so cap ≥ gate too
-    val cap = math.min(math.max(maxChunkedProbes.toLong, gate.toLong), byteCapRows)
-      .min(Int.MaxValue - 1L).toInt
-    val pCount = pSel.limit(cap + 1).count()
-    fetched += 1
-    if (pCount <= cap) {
-      val all = pSel.limit(cap).collect()
-      return RegimeDecision(
-        AnnRegime.Probes(all), fetched + all.length, gate, cap, dims)
-    }
-    corpus match {
-      case Some((c, cIdCol, cVecCol)) =>
-        val cSel = c.select(
-          col(cIdCol).cast("long"), col(cVecCol).cast("array<double>"))
-        val cCount = cSel.limit(cap + 1).count()
-        fetched += 1
-        if (cCount <= cap) {
-          val all = cSel.limit(cap).collect()
-          RegimeDecision(
-            AnnRegime.Corpus(all), fetched + all.length, gate, cap, dims)
-        } else RegimeDecision(AnnRegime.BothOver, fetched, gate, cap, dims)
-      case None => RegimeDecision(AnnRegime.BothOver, fetched, gate, cap, dims)
+  }
+
+  /** A decided matrix as balanced disjoint chunks of at most `gate`
+    * rows, each as (ids, vectors). Null id or null vector rows are
+    * dropped: the join regime drops them too (a null-valued join or
+    * score condition never matches).
+    */
+  private[graft] def chunks(rows: Array[InternalRow], gate: Int)
+      : Seq[(Array[Long], Array[Array[Double]])] = {
+    val usable = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    val n = math.max(1, math.ceil(usable.length.toDouble / math.max(gate, 1)).toInt)
+    (0 until n).map { c =>
+      val slice = usable.slice(
+        (c.toLong * usable.length / n).toInt, ((c + 1).toLong * usable.length / n).toInt)
+      (slice.map(_.getLong(0)), slice.map(_.getArray(1).toDoubleArray()))
     }
   }
 
@@ -223,15 +174,15 @@ object Similarity {
     * fast with the scale alternatives, unless the caller explicitly
     * opts into the join via [[AnnForceJoinKey]] (then warn). A gate of
     * 0 never reaches here (kernels deliberately disabled = the spec
-    * seam; the join runs silently). `cap` is the EFFECTIVE cap the
-    * decision used — when the byte budget governed, that is smaller
-    * than the row cap the caller passed, and the message must name the
-    * bound the data actually exceeded.
+    * seam; the join runs silently). The message names the cap that
+    * tripped on the corpus side — with the byte budget governing, that
+    * is far below the row cap the caller passed.
     */
   private[graft] def enforceJoinContract(
-      spark: org.apache.spark.sql.SparkSession, op: String, cap: Long): Unit = {
-    val msg = s"$op: BOTH probe and corpus side exceed the collect cap " +
-      s"(maxChunkedProbes/maxCollectBytes, effective $cap rows) — the " +
+      spark: org.apache.spark.sql.SparkSession, op: String,
+      tripped: BoundedCollect.Overflow): Unit = {
+    val msg = s"$op: BOTH probe and corpus side exceed the collect caps " +
+      s"(maxChunkedProbes/maxCollectBytes: ${tripped.describe}) — the " +
       "exact non-equi join plans as CartesianProduct above broadcast " +
       "size and was measured disk-bound at scale (BENCHNOTES_r14). " +
       "Use lshTopKFrames/ivfTopKFrames (bucket equi-joins) at this " +
@@ -258,7 +209,7 @@ object Similarity {
   val AnnBucketSaltKey = "spark.graft.ann.bucketSalt"
 
   private def bucketSalt(spark: SparkSession, nKeys: Long): Int = {
-    val conf = spark.conf.getOption(AnnBucketSaltKey).map(_.toInt).getOrElse(0)
+    val conf = graft.core.SessionConf.nonNegativeInt(spark, AnnBucketSaltKey, 0)
     if (conf > 0) conf
     else {
       val parts = spark.sessionState.conf.numShufflePartitions.toLong
@@ -299,12 +250,11 @@ object Similarity {
       k: Int,
       maxEmbeddedProbes: Int = 1 << 16,
       maxChunkedProbes: Int = 1 << 20,
-      maxCollectBytes: Long = 512L << 20,
-      dims: Option[Int] = None): DataFrame =
+      maxCollectBytes: Long = 512L << 20): DataFrame =
     bruteForceTopKFrames(
       emb.where(probeFilter).select(col(idCol), col(vecCol)), idCol, vecCol,
       emb, idCol, vecCol, k, maxEmbeddedProbes, maxChunkedProbes,
-      maxCollectBytes, dims = dims)
+      maxCollectBytes)
 
   /** Exact brute-force top-k, probes and corpus as SEPARATE frames
     * (the usual real shape: a query set against a corpus). Four
@@ -353,12 +303,9 @@ object Similarity {
     *
     * Driver-memory bound: the winning side's (id, vector) matrix is
     * collected under BOTH a row cap (`maxChunkedProbes`) and a BYTE
-    * budget (`maxCollectBytes`, default 512 MB) — dims are sniffed
-    * from one probe row BEFORE anything collects, so the budget bounds
-    * the gate prefix, the full matrix, AND each chunk's embedded plan
-    * literal (see [[decideRegime]]); the regime decision itself
-    * transfers O(effective gate) rows + two bounded counts, never a
-    * full matrix it then discards.
+    * budget (`maxCollectBytes`, default 512 MB, exact row bytes), by
+    * one bounded collect per side (see [[decideRegime]]); the budget
+    * therefore also bounds each chunk's embedded plan literal.
     *
     * `includeSelf = true` is the CROSS-CORPUS mode: probe and
     * candidate ids come from unrelated id spaces, so a numeric id
@@ -377,68 +324,47 @@ object Similarity {
       maxEmbeddedProbes: Int = 1 << 16,
       maxChunkedProbes: Int = 1 << 20,
       maxCollectBytes: Long = 512L << 20,
-      includeSelf: Boolean = false,
-      dims: Option[Int] = None): DataFrame = {
+      includeSelf: Boolean = false): DataFrame = {
     val spark = corpus.sparkSession
-    val gate = math.max(maxEmbeddedProbes, 0)
     import org.apache.spark.sql.graftbridge.SparkBridge
     val dec = decideRegime(probes, probeIdCol, probeVecCol,
       Some((corpus, corpusIdCol, corpusVecCol)),
-      gate, maxChunkedProbes, maxCollectBytes, knownDims = dims)
+      maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes)
     dec.regime match {
       case AnnRegime.Probes(collected) =>
-        // null id OR null vector: the join regime silently drops such
-        // probes (a null-valued join/score condition never matches), so
-        // the embedded regime must too, not NPE on getLong
-        val usable = collected.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
         val cand = Dedup.rebalance(
           corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")))
-        val chunk = math.max(dec.chunkRows, 1)
-        val nChunks = math.max(1, math.ceil(usable.length.toDouble / chunk).toInt)
-        val frames = (0 until nChunks).map { c =>
-          val lo = (c.toLong * usable.length / nChunks).toInt
-          val hi = ((c + 1).toLong * usable.length / nChunks).toInt
-          val slice = usable.slice(lo, hi)
-          val pIds = slice.map(_.getLong(0))
-          val pVecs = slice.map(_.getSeq[Double](1).toArray)
+        chunks(collected, maxEmbeddedProbes).map { case (pIds, pVecs) =>
           val agg = SparkBridge.column(graft.functions.TopKFunctions.ProbeTopKAgg(
             SparkBridge.expression(cand("cand_id")),
             SparkBridge.expression(cand("cand_vec")),
             pIds, pVecs, k, includeSelf = includeSelf).toAggregateExpression())
           cand.agg(agg.as("tk"))
-        }
-        frames.reduce(_.union(_))
+        }.reduce(_.union(_))
           .select(explode(col("tk")).as("e"))
           .select(col("e.probe_id").as("probe_id"), col("e.rank").as("rank"),
             col("e.cand_id").as("cand_id"), col("e.sim").as("sim"))
       case AnnRegime.Corpus(candCollected) =>
         // ROLE SWAP: embed the corpus, scan the probes
-        val usable = candCollected.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
         val probeFrame = Dedup.rebalance(
           probes.select(col(probeIdCol).as("probe_id"), col(probeVecCol).as("probe_vec")))
-        val chunk = math.max(dec.chunkRows, 1)
-        val nChunks = math.max(1, math.ceil(usable.length.toDouble / chunk).toInt)
+        val candChunks = chunks(candCollected, maxEmbeddedProbes)
         // the kernel sits DIRECTLY inside the generator (never behind
         // a projected alias): InferFiltersFromGenerate skips non-cheap
         // generator inputs, but an aliased array gets a `size(tk) > 0`
         // filter inferred and pushed THROUGH the projection —
         // duplicating the whole corpus-chunk scoring loop per probe
         // row (measured: the q72 audit plan ran the kernel twice)
-        def chunkKernel(c: Int): Column = {
-          val lo = (c.toLong * usable.length / nChunks).toInt
-          val hi = ((c + 1).toLong * usable.length / nChunks).toInt
-          val slice = usable.slice(lo, hi)
+        def chunkKernel(chunk: (Array[Long], Array[Array[Double]])): Column =
           SparkBridge.column(graft.functions.TopKFunctions.CorpusTopK(
             SparkBridge.expression(probeFrame("probe_id")),
             SparkBridge.expression(probeFrame("probe_vec")),
-            slice.map(_.getLong(0)), slice.map(_.getSeq[Double](1).toArray), k,
-            includeSelf = includeSelf))
-        }
-        if (nChunks == 1) {
+            chunk._1, chunk._2, k, includeSelf = includeSelf))
+        if (candChunks.length == 1) {
           // single chunk: the projected array IS the answer; rank =
           // position (the kernel emits best-first) — zero exchanges
           probeFrame
-            .select(col("probe_id"), posexplode(chunkKernel(0)).as(Seq("pos", "e")))
+            .select(col("probe_id"), posexplode(chunkKernel(candChunks.head)).as(Seq("pos", "e")))
             .select(col("probe_id").cast("long").as("probe_id"),
               (col("pos") + 1).cast("long").as("rank"),
               col("e.cand_id").as("cand_id"), col("e.sim").as("sim"))
@@ -448,7 +374,7 @@ object Similarity {
           // ROUNDED and chunks are disjoint in candidate space, so the
           // merged ordering is exactly the single-kernel answer; the
           // exchange carries ≤ probes × k × nChunks rows
-          val scored = (0 until nChunks).map { c =>
+          val scored = candChunks.map { c =>
             probeFrame.select(col("probe_id"), explode(chunkKernel(c)).as("e"))
               .select(col("probe_id"), col("e.cand_id").as("cand_id"),
                 col("e.sim").as("sim"))
@@ -456,8 +382,7 @@ object Similarity {
           rankTopK(scored, k)
         }
       case AnnRegime.BothOver =>
-        if (gate > 0) enforceJoinContract(spark, "bruteForceTopK",
-          dec.effectiveCap)
+        dec.overflow.foreach(enforceJoinContract(spark, "bruteForceTopK", _))
         val probeSide = probes
           .select(col(probeIdCol).as("probe_id"), col(probeVecCol).as("probe_vec"))
           .withColumn("probe_norm", VectorFunctions.norm2(spark, col("probe_vec")))
@@ -535,12 +460,11 @@ object Similarity {
       trainedCentroids: Option[Array[Seq[Double]]] = None,
       maxEmbeddedProbes: Int = 1 << 16,
       maxChunkedProbes: Int = 1 << 20,
-      maxCollectBytes: Long = 512L << 20,
-      dims: Option[Int] = None): DataFrame =
+      maxCollectBytes: Long = 512L << 20): DataFrame =
     ivfTopKFrames(
       emb.where(probeFilter).select(col(idCol), col(vecCol)), idCol, vecCol,
       emb, idCol, vecCol, k, nCentroids, nProbe, trainedCentroids,
-      maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes, dims = dims)
+      maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes)
 
   /** IVF-style ANN, probes and corpus as SEPARATE frames (the
     * cross-corpus decontamination shape — the restricted-index scale
@@ -582,8 +506,7 @@ object Similarity {
       maxEmbeddedProbes: Int = 1 << 16,
       maxChunkedProbes: Int = 1 << 20,
       maxCollectBytes: Long = 512L << 20,
-      includeSelf: Boolean = false,
-      dims: Option[Int] = None): DataFrame = {
+      includeSelf: Boolean = false): DataFrame = {
     val spark = corpus.sparkSession
     // Coarse quantizer: nCentroids vectors collected to the driver
     // (metadata-scale) and embedded as literals, so list assignment is
@@ -595,13 +518,10 @@ object Similarity {
         .select(col(corpusVecCol).cast("array<double>")).collect()
         .map(_.getSeq[Double](0)))
 
-    val dec = decideRegime(probes, probeIdCol, probeVecCol,
-      None, maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes,
-      knownDims = dims)
-    dec.regime match {
+    decideRegime(probes, probeIdCol, probeVecCol,
+      None, maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes).regime match {
       case AnnRegime.Probes(collectedProbes) =>
         import org.apache.spark.sql.graftbridge.SparkBridge
-        val chunk = math.max(dec.chunkRows, 1)
         val cents: Array[Array[Double]] = centroids.map(_.toArray)
         def dotD(a: Array[Double], b: Array[Double]): Double = {
           val d = math.min(a.length, b.length)
@@ -609,17 +529,9 @@ object Similarity {
           while (i < d) { s += a(i) * b(i); i += 1 }
           s
         }
-        // drop null-id AND null-vector probes, like the join regime does
-        val usable = collectedProbes.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
         val cand = Dedup.rebalance(
           corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")))
-        val nChunks = math.max(1, math.ceil(usable.length.toDouble / chunk).toInt)
-        return (0 until nChunks).map { c =>
-          val lo = (c.toLong * usable.length / nChunks).toInt
-          val hi = ((c + 1).toLong * usable.length / nChunks).toInt
-          val slice = usable.slice(lo, hi)
-          val pIds = slice.map(_.getLong(0))
-          val pVecs = slice.map(_.getSeq[Double](1).toArray)
+        return chunks(collectedProbes, maxEmbeddedProbes).map { case (pIds, pVecs) =>
           val byList = Array.fill(cents.length)(
             scala.collection.mutable.ArrayBuffer.empty[Int])
           pVecs.zipWithIndex.foreach { case (v, pi) =>
@@ -694,12 +606,11 @@ object Similarity {
       planes: Int = 12,
       maxEmbeddedProbes: Int = 1 << 16,
       maxChunkedProbes: Int = 1 << 20,
-      maxCollectBytes: Long = 512L << 20,
-      dims: Option[Int] = None): DataFrame =
+      maxCollectBytes: Long = 512L << 20): DataFrame =
     lshTopKFrames(
       emb.where(probeFilter).select(col(idCol), col(vecCol)), idCol, vecCol,
       emb, idCol, vecCol, k, planes, maxEmbeddedProbes, maxChunkedProbes,
-      maxCollectBytes, dims = dims)
+      maxCollectBytes)
 
   /** ANN via LSH bucketing, probes and corpus as SEPARATE frames (the
     * cross-corpus decontamination shape): exact rank within the
@@ -707,7 +618,7 @@ object Similarity {
     *
     * Regime structure (spec-pinned equal; no role swap — the signature
     * restriction index is probe-side):
-    *  - EMBEDDED (probes ≤ `maxEmbeddedProbes`, byte-shrunk by
+    *  - EMBEDDED (probes ≤ `maxEmbeddedProbes`, collected within
     *    `maxCollectBytes` — [[decideRegime]]): probe signatures
     *    resolve driver-side against the deterministic hyperplanes and
     *    one `graft_probe_topk` aggregate scans the corpus with the
@@ -728,10 +639,8 @@ object Similarity {
     *    cap the join at 2^planes tasks and hand a dense region's hub
     *    bucket to one of them).
     *
-    * The embedding dimension for the join's signature expression is
-    * the one [[decideRegime]] sniffed (no second sizing job); only the
-    * kernels-disabled seam (`maxEmbeddedProbes = 0`) or an all-null
-    * probe side still asks the frames.
+    * The embedding dimension for the join's signature expression
+    * comes from one non-null probe (or corpus) vector, a `head(1)` job.
     *
     * `includeSelf = true` scores id collisions in every regime
     * (cross-corpus id spaces — [[bruteForceTopKFrames]]).
@@ -748,20 +657,15 @@ object Similarity {
       maxEmbeddedProbes: Int = 1 << 16,
       maxChunkedProbes: Int = 1 << 20,
       maxCollectBytes: Long = 512L << 20,
-      includeSelf: Boolean = false,
-      dims: Option[Int] = None): DataFrame = {
+      includeSelf: Boolean = false): DataFrame = {
     val spark = corpus.sparkSession
     require(planes >= 1 && planes <= 63, s"planes must be in [1, 63], got $planes")
-    val dec = decideRegime(probes, probeIdCol, probeVecCol,
-      None, maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes,
-      knownDims = dims)
-    dec.regime match {
+    decideRegime(probes, probeIdCol, probeVecCol,
+      None, maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes).regime match {
       case AnnRegime.Probes(collected) =>
         import org.apache.spark.sql.graftbridge.SparkBridge
-        val chunk = math.max(dec.chunkRows, 1)
-        // null id or vector: dropped, like the bucket join drops them
-        val usable = collected.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-        val dims = usable.headOption.map(_.getSeq[Double](1).length).getOrElse(0)
+        val probeChunks = chunks(collected, maxEmbeddedProbes)
+        val dims = probeChunks.head._2.headOption.map(_.length).getOrElse(0)
         val planeMat: Array[Array[Double]] =
           Array.tabulate(planes, dims)((p, d) => planeComponent(p, d))
         def sigOf(v: Array[Double]): Long = {
@@ -780,13 +684,7 @@ object Similarity {
         }
         val cand = Dedup.rebalance(
           corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")))
-        val nChunks = math.max(1, math.ceil(usable.length.toDouble / chunk).toInt)
-        (0 until nChunks).map { c =>
-          val lo = (c.toLong * usable.length / nChunks).toInt
-          val hi = ((c + 1).toLong * usable.length / nChunks).toInt
-          val slice = usable.slice(lo, hi)
-          val pIds = slice.map(_.getLong(0))
-          val pVecs = slice.map(_.getSeq[Double](1).toArray)
+        probeChunks.map { case (pIds, pVecs) =>
           val bySig: Map[Long, Array[Int]] =
             pVecs.indices.groupBy(pi => sigOf(pVecs(pi)))
               .map { case (s, idxs) => s -> idxs.toArray }
@@ -803,17 +701,14 @@ object Similarity {
             col("e.cand_id").as("cand_id"), col("e.sim").as("sim"))
       case _ =>
         // Over the caps (or kernels disabled): the bucket equi-join.
-        // Dims: reuse the decision's sniff; the gate=0 seam skipped it
-        // (kernels disabled = zero extra jobs there), so fall back to
-        // asking the probes, then the corpus — only non-null vectors
+        // Dims: ask the probes, then the corpus — only non-null vectors
         // (size(null) is null → getInt NPEs), tolerating an all-null /
         // empty side (head() on empty throws): 0 dims then, and every
         // signature collapses to one bucket, which is correct (the
         // per-pair splitScore over null vectors yields no rows).
-        val dims = dec.dims
-          .orElse(probes.where(col(probeVecCol).isNotNull)
+        val dims = probes.where(col(probeVecCol).isNotNull)
             .select(size(col(probeVecCol).cast("array<double>"))).head(1)
-            .headOption.map(_.getInt(0)))
+            .headOption.map(_.getInt(0))
           .orElse(corpus.where(col(corpusVecCol).isNotNull)
             .select(size(col(corpusVecCol).cast("array<double>"))).head(1)
             .headOption.map(_.getInt(0)))

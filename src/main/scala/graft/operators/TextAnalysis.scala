@@ -127,17 +127,12 @@ object TextAnalysis {
     * everywhere.
     */
   /** Session conf: max distinct words drawn through the bounded
-    * collect that gates the dfreq broadcast join-back (default 2²⁰).
-    * The collect is `limit(maxRows + 1)`, so the driver transfer is
-    * bounded by the conf whatever the vocabulary turns out to be.
+    * collect that gates the dfreq broadcast join-back (default 2²⁰;
+    * bytes are capped at BoundedCollect.GateBytes), so the driver
+    * transfer is bounded whatever the vocabulary turns out to be.
     */
   val TfidfBroadcastWordsKey = "spark.graft.tfidf.broadcastWords"
   private val TfidfBroadcastWordsDefault = 1 << 20
-  /** Byte backstop for the same gate (long words can blow the implied
-    * size of a row gate) — aligned with the quota sampler's 64 MB
-    * force-broadcast budget (Sampling.QuotaBroadcastBytes).
-    */
-  private val TfidfBroadcastBytes = 64L << 20
 
   def topTermsByTfidf(
       docs: org.apache.spark.sql.DataFrame,
@@ -177,32 +172,19 @@ object TextAnalysis {
     // prunes to the text column alone (doc_id is unused by dfreq).
     val dfr = tf.groupBy("word").agg(count(lit(1)).as("dfreq"))
       .select(col("word").as("__w"), col("dfreq"))
-    // join-back gate (the quota sampler's bounded-collect pattern):
-    // the vocabulary is data-dependent, so the broadcast decision is
-    // drawn through `limit(maxRows + 1)` — under the row gate the
-    // collected rows embed as a local relation (broadcast-hinted
-    // under the 64 MB byte backstop), and tf never shuffles at all;
-    // past the gate the planner sizes the shuffle join itself and
-    // AQE's skew-join splitting handles hot-word partitions.
-    val maxWords = spark.conf.getOption(TfidfBroadcastWordsKey)
-      .map(_.toInt).getOrElse(TfidfBroadcastWordsDefault)
-    val head = dfr.limit(maxWords + 1).collect()
-    // null-safe word equality: the window form groups null words into
-    // a partition like any other value, so the join-back must match
-    // them too, not drop them
-    val cond = col("word") <=> col("__w")
-    val joined = if (head.length <= maxWords) {
-      val bytes = head.iterator.map(r =>
-        (r.getAs[Any](0) match {
-          case s: String => 24L + 2L * s.length
-          case _ => 16L
-        }) + 16L).sum
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(head: _*), dfr.schema)
-        .toDF("__w", "dfreq")
-      if (bytes <= TfidfBroadcastBytes) tf.join(broadcast(local), cond)
-      else tf.join(local, cond)
-    } else tf.join(dfr, cond)
+    // join-back gate (the quota sampler's): the vocabulary is
+    // data-dependent, so the broadcast decision is drawn through
+    // BoundedCollect.joinBack — within the caps the dfreq rows embed
+    // as a broadcast local relation and tf never shuffles at all; past
+    // them the planner sizes the shuffle join of dfreq itself, reading
+    // the same RDD the gate ran (its map stage is skipped, not
+    // recomputed; no cache is kept), and AQE's skew-join splitting
+    // handles hot-word partitions. Null-safe word equality: the window form
+    // groups null words into a partition like any other value, so the
+    // join-back must match them too, not drop them.
+    val maxWords = graft.core.SessionConf.nonNegativeInt(
+      spark, TfidfBroadcastWordsKey, TfidfBroadcastWordsDefault)
+    val joined = BoundedCollect.joinBack(tf, dfr, col("word") <=> col("__w"), "inner", maxWords)
     val qscore = floor(col("tf") * log(lit(n.toDouble) / col("dfreq")) * lit(1e6))
       .cast("long")
     val w = Window.partitionBy("doc_id")

@@ -492,8 +492,7 @@ object Queries {
     "q24_dedup_embedding" -> QueryDef(
       (s, d) => Dedup.embeddingNearDup(
         tbl(s, d, "embeddings"), "vec_id", "embedding",
-        probeFilter = col("vec_id") % 20 === 0, threshold = 0.2,
-        dims = Some(64)),
+        probeFilter = col("vec_id") % 20 === 0, threshold = 0.2),
       Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)
              |SELECT a.vec_id AS probe_id, b.vec_id AS cand_id FROM e a, e b
              |WHERE a.vec_id % 20 = 0 AND a.vec_id < b.vec_id
@@ -503,7 +502,7 @@ object Queries {
     "q25_ann_bruteforce" -> QueryDef(
       (s, d) => Similarity.bruteForceTopK(
         tbl(s, d, "embeddings"), "vec_id", "embedding",
-        probeFilter = col("vec_id") % 100 === 0, k = 5, dims = Some(64)),
+        probeFilter = col("vec_id") % 100 === 0, k = 5),
       Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
              |s AS (SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
              |  round(list_cosine_similarity(p.v, c.v), 6) AS sim
@@ -524,8 +523,7 @@ object Queries {
     "q26_ann_lsh" -> QueryDef(
       (s, d) => Similarity.lshTopK(
         tbl(s, d, "embeddings"), "vec_id", "embedding",
-        probeFilter = col("vec_id") % 100 === 0, k = 5, planes = 8,
-        dims = Some(64)),
+        probeFilter = col("vec_id") % 100 === 0, k = 5, planes = 8),
       Some {
         val dims = 64
         def planeDot(p: Int): String =
@@ -685,7 +683,7 @@ object Queries {
     "q35_ann_ivf" -> QueryDef(
       (s, d) => Similarity.ivfTopK(
         tbl(s, d, "embeddings"), "vec_id", "embedding",
-        probeFilter = col("vec_id") % 100 === 0, k = 5, dims = Some(64)),
+        probeFilter = col("vec_id") % 100 === 0, k = 5),
       Some {
         val dot = (1 to 64).map(i => s"e.v[$i] * cent.cv[$i]").mkString(" + ")
         s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
@@ -1576,7 +1574,7 @@ object Queries {
       (s, d) => Similarity.bruteForceTopK(
         tbl(s, d, "embeddings"), "vec_id", "embedding",
         probeFilter = col("vec_id") % 20 === 0 && col("vec_id") < 400, k = 3,
-        maxEmbeddedProbes = 7, dims = Some(64)),
+        maxEmbeddedProbes = 7),
       Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
              |s AS (SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
              |  round(list_cosine_similarity(p.v, c.v), 6) AS sim
@@ -1624,7 +1622,7 @@ object Queries {
           emb, "vec_id", "embedding",
           emb.where(col("vec_id") % 20 === 0 && col("vec_id") < 400),
           "vec_id", "embedding", k = 3,
-          maxEmbeddedProbes = 7, maxChunkedProbes = 64, dims = Some(64))
+          maxEmbeddedProbes = 7, maxChunkedProbes = 64)
       },
       Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
              |s AS (SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
@@ -1648,7 +1646,7 @@ object Queries {
           emb, "vec_id", "embedding",
           emb.where(col("vec_id") % 20 === 0 && col("vec_id") < 400),
           "vec_id", "embedding", threshold = 0.15,
-          maxEmbeddedProbes = 7, maxChunkedProbes = 64, dims = Some(64))
+          maxEmbeddedProbes = 7, maxChunkedProbes = 64)
       },
       Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)
              |SELECT p.vec_id AS probe_id, c.vec_id AS cand_id FROM e p, e c
@@ -1683,7 +1681,7 @@ object Queries {
       (s, d) => Similarity.lshTopK(
         tbl(s, d, "embeddings"), "vec_id", "embedding",
         probeFilter = col("vec_id") % 20 === 0 && col("vec_id") < 400,
-        k = 5, planes = 8, maxEmbeddedProbes = 7, dims = Some(64)),
+        k = 5, planes = 8, maxEmbeddedProbes = 7),
       Some {
         val dims = 64
         def planeDot(p: Int): String =
@@ -1712,7 +1710,7 @@ object Queries {
       (s, d) => Similarity.ivfTopK(
         tbl(s, d, "embeddings"), "vec_id", "embedding",
         probeFilter = col("vec_id") % 20 === 0 && col("vec_id") < 400,
-        k = 5, maxEmbeddedProbes = 7, dims = Some(64)),
+        k = 5, maxEmbeddedProbes = 7),
       Some {
         val dot = (1 to 64).map(i => s"e.v[$i] * cent.cv[$i]").mkString(" + ")
         s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
@@ -1749,7 +1747,7 @@ object Queries {
           emb.where(col("vec_id") % 20 === 0 && col("vec_id") < 400),
           "vec_id", "embedding",
           emb, "vec_id", "embedding", threshold = 0.15,
-          allPairs = true, dims = Some(64))
+          allPairs = true)
       },
       Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)
              |SELECT p.vec_id AS probe_id, c.vec_id AS cand_id FROM e p, e c
@@ -1768,8 +1766,7 @@ object Queries {
           emb, "vec_id", "embedding",
           emb.where(col("vec_id") % 20 === 0 && col("vec_id") < 400),
           "vec_id", "embedding", k = 3,
-          maxEmbeddedProbes = 7, maxChunkedProbes = 64, includeSelf = true,
-          dims = Some(64))
+          maxEmbeddedProbes = 7, maxChunkedProbes = 64, includeSelf = true)
       },
       Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
              |s AS (SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
@@ -1781,7 +1778,8 @@ object Queries {
 
     // BYTE-governed regime decision (r17): with the default row caps,
     // a 16 KB collect budget at 64-dim embeddings caps every matrix at
-    // 16384/(8·64) = 32 rows — the probes (the whole table) exceed it,
+    // 16384/552 = 29 rows (552 exact bytes per (id, 64-double) row) —
+    // the probes (the whole table) exceed it,
     // the ≤20-row corpus fits at every local sf, so the BYTE budget
     // (not the row caps the caller left at defaults) routes the call
     // through role swap. The corpus filter clamps at vec_id < 2000 so
@@ -1797,7 +1795,7 @@ object Queries {
           emb, "vec_id", "embedding",
           emb.where(col("vec_id") % 100 === 0 && col("vec_id") < 2000),
           "vec_id", "embedding", k = 3,
-          maxCollectBytes = 16384L, dims = Some(64))
+          maxCollectBytes = 16384L)
       },
       Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
              |s AS (SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
@@ -1820,7 +1818,7 @@ object Queries {
           emb.where(col("vec_id") % 20 === 0 && col("vec_id") < 400),
           "vec_id", "embedding",
           emb.where(col("vec_id") % 2 === 1), "vec_id", "embedding",
-          k = 5, planes = 8, maxEmbeddedProbes = 7, dims = Some(64))
+          k = 5, planes = 8, maxEmbeddedProbes = 7)
       },
       Some {
         val dims = 64
@@ -1858,8 +1856,7 @@ object Queries {
           emb.where(col("vec_id") % 20 === 0 && col("vec_id") < 400),
           "vec_id", "embedding",
           emb.where(col("vec_id") % 2 === 1), "vec_id", "embedding",
-          k = 5, planes = 4, maxEmbeddedProbes = 1, maxChunkedProbes = 1,
-          dims = Some(64))
+          k = 5, planes = 4, maxEmbeddedProbes = 1, maxChunkedProbes = 1)
       },
       Some {
         val dims = 64
@@ -1893,8 +1890,7 @@ object Queries {
           emb.where(col("vec_id") % 20 === 0 && col("vec_id") < 400),
           "vec_id", "embedding",
           emb.where(col("vec_id") % 2 === 1), "vec_id", "embedding",
-          k = 5, nCentroids = 16, nProbe = 4, maxEmbeddedProbes = 7,
-          dims = Some(64))
+          k = 5, nCentroids = 16, nProbe = 4, maxEmbeddedProbes = 7)
       },
       Some {
         val dot = (1 to 64).map(i => s"e.v[$i] * cent.cv[$i]").mkString(" + ")

@@ -59,7 +59,7 @@ class GraftStreamSource(sqlContext: SQLContext, tablePath: Path) extends Source 
           s"${want.map(_._1).mkString(",")}; table now has ${got.map(_._1).mkString(",")}). " +
           "Restart the stream to adopt the new schema.")
     // V1 contract: the returned frame must be flagged streaming
-    SparkBridge.streamingDataFrame(spark, batch.queryExecution.toRdd, schema)
+    SparkBridge.rowsFrame(spark, batch.queryExecution.toRdd, schema, isStreaming = true)
   }
 
   override def stop(): Unit = ()

@@ -42,15 +42,16 @@ object SparkBridge {
       case e => e
     }
 
-  /** A DataFrame flagged isStreaming=true over an InternalRow RDD —
-    * what a V1 streaming `Source.getBatch` must return
-    * (MicroBatchExecution asserts the plan is streaming). Same
+  /** A DataFrame over an InternalRow RDD. Flagged isStreaming=true, it
+    * is what a V1 streaming `Source.getBatch` must return
+    * (MicroBatchExecution asserts the plan is streaming) — the same
     * internal API FileStreamSource uses.
     */
-  def streamingDataFrame(
+  def rowsFrame(
       spark: SparkSession,
       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
+      schema: org.apache.spark.sql.types.StructType,
+      isStreaming: Boolean = false): DataFrame =
     spark.asInstanceOf[classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema, isStreaming = true)
+      .internalCreateDataFrame(rdd, schema, isStreaming)
 }

@@ -123,16 +123,28 @@ class GroupQuantilesSpec extends AnyFunSuite {
     assert(ex.count() == 1000)
   }
 
-  test("pass-1 collect is limit-bounded BEFORE it materializes") {
+  test("pass-1 stats collect is row-bounded; overflow falls back to the window") {
     // the r13 flaw: collect() ran unbounded, the cap checked after.
-    // The stats frame must carry a CollectLimit/GlobalLimit of
-    // maxGroups+1 so at most that many sketch rows reach the driver.
-    val df = (1 to 5000).map(i => (i, i * 1.0)).toDF("grp", "v")
-    val plan = GroupQuantiles
-      .statsFrame(df, Seq("grp"), "v", sketchK = 400, maxGroups = 100)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("CollectLimit") || plan.contains("GlobalLimit"), plan)
-    assert(plan.contains("101"), plan)
+    // Pass 1 goes through the bounded collect: at most maxGroups stats
+    // rows ever reach the driver, and past the cap nothing is kept
+    import graft.operators.BoundedCollect.{Collected, Overflow, RowCap}
+    val df = (1 to 5000).map(i => (i % 150, i * 1.0)).toDF("grp", "v").repartition(6)
+    GroupQuantiles.collectStats(df, Seq("grp"), "v", sketchK = 400, maxGroups = 100) match {
+      case o: Overflow =>
+        assert(o.cap == RowCap && o.maxRows == 100L, o.toString)
+        assert(o.peakKeptBytes <= o.maxBytes, o.toString)
+      case other => fail(s"150 groups against a 100-group cap must overflow, got $other")
+    }
+    GroupQuantiles.collectStats(df, Seq("grp"), "v", sketchK = 400, maxGroups = 150) match {
+      case c: Collected => assert(c.rows.length == 150)
+      case other => fail(s"150 groups fit a 150-group cap, got $other")
+    }
+    // the overflow leads to the window formulation: its signature
+    // (the per-group row_number window) is the plan, results agree
+    val ex = GroupQuantiles.exact(df, Seq("grp"), "v", Seq(0.5), maxGroups = 100)
+    assert(ex.queryExecution.optimizedPlan.toString.contains("Window"))
+    assertSameRows(ex, GroupQuantiles.windowExact(df, Seq("grp"), "v", Seq(0.5)),
+      "over-cap window fallback")
   }
 
   test("auto dispatch: identical output on both sides of the crossover") {

@@ -2149,45 +2149,48 @@ class OperatorSpec extends AnyFunSuite {
     assert(plan.linesIterator.count(_.contains("Exchange")) == 2, plan)
   }
 
-  test("ANN collect caps are BYTE-budgeted: dims sniffed from the gate prefix shrink the row cap") {
+  test("ANN collect caps are BYTE-budgeted: exact row bytes bound every matrix") {
+    import Similarity.AnnRegime
+    import BoundedCollect.{ByteCap, Collected, Overflow}
     val rnd = new scala.util.Random(11)
-    // 8-dim vectors: a row is 64 bytes of matrix
+    // 8-dim (id, vector) rows are 104 exact UnsafeRow bytes: 8 null
+    // bits + 2 fixed slots + an array of 8 header + 8 null bits + 64
     val probes = (1L to 40L).map(i => (i, Array.fill(8)(rnd.nextGaussian())))
       .toDF("id", "vec")
     val corpus3 = (101L to 103L).map(i => (i, Array.fill(8)(rnd.nextGaussian())))
       .toDF("id", "vec")
-    // gate 2, row cap 1000, byte budget 320 B => byte cap = 5 rows:
-    // probes (40) exceed it, the corpus (3) fits => ROLE SWAP
+    // gate 2, row cap 1000, byte budget 320 B => 3 rows fit: probes
+    // (40) exceed it, the corpus (3 rows, 312 B) fits => ROLE SWAP
     val swap = Similarity.decideRegime(probes, "id", "vec",
       Some((corpus3, "id", "vec")), 2, 1000, 320L)
-    assert(swap.regime.isInstanceOf[Similarity.AnnRegime.Corpus],
-      swap.regime.getClass.toString)
-    assert(swap.effectiveCap == 5L,
-      "the fail-fast message must name the BYTE-derived cap the data exceeded")
+    assert(swap.regime.isInstanceOf[AnnRegime.Corpus], swap.regime.getClass.toString)
+    swap.transfers match {
+      case Seq(p: Overflow, c: Collected) =>
+        assert(p.cap == ByteCap && p.effectiveRows == 3L, p.toString)
+        assert(p.peakKeptBytes <= 320L, s"driver kept ${p.peakKeptBytes} B")
+        assert(c.rows.length == 3 && c.bytes == 312L, s"${c.rows.length} rows, ${c.bytes} B")
+      case other => fail(s"expected probe overflow + corpus collect, got $other")
+    }
     // same call with the default budget: the row cap governs => probes
     val chunked = Similarity.decideRegime(probes, "id", "vec",
       Some((corpus3, "id", "vec")), 2, 1000, 512L << 20)
     chunked.regime match {
-      case Similarity.AnnRegime.Probes(rows) => assert(rows.length == 40)
+      case AnnRegime.Probes(rows) => assert(rows.length == 40)
       case other => fail(s"expected Probes, got $other")
     }
-    // the GATE collect itself is byte-budgeted (r17): dims are sniffed
-    // from ONE row BEFORE the prefix collect, so a dims-blind gate of
-    // 1000 rows must NOT move 1000 high-dim vectors — the effective
-    // gate shrinks to budget/(8*dims) and the decision's total driver
-    // transfer stays within one chunk's budget plus the bounded
-    // counts/corpus rows
+    assert(chunked.transfers.size == 1, "an embedded/chunked decision is one collect")
+    // high-dim probes against a 4-row budget: the decision never holds
+    // the 40-row matrix, only the budget, and the corpus rows it swaps to
     val wide = (1L to 40L).map(i => (i, Array.fill(128)(rnd.nextGaussian())))
       .toDF("id", "vec")
-    val budget = 128L * 8 * 4 // exactly 4 rows' bytes
+    val budget = 4L * (24 + 16 + 128 * 8) // exactly 4 rows' bytes
     val gateDec = Similarity.decideRegime(wide, "id", "vec",
       Some((corpus3, "id", "vec")), 1000, 1000, budget)
-    assert(gateDec.chunkRows == 4, s"effective gate = budget/(8*dims), got ${gateDec.chunkRows}")
-    assert(gateDec.regime.isInstanceOf[Similarity.AnnRegime.Corpus])
-    // transfer bound: 1 dims row + (effGate+1) prefix + 2 counts + the
-    // 3-row corpus matrix — never the 40-row high-dim probe matrix
-    assert(gateDec.fetched <= 1 + (4 + 1) + 2 + 3,
-      s"gate collect must be byte-bounded, driver fetched ${gateDec.fetched} rows")
+    assert(gateDec.regime.isInstanceOf[AnnRegime.Corpus])
+    gateDec.transfers.foreach {
+      case o: Overflow => assert(o.cap == ByteCap && o.peakKeptBytes <= budget, o.toString)
+      case c: Collected => assert(c.bytes <= budget)
+    }
     // end-to-end: the tiny byte budget tips a would-be chunked call
     // into role swap and the answers still agree exactly
     val viaSwap = Similarity.bruteForceTopKFrames(probes, "id", "vec",
@@ -2197,9 +2200,9 @@ class OperatorSpec extends AnyFunSuite {
       corpus3, "id", "vec", k = 2,
       maxEmbeddedProbes = 2, maxChunkedProbes = 1000)
     assert(viaSwap.except(viaChunks).isEmpty && viaChunks.except(viaSwap).isEmpty)
-    // both sides over the BYTE-derived cap: the fail-fast message must
-    // name the cap the data actually exceeded (5, from the budget),
-    // not the row cap the caller passed (1000)
+    // both sides over the byte cap: the fail-fast message must name the
+    // cap the data actually exceeded (the byte cap, 3 rows), not the
+    // row cap the caller passed (1000)
     val corpus40 = (201L to 240L).map(i => (i, Array.fill(8)(rnd.nextGaussian())))
       .toDF("id", "vec")
     val ex = intercept[graft.core.UserException] {
@@ -2207,22 +2210,28 @@ class OperatorSpec extends AnyFunSuite {
         corpus40, "id", "vec", k = 2,
         maxEmbeddedProbes = 2, maxChunkedProbes = 1000, maxCollectBytes = 320L)
     }
-    assert(ex.getMessage.contains("effective 5 rows"), ex.getMessage)
+    assert(ex.getMessage.contains("byte cap 320 bytes, effective 3 rows"), ex.getMessage)
   }
 
-  test("ANN regime decision transfers O(gate) rows, never a discarded matrix") {
+  test("ANN regime decision keeps at most the caps, never a discarded matrix") {
+    import BoundedCollect.{Overflow, RowCap}
     val rnd = new scala.util.Random(13)
     val big = (1L to 60L).map(i => (i, Array.fill(8)(rnd.nextGaussian())))
       .toDF("id", "vec")
     // both sides over the caps (gate 3, cap 5): deciding the fallback
-    // must cost one dims-sniff row + the gate prefix + two bounded
-    // counts - not two full cap-sized collects (the r15 shape)
+    // keeps nothing on the driver, and never more than 5 rows' bytes
+    // while it decides (the r15 shape collected two full matrices)
     val dec = Similarity.decideRegime(big, "id", "vec",
       Some((big, "id", "vec")), 3, 5, 512L << 20)
     assert(dec.regime == Similarity.AnnRegime.BothOver)
-    assert(dec.fetched <= 1 + 3 + 1 + 2,
-      s"driver fetched ${dec.fetched} rows to decide")
-    assert(dec.effectiveCap == 5L && dec.chunkRows == 3)
+    assert(dec.transfers.size == 2)
+    dec.transfers.foreach {
+      case o: Overflow =>
+        assert(o.cap == RowCap && o.effectiveRows == 5L, o.toString)
+        assert(o.peakKeptBytes <= 5L * 104, s"driver kept ${o.peakKeptBytes} B")
+      case other => fail(s"expected an overflow, got $other")
+    }
+    assert(dec.overflow.exists(_.describe == "row cap 5 rows"))
   }
 
   test("LSH/IVF topK: chunked over-gate kernels == single kernel == bucket join, no join planned") {
@@ -2443,6 +2452,53 @@ class OperatorSpec extends AnyFunSuite {
     }
   }
 
+  test("over-gate TF-IDF join-back runs the dfreq aggregate ONCE") {
+    // the quota spec's barrier count: the corpus count, the gate's
+    // dfreq run, then the join's own tf side — the r18 shape re-ran
+    // dfreq inside the over-gate join, a fourth corpus pass
+    val acc = spark.sparkContext.longAccumulator("docRows")
+    val docs = (1L to 400L).map(i => (i, s"w${i % 13} v${i % 7} u${i % 3}"))
+      .toDF("id", "body")
+      .as[(Long, String)]
+      .mapPartitions { it => it.map { r => acc.add(1L); r } }
+      .toDF("id", "body")
+    spark.conf.set(TextAnalysis.TfidfBroadcastWordsKey, "1") // vocab 23 > 1
+    try {
+      acc.reset()
+      val top = TextAnalysis.topTermsByTfidf(docs, "id", "body", 2)
+      assert(acc.value == 800L, s"count + gate must scan the corpus twice, saw ${acc.value}")
+      assert(top.count() == 800L)
+      assert(acc.value == 1200L,
+        s"over-gate join must NOT re-run dfreq: ${acc.value - 1200L} extra corpus rows scanned")
+    } finally {
+      spark.catalog.clearCache()
+      spark.conf.unset(TextAnalysis.TfidfBroadcastWordsKey)
+    }
+  }
+
+  test("malformed graft session confs fail with a UserException naming key and value") {
+    val docs = (1L to 60L).map(i => (i, s"d${i % 5}", s"w${i % 3} x${i % 4}"))
+      .toDF("id", "dom", "body")
+    val rnd = new scala.util.Random(3)
+    val emb = (1L to 20L).map(i => (i, Array.fill(4)(rnd.nextGaussian()))).toDF("id", "vec")
+    val cases: Seq[(String, () => Any)] = Seq(
+      Sampling.QuotaBroadcastRowsKey ->
+        (() => Sampling.stratifiedExactKRows(docs, "dom", "id", 2)),
+      TextAnalysis.TfidfBroadcastWordsKey ->
+        (() => TextAnalysis.topTermsByTfidf(docs, "id", "body", 2)),
+      Similarity.AnnBucketSaltKey ->
+        (() => Similarity.lshTopKFrames(emb, "id", "vec", emb, "id", "vec", k = 2,
+          planes = 2, maxEmbeddedProbes = 0)))
+    for ((key, run) <- cases; bad <- Seq("lots", "-3", "2147483648")) {
+      spark.conf.set(key, bad)
+      try {
+        val ex = intercept[graft.core.UserException](run())
+        assert(ex.getMessage.contains(key) && ex.getMessage.contains(s"'$bad'"), ex.getMessage)
+      } finally spark.conf.unset(key)
+    }
+    spark.catalog.clearCache()
+  }
+
   test("ANN output schema is regime-independent: INT ids widen to BIGINT in every regime") {
     val rnd = new scala.util.Random(37)
     // INT ids (not long): r15's regimes disagreed on the output type
@@ -2537,36 +2593,4 @@ class OperatorSpec extends AnyFunSuite {
     } finally spark.conf.unset(TextAnalysis.TfidfBroadcastWordsKey)
   }
 
-  test("ANN knownDims skips the sniff job, decides identically, results unchanged") {
-    val rnd = new scala.util.Random(42)
-    val probes = (1L to 40L).map(i => (i, Array.fill(8)(rnd.nextGaussian())))
-      .toDF("id", "vec")
-    val corpus = (101L to 103L).map(i => (i, Array.fill(8)(rnd.nextGaussian())))
-      .toDF("id", "vec")
-    // same byte budget as the byte-cap spec: dims govern the row caps
-    val sniffed = Similarity.decideRegime(probes, "id", "vec",
-      Some((corpus, "id", "vec")), 2, 1000, 320L)
-    val known = Similarity.decideRegime(probes, "id", "vec",
-      Some((corpus, "id", "vec")), 2, 1000, 320L, knownDims = Some(8))
-    // identical decision: regime class, effective caps, chunk rows
-    assert(known.regime.getClass == sniffed.regime.getClass)
-    assert(known.effectiveCap == sniffed.effectiveCap)
-    assert(known.chunkRows == sniffed.chunkRows)
-    assert(known.dims == sniffed.dims)
-    // the transfer bound SHRINKS by exactly the skipped sniff row
-    assert(known.fetched == sniffed.fetched - 1,
-      s"knownDims must skip the one-row sniff (got ${known.fetched} vs ${sniffed.fetched})")
-    // end to end: results identical with and without the hint
-    val withDims = Similarity.bruteForceTopKFrames(probes, "id", "vec",
-      corpus, "id", "vec", k = 2, maxEmbeddedProbes = 2,
-      maxChunkedProbes = 1000, maxCollectBytes = 320L, dims = Some(8))
-    val without = Similarity.bruteForceTopKFrames(probes, "id", "vec",
-      corpus, "id", "vec", k = 2, maxEmbeddedProbes = 2,
-      maxChunkedProbes = 1000, maxCollectBytes = 320L)
-    assert(withDims.except(without).isEmpty && without.except(withDims).isEmpty)
-    // a non-positive hint is ignored (falls back to the sniff)
-    val zero = Similarity.decideRegime(probes, "id", "vec",
-      Some((corpus, "id", "vec")), 2, 1000, 320L, knownDims = Some(0))
-    assert(zero.fetched == sniffed.fetched && zero.dims == sniffed.dims)
-  }
 }
