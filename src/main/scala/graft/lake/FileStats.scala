@@ -30,11 +30,12 @@ object FileStats {
 
   /** Returns the Delta-style stats JSON for one parquet file, or None
     * if the footer can't be read (stats are an optimization — never
-    * fail a write over them).
+    * fail a write over them). `conf` is shared by every file of a
+    * commit (the session's Hadoop conf; building one per file costs
+    * more than the footer read).
     */
-  def forFile(file: Path): Option[String] = try {
-    val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file.toUri), new Configuration())
+  def forFile(file: Path, conf: Configuration): Option[String] = try {
+    val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file.toUri), conf)
     val reader = ParquetFileReader.open(in)
     try {
       val footer = reader.getFooter
@@ -69,6 +70,17 @@ object FileStats {
       Some(TransactionLog.mapper.writeValueAsString(node))
     } finally reader.close()
   } catch { case NonFatal(_) => None }
+
+  /** [[forFile]] for every file of a commit, in input order: the
+    * footers are independent small reads, so they are read
+    * concurrently, all under one shared conf.
+    */
+  def forFiles(files: Seq[Path], conf: Configuration): Seq[Option[String]] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    files.map(f => Future(forFile(f, conf))).map(Await.result(_, Duration.Inf))
+  }
 
   private def putExtreme(
       target: ObjectNode,

@@ -29,9 +29,10 @@ import TransactionLog._
   *   directory listing) with `basePath` set, so hive-style partition
   *   columns come back and partition pruning works;
   * - merge is copy-on-write with file-level pruning: only data files
-  *   that actually contain matching keys are rewritten, found via an
-  *   inner join on `_metadata.file_path` — at 100 TB this is the
-  *   difference between rewriting 3 files and rewriting the table.
+  *   that actually contain matching keys are rewritten, found by one
+  *   probe job that counts semi-join matches per `_metadata.file_path`
+  *   — at 100 TB this is the difference between rewriting 3 files and
+  *   rewriting the table.
   */
 final class LakeTable(spark: SparkSession, val path: Path) {
 
@@ -355,6 +356,33 @@ final class LakeTable(spark: SparkSession, val path: Path) {
     f => touchedFiles.contains(scanPathOf(f))
   }
 
+  /** Rows of `matched` per value of its `fileCol` (scan provenance or
+    * add-path) — the touched-file set AND the matched-row count of a
+    * DML probe in ONE job: each task folds its rows into a path → count
+    * map and the driver sums the maps. The result is bounded by
+    * construction (at most one entry per task per file it scanned, so
+    * snapshot-sized, and the driver already holds the snapshot). A
+    * Dataset action, so it runs under an SQL execution id like every
+    * other DML job.
+    */
+  private def touchedFileCounts(matched: DataFrame, fileCol: String): Map[String, Long] = {
+    import spark.implicits._
+    matched.select(col(fileCol)).as[String].mapPartitions { it =>
+      val m = scala.collection.mutable.HashMap.empty[String, Long]
+      it.foreach(f => m.update(f, m.getOrElse(f, 0L) + 1L))
+      m.iterator
+    }.collect().groupMapReduce(_._1)(_._2)(_ + _)
+  }
+
+  /** What a copy-on-write MERGE's commitInfo records from its probe, at
+    * no job cost: the files it rewrites and, when the probe ran, the
+    * target rows it matched (how much of the table the probe pruned).
+    */
+  private def probeMetrics(
+      touched: Seq[AddFile], matched: Option[Map[String, Long]]): Map[String, String] =
+    Map("numTargetFilesRewritten" -> touched.size.toString) ++
+      matched.map(m => "numTargetRowsMatched" -> m.values.sum.toString)
+
   // ---- deletion vectors (merge-on-read) -----------------------------------
   //
   // Copy-on-write MERGE rewrites every byte of every touched file; with
@@ -532,8 +560,8 @@ final class LakeTable(spark: SparkSession, val path: Path) {
           "(expected copy-on-write or merge-on-read)")
     }
 
-  /** Writes `rows` (file, row) — `file` the CURRENT add-path of the
-    * data file each deleted row belongs to — as one (fid, row) parquet
+  /** Writes `rows` (file, row) — `file` the scan path ([[scanPathOf]])
+    * of the data file each deleted row belongs to — as one (fid, row) parquet
     * under `_dv/`, assigning each distinct file a dense `fid` ordinal.
     * `counts` = exact per-file row counts of `rows` (the caller always
     * has them from its own stats pass — recounting here would cost an
@@ -562,43 +590,43 @@ final class LakeTable(spark: SparkSession, val path: Path) {
     (rel, counts.map { case (f, c) => f -> (fidOf(f), c) }, size)
   }
 
-  /** Shared merge-on-read commit: record `newDvRows` (file = current
-    * add-path, row) as deletes — cumulative per file: old DV rows of
-    * re-touched files are carried forward via their descriptors'
-    * (path, fid) keys — append `appendDf`, one atomic commit pinned at
-    * `snap`, then apply the DV steady-state policy. Returns the number
-    * of NEWLY deleted rows.
+  /** Shared merge-on-read commit: record the rows of `matched` (probe
+    * rows carrying `__graft_file` / `__graft_row` provenance) as
+    * deletes — cumulative per file: old DV rows of re-touched files are
+    * carried forward via their descriptors' (path, fid) keys — append
+    * `appendDf`, one atomic commit pinned at `snap`, then apply the DV
+    * steady-state policy. Returns the number of NEWLY deleted rows.
     */
   private def commitMorDeletes(
       snap: Snapshot,
-      newDvRows: DataFrame,
+      matched: DataFrame,
       appendDf: Option[DataFrame],
       operation: String,
       opParams: Map[String, String],
       newCounts: Option[Map[String, Long]] = None): Long = {
     import spark.implicits._
-    val cached = newDvRows.cache()
+    // DV rows keep the scan path as their file key ([[touchedMatcher]])
+    val cached = matched
+      .select(col("__graft_file").as("file"), col("__graft_row").as("row")).cache()
     try {
       // ONE stats job (unless the caller already aggregated): per-file
       // new-delete counts carry the touched set, the deleted total,
       // AND the DV writer's cardinalities
-      val nc: Map[String, Long] = newCounts.getOrElse(
-        cached.groupBy("file").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap)
-      val touchedRel = nc.keySet
-      val touched = snap.files.filter(f => touchedRel.contains(f.path))
+      val nc: Map[String, Long] =
+        newCounts.getOrElse(touchedFileCounts(cached, "file"))
+      val touched = snap.files.filter(touchedMatcher(nc.keySet))
       val newDeleted = nc.values.sum
       // carry forward re-touched files' old rows, translated old
-      // (path, fid) → current add-path; files NOT re-touched keep
+      // (path, fid) → current scan path; files NOT re-touched keep
       // their old descriptors (the old parquet holds a superset, and
       // their fids still resolve into it). Cardinalities add exactly:
       // a still-deleted row is invisible to the probe, so new deletes
       // can never re-delete an old DV row.
       val oldCard: Map[String, Long] =
-        touched.flatMap(f => f.dv.map(d => f.path -> d.cardinality)).toMap
+        touched.flatMap(f => f.dv.map(d => scanPathOf(f) -> d.cardinality)).toMap
       val totalCounts = nc.map { case (f, c) => f -> (c + oldCard.getOrElse(f, 0L)) }
       val oldPairs: Seq[DataFrame] = touched
-        .flatMap(f => f.dv.map(d => (d.path, d.fid, f.path)))
+        .flatMap(f => f.dv.map(d => (d.path, d.fid, scanPathOf(f))))
         .groupBy(_._1).toSeq.map { case (dvPath, fs) =>
           val m = fs.map { case (_, fid, file) => (fid, file) }.toDF("fid", "file")
           spark.read.schema(DvSchema)
@@ -637,7 +665,7 @@ final class LakeTable(spark: SparkSession, val path: Path) {
         // `changes()` — same documented dedupe-on-PK contract as
         // copy-on-write rewrites)
         touched.foreach { f =>
-          val (fid, card) = fidCounts(f.path)
+          val (fid, card) = fidCounts(scanPathOf(f))
           actions += addAction(f.copy(
             dv = Some(DvDescriptor(rel, fid, card, size)),
             dataChange = false))
@@ -1291,7 +1319,11 @@ final class LakeTable(spark: SparkSession, val path: Path) {
   /** MERGE upsert (U3): update-all-when-matched / insert-all-when-not,
     * keys from the table manifest PKs
     * (/root/reference/src/component.py:238-260). Copy-on-write with
-    * file pruning.
+    * file pruning: one probe job semi-joins the snapshot to the source
+    * keys (no dedup — a semi-join emits each target row at most once)
+    * and returns per-file match counts, which name the files to
+    * rewrite and give the commitInfo's `numTargetFilesRewritten` /
+    * `numTargetRowsMatched`.
     */
   def merge(
       source: DataFrame,
@@ -1310,38 +1342,32 @@ final class LakeTable(spark: SparkSession, val path: Path) {
         // upsert ≡ delete every key-matched target row + append all
         // source rows (MergeOps.upsert algebra); record the deletes as
         // DV pairs instead of rewriting the touched files
-        import spark.implicits._
-        val srcK = src.select(keys.map(col): _*).dropDuplicates(keys)
+        // (a semi-join needs no dedup of its build side)
+        val srcK = src.select(keys.map(col): _*)
         // bucket-derived file pruning (scaladoc above): the probe scan
         // only reads files in buckets the source keys hash into
         val withProv = readWithProvenance(bucketPrunedSnapshot(snap, srcK, keys))
         val cond = keys.map(k => withProv(k) === srcK(k)).reduce(_ && _)
-        val scanToRel = snap.files.map(f => (scanPathOf(f), f.path))
-          .toDF("__graft_file", "file")
-        val dvRows = withProv.join(srcK, cond, "left_semi")
-          .join(broadcast(scanToRel), Seq("__graft_file"))
-          .select(col("file"), col("__graft_row").as("row"))
-        commitMorDeletes(snap, dvRows, Some(src), "MERGE",
+        commitMorDeletes(snap, withProv.join(srcK, cond, "left_semi"), Some(src), "MERGE",
           operationParams ++ Map("keys" -> keys.mkString(",")))
         return
       }
-      val srcKeys = src.select(keys.map(col): _*).dropDuplicates(keys)
+      val srcKeys = src.select(keys.map(col): _*)
 
       // File pruning: which live files contain rows whose key matches a
       // source key? `__graft_file` is the scan's per-row file
-      // provenance — distinct over the inner join gives exactly the
-      // files MERGE must rewrite. On a bucketed target the scan list
+      // provenance — its per-file counts over the semi-join give
+      // exactly the files MERGE must rewrite, and how many target rows
+      // matched, in one job. On a bucketed target the scan list
       // itself is first cut to the buckets the source keys hash into
       // (bucketPrunedSnapshot), and the bucketed scan's
       // HashPartitioning means the probe join never exchanges the
       // target side.
       val withFile = readWithProvenance(bucketPrunedSnapshot(snap, srcKeys, keys))
       val joinCond = keys.map(k => withFile(k) === srcKeys(k)).reduce(_ && _)
-      val touchedFiles: Set[String] = withFile
-        .join(srcKeys, joinCond, "left_semi")
-        .select("__graft_file").distinct()
-        .collect().map(_.getString(0)).toSet
-      val touched = snap.files.filter(touchedMatcher(touchedFiles))
+      val matched = touchedFileCounts(
+        withFile.join(srcKeys, joinCond, "left_semi"), "__graft_file")
+      val touched = snap.files.filter(touchedMatcher(matched.keySet))
 
       // Rewrite = (touched-file rows not matching) ∪ source rows; plus
       // source rows matching *untouched* files cannot exist by
@@ -1356,7 +1382,8 @@ final class LakeTable(spark: SparkSession, val path: Path) {
 
       val actions = Seq.newBuilder[com.fasterxml.jackson.databind.node.ObjectNode]
       actions += commitInfoAction("MERGE",
-        operationParams ++ Map("keys" -> keys.mkString(",")), ts)
+        operationParams ++ Map("keys" -> keys.mkString(",")) ++
+          probeMetrics(touched, Some(matched)), ts)
       touched.foreach(f => actions += removeAction(f.path, ts))
       adds.foreach(a => actions += addAction(a))
       commitPinned(snap.version, actions.result())
@@ -1424,16 +1451,14 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       }
 
       // -- file pruning: which live files must be rewritten? --
+      val matched: Option[Map[String, Long]] =
+        if (snap.files.isEmpty || probeSpec.notMatchedBySource.nonEmpty ||
+            probeSpec.matched.isEmpty) None
+        else Some(touchedFileCounts(
+          probe.join(src, probeSpec.condition, "left_semi"), "__graft_file"))
       val touched: Seq[AddFile] =
-        if (snap.files.isEmpty) Nil
-        else if (probeSpec.notMatchedBySource.nonEmpty) snap.files
-        else if (probeSpec.matched.isEmpty) Nil
-        else {
-          val files = probe.join(src, probeSpec.condition, "left_semi")
-            .select("__graft_file").distinct()
-            .collect().map(_.getString(0)).toSet
-          snap.files.filter(touchedMatcher(files))
-        }
+        if (probeSpec.notMatchedBySource.nonEmpty) snap.files
+        else matched.fold(Seq.empty[AddFile])(m => snap.files.filter(touchedMatcher(m.keySet)))
 
       // -- rewrite of touched files: matched + not-matched-by-source --
       val rewritten: Option[DataFrame] =
@@ -1540,7 +1565,8 @@ final class LakeTable(spark: SparkSession, val path: Path) {
         actions += commitInfoAction("MERGE",
           Map("matchedClauses" -> probeSpec.matched.size.toString,
             "notMatchedClauses" -> probeSpec.notMatched.size.toString,
-            "notMatchedBySourceClauses" -> probeSpec.notMatchedBySource.size.toString), ts)
+            "notMatchedBySourceClauses" -> probeSpec.notMatchedBySource.size.toString) ++
+            probeMetrics(touched, matched), ts)
         touched.foreach(f => actions += removeAction(f.path, ts))
         adds.foreach(a => actions += addAction(a))
         commitPinned(snap.version, actions.result())
@@ -1560,7 +1586,6 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       src: DataFrame,
       probe: DataFrame,
       spec: MergeSpec): Unit = {
-    import spark.implicits._
     val schema = snap.schema
     def tcol(df: DataFrame, c: String): Column = df(s"`${c.replace("`", "``")}`")
 
@@ -1625,7 +1650,6 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       // groups matched pairs by target row id, level 2 rolls up to the
       // file grain — file count is metadata-sized, so the collect is
       // safe at any scale.
-      val scanToRelMap = snap.files.map(f => scanPathOf(f) -> f.path).toMap
       val fileStats = changes.where(tPresent)
         .groupBy(col("__graft_file"), col("__graft_row"))
         .agg(sum(when(sPresent, 1L).otherwise(0L)).as("__m"),
@@ -1645,15 +1669,10 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       }
       val newCounts: Map[String, Long] = fileStats
         .filter(_.getLong(1) > 0)
-        .map(r => scanToRelMap(r.getString(0)) -> r.getLong(1)).toMap
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
       // only rows a clause CLAIMS leave their files; everything else
       // stays live in place — the whole point of merge-on-read
       val acted = changes.where(col("__graft_idx") >= 0)
-      val scanToRel = snap.files.map(f => (scanPathOf(f), f.path))
-        .toDF("__graft_file", "file")
-      val dvRows = acted
-        .join(broadcast(scanToRel), Seq("__graft_file"))
-        .select(col("file"), col("__graft_row").as("row"))
       val deleteIdx = clauses.map(_._2).zipWithIndex.collect {
         case (_: MergeClause.Delete, i) => i
       }
@@ -1709,7 +1728,7 @@ final class LakeTable(spark: SparkSession, val path: Path) {
         case None => alignToSchema(rewritten, schema)
       }
       enforceConstraints(appendDf, snap)
-      commitMorDeletes(snap, dvRows, Some(appendDf), "MERGE",
+      commitMorDeletes(snap, acted, Some(appendDf), "MERGE",
         Map("matchedClauses" -> spec.matched.size.toString,
           "notMatchedClauses" -> spec.notMatched.size.toString,
           "notMatchedBySourceClauses" -> spec.notMatchedBySource.size.toString),
@@ -1739,12 +1758,14 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       protocolAction(), metadataAction(meta)))
   }
 
-  /** DELETE: on a copy-on-write table, files that may contain matching
-    * rows (found via `_metadata.file_path` provenance, so
-    * stats/partition pruning applies to the probe) are rewritten
-    * without them; untouched files survive as-is. On a merge-on-read
-    * table the matched rows become DV pairs — no file is rewritten,
-    * write cost O(deleted rows) — the scale-safe strategy for a
+  /** DELETE: on a copy-on-write table, files that contain matching
+    * rows are rewritten without them; untouched files survive as-is.
+    * One probe job counts the matches per `_metadata.file_path`
+    * (stats/partition pruning applies to it): the counts name the
+    * touched files and sum to the deleted rows, since the probe and
+    * the rewrite read the same files under the same DV filter. On a
+    * merge-on-read table the matched rows become DV pairs — no file is
+    * rewritten, write cost O(deleted rows) — the scale-safe strategy for a
     * standing GDPR-delete pipeline with scattered keys. NULL-valued
     * conditions keep the row (SQL DELETE semantics). Returns the
     * number of deleted rows.
@@ -1752,25 +1773,16 @@ final class LakeTable(spark: SparkSession, val path: Path) {
   def delete(condition: Column): Long = {
     if (!exists) return 0L
     val snap = snapshot(path)
-    if (mergeModeOf(snap) == "merge-on-read") {
-      import spark.implicits._
-      val scanToRel = snap.files.map(f => (scanPathOf(f), f.path))
-        .toDF("__graft_file", "file")
-      val dvRows = readWithProvenance(snap)
-        .where(condition)
-        .join(broadcast(scanToRel), Seq("__graft_file"))
-        .select(col("file"), col("__graft_row").as("row"))
-      return commitMorDeletes(snap, dvRows, None, "DELETE", Map.empty)
-    }
-    val touchedFiles: Set[String] = readWithProvenance(snap)
-      .where(condition)
-      .select(col("__graft_file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    if (touchedFiles.isEmpty) return 0L
-    val touched = snap.files.filter(touchedMatcher(touchedFiles))
-    val touchedDf = readFiles(snap, touched)
-    val deleted = touchedDf.where(condition).count()
-    val kept = touchedDf.where(!coalesce(condition, lit(false)))
+    val hits = readWithProvenance(snap).where(condition)
+    if (mergeModeOf(snap) == "merge-on-read")
+      return commitMorDeletes(snap, hits, None, "DELETE", Map.empty)
+    val matched = touchedFileCounts(hits, "__graft_file")
+    if (matched.isEmpty) return 0L
+    val touched = snap.files.filter(touchedMatcher(matched.keySet))
+    // the probe read the rewrite's files under the same DV filter, so
+    // its counts ARE the deleted rows — no second count job
+    val deleted = matched.values.sum
+    val kept = readFiles(snap, touched).where(!coalesce(condition, lit(false)))
     val adds = writeDataFiles(bucketize(kept, bucketingOf(snap)),
       snap.metadata.partitionColumns, "snappy", bucketingOf(snap), mappingOf(snap))
     val ts = System.currentTimeMillis()
@@ -1785,7 +1797,8 @@ final class LakeTable(spark: SparkSession, val path: Path) {
   /** UPDATE: rows matching `condition` get each column in
     * `assignments` replaced by its expression (evaluated against the
     * OLD row, SQL UPDATE semantics). Copy-on-write rewrites only the
-    * files containing matches; merge-on-read DVs the old row versions
+    * files containing matches, found and counted by the same one-job
+    * probe as [[delete]]; merge-on-read DVs the old row versions
     * and appends the new ones — write cost O(updated rows), not
     * O(touched bytes). Returns the number of updated rows.
     */
@@ -1795,31 +1808,22 @@ final class LakeTable(spark: SparkSession, val path: Path) {
     val badCols = assignments.keySet.diff(snap.schema.fieldNames.toSet)
     if (badCols.nonEmpty)
       throw UserException(s"UPDATE of unknown columns: ${badCols.mkString(",")}")
+    val hits = readWithProvenance(snap).where(condition)
     if (mergeModeOf(snap) == "merge-on-read") {
-      import spark.implicits._
-      val matched = readWithProvenance(snap).where(condition)
-      val scanToRel = snap.files.map(f => (scanPathOf(f), f.path))
-        .toDF("__graft_file", "file")
-      val dvRows = matched
-        .join(broadcast(scanToRel), Seq("__graft_file"))
-        .select(col("file"), col("__graft_row").as("row"))
-      val rewritten = matched.select(snap.schema.fieldNames.toSeq.map { c =>
+      val rewritten = hits.select(snap.schema.fieldNames.toSeq.map { c =>
         assignments.get(c) match {
           case Some(expr) => expr.cast(snap.schema(c).dataType).as(c)
           case None       => col(c)
         }
       }: _*)
       enforceConstraints(rewritten, snap)
-      return commitMorDeletes(snap, dvRows, Some(rewritten), "UPDATE", Map.empty)
+      return commitMorDeletes(snap, hits, Some(rewritten), "UPDATE", Map.empty)
     }
-    val touchedFiles: Set[String] = readWithProvenance(snap)
-      .where(condition)
-      .select(col("__graft_file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    if (touchedFiles.isEmpty) return 0L
-    val touched = snap.files.filter(touchedMatcher(touchedFiles))
+    val matched = touchedFileCounts(hits, "__graft_file")
+    if (matched.isEmpty) return 0L
+    val touched = snap.files.filter(touchedMatcher(matched.keySet))
     val touchedDf = readFiles(snap, touched)
-    val updated = touchedDf.where(condition).count()
+    val updated = matched.values.sum
     val isMatch = coalesce(condition, lit(false))
     val rewritten = touchedDf.select(snap.schema.fieldNames.toSeq.map { c =>
       assignments.get(c) match {
@@ -2140,7 +2144,7 @@ final class LakeTable(spark: SparkSession, val path: Path) {
 
     val files = walkClosed(stage)
       .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-    val adds = files.map { f =>
+    val moved = files.map { f =>
       // Under a bucketed write (input repartitioned on the bucket
       // keys), the task index in the part-file name is the bucket id;
       // re-encode it as Spark's `_NNNNN` suffix so the scan side
@@ -2158,10 +2162,12 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       val dest = path.resolve(rel)
       Files.createDirectories(dest.getParent)
       Files.move(f, dest)
-      val pv = partitionValuesOf(rel)
-      AddFile(rel, pv, Files.size(dest),
-        Files.getLastModifiedTime(dest).toMillis,
-        stats = FileStats.forFile(dest))
+      rel -> dest
+    }
+    val stats = FileStats.forFiles(moved.map(_._2), spark.sessionState.newHadoopConf())
+    val adds = moved.zip(stats).map { case ((rel, dest), s) =>
+      AddFile(rel, partitionValuesOf(rel), Files.size(dest),
+        Files.getLastModifiedTime(dest).toMillis, stats = s)
     }
     // best-effort cleanup of the stage scaffolding (_SUCCESS, dirs)
     walkClosed(stage).reverse.foreach { p =>

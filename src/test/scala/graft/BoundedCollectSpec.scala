@@ -2,60 +2,15 @@ package graft
 
 import graft.operators.{BoundedCollect, Sampling, Similarity, TextAnalysis}
 import graft.operators.BoundedCollect.{ByteCap, Collected, Overflow, RowCap}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-
-import scala.jdk.CollectionConverters._
-
-object BoundedCollectSpec {
-  final case class Traced(jobs: Int, resultBytes: Long)
-}
 
 class BoundedCollectSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-  import BoundedCollectSpec.Traced
+  import JobTrace.Traced
 
-  private val TagKey = "graft.spec.counted"
-
-  /** Jobs `body` submits and the bytes their result tasks shipped to
-    * the driver, from a listener keyed on a local property. The bus is
-    * asynchronous but ordered: once a trailing marker job is seen,
-    * every earlier event has been delivered.
-    */
-  private def traced(body: => Any): Traced = {
-    val sc = spark.sparkContext
-    val tag = s"counted-${java.util.UUID.randomUUID()}"
-    val marker = s"marker-$tag"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val bytes = new java.util.concurrent.atomic.AtomicLong()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val t = Option(e.properties).flatMap(p => Option(p.getProperty(TagKey))).getOrElse("")
-        if (t == tag) e.stageIds.foreach(stages.add(_))
-        jobs.add(t)
-      }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskType == "ResultTask" && e.taskMetrics != null && stages.contains(e.stageId))
-          bytes.addAndGet(e.taskMetrics.resultSize)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(TagKey, tag)
-      body
-      sc.setLocalProperty(TagKey, marker)
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobs.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(jobs.contains(marker), "the listener bus never delivered the marker job")
-      Traced(jobs.asScala.count(_ == tag), bytes.get)
-    } finally {
-      sc.setLocalProperty(TagKey, null)
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def traced(body: => Any): Traced = JobTrace.traced(spark)(body)
 
   /** What `parts` result tasks send with no rows at all: their
     * status and metrics.

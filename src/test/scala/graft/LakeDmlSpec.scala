@@ -1,0 +1,195 @@
+package graft
+
+import graft.lake.{FileStats, LakeTable, MergeClause, MergeSpec}
+import graft.operators.MergeOps
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.file.Files
+
+/** Local file system whose reads fail (writes, listings and renames
+  * work): a parquet footer read through it never succeeds.
+  */
+class UnreadableLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(
+      f: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream =
+    throw new java.io.IOException(s"unreadable: $f")
+}
+
+/** Copy-on-write DML: one probe job names the touched files AND counts
+  * the matched rows, and the commit harvests footer stats concurrently.
+  */
+class LakeDmlSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private def jobs(body: => Any): Int = JobTrace.traced(spark)(body).jobs
+
+  private def tmpTable(): LakeTable =
+    LakeTable.forPath(spark, Files.createTempDirectory("graft-dml").resolve("t").toString)
+
+  /** Ids 0..999 in 4 files of 250 (a nullable key column, so NULL
+    * source keys can land); `v` = id % 7, NULL on every 10th id.
+    */
+  private def seeded(): LakeTable = {
+    val t = tmpTable()
+    t.write(spark.range(0, 1000, 1, 4).select(when($"id" >= 0, $"id").as("id"),
+      when($"id" % 10 === 0, lit(null)).otherwise($"id" % 7).cast("int").as("v"),
+      ($"id" % 3).cast("string").as("s")), "append")
+    assert(t.snapshotNow.files.size == 4)
+    t
+  }
+
+  private def lastParams(t: LakeTable): Map[String, String] =
+    t.historyInfo.head.operationParameters
+
+  private def sorted(rows: Array[Row]): Seq[String] = rows.map(_.toString).toSeq.sorted
+
+  test("copy-on-write DML runs a fixed number of jobs: upsert 5, DELETE 2, UPDATE 2") {
+    val t = seeded()
+    // 20 source rows, half matching the last file: the probe semi-join
+    // broadcasts the source keys
+    val src = spark.range(990, 1010, 1, 2)
+      .select($"id", lit(1).as("v"), lit("u").as("s"))
+    // source cache build, key broadcast, probe; the rewrite broadcasts
+    // the keys again and writes
+    assert(jobs(t.merge(src, Seq("id"))) == 5)
+    // probe (files + count in one job), rewrite
+    assert(jobs(t.delete($"id" < 5)) == 2)
+    assert(jobs(t.update($"id" === 500, Map("s" -> lit("x")))) == 2)
+    assert(t.read().count() == 1005)
+  }
+
+  test("merge-on-read DELETE counts its DV rows in one job") {
+    val t = seeded()
+    t.alterSetProperties(Map(LakeTable.MergeModeKey -> "merge-on-read"))
+    var n = 0L
+    // one job counts the DV rows per file (filling their cache); the DV
+    // write, on a pool thread, broadcasts its fid lookup, exchanges and
+    // writes
+    assert(jobs { n = t.delete($"id" % 4 === 1) } == 4)
+    assert(n == 250)
+    assert(t.hasDeletionVectors)
+    assert(t.read().count() == 750)
+  }
+
+  test("DELETE/UPDATE counts: rows whose condition is NULL are kept and not counted") {
+    val expected = (0 until 1000).count(i => i % 10 != 0 && i % 7 > 3).toLong
+    val del = seeded()
+    assert(del.delete($"v" > 3) == expected)
+    assert(lastParams(del)("numDeleted") == expected.toString)
+    assert(del.read().count() == 1000 - expected)
+    assert(del.read().where($"v".isNull).count() == 100)
+
+    val upd = seeded()
+    assert(upd.update($"v" > 3, Map("s" -> lit("hit"))) == expected)
+    assert(lastParams(upd)("numUpdated") == expected.toString)
+    assert(upd.read().where($"s" === "hit").count() == expected)
+    assert(upd.read().where($"v".isNull && $"s" === "hit").count() == 0)
+  }
+
+  test("DELETE/UPDATE counts on a copy-on-write table still carrying merge-on-read DVs") {
+    def dvTable(): LakeTable = {
+      val t = seeded()
+      t.alterSetProperties(Map(LakeTable.MergeModeKey -> "merge-on-read"))
+      assert(t.delete($"id" % 4 === 1) == 250) // a quarter of each file: the DVs stay
+      t.alterSetProperties(Map(LakeTable.MergeModeKey -> "copy-on-write"))
+      assert(t.hasDeletionVectors)
+      t
+    }
+    // odd ids: the 250 with id % 4 == 1 are already deleted, 250 are live
+    val del = dvTable()
+    assert(del.delete($"id" % 2 === 1) == 250)
+    assert(lastParams(del)("numDeleted") == "250")
+    assert(del.read().count() == 500)
+    assert(del.read().where($"id" % 2 === 1).count() == 0)
+
+    val upd = dvTable()
+    assert(upd.update($"id" % 2 === 1, Map("s" -> lit("hit"))) == 250)
+    assert(lastParams(upd)("numUpdated") == "250")
+    assert(upd.read().count() == 750)
+    assert(upd.read().where($"s" === "hit").count() == 250)
+    assert(upd.read().where($"id" % 4 === 1).count() == 0)
+  }
+
+  test("upsert with duplicate and NULL source keys equals MergeOps.upsert; probe metrics recorded") {
+    val t = seeded()
+    val before = t.read().collect()
+    val src = Seq[(Option[Long], Option[Int], String)](
+      (Some(5L), Some(1), "a"), (Some(5L), Some(2), "b"), // one target row, two source rows
+      (None, Some(3), "n"), (None, Some(4), "m"),          // NULL keys never match
+      (Some(600L), Some(9), "c"), (Some(2000L), None, "new"))
+      .toDF("id", "v", "s")
+    val expected = MergeOps.upsert(
+      spark.createDataFrame(spark.sparkContext.parallelize(before.toSeq), t.read().schema),
+      src, Seq("id")).collect()
+    t.merge(src, Seq("id"))
+    assert(sorted(t.read().collect()) == sorted(expected))
+    // ids 5 and 600 live in the first and third file
+    val params = lastParams(t)
+    assert(params("numTargetRowsMatched") == "2")
+    assert(params("numTargetFilesRewritten") == "2")
+  }
+
+  test("SQL-style MERGE records the rows its probe matched and the files it rewrote") {
+    val t = seeded()
+    val src = Seq((3L, "x"), (251L, "y"), (252L, "z"), (5000L, "w")).toDF("sid", "sname")
+    t.mergeInto(src) { (target, s) =>
+      MergeSpec(target("id") === s("sid"),
+        matched = Seq(MergeClause.Update(None, Map("s" -> s("sname")))),
+        notMatched = Seq(MergeClause.Insert(None, Map("id" -> s("sid"), "s" -> s("sname")))),
+        notMatchedBySource = Nil)
+    }
+    // ids 3 and 251/252 live in the first and second file
+    assert(lastParams(t)("numTargetRowsMatched") == "3")
+    assert(lastParams(t)("numTargetFilesRewritten") == "2")
+    assert(t.read().count() == 1001)
+    assert(t.read().where($"s".isin("x", "y", "z", "w")).count() == 4)
+    // NOT MATCHED BY SOURCE rewrites every file without a probe: no row count
+    val live = t.snapshotNow.files.size
+    t.mergeInto(src) { (target, s) =>
+      MergeSpec(target("id") === s("sid"), matched = Nil, notMatched = Nil,
+        notMatchedBySource = Seq(MergeClause.Update(
+          Some(target("id") === 0), Map("s" -> lit("gone")))))
+    }
+    assert(lastParams(t)("numTargetFilesRewritten") == live.toString)
+    assert(!lastParams(t).contains("numTargetRowsMatched"))
+  }
+
+  test("stats harvest: concurrent footers equal the sequential harvest") {
+    val multi = seeded()
+    val parted = tmpTable()
+    parted.write(spark.range(0, 600, 1, 3).select($"id",
+      ($"id" % 3).cast("int").as("g"), concat(lit("n"), $"id".cast("string")).as("name")),
+      "append", partitionBy = Seq("g"))
+    assert(parted.snapshotNow.files.size >= 3)
+    for (t <- Seq(multi, parted); f <- t.snapshotNow.files) {
+      assert(f.stats.isDefined, f.path)
+      assert(f.stats == FileStats.forFile(t.path.resolve(f.path), new Configuration()), f.path)
+    }
+    // an unreadable file yields None in its slot and leaves the others alone
+    val junk = Files.createTempFile("graft-junk", ".parquet")
+    Files.writeString(junk, "not a parquet file")
+    val files = multi.snapshotNow.files.map(f => multi.path.resolve(f.path))
+    val out = FileStats.forFiles(files.head +: junk +: files.tail, new Configuration())
+    assert(out(1).isEmpty)
+    assert(out.patch(1, Nil, 1) == files.map(FileStats.forFile(_, new Configuration())))
+  }
+
+  test("stats harvest: a footer that cannot be read leaves the file without stats; the commit lands") {
+    val t = tmpTable()
+    spark.conf.set("fs.file.impl", classOf[UnreadableLocalFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try t.write(spark.range(0, 100, 1, 2).toDF("id"), "append")
+    finally {
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
+    val files = t.snapshotNow.files
+    assert(files.size == 2)
+    assert(files.forall(_.stats.isEmpty))
+    assert(t.read().count() == 100)
+  }
+}
