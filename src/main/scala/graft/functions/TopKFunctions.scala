@@ -235,6 +235,29 @@ object TopKFunctions {
   object ProbeTopKAgg {
     /** shared empty active-probe set for unmapped LSH signatures */
     private[functions] val NoActive: Array[Int] = Array.empty[Int]
+
+    /** Sign-bit LSH signature of a vector — Similarity.lshSignature's
+      * exact rule: bit p set iff dot(plane_p, v) >= 0, the dot over
+      * min(plane dims, vec length) left-to-right, the same arithmetic
+      * the column form's dot kernel runs. The ONE definition both the
+      * driver-side probe bucketing and the kernel's per-row hashing
+      * call, so a probe and a candidate with equal vectors always
+      * share a bucket.
+      */
+    private[graft] def signature(planes: Array[Array[Double]], v: Array[Double]): Long = {
+      var sig = 0L
+      var p = 0
+      while (p < planes.length) {
+        val pl = planes(p)
+        val d = math.min(pl.length, v.length)
+        var dot = 0.0
+        var j = 0
+        while (j < d) { dot += pl(j) * v(j); j += 1 }
+        if (dot >= 0) sig |= 1L << p
+        p += 1
+      }
+      sig
+    }
   }
 
   case class ProbeTopKAgg(
@@ -354,21 +377,7 @@ object TopKFunctions {
           }
           probesByList(best)
         } else if (planes.nonEmpty) {
-          // lshSignature's exact rule: bit p set iff dot(plane_p, v)
-          // >= 0, dot over min(plane dims, vec length) left-to-right —
-          // the same arithmetic the column form's dot kernel runs
-          var sig = 0L
-          var p = 0
-          while (p < planes.length) {
-            val pl = planes(p)
-            val d = math.min(pl.length, n)
-            var dot = 0.0
-            var j = 0
-            while (j < d) { dot += pl(j) * cv(j); j += 1 }
-            if (dot >= 0) sig |= 1L << p
-            p += 1
-          }
-          probesBySig.getOrElse(sig, ProbeTopKAgg.NoActive)
+          probesBySig.getOrElse(ProbeTopKAgg.signature(planes, cv), ProbeTopKAgg.NoActive)
         } else null
       val nActive = if (active == null) probeIds.length else active.length
       var a = 0
@@ -592,17 +601,16 @@ object TopKFunctions {
   }
 
   /** `graft_corpus_topk(probe_id, probe_vec)` — the ROLE-SWAPPED
-    * companion to [[ProbeTopKAgg]]: the CORPUS (or a disjoint chunk
-    * of it) embeds in the expression and the PROBES are scanned —
+    * companion to [[ProbeTopKAgg]]: the CORPUS embeds in the
+    * expression and the PROBES are scanned —
     * per probe row, the k best (cand_id, sim) among the embedded
     * candidates, best-first, as a plain projection. No aggregate, no
     * exchange, no joined rows: the shape for probe sets too large to
     * driver-collect when the corpus side DOES fit the collect bound
     * (Similarity.bruteForceTopKFrames' third regime — it retires the
     * measured-dead CartesianProduct fallback whenever either side
-    * fits, BENCHNOTES_r14). Across corpus chunks the per-chunk arrays
-    * re-rank through graft_top_k: chunks are disjoint in candidate
-    * space, so the merge of per-chunk top-ks IS the global top-k.
+    * fits, BENCHNOTES_r14). The best-first array IS the probe's
+    * answer: one kernel over the whole corpus matrix, no k-merge.
     *
     * Scoring and ranking replay ProbeTopKAgg exactly (spec-pinned ≡
     * the join regime): split norms in the kernel's accumulation

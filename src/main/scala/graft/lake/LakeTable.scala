@@ -637,21 +637,18 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       val dvAll = oldPairs.foldLeft(cached.select(col("file"), col("row")))(_ unionByName _)
       // the DV write and the append write are independent job chains —
       // overlap them (local[32] and a real cluster both have the slack;
-      // sequential, they'd serialize two sub-second tails)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val dvOutF: Future[Option[(String, Map[String, (Int, Long)], Long)]] =
-        if (touched.isEmpty) Future.successful(None)
-        else Future(Some(writeDvFile(dvAll, totalCounts)))
-      val addsF: Future[Seq[AddFile]] = appendDf match {
-        case None => Future.successful(Nil)
-        case Some(df) => Future(
+      // sequential, they'd serialize two sub-second tails), each under
+      // the caller's job group, description and scheduler pool
+      val dvOutF = SparkBridge.async(spark) {
+        if (touched.isEmpty) None else Some(writeDvFile(dvAll, totalCounts))
+      }
+      val addsF = SparkBridge.async(spark) {
+        appendDf.fold(Seq.empty[AddFile])(df =>
           writeDataFiles(bucketize(df, bucketingOf(snap)),
             snap.metadata.partitionColumns, "snappy", bucketingOf(snap), mappingOf(snap)))
       }
-      val dvOut = Await.result(dvOutF, Duration.Inf)
-      val adds = Await.result(addsF, Duration.Inf)
+      val dvOut = SparkBridge.await(dvOutF)
+      val adds = SparkBridge.await(addsF)
       if (touched.isEmpty && adds.isEmpty) return 0L
       val ts = System.currentTimeMillis()
       val actions = Seq.newBuilder[com.fasterxml.jackson.databind.node.ObjectNode]
@@ -1115,13 +1112,16 @@ final class LakeTable(spark: SparkSession, val path: Path) {
 
     // Schema reconciliation (schema_mode="merge" on every reference
     // write, component.py:97,109): append may add columns; overwrite
-    // replaces data but merges the schema too.
+    // replaces data but merges the schema too. A schema taken from the
+    // data is logged NULLABLE at every level, as Delta does: a frame's
+    // non-null flag (`spark.range`'s id) describes that frame, not
+    // every later write — and a logged non-nullable column reads a
+    // NULL that a later MERGE or append lands as 0
     val targetSchema: StructType = existing match {
       case Some(s) if normalized == "append" =>
-        val out = mergeSchemas(s.schema, df.schema, allowNew = mergeSchema)
-        out
+        mergeSchemas(s.schema, df.schema, allowNew = mergeSchema)
       case Some(s) if mergeSchema => mergeSchemas(s.schema, df.schema, allowNew = true)
-      case _ => df.schema
+      case _ => SparkBridge.asNullable(df.schema)
     }
     val aligned = alignToSchema(df, targetSchema)
 

@@ -1105,24 +1105,18 @@ object Dedup {
     * instead — see Similarity.lshTopK).
     *
     * The single-frame convenience over [[embeddingNearDupFrames]]
-    * (all regimes there): one embedded graft_probe_matches kernel
-    * under the 2¹⁶ gate, chunked kernels up to the collect caps
-    * (disjoint probe chunks × corpus scans — probes partition, so the
-    * union IS the single-kernel answer), role swap past the caps when
-    * the corpus fits them, and past BOTH a fail-fast (the non-equi
-    * join plans as CartesianProduct once the probe side outgrows
-    * broadcast — the shape the r14 sf10 measurement showed dies on
-    * disk spill; [[Similarity.AnnForceJoinKey]] opts in anyway). From
-    * THIS entry point the role swap never fires (probes ⊆ corpus: a
-    * probe set too big to collect implies a corpus too big to
-    * collect).
+    * (all regimes there): one embedded graft_probe_matches kernel up
+    * to the collect caps, role swap past the caps when the corpus fits
+    * them, and past BOTH a fail-fast (the non-equi join plans as
+    * CartesianProduct once the probe side outgrows broadcast — the
+    * shape the r14 sf10 measurement showed dies on disk spill;
+    * [[Similarity.AnnForceJoinKey]] opts in anyway). From THIS entry
+    * point the role swap never fires (probes ⊆ corpus: a probe set too
+    * big to collect implies a corpus too big to collect).
     *
     * Driver memory bound: the collected probe matrix is capped by
     * BOTH `maxChunkedProbes` rows and the `maxCollectBytes` budget of
-    * exact row bytes (Similarity.decideRegime). When nChunks > 1 each chunk
-    * re-runs `emb`'s full lineage: persist a DERIVED emb (anything
-    * that isn't a plain parquet scan) before calling, or the upstream
-    * compute repeats per chunk.
+    * exact row bytes (Similarity.decideRegime).
     */
   def embeddingNearDup(
       emb: DataFrame,
@@ -1154,21 +1148,22 @@ object Dedup {
     * self-pair. Output ids are BIGINT in every regime regardless of
     * input id type (the regime must not leak into the schema).
     *
-    * Same regime structure as Similarity.bruteForceTopKFrames (its
-    * scaladoc carries the full argument; the decision protocol and
-    * the row+byte collect budgets live in Similarity.decideRegime):
-    * probe-embedded/chunked kernels up to the collect caps; past them
-    * the ROLE SWAP embeds the corpus instead when IT fits —
-    * ⌈corpus/gate⌉ reversed `graft_probe_matches` projection chunks
-    * over one probe scan each (`emitGreater`: the row is the probe,
-    * emitted ids are candidates above it — the identical pair
-    * contract from the other side), and because chunks are disjoint
-    * in candidate space their UNION is the answer outright, with no
-    * merge aggregate at all. When BOTH sides exceed the caps the
-    * engine FAILS FAST (the non-equi join was measured dead at scale,
-    * BENCHNOTES_r14) unless the session opts in via
-    * [[Similarity.AnnForceJoinKey]]; `maxEmbeddedProbes = 0` is the
-    * spec seam that runs the join silently.
+    * Regimes (the decision protocol and the row+byte collect budgets
+    * live in Similarity.decideRegime): within the collect caps the
+    * probes embed in ONE `graft_probe_matches` projection over the
+    * corpus scan; past them the ROLE SWAP embeds the corpus instead
+    * when IT fits — one reversed kernel over the probe scan
+    * (`emitGreater`: the row is the probe, emitted ids are candidates
+    * above it — the identical pair contract from the other side).
+    * Either way the exploded kernel output IS the answer, with no join
+    * and no merge. The embedded gate splits neither: a projection's
+    * chunks would all run in one stage, every task deserializing every
+    * chunk, so they would bound no task memory and only add rescans.
+    * When BOTH sides exceed the caps the engine FAILS FAST (the
+    * non-equi join was measured dead at scale, BENCHNOTES_r14) unless
+    * the session opts in via [[Similarity.AnnForceJoinKey]];
+    * `maxEmbeddedProbes = 0` is the spec seam that runs the join
+    * silently.
     */
   def embeddingNearDupFrames(
       probes: DataFrame,
@@ -1183,64 +1178,49 @@ object Dedup {
       maxCollectBytes: Long = 512L << 20,
       allPairs: Boolean = false): DataFrame = {
     val spark = corpus.sparkSession
-    import graft.functions.VectorFunctions
     val dec = Similarity.decideRegime(probes, probeIdCol, probeVecCol,
       Some((corpus, corpusIdCol, corpusVecCol)),
       maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes)
     dec.regime match {
       case Similarity.AnnRegime.Probes(collected) =>
-        // EMBEDDED/CHUNKED: per corpus row the graft_probe_matches
-        // kernel emits matching probe ids directly, with no joined-row
-        // materialization; scoring is bit-identical to the join form
-        // (split norms, dot per pair, zero guard)
+        // per corpus row the graft_probe_matches kernel emits matching
+        // probe ids directly, with no joined-row materialization;
+        // scoring is bit-identical to the join form (split norms, dot
+        // per pair, zero guard)
+        val (pIds, pVecs) = Similarity.matrix(collected)
         val all = rebalance(
           corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")),
           Seq(col("cand_id")))
-        Similarity.chunks(collected, maxEmbeddedProbes).map { case (pIds, pVecs) =>
-          val matches = SparkBridge.column(graft.functions.TopKFunctions.ProbeMatches(
-            SparkBridge.expression(all("cand_id")),
-            SparkBridge.expression(all("cand_vec")),
-            pIds, pVecs, threshold, emitAll = allPairs))
-          all.select(col("cand_id"), explode(matches).as("probe_id"))
-        }.reduce(_.union(_))
-          .select(col("probe_id"), col("cand_id").cast("long").as("cand_id"))
-      case Similarity.AnnRegime.Corpus(candCollected) =>
+        val matches = SparkBridge.column(graft.functions.TopKFunctions.ProbeMatches(
+          SparkBridge.expression(all("cand_id")),
+          SparkBridge.expression(all("cand_vec")),
+          pIds, pVecs, threshold, emitAll = allPairs))
+        all.select(explode(matches).as("probe_id"), col("cand_id").cast("long").as("cand_id"))
+      case Similarity.AnnRegime.Corpus(collected) =>
         // ROLE SWAP: embed the corpus (reversed kernel over the probe
-        // scan; disjoint candidate chunks union directly — no merge)
+        // scan). The kernel sits DIRECTLY inside the generator (never
+        // an aliased array: InferFiltersFromGenerate would duplicate it
+        // — the bruteForceTopKFrames role-swap audit caught exactly that)
+        val (cIds, cVecs) = Similarity.matrix(collected)
         val probeFrame = rebalance(
           probes.select(col(probeIdCol).as("probe_id"), col(probeVecCol).as("probe_vec")),
           Seq(col("probe_id")))
-        Similarity.chunks(candCollected, maxEmbeddedProbes).map { case (cIds, cVecs) =>
-          // kernel DIRECTLY inside the generator (never an aliased
-          // array: InferFiltersFromGenerate would duplicate it — the
-          // bruteForceTopKFrames role-swap audit caught exactly that)
-          val matches = SparkBridge.column(graft.functions.TopKFunctions.ProbeMatches(
-            SparkBridge.expression(probeFrame("probe_id")),
-            SparkBridge.expression(probeFrame("probe_vec")),
-            cIds, cVecs, threshold, emitGreater = true, emitAll = allPairs))
-          probeFrame.select(col("probe_id"), explode(matches).as("cand_id"))
-        }.reduce(_.union(_))
-          .select(col("probe_id").cast("long").as("probe_id"), col("cand_id"))
+        val matches = SparkBridge.column(graft.functions.TopKFunctions.ProbeMatches(
+          SparkBridge.expression(probeFrame("probe_id")),
+          SparkBridge.expression(probeFrame("probe_vec")),
+          cIds, cVecs, threshold, emitGreater = true, emitAll = allPairs))
+        probeFrame.select(col("probe_id").cast("long").as("probe_id"), explode(matches).as("cand_id"))
       case Similarity.AnnRegime.BothOver =>
         dec.overflow.foreach(Similarity.enforceJoinContract(spark, "embeddingNearDup", _))
         // norms once per SIDE row, dot alone per pair: bit-identical to
-        // the cosine kernel (same accumulation, same sqrt-product
-        // denominator — Similarity.splitScore scaladoc) at a third of
-        // the per-pair work
-        val probeSide = probes
-          .select(col(probeIdCol).as("probe_id"), col(probeVecCol).as("probe_vec"))
-          .withColumn("probe_norm", VectorFunctions.norm2(spark, col("probe_vec")))
-        // the corpus side streams past the broadcast probes; rebalance
-        // so a single-row-group embedding file doesn't serialize the
-        // |probes|×|corpus| cosine loop on one core (no-op at
-        // multi-split scale — see rebalance)
-        val all = rebalance(
-          corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")),
-          Seq(col("cand_id")))
-          .withColumn("cand_norm", VectorFunctions.norm2(spark, col("cand_vec")))
-        val denom = col("probe_norm") * col("cand_norm")
-        val cos = when(denom === 0.0, 0.0).otherwise(
-          VectorFunctions.dot(spark, col("probe_vec"), col("cand_vec")) / denom)
+        // the cosine kernel (Similarity.pairCosine scaladoc) at a third
+        // of the per-pair work. The corpus side streams past the
+        // probes; rebalance so a single-row-group embedding file
+        // doesn't serialize the |probes|×|corpus| cosine loop on one
+        // core (no-op at multi-split scale — see rebalance)
+        val probeSide = Similarity.normedSide(probes, probeIdCol, probeVecCol, "probe")
+        val all = Similarity.normedSide(corpus, corpusIdCol, corpusVecCol, "cand",
+          rebalance(_, Seq(col("cand_id"))))
         // no broadcast hint above the embedded gate: the probe count is
         // known only to exceed the cap and can grow ∝ corpus — a forced
         // broadcast is a driver-OOM at 100×; the planner sizes the build
@@ -1255,7 +1235,7 @@ object Dedup {
               .crossJoin(probeSide.where(col("probe_id").isNotNull))
           else all.join(probeSide, col("probe_id") < col("cand_id"))
         joined
-          .where(cos > threshold)
+          .where(Similarity.pairCosine(spark) > threshold)
           .select(col("probe_id").cast("long").as("probe_id"),
             col("cand_id").cast("long").as("cand_id"))
     }

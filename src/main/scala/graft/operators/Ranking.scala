@@ -55,13 +55,18 @@ object Ranking {
     * `(orderCol DESC, idCol ASC)`) is exact whenever `orderCol` and
     * `idCol` are non-null and non-NaN — the heap's tie rule IS the
     * window's (value desc, id asc), pinned by RankingSpec. The ONE
-    * deliberate deviation (graft_top_k's contract): null/NaN-valued
-    * rows never rank, where the window would rank them last/first.
+    * deliberate deviation (graft_top_k's contract): null/NaN order
+    * values never rank, where the window would rank them last/first —
+    * so a group whose order values are ALL null/NaN emits no rows at
+    * all.
     *
     * Output: (groupCols…, rkCol BIGINT 1..k, idCol BIGINT, orderCol
     * DOUBLE) — the heap carries (double, long) pairs, so the order
     * value must be float/double and the id integral; both pass
-    * through the heap bit-unchanged.
+    * through the heap bit-unchanged. Any other type (DECIMAL money
+    * columns included: a double coercion would round wide values
+    * into false ties) fails with a [[graft.core.UserException]] naming
+    * the column.
     */
   def topKPerGroup(
       df: DataFrame,
@@ -72,6 +77,18 @@ object Ranking {
       rkCol: String = "rk"): DataFrame = {
     import org.apache.spark.sql.functions._
     require(groupCols.nonEmpty, "at least one group column")
+    import org.apache.spark.sql.types._
+    def typeOf(c: String): DataType = df.select(col(c)).schema.head.dataType
+    typeOf(orderCol) match {
+      case FloatType | DoubleType =>
+      case t => throw graft.core.UserException(
+        s"topKPerGroup: order column `$orderCol` must be FLOAT or DOUBLE, got ${t.sql}")
+    }
+    typeOf(idCol) match {
+      case ByteType | ShortType | IntegerType | LongType =>
+      case t => throw graft.core.UserException(
+        s"topKPerGroup: id column `$idCol` must be integral, got ${t.sql}")
+    }
     val spark = df.sparkSession
     df.groupBy(groupCols.map(col): _*)
       .agg(graft.functions.TopKFunctions.topK(

@@ -1,7 +1,10 @@
 package graft.operators
 
+import graft.functions.TopKFunctions.{CorpusTopK, ProbeTopKAgg}
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.graftbridge.SparkBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -28,53 +31,63 @@ object Similarity {
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.operators.Similarity")
 
-  /** round(cosine, 6) — ranking key. Rounding makes cross-engine
-    * comparison stable; ties break on id.
-    */
-  private def score(df: DataFrame, a: Column, b: Column): Column =
-    round(VectorFunctions.cosine(df.sparkSession, a, b), 6)
-
-  /** The same score from PRE-COMPUTED per-side norms: bit-identical to
-    * `score` (graft_cosine computes `dot/(sqrt(nx)*sqrt(ny))` with the
-    * zero-denominator guard replicated here; graft_norm2 IS sqrt(nx)
-    * with the same accumulation order), but the per-PAIR loop is dot
-    * alone — one third of the cosine kernel's arithmetic, with each
-    * row's norm amortized over every pair it joins into. On a probes ×
-    * corpus scorer that is the difference between 3 and 1 passes over
-    * every vector element ever paired.
+  /** Split-norm cosine of a joined pair frame carrying `probe_vec`,
+    * `probe_norm`, `cand_vec` and `cand_norm` ([[normedSide]]):
+    * bit-identical to `graft_cosine` (which computes
+    * `dot/(sqrt(nx)*sqrt(ny))` with the zero-denominator guard
+    * replicated here; graft_norm2 IS sqrt(nx) with the same
+    * accumulation order), but the per-PAIR loop is dot alone — one
+    * third of the cosine kernel's arithmetic, with each row's norm
+    * amortized over every pair it joins into. On a probes × corpus
+    * scorer that is the difference between 3 and 1 passes over every
+    * vector element ever paired.
     *
     * PRECONDITION — uniform embedding dimension. The fused cosine
     * kernel accumulates BOTH norms over min(len_a, len_b), while
-    * graft_norm2 (and ProbeTopKAgg's per-side norms) cover each side's
-    * FULL length; the two agree exactly iff every paired vector has
-    * the same dimension, which an embedding column has by
+    * graft_norm2 (and the embedded kernels' per-side norms) cover each
+    * side's FULL length; the two agree exactly iff every paired vector
+    * has the same dimension, which an embedding column has by
     * construction. On mixed-dimension rows the split form scores with
     * full-length norms (the mathematically saner choice) and the
     * bit-identity claim does not apply.
     */
-  private def splitScore(
-      spark: org.apache.spark.sql.SparkSession,
-      a: Column, b: Column, normA: Column, normB: Column): Column = {
-    val denom = normA * normB
-    round(when(denom === 0.0, 0.0)
-      .otherwise(VectorFunctions.dot(spark, a, b) / denom), 6)
+  private[graft] def pairCosine(spark: SparkSession): Column = {
+    val denom = col("probe_norm") * col("cand_norm")
+    when(denom === 0.0, 0.0)
+      .otherwise(VectorFunctions.dot(spark, col("probe_vec"), col("cand_vec")) / denom)
   }
 
-  /** Per-probe (rank, cand_id, sim) for the k best candidates of a
-    * scored frame, via the mergeable bounded-top-k aggregate
-    * (TopKFunctions scaladoc). The window formulation
-    * (`row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC,
-    * cand_id)`) is semantically identical on non-null scores (the
-    * aggregate DROPS null-scored rows where the window ranks them
-    * last — no null sims arise here: splitScore/graft_cosine are
-    * null only on null inputs, which the joins never pair) but
-    * shuffles EVERY scored row — probes × corpus, the cross product these operators never
-    * materialize elsewhere; the aggregate partial-reduces each map
-    * task to k rows per probe, so the exchange is corpus-size-free.
+  /** `(<role>_id, <role>_vec, <role>_norm)` of an (id, vector) frame:
+    * the side every join regime pairs, its norm computed once per side
+    * row (before any bucket replication). `prep` runs on the
+    * (id, vector) projection first — the corpus side passes
+    * Dedup.rebalance, since it streams through the compute-dense
+    * scoring stage.
     */
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
-    val spark = scored.sparkSession
-    scored.groupBy("probe_id")
+  private[graft] def normedSide(
+      df: DataFrame, idCol: String, vecCol: String, role: String,
+      prep: DataFrame => DataFrame = identity): DataFrame =
+    prep(df.select(col(idCol).as(s"${role}_id"), col(vecCol).as(s"${role}_vec")))
+      .withColumn(s"${role}_norm", VectorFunctions.norm2(df.sparkSession, col(s"${role}_vec")))
+
+  /** Per-probe (rank, cand_id, sim) for the k best candidates of a
+    * joined pair frame, scored round([[pairCosine]], 6) (rounding makes
+    * cross-engine comparison stable; ties break on id), via the
+    * mergeable bounded-top-k aggregate (TopKFunctions scaladoc). The
+    * window formulation (`row_number() OVER (PARTITION BY probe_id
+    * ORDER BY sim DESC, cand_id)`) is semantically identical on
+    * non-null scores (the aggregate DROPS null-scored rows where the
+    * window ranks them last — no null sims arise here: the score is
+    * null only on null inputs, which the joins never pair) but
+    * shuffles EVERY scored row — probes × corpus, the cross product
+    * these operators never materialize elsewhere; the aggregate
+    * partial-reduces each map task to k rows per probe, so the
+    * exchange is corpus-size-free.
+    */
+  private def rankTopK(pairs: DataFrame, k: Int): DataFrame = {
+    val spark = pairs.sparkSession
+    pairs.withColumn("sim", round(pairCosine(spark), 6))
+      .groupBy("probe_id")
       .agg(graft.functions.TopKFunctions
         .topK(spark, col("sim"), col("cand_id"), k).as("tk"))
       .select(col("probe_id"), posexplode(col("tk")).as(Seq("pos", "e")))
@@ -92,8 +105,8 @@ object Similarity {
     */
   private[graft] sealed trait AnnRegime
   private[graft] object AnnRegime {
-    /** the probe side fits the collect caps: embedded (≤ gate rows) or
-      * chunked kernels
+    /** the probe side fits the collect caps: probe-embedded kernels
+      * (the aggregate operators chunk them by the gate)
       */
     final case class Probes(rows: Array[InternalRow]) extends AnnRegime
     /** probes exceed the caps but the corpus fits: role swap */
@@ -116,12 +129,13 @@ object Similarity {
     * ONE [[BoundedCollect]] of the (id, vector) probe side under
     * `max(maxChunkedProbes, maxEmbeddedProbes)` rows and
     * `maxCollectBytes` exact bytes. When it fits, the probes are the
-    * matrix — EMBEDDED when ≤ the gate, else CHUNKED; when it does not
-    * and a corpus is given, one more bounded collect of the corpus under
-    * the same caps decides ROLE SWAP or [[AnnRegime.BothOver]]. The
-    * whole matrix is within the byte budget whenever a kernel regime
-    * runs, so each chunk's embedded literal is too. A gate of 0
-    * disables the kernels (the join spec seam) and collects nothing.
+    * matrix (the aggregate operators split it into gate-sized chunks,
+    * [[probeTopK]]); when it does not and a corpus is given, one more
+    * bounded collect of the corpus under the same caps decides ROLE
+    * SWAP or [[AnnRegime.BothOver]]. The whole matrix is within the
+    * byte budget whenever a kernel regime runs, so every embedded
+    * literal is too. A gate of 0 disables the kernels (the join spec
+    * seam) and collects nothing.
     */
   private[graft] def decideRegime(
       probes: DataFrame, probeIdCol: String, probeVecCol: String,
@@ -130,13 +144,13 @@ object Similarity {
       maxCollectBytes: Long): RegimeDecision = {
     if (maxEmbeddedProbes <= 0) return RegimeDecision(AnnRegime.BothOver, Nil)
     val cap = math.max(maxChunkedProbes.toLong, maxEmbeddedProbes.toLong)
-    def matrix(df: DataFrame, idCol: String, vecCol: String) = BoundedCollect(
+    def side(df: DataFrame, idCol: String, vecCol: String) = BoundedCollect(
       df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>")),
       cap, maxCollectBytes)
-    matrix(probes, probeIdCol, probeVecCol) match {
+    side(probes, probeIdCol, probeVecCol) match {
       case p: BoundedCollect.Collected => RegimeDecision(AnnRegime.Probes(p.rows), Seq(p))
       case p: BoundedCollect.Overflow => corpus match {
-        case Some((c, cIdCol, cVecCol)) => matrix(c, cIdCol, cVecCol) match {
+        case Some((c, cIdCol, cVecCol)) => side(c, cIdCol, cVecCol) match {
           case m: BoundedCollect.Collected =>
             RegimeDecision(AnnRegime.Corpus(m.rows), Seq(p, m))
           case m: BoundedCollect.Overflow => RegimeDecision(AnnRegime.BothOver, Seq(p, m))
@@ -146,20 +160,53 @@ object Similarity {
     }
   }
 
-  /** A decided matrix as balanced disjoint chunks of at most `gate`
-    * rows, each as (ids, vectors). Null id or null vector rows are
-    * dropped: the join regime drops them too (a null-valued join or
-    * score condition never matches).
+  /** A decided matrix as (ids, vectors). Null id or null vector rows
+    * are dropped: the join regime drops them too (a null-valued join
+    * or score condition never matches).
     */
-  private[graft] def chunks(rows: Array[InternalRow], gate: Int)
-      : Seq[(Array[Long], Array[Array[Double]])] = {
+  private[graft] def matrix(rows: Array[InternalRow]): (Array[Long], Array[Array[Double]]) = {
     val usable = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-    val n = math.max(1, math.ceil(usable.length.toDouble / math.max(gate, 1)).toInt)
+    (usable.map(_.getLong(0)), usable.map(_.getArray(1).toDoubleArray()))
+  }
+
+  /** The probe-embedded AGGREGATE regime of brute force, IVF and LSH:
+    * the probe matrix splits into ⌈n/gate⌉ balanced disjoint chunks,
+    * each one `graft_probe_topk` aggregate over the corpus scan built
+    * by `kernel(candId, candVec, chunkIds, chunkVecs)` — the caller
+    * derives the chunk's own restriction index (inverted lists,
+    * signature buckets) from the chunk — results unioned. Probes
+    * partition across chunks, so the union IS the single-kernel
+    * answer.
+    *
+    * Here, and only here, the gate bounds something: each chunk is its
+    * own partial-aggregate map stage, so a map task holds gate × k
+    * heaps and one chunk's literal (the projection kernels put every
+    * chunk in ONE stage, where chunks bound nothing — they embed the
+    * whole matrix once instead). The price is one corpus scan per
+    * chunk: with nChunks > 1 each chunk re-runs the corpus frame's
+    * full lineage — persist a DERIVED corpus (anything that isn't a
+    * plain parquet scan) before calling, or the upstream compute
+    * repeats per chunk.
+    */
+  private def probeTopK(
+      probes: (Array[Long], Array[Array[Double]]), gate: Int,
+      corpus: DataFrame, corpusIdCol: String, corpusVecCol: String)(
+      kernel: (Expression, Expression, Array[Long], Array[Array[Double]]) => ProbeTopKAgg)
+      : DataFrame = {
+    val (ids, vecs) = probes
+    val cand = Dedup.rebalance(
+      corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")))
+    val n = math.max(1, math.ceil(ids.length.toDouble / math.max(gate, 1)).toInt)
     (0 until n).map { c =>
-      val slice = usable.slice(
-        (c.toLong * usable.length / n).toInt, ((c + 1).toLong * usable.length / n).toInt)
-      (slice.map(_.getLong(0)), slice.map(_.getArray(1).toDoubleArray()))
-    }
+      val lo = (c.toLong * ids.length / n).toInt
+      val hi = ((c + 1).toLong * ids.length / n).toInt
+      val agg = kernel(SparkBridge.expression(cand("cand_id")),
+        SparkBridge.expression(cand("cand_vec")), ids.slice(lo, hi), vecs.slice(lo, hi))
+      cand.agg(SparkBridge.column(agg.toAggregateExpression()).as("tk"))
+    }.reduce(_.union(_))
+      .select(explode(col("tk")).as("e"))
+      .select(col("e.probe_id").as("probe_id"), col("e.rank").as("rank"),
+        col("e.cand_id").as("cand_id"), col("e.sim").as("sim"))
   }
 
   /** Session conf: set true to let the exact operators submit the
@@ -208,31 +255,40 @@ object Similarity {
     */
   val AnnBucketSaltKey = "spark.graft.ann.bucketSalt"
 
-  private def bucketSalt(spark: SparkSession, nKeys: Long): Int = {
-    val conf = graft.core.SessionConf.nonNegativeInt(spark, AnnBucketSaltKey, 0)
-    if (conf > 0) conf
-    else {
-      val parts = spark.sessionState.conf.numShufflePartitions.toLong
-      math.min(math.max(1L, (parts + nKeys - 1) / nKeys), 1L << 20).toInt
-    }
-  }
-
-  /** Salted bucket equi-join (see [[AnnBucketSaltKey]]): `cands` must
-    * carry `cand_id`; both sides must carry `bucketCol`. Probe-side
-    * rows replicate `salt` ways, so callers size `salt` against the
-    * probe frame they pass.
+  /** The over-cap tail of LSH and IVF: the salted bucket equi-join
+    * (see [[AnnBucketSaltKey]]) of the normed sides on `bucketCol`,
+    * self/null-pair filter, split-norm score, top-k. `nKeys` is the
+    * bucket key space the auto salt is sized against; probe rows
+    * replicate `salt` ways.
     */
-  private def saltedBucketJoin(
-      cands: DataFrame, probes: DataFrame, bucketCol: String,
-      salt: Int): DataFrame =
-    if (salt <= 1) cands.join(probes, Seq(bucketCol))
-    else {
-      val salted = cands.withColumn("__salt",
-        pmod(xxhash64(col("cand_id")), lit(salt.toLong)))
-      val replicated = probes.withColumn("__salt",
-        explode(typedlit((0L until salt.toLong).toSeq)))
-      salted.join(replicated, Seq(bucketCol, "__salt")).drop("__salt")
-    }
+  private def bucketTopK(
+      cands: DataFrame, probes: DataFrame, bucketCol: String, nKeys: Long,
+      k: Int, includeSelf: Boolean): DataFrame = {
+    val spark = cands.sparkSession
+    val conf = graft.core.SessionConf.nonNegativeInt(spark, AnnBucketSaltKey, 0)
+    val salt =
+      if (conf > 0) conf
+      else {
+        val parts = spark.sessionState.conf.numShufflePartitions.toLong
+        math.min(math.max(1L, (parts + nKeys - 1) / nKeys), 1L << 20).toInt
+      }
+    val joined =
+      if (salt <= 1) cands.join(probes, Seq(bucketCol))
+      else {
+        val salted = cands.withColumn("__salt",
+          pmod(xxhash64(col("cand_id")), lit(salt.toLong)))
+        val replicated = probes.withColumn("__salt",
+          explode(typedlit((0L until salt.toLong).toSeq)))
+        salted.join(replicated, Seq(bucketCol, "__salt")).drop("__salt")
+      }
+    rankTopK(
+      if (includeSelf)
+        // match the kernels' null-id semantics (the `=!=` below drops
+        // nulls implicitly; includeSelf has no condition that would)
+        joined.where(col("probe_id").isNotNull && col("cand_id").isNotNull)
+      else joined.where(col("probe_id") =!= col("cand_id")),
+      k)
+  }
 
   /** Exact brute-force top-k of a probe SUBSET of `emb` against all
     * of `emb` — the single-frame convenience over
@@ -267,7 +323,8 @@ object Similarity {
     *    sf10). Exchange carries partitions × probes × k heap entries.
     *  - CHUNKED (gate < probes ≤ `maxChunkedProbes`): the probe set is
     *    split into ⌈n/gate⌉ balanced disjoint chunks and each chunk runs
-    *    its own embedded kernel over the corpus, results unioned — the
+    *    its own embedded aggregate over the corpus, results unioned —
+    *    each chunk is its own partial-aggregate map stage, so the
     *    per-task heap memory stays gate × k (the reason the gate
     *    exists) at the price of one extra corpus scan per chunk, and
     *    STILL zero joined rows. Probes partition across chunks, so the
@@ -279,14 +336,14 @@ object Similarity {
     *    plain parquet scan) before calling, or the upstream compute
     *    repeats per chunk.
     *  - ROLE SWAP (probes > `maxChunkedProbes` ≥ corpus): the CORPUS
-    *    embeds instead — ⌈corpus/gate⌉ disjoint candidate chunks, each
-    *    a `graft_corpus_topk` PROJECTION over one probe scan (no
-    *    aggregate, no exchange, no joined rows); with multiple chunks
-    *    the per-chunk arrays re-rank through graft_top_k (chunks are
-    *    disjoint in candidate space, so the merged top-k is exact and
-    *    the exchange carries ≤ probes × k × nChunks rows, never a
-    *    cross product). This retires the join fallback for every case
-    *    where EITHER side fits the collect cap.
+    *    embeds instead — ONE `graft_corpus_topk` PROJECTION over the
+    *    probe scan whose best-first array is the answer (no aggregate,
+    *    no exchange, no joined rows). The gate does not split it: a
+    *    projection's chunks would all run in one stage, every task
+    *    deserializing every chunk, so they would bound no task memory
+    *    and only add probe rescans and a k-merge exchange. This retires
+    *    the join fallback for every case where EITHER side fits the
+    *    collect cap.
     *  - JOIN (both sides above the cap): split-norm scoring + the
     *    graft_top_k aggregate over a non-equi join. NOT a peer: the
     *    `probe_id =!= cand_id` condition plans as CartesianProduct
@@ -305,7 +362,7 @@ object Similarity {
     * collected under BOTH a row cap (`maxChunkedProbes`) and a BYTE
     * budget (`maxCollectBytes`, default 512 MB, exact row bytes), by
     * one bounded collect per side (see [[decideRegime]]); the budget
-    * therefore also bounds each chunk's embedded plan literal.
+    * therefore also bounds every embedded plan literal.
     *
     * `includeSelf = true` is the CROSS-CORPUS mode: probe and
     * candidate ids come from unrelated id spaces, so a numeric id
@@ -326,72 +383,41 @@ object Similarity {
       maxCollectBytes: Long = 512L << 20,
       includeSelf: Boolean = false): DataFrame = {
     val spark = corpus.sparkSession
-    import org.apache.spark.sql.graftbridge.SparkBridge
     val dec = decideRegime(probes, probeIdCol, probeVecCol,
       Some((corpus, corpusIdCol, corpusVecCol)),
       maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes)
     dec.regime match {
       case AnnRegime.Probes(collected) =>
-        val cand = Dedup.rebalance(
-          corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")))
-        chunks(collected, maxEmbeddedProbes).map { case (pIds, pVecs) =>
-          val agg = SparkBridge.column(graft.functions.TopKFunctions.ProbeTopKAgg(
-            SparkBridge.expression(cand("cand_id")),
-            SparkBridge.expression(cand("cand_vec")),
-            pIds, pVecs, k, includeSelf = includeSelf).toAggregateExpression())
-          cand.agg(agg.as("tk"))
-        }.reduce(_.union(_))
-          .select(explode(col("tk")).as("e"))
-          .select(col("e.probe_id").as("probe_id"), col("e.rank").as("rank"),
-            col("e.cand_id").as("cand_id"), col("e.sim").as("sim"))
-      case AnnRegime.Corpus(candCollected) =>
+        probeTopK(matrix(collected), maxEmbeddedProbes, corpus, corpusIdCol, corpusVecCol)(
+          ProbeTopKAgg(_, _, _, _, k, includeSelf = includeSelf))
+      case AnnRegime.Corpus(collected) =>
         // ROLE SWAP: embed the corpus, scan the probes
+        val (cIds, cVecs) = matrix(collected)
         val probeFrame = Dedup.rebalance(
           probes.select(col(probeIdCol).as("probe_id"), col(probeVecCol).as("probe_vec")))
-        val candChunks = chunks(candCollected, maxEmbeddedProbes)
         // the kernel sits DIRECTLY inside the generator (never behind
         // a projected alias): InferFiltersFromGenerate skips non-cheap
         // generator inputs, but an aliased array gets a `size(tk) > 0`
         // filter inferred and pushed THROUGH the projection —
-        // duplicating the whole corpus-chunk scoring loop per probe
-        // row (measured: the q72 audit plan ran the kernel twice)
-        def chunkKernel(chunk: (Array[Long], Array[Array[Double]])): Column =
-          SparkBridge.column(graft.functions.TopKFunctions.CorpusTopK(
-            SparkBridge.expression(probeFrame("probe_id")),
-            SparkBridge.expression(probeFrame("probe_vec")),
-            chunk._1, chunk._2, k, includeSelf = includeSelf))
-        if (candChunks.length == 1) {
-          // single chunk: the projected array IS the answer; rank =
-          // position (the kernel emits best-first) — zero exchanges
-          probeFrame
-            .select(col("probe_id"), posexplode(chunkKernel(candChunks.head)).as(Seq("pos", "e")))
-            .select(col("probe_id").cast("long").as("probe_id"),
-              (col("pos") + 1).cast("long").as("rank"),
-              col("e.cand_id").as("cand_id"), col("e.sim").as("sim"))
-        } else {
-          // distributed k-merge: per-chunk winners re-rank through the
-          // bounded graft_top_k aggregate — candidates are already
-          // ROUNDED and chunks are disjoint in candidate space, so the
-          // merged ordering is exactly the single-kernel answer; the
-          // exchange carries ≤ probes × k × nChunks rows
-          val scored = candChunks.map { c =>
-            probeFrame.select(col("probe_id"), explode(chunkKernel(c)).as("e"))
-              .select(col("probe_id"), col("e.cand_id").as("cand_id"),
-                col("e.sim").as("sim"))
-          }.reduce(_.union(_))
-          rankTopK(scored, k)
-        }
+        // duplicating the whole corpus scoring loop per probe row
+        // (measured: the q72 audit plan ran the kernel twice). The
+        // array is best-first, so rank = position: zero exchanges
+        val kernel = SparkBridge.column(CorpusTopK(
+          SparkBridge.expression(probeFrame("probe_id")),
+          SparkBridge.expression(probeFrame("probe_vec")),
+          cIds, cVecs, k, includeSelf = includeSelf))
+        probeFrame
+          .select(col("probe_id"), posexplode(kernel).as(Seq("pos", "e")))
+          .select(col("probe_id").cast("long").as("probe_id"),
+            (col("pos") + 1).cast("long").as("rank"),
+            col("e.cand_id").as("cand_id"), col("e.sim").as("sim"))
       case AnnRegime.BothOver =>
         dec.overflow.foreach(enforceJoinContract(spark, "bruteForceTopK", _))
-        val probeSide = probes
-          .select(col(probeIdCol).as("probe_id"), col(probeVecCol).as("probe_vec"))
-          .withColumn("probe_norm", VectorFunctions.norm2(spark, col("probe_vec")))
+        val probeSide = normedSide(probes, probeIdCol, probeVecCol, "probe")
         // rebalance: a single-row-group embedding file scans as ONE task,
         // which would serialize the |probes|×|corpus| cosine loop on one
         // core; no-op on multi-split tables (Dedup.rebalance)
-        val cand = Dedup.rebalance(
-          corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")))
-          .withColumn("cand_norm", VectorFunctions.norm2(spark, col("cand_vec")))
+        val cand = normedSide(corpus, corpusIdCol, corpusVecCol, "cand", Dedup.rebalance)
         // NO broadcast hint above the embedded gate: the probe count is
         // known only to exceed the cap and can grow ∝ corpus, so a forced
         // broadcast is the one driver-OOM shape left at 100× (an 10^8-row
@@ -400,7 +426,7 @@ object Similarity {
         // side at runtime) — the same force-under-threshold /
         // planner-above pattern as the MoR DV anti-join
         // (LakeTable.DvBroadcastBytes).
-        val joined =
+        rankTopK(
           if (includeSelf)
             // the kernels drop null-id rows; the crossJoin has no join
             // condition to drop them implicitly (the `=!=` below does),
@@ -408,11 +434,8 @@ object Similarity {
             // NULL-id result groups
             cand.where(col("cand_id").isNotNull)
               .crossJoin(probeSide.where(col("probe_id").isNotNull))
-          else cand.join(probeSide, col("probe_id") =!= col("cand_id"))
-        val scored = joined
-          .withColumn("sim", splitScore(spark, col("probe_vec"), col("cand_vec"),
-            col("probe_norm"), col("cand_norm")))
-        rankTopK(scored, k)
+          else cand.join(probeSide, col("probe_id") =!= col("cand_id")),
+          k)
     }
   }
 
@@ -518,43 +541,6 @@ object Similarity {
         .select(col(corpusVecCol).cast("array<double>")).collect()
         .map(_.getSeq[Double](0)))
 
-    decideRegime(probes, probeIdCol, probeVecCol,
-      None, maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes).regime match {
-      case AnnRegime.Probes(collectedProbes) =>
-        import org.apache.spark.sql.graftbridge.SparkBridge
-        val cents: Array[Array[Double]] = centroids.map(_.toArray)
-        def dotD(a: Array[Double], b: Array[Double]): Double = {
-          val d = math.min(a.length, b.length)
-          var s = 0.0; var i = 0
-          while (i < d) { s += a(i) * b(i); i += 1 }
-          s
-        }
-        val cand = Dedup.rebalance(
-          corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")))
-        return chunks(collectedProbes, maxEmbeddedProbes).map { case (pIds, pVecs) =>
-          val byList = Array.fill(cents.length)(
-            scala.collection.mutable.ArrayBuffer.empty[Int])
-          pVecs.zipWithIndex.foreach { case (v, pi) =>
-            cents.indices
-              .sortBy(cc => (-dotD(v, cents(cc)), cc)).take(nProbe)
-              .foreach(cc => byList(cc) += pi)
-          }
-          val agg = SparkBridge.column(graft.functions.TopKFunctions.ProbeTopKAgg(
-            SparkBridge.expression(cand("cand_id")),
-            SparkBridge.expression(cand("cand_vec")),
-            pIds, pVecs, k,
-            centroids = cents, probesByList = byList.map(_.toArray),
-            includeSelf = includeSelf)
-            .toAggregateExpression())
-          cand.agg(agg.as("tk"))
-        }.reduce(_.union(_))
-          .select(explode(col("tk")).as("e"))
-          .select(col("e.probe_id").as("probe_id"), col("e.rank").as("rank"),
-            col("e.cand_id").as("cand_id"), col("e.sim").as("sim"))
-      case _ => // over the caps: the bucket EQUI-join below is the
-                // legitimate scale path (never CartesianProduct)
-    }
-
     /** top-`n` nearest centroid ids for a vector, as an array column:
       * sort a tiny struct array of (-dot, id) — map-side only.
       */
@@ -566,31 +552,46 @@ object Similarity {
       slice(transform(array_sort(scored), s => s.getField("id")), 1, n)
     }
 
-    // rebalance before the per-row nCentroids×dims assignment dots —
-    // a single-row-group corpus file must not serialize them
-    val cand = Dedup.rebalance(
-      corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")))
-      .withColumn("list_id", element_at(nearestLists(col("cand_vec"), 1), 1))
-      .withColumn("cand_norm", VectorFunctions.norm2(spark, col("cand_vec")))
-    val probeSide = probes
-      .select(col(probeIdCol).as("probe_id"), col(probeVecCol).as("probe_vec"))
-      .withColumn("list_id", explode(nearestLists(col("probe_vec"), nProbe)))
-      .withColumn("probe_norm", VectorFunctions.norm2(spark, col("probe_vec")))
-    // no broadcast hint above the embedded gate (see bruteForceTopK):
-    // probe counts can grow ∝ corpus; the planner sizes the build side.
-    // Salted: nCentroids list keys alone cap the shuffle parallelism
-    val joined = saltedBucketJoin(cand, probeSide, "list_id",
-      bucketSalt(spark, math.max(nCentroids.toLong, 1L)))
-    val filtered =
-      if (includeSelf)
-        // match the kernels' null-id semantics (the `=!=` below drops
-        // nulls implicitly; includeSelf has no condition that would)
-        joined.where(col("probe_id").isNotNull && col("cand_id").isNotNull)
-      else joined.where(col("probe_id") =!= col("cand_id"))
-    val scored = filtered
-      .withColumn("sim", splitScore(spark, col("probe_vec"), col("cand_vec"),
-        col("probe_norm"), col("cand_norm")))
-    rankTopK(scored, k)
+    decideRegime(probes, probeIdCol, probeVecCol,
+      None, maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes).regime match {
+      case AnnRegime.Probes(collected) =>
+        val cents: Array[Array[Double]] = centroids.map(_.toArray)
+        def dotD(a: Array[Double], b: Array[Double]): Double = {
+          val d = math.min(a.length, b.length)
+          var s = 0.0; var i = 0
+          while (i < d) { s += a(i) * b(i); i += 1 }
+          s
+        }
+        probeTopK(matrix(collected), maxEmbeddedProbes, corpus, corpusIdCol, corpusVecCol) {
+          (candId, candVec, pIds, pVecs) =>
+            // the chunk-local inverted-list index: each probe registers
+            // under its nProbe nearest lists
+            val byList = Array.fill(cents.length)(
+              scala.collection.mutable.ArrayBuffer.empty[Int])
+            pVecs.zipWithIndex.foreach { case (v, pi) =>
+              cents.indices
+                .sortBy(cc => (-dotD(v, cents(cc)), cc)).take(nProbe)
+                .foreach(cc => byList(cc) += pi)
+            }
+            ProbeTopKAgg(candId, candVec, pIds, pVecs, k,
+              centroids = cents, probesByList = byList.map(_.toArray),
+              includeSelf = includeSelf)
+        }
+      case _ =>
+        // over the caps: the inverted-list bucket EQUI-join, the
+        // legitimate scale path (never CartesianProduct). Rebalance
+        // before the per-row nCentroids×dims assignment dots — a
+        // single-row-group corpus file must not serialize them
+        val cand = normedSide(corpus, corpusIdCol, corpusVecCol, "cand", Dedup.rebalance)
+          .withColumn("list_id", element_at(nearestLists(col("cand_vec"), 1), 1))
+        val probeSide = normedSide(probes, probeIdCol, probeVecCol, "probe")
+          .withColumn("list_id", explode(nearestLists(col("probe_vec"), nProbe)))
+        // no broadcast hint above the embedded gate (see bruteForceTopK):
+        // probe counts can grow ∝ corpus; the planner sizes the build
+        // side. Salted: nCentroids list keys alone cap the shuffle
+        // parallelism
+        bucketTopK(cand, probeSide, "list_id", math.max(nCentroids.toLong, 1L), k, includeSelf)
+    }
   }
 
   /** ANN via LSH bucketing over a single frame: probes are a filtered
@@ -658,54 +659,31 @@ object Similarity {
       maxChunkedProbes: Int = 1 << 20,
       maxCollectBytes: Long = 512L << 20,
       includeSelf: Boolean = false): DataFrame = {
-    val spark = corpus.sparkSession
     require(planes >= 1 && planes <= 63, s"planes must be in [1, 63], got $planes")
     decideRegime(probes, probeIdCol, probeVecCol,
       None, maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes).regime match {
       case AnnRegime.Probes(collected) =>
-        import org.apache.spark.sql.graftbridge.SparkBridge
-        val probeChunks = chunks(collected, maxEmbeddedProbes)
-        val dims = probeChunks.head._2.headOption.map(_.length).getOrElse(0)
+        val probeMatrix = matrix(collected)
+        val dims = probeMatrix._2.headOption.map(_.length).getOrElse(0)
         val planeMat: Array[Array[Double]] =
           Array.tabulate(planes, dims)((p, d) => planeComponent(p, d))
-        def sigOf(v: Array[Double]): Long = {
-          var sig = 0L
-          var p = 0
-          while (p < planes) {
-            val pl = planeMat(p)
-            val d = math.min(pl.length, v.length)
-            var dot = 0.0
-            var j = 0
-            while (j < d) { dot += pl(j) * v(j); j += 1 }
-            if (dot >= 0) sig |= 1L << p
-            p += 1
-          }
-          sig
+        probeTopK(probeMatrix, maxEmbeddedProbes, corpus, corpusIdCol, corpusVecCol) {
+          (candId, candVec, pIds, pVecs) =>
+            // the chunk-local signature index: probes bucketed by the
+            // same signature rule the kernel applies per corpus row
+            val bySig: Map[Long, Array[Int]] =
+              pVecs.indices.groupBy(pi => ProbeTopKAgg.signature(planeMat, pVecs(pi)))
+                .map { case (s, idxs) => s -> idxs.toArray }
+            ProbeTopKAgg(candId, candVec, pIds, pVecs, k,
+              planes = planeMat, probesBySig = bySig, includeSelf = includeSelf)
         }
-        val cand = Dedup.rebalance(
-          corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")))
-        probeChunks.map { case (pIds, pVecs) =>
-          val bySig: Map[Long, Array[Int]] =
-            pVecs.indices.groupBy(pi => sigOf(pVecs(pi)))
-              .map { case (s, idxs) => s -> idxs.toArray }
-          val agg = SparkBridge.column(graft.functions.TopKFunctions.ProbeTopKAgg(
-            SparkBridge.expression(cand("cand_id")),
-            SparkBridge.expression(cand("cand_vec")),
-            pIds, pVecs, k,
-            planes = planeMat, probesBySig = bySig,
-            includeSelf = includeSelf).toAggregateExpression())
-          cand.agg(agg.as("tk"))
-        }.reduce(_.union(_))
-          .select(explode(col("tk")).as("e"))
-          .select(col("e.probe_id").as("probe_id"), col("e.rank").as("rank"),
-            col("e.cand_id").as("cand_id"), col("e.sim").as("sim"))
       case _ =>
         // Over the caps (or kernels disabled): the bucket equi-join.
         // Dims: ask the probes, then the corpus — only non-null vectors
         // (size(null) is null → getInt NPEs), tolerating an all-null /
         // empty side (head() on empty throws): 0 dims then, and every
         // signature collapses to one bucket, which is correct (the
-        // per-pair splitScore over null vectors yields no rows).
+        // split-norm score over null vectors yields no rows).
         val dims = probes.where(col(probeVecCol).isNotNull)
             .select(size(col(probeVecCol).cast("array<double>"))).head(1)
             .headOption.map(_.getInt(0))
@@ -713,25 +691,11 @@ object Similarity {
             .select(size(col(corpusVecCol).cast("array<double>"))).head(1)
             .headOption.map(_.getInt(0)))
           .getOrElse(0)
-        val probeSide = probes
-          .select(col(probeIdCol).as("probe_id"), col(probeVecCol).as("probe_vec"))
+        val probeSide = normedSide(probes, probeIdCol, probeVecCol, "probe")
           .withColumn("sig", lshSignature(probes, col("probe_vec"), planes, dims))
-          .withColumn("probe_norm", VectorFunctions.norm2(spark, col("probe_vec")))
-        val cands = Dedup.rebalance(
-          corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")))
+        val cands = normedSide(corpus, corpusIdCol, corpusVecCol, "cand", Dedup.rebalance)
           .withColumn("sig", lshSignature(corpus, col("cand_vec"), planes, dims))
-          .withColumn("cand_norm", VectorFunctions.norm2(spark, col("cand_vec")))
-        val joined = saltedBucketJoin(cands, probeSide, "sig",
-          bucketSalt(spark, 1L << math.min(planes, 62)))
-        val filtered =
-          if (includeSelf)
-            // kernel null-id semantics (see ivfTopKFrames)
-            joined.where(col("probe_id").isNotNull && col("cand_id").isNotNull)
-          else joined.where(col("probe_id") =!= col("cand_id"))
-        val scored = filtered
-          .withColumn("sim", splitScore(spark, col("probe_vec"), col("cand_vec"),
-            col("probe_norm"), col("cand_norm")))
-        rankTopK(scored, k)
+        bucketTopK(cands, probeSide, "sig", 1L << math.min(planes, 62), k, includeSelf)
     }
   }
 }

@@ -1607,14 +1607,14 @@ object Queries {
 
     // the ROLE-SWAPPED over-cap ANN regime (r15): every embedding row
     // probes a 20-row corpus; probes exceed the forced chunk cap (64)
-    // while the corpus fits it, so the corpus embeds in ceil(20/7)=3
-    // graft_corpus_topk projection chunks scanned over the probes —
-    // no aggregate per chunk, no joined rows — and the per-chunk
-    // winners k-merge through graft_top_k. This is the regime that
-    // retires the CartesianProduct fallback whenever EITHER side fits
-    // the collect cap (Similarity.bruteForceTopKFrames scaladoc). The
-    // oracle is q70's cosine replay with the roles swapped, so the
-    // hash gate pins role-swap == join cross-engine.
+    // while the corpus fits it, so the whole corpus embeds in ONE
+    // graft_corpus_topk projection over the probe scan — no aggregate,
+    // no exchange, no joined rows; the forced gate (7) splits nothing
+    // here (a projection's chunks would share one stage). This is the
+    // regime that retires the CartesianProduct fallback whenever
+    // EITHER side fits the collect cap (Similarity.bruteForceTopKFrames
+    // scaladoc). The oracle is q70's cosine replay with the roles
+    // swapped, so the hash gate pins role-swap == join cross-engine.
     "q72_ann_roleswap" -> QueryDef(
       (s, d) => {
         val emb = tbl(s, d, "embeddings")
@@ -1633,12 +1633,11 @@ object Queries {
              |SELECT probe_id, rank, cand_id, sim FROM r WHERE rank <= 3""".stripMargin)),
 
     // role-swapped near-dup (r15): every embedding row probes the same
-    // 20-row corpus above the forced cap — the reversed
+    // 20-row corpus above the forced cap — ONE reversed
     // graft_probe_matches kernel (emitGreater: candidates ABOVE the
-    // probe id, the q24 pair contract from the other side) runs as
-    // 3 projection chunks over the probe scan and the disjoint chunks
-    // union directly; no join, no merge aggregate. Oracle = q24's
-    // cosine predicate with this blocking.
+    // probe id, the q24 pair contract from the other side) over the
+    // probe scan; no join, no union, no merge aggregate. Oracle =
+    // q24's cosine predicate with this blocking.
     "q73_neardup_roleswap" -> QueryDef(
       (s, d) => {
         val emb = tbl(s, d, "embeddings")
@@ -1755,7 +1754,7 @@ object Queries {
              |AND list_cosine_similarity(p.v, c.v) > 0.15""".stripMargin)),
 
     // includeSelf top-k through the ROLE-SWAPPED regime (r16): q72's
-    // forced 3-chunk corpus embedding, with id collisions scored
+    // one-projection corpus embedding, with id collisions scored
     // (cross-corpus id spaces make the self-pair exclusion wrong; here
     // the collision is a true self-pair and ranks first at sim 1 —
     // the SQL states the same, pinning the contract cross-engine).

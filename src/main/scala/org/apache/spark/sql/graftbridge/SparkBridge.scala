@@ -6,8 +6,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 
 /** Bridge into `private[sql]` Spark internals the DSv2 DML commands
-  * need: running an already-analyzed LogicalPlan as a DataFrame, and
-  * converting between resolved `Expression`s and public `Column`s.
+  * need: running an already-analyzed LogicalPlan as a DataFrame,
+  * converting between resolved `Expression`s and public `Column`s, and
+  * running driver work on a pool thread under the caller's local
+  * properties.
   *
   * Living under `org.apache.spark.sql` to reach package-private API is
   * the established pattern for Spark connectors that implement SQL DML
@@ -54,4 +56,27 @@ object SparkBridge {
       isStreaming: Boolean = false): DataFrame =
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming)
+
+  /** `schema` with every field nullable, nested fields included. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    schema.asNullable
+
+  private lazy val asyncPool: java.util.concurrent.ExecutorService =
+    org.apache.spark.util.ThreadUtils.newDaemonCachedThreadPool("graft-async", 16)
+
+  /** Runs `body` on a pool thread under the CALLING thread's Spark
+    * local properties (job group, description, scheduler pool) and
+    * active session — Spark's own capture for its async stage work
+    * (`SQLExecution.withThreadLocalCaptured`) — so `cancelJobGroup` and
+    * FAIR pools reach every job `body` submits. A bare `Future` runs
+    * under whatever properties its pool thread inherited when created.
+    */
+  def async[T](spark: SparkSession)(body: => T): java.util.concurrent.Future[T] =
+    org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[classic.SparkSession], asyncPool)(body)
+
+  /** The result of an [[async]] body, rethrowing the body's own exception. */
+  def await[T](f: java.util.concurrent.Future[T]): T =
+    try f.get()
+    catch { case e: java.util.concurrent.ExecutionException if e.getCause != null => throw e.getCause }
 }

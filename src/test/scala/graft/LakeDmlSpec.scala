@@ -75,6 +75,50 @@ class LakeDmlSpec extends AnyFunSuite {
     assert(t.read().count() == 750)
   }
 
+  test("merge-on-read DELETE runs every job under the caller's job group") {
+    val t = seeded()
+    t.alterSetProperties(Map(LakeTable.MergeModeKey -> "merge-on-read"))
+    val sc = spark.sparkContext
+    val group = s"mor-delete-${java.util.UUID.randomUUID()}"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    // registered before JobTrace's listener: the bus delivers each event
+    // to both in order, so once the trace closes this one has seen all
+    sc.addSparkListener(listener)
+    try {
+      val traced = JobTrace.traced(spark) {
+        sc.setJobGroup(group, "merge-on-read DELETE")
+        try t.delete($"id" % 4 === 1) finally sc.clearJobGroup()
+      }
+      assert(traced.jobs == 4)
+      // the DV and append writes run on pool threads: they must carry
+      // the group too, or cancelJobGroup and FAIR pools miss them
+      assert(groups.toArray.count(_ == group) == traced.jobs)
+    } finally sc.removeSparkListener(listener)
+    assert(t.read().count() == 750)
+  }
+
+  test("NULL source keys upserted into a table written from spark.range read back NULL, never 0") {
+    val t = tmpTable()
+    // spark.range's id is non-nullable
+    t.write(spark.range(0, 10, 1, 2).select($"id", ($"id" % 3).cast("int").as("v"),
+      lit("x").as("s")), "append")
+    val src = Seq[(Option[Long], Option[Int], String)](
+      (None, Some(3), "n"), (None, Some(4), "m"), (Some(2L), Some(9), "u"))
+      .toDF("id", "v", "s")
+    val expected = MergeOps.upsert(t.read(), src, Seq("id")).collect()
+    t.merge(src, Seq("id"))
+    assert(sorted(t.read().collect()) == sorted(expected))
+    assert(t.read().where($"id".isNull).count() == 2)
+    assert(t.read().where($"id" === 0).count() == 1)
+    // the schema taken from the frame is logged nullable
+    assert(t.snapshotNow.schema("id").nullable)
+  }
+
   test("DELETE/UPDATE counts: rows whose condition is NULL are kept and not counted") {
     val expected = (0 until 1000).count(i => i % 10 != 0 && i % 7 > 3).toLong
     val del = seeded()

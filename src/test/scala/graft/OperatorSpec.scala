@@ -531,15 +531,14 @@ class OperatorSpec extends AnyFunSuite {
 
   test("brute-force topK frames: role-swapped corpus kernel == embedded == join; join only when BOTH sides exceed the cap") {
     // probes too large to driver-collect, corpus small enough: embed
-    // the CORPUS in ⌈corpus/gate⌉ graft_corpus_topk projection chunks
-    // and scan the probes — no aggregate per chunk, no joined rows,
-    // and a distributed graft_top_k k-merge across chunks
+    // the whole CORPUS in one graft_corpus_topk projection and scan
+    // the probes — no aggregate, no joined rows, no k-merge
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .repartition(7)
     val corpus = emb.where(col("vec_id") % 9 === 0) // ~n/9 rows
     val k = 4
     // probes (all of emb) > chunkCap=100; corpus (~56) <= 100; the
-    // tiny gate (7) forces 8+ UNEQUAL balanced corpus chunks
+    // tiny gate (7) is below the corpus size and still splits nothing
     val roleSwap = Similarity.bruteForceTopKFrames(emb, "vec_id", "embedding",
       corpus, "vec_id", "embedding", k,
       maxEmbeddedProbes = 7, maxChunkedProbes = 100)
@@ -555,8 +554,10 @@ class OperatorSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
     assert(roleSwap.queryExecution.optimizedPlan.collect { case j: Join => j }.isEmpty,
       "role-swapped regime must not plan a join")
-    // single corpus chunk (gate >= corpus): a pure projection — no
-    // join, no aggregate, NO exchange at all
+    assert(roleSwap.queryExecution.optimizedPlan.collect { case a: Aggregate => a }.isEmpty,
+      "a gate below the corpus size must not add a k-merge aggregate")
+    // gate >= corpus: the same pure projection — no join, no
+    // aggregate, NO exchange at all
     val oneChunk = Similarity.bruteForceTopKFrames(emb, "vec_id", "embedding",
       corpus, "vec_id", "embedding", k,
       maxEmbeddedProbes = 60, maxChunkedProbes = 100)
@@ -583,6 +584,22 @@ class OperatorSpec extends AnyFunSuite {
     } finally spark.conf.unset(Similarity.AnnForceJoinKey)
   }
 
+  test("q72-shaped role swap: two decision collects, then one scan job") {
+    // 400 probes against a 20-row corpus above the forced caps (gate
+    // 7, cap 64): the corpus embeds in ONE projection, so past the two
+    // bounded collects the answer is a single scan job — a per-gate
+    // chunked k-merge adds its exchange's map-stage job (4)
+    val emb = spark.range(0, 400, 1, 2).select(col("id").as("vec_id"),
+      array((1 to 8).map(i => sin(col("id") * i)): _*).as("embedding"))
+    val corpus = emb.where(col("vec_id") % 20 === 0)
+    val traced = JobTrace.traced(spark) {
+      Similarity.bruteForceTopKFrames(emb, "vec_id", "embedding",
+        corpus, "vec_id", "embedding", k = 3,
+        maxEmbeddedProbes = 7, maxChunkedProbes = 64).collect()
+    }
+    assert(traced.jobs == 3)
+  }
+
   test("IVF topK: embedded-probe regime == join regime, row for row") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .repartition(5)
@@ -606,19 +623,25 @@ class OperatorSpec extends AnyFunSuite {
     assert(embd.except(joind).isEmpty && joind.except(embd).isEmpty,
       "embedded and join regimes must agree exactly")
     assert(embd.count() > 0)
-    // chunked regime (tiny gate forces many unequal chunks): same rows,
-    // and no join planned at any probe count
+    // a tiny gate (below the probe count) over the caps' probes: same
+    // rows, no join planned at any probe count, and still ONE kernel
+    // (a projection's gate splits nothing)
     val chunked = Dedup.embeddingNearDup(emb, "vec_id", "embedding",
       col("vec_id") % 4 === 0, threshold = 0.15,
       maxEmbeddedProbes = 7, maxChunkedProbes = 1000)
     assert(chunked.except(embd).isEmpty && embd.except(chunked).isEmpty,
       "chunked and single-kernel regimes must agree exactly")
-    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan}
     assert(chunked.queryExecution.optimizedPlan.collect { case j: Join => j }.isEmpty,
       "chunked near-dup regime must not plan a join")
+    def matchKernels(plan: LogicalPlan): Int = plan.collect { case g: Generate =>
+      g.generator.collect { case m: graft.functions.TopKFunctions.ProbeMatches => m }.size
+    }.sum
+    assert(matchKernels(chunked.queryExecution.optimizedPlan) == 1,
+      "an over-gate probe set runs one graft_probe_matches generator")
     // ROLE-SWAPPED frames regime: probes (all of emb) exceed the
-    // forced cap, the corpus (~n/9 rows) fits — reversed-kernel chunks
-    // over the probe scan, disjoint candidate chunks union directly
+    // forced cap, the corpus (~n/9 rows) fits — one reversed kernel
+    // over the probe scan
     val corpusSmall = emb.where(col("vec_id") % 9 === 0)
     val swap = Dedup.embeddingNearDupFrames(emb, "vec_id", "embedding",
       corpusSmall, "vec_id", "embedding", threshold = 0.15,
@@ -631,6 +654,8 @@ class OperatorSpec extends AnyFunSuite {
     assert(swap.count() > 0)
     assert(swap.queryExecution.optimizedPlan.collect { case j: Join => j }.isEmpty,
       "role-swapped near-dup regime must not plan a join")
+    assert(matchKernels(swap.queryExecution.optimizedPlan) == 1,
+      "a corpus above the gate runs one reversed graft_probe_matches generator")
     // both sides over the cap: fail fast; the conf opt-in plans the join
     val ex = intercept[graft.core.UserException] {
       Dedup.embeddingNearDupFrames(emb, "vec_id", "embedding",
@@ -2552,6 +2577,32 @@ class OperatorSpec extends AnyFunSuite {
     val plan = heap.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
     assert(!plan.contains("Sort"), plan)
+  }
+
+  test("topKPerGroup: an order column the heap cannot rank fails with a named error") {
+    val df = Seq(("a", 1L, BigDecimal("10.50")), ("a", 2L, BigDecimal("3.25")))
+      .toDF("g", "id", "price")
+    val ex = intercept[graft.core.UserException] {
+      Ranking.topKPerGroup(df, Seq("g"), orderCol = "price", idCol = "id", k = 1)
+    }
+    assert(ex.getMessage.contains("`price`") && ex.getMessage.contains("DECIMAL"), ex.getMessage)
+    val byName = intercept[graft.core.UserException] {
+      Ranking.topKPerGroup(df.withColumn("v", $"price".cast("double")), Seq("g"),
+        orderCol = "v", idCol = "g", k = 1)
+    }
+    assert(byName.getMessage.contains("`g`") && byName.getMessage.contains("STRING"),
+      byName.getMessage)
+  }
+
+  test("topKPerGroup: a group whose order values are all null/NaN emits no rows") {
+    val df = Seq[(String, Long, Option[Double])](
+      ("live", 1L, Some(2.0)), ("live", 2L, None), ("live", 3L, Some(Double.NaN)),
+      ("dead", 4L, None), ("dead", 5L, Some(Double.NaN)))
+      .toDF("g", "id", "v")
+    val out = Ranking.topKPerGroup(df, Seq("g"), orderCol = "v", idCol = "id", k = 3)
+      .select($"g", $"rk", $"id", $"v").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+    assert(out.toSeq == Seq(("live", 1L, 1L, 2.0)), out.mkString(","))
   }
 
   test("topTermsByTfidf: broadcast join-back == over-gate shuffle join == window-dfreq reference") {

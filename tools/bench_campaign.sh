@@ -1,24 +1,37 @@
 #!/bin/bash
-# r16 campaign — the r14 symmetric protocol (two gated passes per scale
-# on BOTH engines, per-query MIN merged by tools/min_merge.py) plus the
-# r14 verdict's campaign-hygiene items:
+# Benchmark campaign for one round, graft vs the DuckDB oracle at sf0.1,
+# sf1 and sf10:
+#
+#   SF01_DIR=<sf0.1 testdata dir> tools/bench_campaign.sh <round>
+#
+# Every output lands in /tmp/<round>_* (pass meta, bench JSONs, compare
+# tables, merged tables, the sf1→sf10 scale check). The protocol (r15
+# onward): two gated passes per scale on BOTH engines, per-query MIN
+# merged by tools/min_merge.py, plus
 #   * loadavg is RECORDED PER PASS into a meta sidecar and prepended to
-#     every merged table (the r14 burst was only visible by
-#     cross-referencing raw JSONs);
+#     every merged table;
 #   * the DuckDB side is load-GATED too (the spark pass that precedes
-#     it leaves a decaying 1-min loadavg; r14 started DuckDB into it);
+#     it leaves a decaying 1-min loadavg);
 #   * a THIRD pass runs AUTOMATICALLY when the two passes' totals
 #     disagree by >15% on either engine — min-merged in, so an
 #     environmental burst self-heals instead of needing a manual
-#     supplementary run.
+#     supplementary run;
+#   * the merged table also carries the job-floor-netted totals
+#     (tools/net_ratio.py), so the headline does not swing on sub-50ms
+#     oracle denominators under co-tenant noise.
 # DuckDB caps: none at sf0.1 (RUNS=2 per pass), 600 s/query at sf1,
 # 300 s/query at sf10 — a capped row reports ">Ns" and the aggregate
-# excludes that query from BOTH engines.
+# excludes that query from BOTH engines. sf1/sf10 come from
+# tools/gen_testdata.py under /tmp/testdata; the oracle SQL from a
+# graft.Verify run into /tmp/vout. Earlier rounds' protocols
+# are in git history (tools/bench_campaign_r10.sh … r18.sh).
+R=${1:?usage: SF01_DIR=<sf0.1 dir> tools/bench_campaign.sh <round>}
+SF01=${SF01_DIR:?set SF01_DIR to the sf0.1 testdata directory}
 set -x
-cd /root/repo
+cd "$(dirname "$0")/.."
 export SPARK_GRAFT_LOAD_WAIT_S=900
 ORACLE=/tmp/vout/oracle_sql.json
-META=/tmp/r16_pass_meta.txt
+META=/tmp/${R}_pass_meta.txt
 : > $META
 
 gate_load () { # wait (≤900 s) for the 1-min loadavg to decay below 0.5
@@ -60,9 +73,7 @@ EOF
 }
 
 merge () { # out_md cmp...  (prepends the per-pass load header,
-           # appends the job-floor-netted totals — r16 verdict item:
-           # report BOTH ratios so the headline stops swinging on
-           # sub-50ms oracle denominators under co-tenant noise)
+           # appends the job-floor-netted totals)
   local out=$1; shift
   { echo "<!-- per-pass load stamps:"; cat $META; echo "-->";
     python3 tools/min_merge.py "$@"; } > $out
@@ -71,22 +82,22 @@ merge () { # out_md cmp...  (prepends the per-pass load header,
 
 run_scale () { # tag sfdir iters runs timeout
   local tag=$1 sfdir=$2 iters=$3 runs=$4 timeout=$5
-  run_bench $sfdir /tmp/r16_bench_${tag}_a.json $iters
-  run_cmp $sfdir /tmp/r16_bench_${tag}_a.json /tmp/r16_cmp_${tag}_a.md $runs $timeout
-  run_bench $sfdir /tmp/r16_bench_${tag}_b.json $iters
-  run_cmp $sfdir /tmp/r16_bench_${tag}_b.json /tmp/r16_cmp_${tag}_b.md $runs $timeout
-  local cmps="/tmp/r16_cmp_${tag}_a.md /tmp/r16_cmp_${tag}_b.md"
-  if need_third /tmp/r16_cmp_${tag}_a.md /tmp/r16_cmp_${tag}_b.md; then
-    run_bench $sfdir /tmp/r16_bench_${tag}_c.json $iters
-    run_cmp $sfdir /tmp/r16_bench_${tag}_c.json /tmp/r16_cmp_${tag}_c.md $runs $timeout
-    cmps="$cmps /tmp/r16_cmp_${tag}_c.md"
+  run_bench $sfdir /tmp/${R}_bench_${tag}_a.json $iters
+  run_cmp $sfdir /tmp/${R}_bench_${tag}_a.json /tmp/${R}_cmp_${tag}_a.md $runs $timeout
+  run_bench $sfdir /tmp/${R}_bench_${tag}_b.json $iters
+  run_cmp $sfdir /tmp/${R}_bench_${tag}_b.json /tmp/${R}_cmp_${tag}_b.md $runs $timeout
+  local cmps="/tmp/${R}_cmp_${tag}_a.md /tmp/${R}_cmp_${tag}_b.md"
+  if need_third /tmp/${R}_cmp_${tag}_a.md /tmp/${R}_cmp_${tag}_b.md; then
+    run_bench $sfdir /tmp/${R}_bench_${tag}_c.json $iters
+    run_cmp $sfdir /tmp/${R}_bench_${tag}_c.json /tmp/${R}_cmp_${tag}_c.md $runs $timeout
+    cmps="$cmps /tmp/${R}_cmp_${tag}_c.md"
   fi
-  merge /tmp/r16_merged_${tag}.md $cmps
+  merge /tmp/${R}_merged_${tag}.md $cmps
 }
 
-run_scale sf01 /root/testdata/sf0.1 3 2 0
+run_scale sf01 "$SF01" 3 2 0
 run_scale sf1  /tmp/testdata/sf1   3 1 600
 run_scale sf10 /tmp/testdata/sf10  2 1 300
 
-python3 tools/scale_check.py /tmp/r16_bench_sf1_a.json /tmp/r16_bench_sf10_a.json 10 > /tmp/r16_scale_sf1_sf10.md
+python3 tools/scale_check.py /tmp/${R}_bench_sf1_a.json /tmp/${R}_bench_sf10_a.json 10 > /tmp/${R}_scale_sf1_sf10.md
 echo CAMPAIGN_DONE
