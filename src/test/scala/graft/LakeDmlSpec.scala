@@ -62,6 +62,39 @@ class LakeDmlSpec extends AnyFunSuite {
     assert(t.read().count() == 1005)
   }
 
+  /** SQL MERGE of 4 source rows: 3 update rows of the first two files,
+    * one inserts.
+    */
+  private def sqlMerge(t: LakeTable): Unit = {
+    val src = Seq((3L, "x"), (251L, "y"), (252L, "z"), (5000L, "w")).toDF("sid", "sname")
+    t.mergeInto(src) { (target, s) =>
+      MergeSpec(target("id") === s("sid"),
+        matched = Seq(MergeClause.Update(None, Map("s" -> s("sname")))),
+        notMatched = Seq(MergeClause.Insert(None, Map("id" -> s("sid"), "s" -> s("sname")))),
+        notMatchedBySource = Nil)
+    }
+  }
+
+  test("copy-on-write SQL MERGE runs a fixed number of jobs") {
+    val t = seeded()
+    // source cache build, probe, cardinality check, rewrite with inserts
+    assert(jobs(sqlMerge(t)) == 10)
+    assert(t.read().count() == 1001)
+  }
+
+  test("merge-on-read upsert, UPDATE and SQL MERGE run a fixed number of jobs") {
+    val t = seeded()
+    t.alterSetProperties(Map(LakeTable.MergeModeKey -> "merge-on-read"))
+    val src = spark.range(990, 1010, 1, 2)
+      .select($"id", lit(1).as("v"), lit("u").as("s"))
+    assert(jobs(t.merge(src, Seq("id"))) == 8)
+    assert(jobs(t.update($"id" === 500, Map("s" -> lit("x")))) == 6)
+    assert(jobs(sqlMerge(t)) == 14)
+    assert(t.hasDeletionVectors)
+    assert(t.read().count() == 1011)
+    assert(t.read().where($"s".isin("x", "y", "z", "w")).count() == 5)
+  }
+
   test("merge-on-read DELETE counts its DV rows in one job") {
     val t = seeded()
     t.alterSetProperties(Map(LakeTable.MergeModeKey -> "merge-on-read"))
