@@ -49,15 +49,17 @@ final class LakeTable(spark: SparkSession, val path: Path) {
   def read(versionAsOf: Long = -1L): DataFrame = {
     val snap = pruneGutted(snapshot(path, versionAsOf))
     val schema = snap.schema
-    if (snap.files.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else {
+    if (snap.files.isEmpty) emptyFrame(schema)
+    else {
       val mapping = mappingOf(snap)
       applyDvFilter(spark.baseRelationToDataFrame(fsRelation(snap)), snap.files)
         .select(schema.fields.map(f =>
           col(physicalOf(mapping, f.name)).cast(f.dataType).as(f.name)).toSeq: _*)
     }
   }
+
+  private def emptyFrame(schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** Drops files whose DV deletes EVERY row (descriptor cardinality ==
     * the file's `numRecords` stat) from a snapshot's scan list: they
@@ -83,13 +85,10 @@ final class LakeTable(spark: SparkSession, val path: Path) {
   private def readWithProvenance(snap0: Snapshot): DataFrame = {
     val snap = pruneGutted(snap0)
     val schema = snap.schema
-    if (snap.files.isEmpty) {
-      val withProv = StructType(schema.fields ++ Seq(
+    if (snap.files.isEmpty)
+      return emptyFrame(StructType(schema.fields ++ Seq(
         StructField("__graft_file", org.apache.spark.sql.types.StringType),
-        StructField("__graft_row", org.apache.spark.sql.types.LongType)))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withProv)
-    }
+        StructField("__graft_row", org.apache.spark.sql.types.LongType))))
     val mapping = mappingOf(snap)
     val base = spark.baseRelationToDataFrame(fsRelation(snap))
       .withColumn("__graft_file", col("_metadata.file_path"))
@@ -309,9 +308,7 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       .toSeq.sortBy(_._1)
     val outSchema = StructType(schema.fields :+
       StructField("_commit_version", org.apache.spark.sql.types.LongType, nullable = false))
-    if (versioned.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
+    if (versioned.isEmpty) return emptyFrame(outSchema)
     val physSchema = StructType(schema.fields.map(f =>
       StructField(physicalOf(mapping, f.name), f.dataType, f.nullable)))
     val paths = versioned.map { case (_, f) => resolvePath(path, f.path).toString }
@@ -345,33 +342,55 @@ final class LakeTable(spark: SparkSession, val path: Path) {
   private def fileNameOf(rel: String): String =
     rel.substring(rel.lastIndexOf('/') + 1)
 
-  /** Matcher from scan-reported provenance (`_metadata.file_path`
-    * strings) to add-files: one set lookup per file against the
-    * scanPathOf rendering. Matching through any other string form has
-    * burned twice already — `file:///x` vs Hadoop's `file:/x`, and
-    * relative table roots vs the scan's absolute paths — either way
-    * copy-on-write "touches" zero files and MERGE duplicates keys.
+  /** The probe of every DML: rows of `matched` (scan rows carrying
+    * `__graft_file` provenance) per file, and the add-files they name —
+    * the touched-file set AND the matched-row count in ONE job. Each
+    * task folds its rows into a path → count map and the driver sums
+    * the maps; the result is bounded by construction (at most one
+    * entry per task per file it scanned, so snapshot-sized, and the
+    * driver already holds the snapshot). A Dataset action, so it runs
+    * under an SQL execution id like every other DML job.
     */
-  private def touchedMatcher(touchedFiles: Set[String]): AddFile => Boolean = {
-    f => touchedFiles.contains(scanPathOf(f))
-  }
-
-  /** Rows of `matched` per value of its `fileCol` (scan provenance or
-    * add-path) — the touched-file set AND the matched-row count of a
-    * DML probe in ONE job: each task folds its rows into a path → count
-    * map and the driver sums the maps. The result is bounded by
-    * construction (at most one entry per task per file it scanned, so
-    * snapshot-sized, and the driver already holds the snapshot). A
-    * Dataset action, so it runs under an SQL execution id like every
-    * other DML job.
-    */
-  private def touchedFileCounts(matched: DataFrame, fileCol: String): Map[String, Long] = {
+  private def probeTouched(
+      snap: Snapshot, matched: DataFrame): (Map[String, Long], Seq[AddFile]) = {
     import spark.implicits._
-    matched.select(col(fileCol)).as[String].mapPartitions { it =>
+    val counts = matched.select(col("__graft_file")).as[String].mapPartitions { it =>
       val m = scala.collection.mutable.HashMap.empty[String, Long]
       it.foreach(f => m.update(f, m.getOrElse(f, 0L) + 1L))
       m.iterator
     }.collect().groupMapReduce(_._1)(_._2)(_ + _)
+    (counts, touchedBy(snap, counts))
+  }
+
+  /** Add-files named by per-file counts keyed on scan provenance: one
+    * set lookup per file against the scanPathOf rendering. Matching
+    * through any other string form has burned twice already —
+    * `file:///x` vs Hadoop's `file:/x`, and relative table roots vs
+    * the scan's absolute paths — either way copy-on-write "touches"
+    * zero files and MERGE duplicates keys.
+    */
+  private def touchedBy(snap: Snapshot, counts: Map[String, Long]): Seq[AddFile] =
+    snap.files.filter(f => counts.contains(scanPathOf(f)))
+
+  /** The copy-on-write tail of every DML: `rows`, written under the
+    * snapshot's layout, replace the `touched` files in one commit
+    * pinned at `snap`.
+    */
+  private def rewriteTouched(
+      snap: Snapshot, touched: Seq[AddFile], rows: DataFrame,
+      op: String, params: Map[String, String]): Unit = {
+    val adds = writeFor(snap, rows)
+    val ts = System.currentTimeMillis()
+    commitPinned(snap.version, commitInfoAction(op, params, ts) +:
+      (touched.map(f => removeAction(f.path, ts)) ++ adds.map(addAction)))
+  }
+
+  /** Writes `df` as data files under the snapshot's partitioning,
+    * bucketing and column mapping.
+    */
+  private def writeFor(snap: Snapshot, df: DataFrame): Seq[AddFile] = {
+    val b = bucketingOf(snap)
+    writeDataFiles(bucketize(df, b), snap.metadata.partitionColumns, "snappy", b, mappingOf(snap))
   }
 
   /** What a copy-on-write MERGE's commitInfo records from its probe, at
@@ -560,8 +579,9 @@ final class LakeTable(spark: SparkSession, val path: Path) {
           "(expected copy-on-write or merge-on-read)")
     }
 
-  /** Writes `rows` (file, row) — `file` the scan path ([[scanPathOf]])
-    * of the data file each deleted row belongs to — as one (fid, row) parquet
+  /** Writes `rows` (`__graft_file`, `__graft_row`) — the scan path
+    * ([[scanPathOf]]) of the data file each deleted row belongs to and
+    * its row index — as one (fid, row) parquet
     * under `_dv/`, assigning each distinct file a dense `fid` ordinal.
     * `counts` = exact per-file row counts of `rows` (the caller always
     * has them from its own stats pass — recounting here would cost an
@@ -578,9 +598,9 @@ final class LakeTable(spark: SparkSession, val path: Path) {
     val nParts = math.max(1, math.min(64, total / 4000000L)).toInt
     val rel = s"_dv/dv-${UUID.randomUUID().toString.take(12)}"
     val dest = path.resolve(rel)
-    val fidLookup = fidOf.toSeq.toDF("file", "fid")
-    rows.join(broadcast(fidLookup), "file")
-      .select(col("fid").cast("int").as("fid"), col("row").cast("long").as("row"))
+    val fidLookup = fidOf.toSeq.toDF("__graft_file", "fid")
+    rows.join(broadcast(fidLookup), "__graft_file")
+      .select(col("fid").cast("int").as("fid"), col("__graft_row").cast("long").as("row"))
       .repartition(nParts, col("fid"))
       .sortWithinPartitions("fid", "row")
       .write.parquet(dest.toString)
@@ -605,16 +625,13 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       opParams: Map[String, String],
       newCounts: Option[Map[String, Long]] = None): Long = {
     import spark.implicits._
-    // DV rows keep the scan path as their file key ([[touchedMatcher]])
-    val cached = matched
-      .select(col("__graft_file").as("file"), col("__graft_row").as("row")).cache()
+    // DV rows keep the scan path as their file key ([[touchedBy]])
+    val cached = matched.select(col("__graft_file"), col("__graft_row")).cache()
     try {
       // ONE stats job (unless the caller already aggregated): per-file
       // new-delete counts carry the touched set, the deleted total,
       // AND the DV writer's cardinalities
-      val nc: Map[String, Long] =
-        newCounts.getOrElse(touchedFileCounts(cached, "file"))
-      val touched = snap.files.filter(touchedMatcher(nc.keySet))
+      val (nc, touched) = newCounts.fold(probeTouched(snap, cached))(c => (c, touchedBy(snap, c)))
       val newDeleted = nc.values.sum
       // carry forward re-touched files' old rows, translated old
       // (path, fid) → current scan path; files NOT re-touched keep
@@ -628,13 +645,13 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       val oldPairs: Seq[DataFrame] = touched
         .flatMap(f => f.dv.map(d => (d.path, d.fid, scanPathOf(f))))
         .groupBy(_._1).toSeq.map { case (dvPath, fs) =>
-          val m = fs.map { case (_, fid, file) => (fid, file) }.toDF("fid", "file")
+          val m = fs.map { case (_, fid, file) => (fid, file) }.toDF("fid", "__graft_file")
           spark.read.schema(DvSchema)
             .parquet(resolvePath(path, dvPath).toString)
             .join(broadcast(m), "fid")
-            .select(col("file"), col("row"))
+            .select(col("__graft_file"), col("row").as("__graft_row"))
         }
-      val dvAll = oldPairs.foldLeft(cached.select(col("file"), col("row")))(_ unionByName _)
+      val dvAll = oldPairs.foldLeft(cached)(_ unionByName _)
       // the DV write and the append write are independent job chains —
       // overlap them (local[32] and a real cluster both have the slack;
       // sequential, they'd serialize two sub-second tails), each under
@@ -643,9 +660,7 @@ final class LakeTable(spark: SparkSession, val path: Path) {
         if (touched.isEmpty) None else Some(writeDvFile(dvAll, totalCounts))
       }
       val addsF = SparkBridge.async(spark) {
-        appendDf.fold(Seq.empty[AddFile])(df =>
-          writeDataFiles(bucketize(df, bucketingOf(snap)),
-            snap.metadata.partitionColumns, "snappy", bucketingOf(snap), mappingOf(snap)))
+        appendDf.fold(Seq.empty[AddFile])(writeFor(snap, _))
       }
       val dvOut = SparkBridge.await(dvOutF)
       val adds = SparkBridge.await(addsF)
@@ -758,14 +773,10 @@ final class LakeTable(spark: SparkSession, val path: Path) {
     * move, facts don't, so the commit is dataChange=false end to end.
     */
   private def materializeDvFiles(snap: Snapshot, files: Seq[AddFile]): Unit = {
-    val bucketed = bucketingOf(snap)
     val raw = readFiles(snap, files)
-    val df = bucketed match {
-      case Some(b) => bucketize(raw, Some(b))
-      case None    => raw.coalesce(math.max(1, files.size / 4))
-    }
-    val adds = writeDataFiles(df, snap.metadata.partitionColumns, "snappy", bucketed,
-      mappingOf(snap))
+    // bucketed: writeFor re-derives the layout, one file per bucket
+    val adds = writeFor(snap,
+      if (bucketingOf(snap).isDefined) raw else raw.coalesce(math.max(1, files.size / 4)))
     val ts = System.currentTimeMillis()
     val actions = Seq.newBuilder[com.fasterxml.jackson.databind.node.ObjectNode]
     // full byte/row accounting in the params, so a standing pipeline
@@ -956,28 +967,29 @@ final class LakeTable(spark: SparkSession, val path: Path) {
   }
 
   /** Fails the write when incoming rows violate a recorded CHECK
-    * constraint. One job over the incoming batch only — never the
-    * table; NULL predicate results pass (SQL CHECK semantics).
+    * constraint or put a NULL into a column the schema declares NOT
+    * NULL (Delta's write invariant: such a NULL would read back as 0
+    * or an empty value through the non-nullable read schema). One job
+    * over the incoming batch only — never the table — and none when
+    * the table has neither; NULL predicate results pass (SQL CHECK
+    * semantics).
     */
   private def enforceConstraints(df: DataFrame, snap: Snapshot): Unit = {
-    val cs = constraintsOf(snap).toSeq
-    if (cs.isEmpty) return
+    val checks: Seq[(String, Column)] =
+      constraintsOf(snap).toSeq.map { case (name, sql) =>
+        (s"CHECK constraint $name ($sql)",
+          !coalesce(org.apache.spark.sql.functions.expr(sql), lit(true)))
+      } ++ snap.schema.fields.filterNot(_.nullable).map(f =>
+        (s"NOT NULL column ${f.name}", col(s"`${f.name.replace("`", "``")}`").isNull))
+    if (checks.isEmpty) return
     // ONE aggregation job over the incoming batch computes every
-    // constraint's violation count (K separate count() jobs would
+    // check's violation count (K separate count() jobs would
     // re-execute the upstream plan K times)
-    val counts = df.agg(
-      org.apache.spark.sql.functions.sum(
-        when(!coalesce(org.apache.spark.sql.functions.expr(cs.head._2), lit(true)), 1L)
-          .otherwise(0L)).as("c0"),
-      cs.tail.zipWithIndex.map { case ((_, sql), i) =>
-        org.apache.spark.sql.functions.sum(
-          when(!coalesce(org.apache.spark.sql.functions.expr(sql), lit(true)), 1L)
-            .otherwise(0L)).as(s"c${i + 1}")
-      }: _*).collect()(0)
-    cs.zipWithIndex.foreach { case ((name, sql), i) =>
+    val sums = checks.map { case (_, bad) => sum(when(bad, 1L).otherwise(0L)) }
+    val counts = df.agg(sums.head, sums.tail: _*).collect()(0)
+    checks.zipWithIndex.foreach { case ((what, _), i) =>
       val n = if (counts.isNullAt(i)) 0L else counts.getLong(i)
-      if (n > 0)
-        throw UserException(s"CHECK constraint $name ($sql) violated by $n row(s)")
+      if (n > 0) throw UserException(s"$what violated by $n row(s)")
     }
   }
 
@@ -1002,25 +1014,25 @@ final class LakeTable(spark: SparkSession, val path: Path) {
     val dataPhys = StructType(schema.fields
       .filterNot(f => partCols.contains(f.name))
       .map(f => StructField(physicalOf(mapping, f.name), f.dataType, f.nullable)))
-    val paths = files.map(f => resolvePath(path, f.path).toString)
-    // provenance derived BELOW the DV filter (_metadata does not
-    // resolve through the anti-join)
-    val raw = applyDvFilter(
-      spark.read.schema(dataPhys).parquet(paths: _*)
-        .withColumn("__file", col("_metadata.file_path")), files)
+    val scan = spark.read.schema(dataPhys)
+      .parquet(files.map(f => resolvePath(path, f.path).toString): _*)
     val withPart =
-      if (partCols.isEmpty) raw.drop("__file")
+      // an unpartitioned rewrite reads no `_metadata` field beyond what
+      // a DV filter needs
+      if (partCols.isEmpty) applyDvFilter(scan, files)
       else {
         // Partition values come from the LOG, attached via a broadcast
         // join on the scan's file provenance — not from directory-name
         // inference, which requires one common basePath and breaks the
         // moment a shallow clone mixes borrowed (source-rooted) and
-        // local files in one rewrite set.
+        // local files in one rewrite set. The provenance is derived
+        // BELOW the DV filter (_metadata does not resolve through the
+        // anti-join).
         import spark.implicits._
         val lookup = files.map { f =>
           (scanPathOf(f), partCols.map(c => f.partitionValues.getOrElse(c, null)))
         }.toDF("__file", "__pv")
-        raw
+        applyDvFilter(scan.withColumn("__file", col("_metadata.file_path")), files)
           .join(broadcast(lookup), "__file")
           .select(col("*") +: partCols.zipWithIndex.map { case (c, i) =>
             element_at(col("__pv"), i + 1).cast(schema(c).dataType).as(c)
@@ -1318,12 +1330,17 @@ final class LakeTable(spark: SparkSession, val path: Path) {
 
   /** MERGE upsert (U3): update-all-when-matched / insert-all-when-not,
     * keys from the table manifest PKs
-    * (/root/reference/src/component.py:238-260). Copy-on-write with
-    * file pruning: one probe job semi-joins the snapshot to the source
-    * keys (no dedup — a semi-join emits each target row at most once)
-    * and returns per-file match counts, which name the files to
-    * rewrite and give the commitInfo's `numTargetFilesRewritten` /
-    * `numTargetRowsMatched`.
+    * (/root/reference/src/component.py:238-260). One probe semi-joins
+    * the snapshot (cut to the buckets the source keys hash into, see
+    * [[bucketPrunedSnapshot]]) to the source keys — no dedup: a
+    * semi-join emits each target row at most once. Copy-on-write
+    * counts its matches per file ([[probeTouched]]), which name the
+    * files to rewrite and give the commitInfo's
+    * `numTargetFilesRewritten` / `numTargetRowsMatched`, and
+    * [[rewriteTouched]] commits the rewrite; merge-on-read records the
+    * matches as DV pairs ([[commitMorDeletes]]). A duplicate source key
+    * lands every one of its rows (`MergeOps.upsert` semantics), where
+    * SQL MERGE ([[mergeInto]]) raises a cardinality error.
     */
   def merge(
       source: DataFrame,
@@ -1334,59 +1351,29 @@ final class LakeTable(spark: SparkSession, val path: Path) {
         "Upsert mode requires primary keys to be defined in the table manifest.")
     if (!exists) { write(source, "append", operationParams = operationParams); return }
     val snap = snapshot(path)
-    val schema = snap.schema
-    val src = alignToSchema(source, schema).cache()
+    val src = alignToSchema(source, snap.schema).cache()
     try {
       enforceConstraints(src, snap)
-      if (mergeModeOf(snap) == "merge-on-read") {
-        // upsert ≡ delete every key-matched target row + append all
-        // source rows (MergeOps.upsert algebra); record the deletes as
-        // DV pairs instead of rewriting the touched files
-        // (a semi-join needs no dedup of its build side)
-        val srcK = src.select(keys.map(col): _*)
-        // bucket-derived file pruning (scaladoc above): the probe scan
-        // only reads files in buckets the source keys hash into
-        val withProv = readWithProvenance(bucketPrunedSnapshot(snap, srcK, keys))
-        val cond = keys.map(k => withProv(k) === srcK(k)).reduce(_ && _)
-        commitMorDeletes(snap, withProv.join(srcK, cond, "left_semi"), Some(src), "MERGE",
-          operationParams ++ Map("keys" -> keys.mkString(",")))
-        return
-      }
+      val params = operationParams ++ Map("keys" -> keys.mkString(","))
+      // on a bucketed target the bucketed scan's HashPartitioning means
+      // the probe join never exchanges the target side
       val srcKeys = src.select(keys.map(col): _*)
-
-      // File pruning: which live files contain rows whose key matches a
-      // source key? `__graft_file` is the scan's per-row file
-      // provenance — its per-file counts over the semi-join give
-      // exactly the files MERGE must rewrite, and how many target rows
-      // matched, in one job. On a bucketed target the scan list
-      // itself is first cut to the buckets the source keys hash into
-      // (bucketPrunedSnapshot), and the bucketed scan's
-      // HashPartitioning means the probe join never exchanges the
-      // target side.
       val withFile = readWithProvenance(bucketPrunedSnapshot(snap, srcKeys, keys))
-      val joinCond = keys.map(k => withFile(k) === srcKeys(k)).reduce(_ && _)
-      val matched = touchedFileCounts(
-        withFile.join(srcKeys, joinCond, "left_semi"), "__graft_file")
-      val touched = snap.files.filter(touchedMatcher(matched.keySet))
-
-      // Rewrite = (touched-file rows not matching) ∪ source rows; plus
-      // source rows matching *untouched* files cannot exist by
-      // construction, so all source rows land in the rewrite.
-      val touchedDf =
-        if (touched.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        else readFiles(snap, touched)
-      val rewritten = graft.operators.MergeOps.upsert(touchedDf, src, keys)
-      val adds = writeDataFiles(bucketize(rewritten, bucketingOf(snap)),
-        snap.metadata.partitionColumns, "snappy", bucketingOf(snap), mappingOf(snap))
-      val ts = System.currentTimeMillis()
-
-      val actions = Seq.newBuilder[com.fasterxml.jackson.databind.node.ObjectNode]
-      actions += commitInfoAction("MERGE",
-        operationParams ++ Map("keys" -> keys.mkString(",")) ++
-          probeMetrics(touched, Some(matched)), ts)
-      touched.foreach(f => actions += removeAction(f.path, ts))
-      adds.foreach(a => actions += addAction(a))
-      commitPinned(snap.version, actions.result())
+      val hits = withFile.join(srcKeys,
+        keys.map(k => withFile(k) === srcKeys(k)).reduce(_ && _), "left_semi")
+      if (mergeModeOf(snap) == "merge-on-read")
+        // upsert ≡ delete every key-matched target row + append all
+        // source rows (MergeOps.upsert algebra)
+        commitMorDeletes(snap, hits, Some(src), "MERGE", params)
+      else {
+        val (matched, touched) = probeTouched(snap, hits)
+        // Rewrite = (touched-file rows not matching) ∪ source rows: a
+        // source row matching an untouched file cannot exist by
+        // construction, so all source rows land in the rewrite.
+        val old = if (touched.isEmpty) emptyFrame(snap.schema) else readFiles(snap, touched)
+        rewriteTouched(snap, touched, graft.operators.MergeOps.upsert(old, src, keys), "MERGE",
+          params ++ probeMetrics(touched, Some(matched)))
+      }
     } finally src.unpersist()
   }
 
@@ -1394,9 +1381,12 @@ final class LakeTable(spark: SparkSession, val path: Path) {
     * MATCHED THEN UPDATE … WHEN NOT MATCHED THEN INSERT …`,
     * /root/reference/src/component.py:249-258, plus conditioned clauses,
     * DELETE actions and NOT MATCHED BY SOURCE). Copy-on-write with the
-    * same file pruning as `merge`: only files containing matched rows
-    * are rewritten (all files when NOT MATCHED BY SOURCE clauses exist,
-    * since any file may hold an unmatched row); INSERT rows append.
+    * same probe as `merge` ([[probeTouched]]): only files containing
+    * matched rows are rewritten (all files when NOT MATCHED BY SOURCE
+    * clauses exist, since any file may hold an unmatched row), through
+    * [[rewriteTouched]]; INSERT rows append. Merge-on-read:
+    * [[morMergeInto]]. Both evaluate the clauses through the one
+    * compiler on [[MergeSpec]].
     *
     * `build` is called with concrete (target, source) frames and must
     * return the clause spec resolved against THEM — this inversion lets
@@ -1413,8 +1403,6 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       throw UserException(s"MERGE INTO target does not exist: $path")
     val snap = snapshot(path)
     val schema = snap.schema
-    // exact-name column lookup (column mapping allows dotted names)
-    def tcol(df: DataFrame, c: String): Column = df(s"`${c.replace("`", "``")}`")
     val src = source.cache()
     try {
       // the probe carries __graft_file/__graft_row provenance (derived
@@ -1434,7 +1422,7 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       // can only involve files in the buckets the source hashes into.
       // NOT MATCHED BY SOURCE disqualifies pruning outright — an
       // unmatched target row can live in any bucket.
-      val (probe, probeSpec) =
+      val (probe, spec) =
         (if (fullSpec.notMatchedBySource.nonEmpty) None
          else prunableBucketing(snap).flatMap { b =>
            equiSourceExprsForBuckets(b, fullProbe, src, fullSpec.condition)
@@ -1446,130 +1434,44 @@ final class LakeTable(spark: SparkSession, val path: Path) {
              }
          }).getOrElse((fullProbe, fullSpec))
       if (mergeModeOf(snap) == "merge-on-read") {
-        morMergeInto(snap, src, probe, probeSpec)
+        morMergeInto(snap, src, probe, spec)
         return
       }
 
-      // -- file pruning: which live files must be rewritten? --
-      val matched: Option[Map[String, Long]] =
-        if (snap.files.isEmpty || probeSpec.notMatchedBySource.nonEmpty ||
-            probeSpec.matched.isEmpty) None
-        else Some(touchedFileCounts(
-          probe.join(src, probeSpec.condition, "left_semi"), "__graft_file"))
-      val touched: Seq[AddFile] =
-        if (probeSpec.notMatchedBySource.nonEmpty) snap.files
-        else matched.fold(Seq.empty[AddFile])(m => snap.files.filter(touchedMatcher(m.keySet)))
-
-      // -- rewrite of touched files: matched + not-matched-by-source --
-      val rewritten: Option[DataFrame] =
-        if (touched.isEmpty) None
+      val (matched, touched) =
+        if (spec.notMatchedBySource.nonEmpty) (None, snap.files)
+        else if (snap.files.isEmpty || spec.matched.isEmpty) (None, Nil)
         else {
-          val affected = readFiles(snap, touched)
-          val spec = build(affected, src)
-          if (spec.matched.nonEmpty) {
-            // ANSI cardinality rule: a target row may be updated/deleted
-            // by at most one source row
-            val tid = monotonically_increasing_id().as("__graft_tid")
-            val dup = affected.select(tid +: schema.fieldNames.toSeq.map(affected(_)): _*)
-            val dupes = dup.join(src, spec.condition, "inner")
-              .groupBy(col("__graft_tid")).count()
-              .where(col("count") > 1).limit(1).count()
-            if (dupes > 0) throw UserException(
-              "MERGE: a target row matched multiple source rows; " +
-                "deduplicate the source on the merge keys first")
-          }
-          val joined =
-            if (spec.matched.isEmpty) {
-              // Only NOT-MATCHED-BY-SOURCE clauses: the left_outer
-              // below would fan a target row out once per matching
-              // source row and, with no matched clause to claim it,
-              // keep EVERY copy (the cardinality check above is
-              // rightly skipped — nothing is ambiguous). Semi/anti
-              // split keeps target cardinality exact: each row once,
-              // flagged by whether any source row matches.
-              affected.join(src, spec.condition, "left_semi")
-                .withColumn("__graft_s", lit(true))
-                .unionByName(
-                  affected.join(src, spec.condition, "left_anti")
-                    .withColumn("__graft_s", lit(false)))
-            } else
-              affected.join(src.withColumn("__graft_s", lit(true)),
-                spec.condition, "left_outer")
-          val sPresent = coalesce(col("__graft_s"), lit(false))
-          // first applicable clause, SQL WHEN order; -1 = keep unchanged
-          val clauses: Seq[(Column, MergeClause)] =
-            spec.matched.map(c => (sPresent && c.condition.getOrElse(lit(true)), c)) ++
-              spec.notMatchedBySource.map(c =>
-                (!sPresent && c.condition.getOrElse(lit(true)), c))
-          val idx = clauses.zipWithIndex.foldRight(lit(-1)) {
-            case (((guard, _), i), acc) => when(guard, lit(i)).otherwise(acc)
-          }
-          val deleteIdx = clauses.map(_._2).zipWithIndex.collect {
-            case (_: MergeClause.Delete, i) => i
-          }
-          val withIdx = joined.withColumn("__graft_idx", idx)
-          val kept =
-            if (deleteIdx.isEmpty) withIdx
-            else withIdx.where(!col("__graft_idx").isin(deleteIdx.map(Integer.valueOf): _*))
-          val updates = clauses.map(_._2).zipWithIndex.collect {
-            case (u: MergeClause.Update, i) => (i, u.assignments)
-          }
-          Some(kept.select(schema.fields.toSeq.map { f =>
-            val base = tcol(affected, f.name)
-            updates.foldRight(base) { case ((i, assigns), acc) =>
-              assigns.get(f.name) match {
-                case Some(v) => when(col("__graft_idx") === i, v).otherwise(acc)
-                case None    => acc
-              }
-            }.cast(f.dataType).as(f.name)
-          }: _*))
+          val (m, t) = probeTouched(snap, probe.join(src, spec.condition, "left_semi"))
+          (Some(m), t)
         }
-
-      // -- NOT MATCHED inserts: source rows matching NO target row --
-      val inserts: Option[DataFrame] =
-        if (probeSpec.notMatched.isEmpty) None
-        else {
-          val unmatched =
-            if (snap.files.isEmpty) src
-            else src.join(probe, probeSpec.condition, "left_anti")
-          val ins = probeSpec.notMatched
-          val idx = ins.zipWithIndex.foldRight(lit(-1)) {
-            case ((c, i), acc) =>
-              when(c.condition.getOrElse(lit(true)), lit(i)).otherwise(acc)
-          }
-          val withIdx = unmatched.withColumn("__graft_idx", idx)
-            .where(col("__graft_idx") >= 0)
-          Some(withIdx.select(schema.fields.toSeq.map { f =>
-            ins.zipWithIndex.foldRight(lit(null).cast(f.dataType)) {
-              case ((c, i), acc) =>
-                c.assignments.get(f.name) match {
-                  case Some(v) => when(col("__graft_idx") === i, v).otherwise(acc)
-                  case None    => acc
-                }
-            }.cast(f.dataType).as(f.name)
-          }: _*))
+      // rewrite of touched files: matched + not-matched-by-source
+      val rewritten = Option.when(touched.nonEmpty) {
+        val affected = readFiles(snap, touched)
+        val s = build(affected, src)
+        if (s.matched.nonEmpty) {
+          // ANSI cardinality rule: a target row may be updated/deleted
+          // by at most one source row
+          val tid = monotonically_increasing_id().as("__graft_tid")
+          val dup = affected.select(tid +: schema.fieldNames.toSeq.map(affected(_)): _*)
+          val dupes = dup.join(src, s.condition, "inner")
+            .groupBy(col("__graft_tid")).count()
+            .where(col("count") > 1).limit(1).count()
+          if (dupes > 0) throw UserException(
+            "MERGE: a target row matched multiple source rows; " +
+              "deduplicate the source on the merge keys first")
         }
-
-      val newRows = (rewritten, inserts) match {
-        case (Some(r), Some(i)) => Some(alignToSchema(r, schema).unionByName(alignToSchema(i, schema)))
-        case (Some(r), None)    => Some(alignToSchema(r, schema))
-        case (None, Some(i))    => Some(alignToSchema(i, schema))
-        case (None, None)       => None
+        s.applyClauses(s.withClauseIndex(
+          s.joinSource(affected, src, "left_outer", broadcastSource = false), lit(true)),
+          affected, schema)
       }
-      newRows.foreach { data =>
+      // NOT MATCHED inserts: source rows matching NO target row
+      val inserts = Option.when(spec.notMatched.nonEmpty)(spec.insertRows(
+        if (snap.files.isEmpty) src else src.join(probe, spec.condition, "left_anti"), schema))
+      (rewritten ++ inserts).reduceOption(_ unionByName _).foreach { data =>
         enforceConstraints(data, snap)
-        val adds = writeDataFiles(bucketize(data, bucketingOf(snap)),
-          snap.metadata.partitionColumns, "snappy", bucketingOf(snap), mappingOf(snap))
-        val ts = System.currentTimeMillis()
-        val actions = Seq.newBuilder[com.fasterxml.jackson.databind.node.ObjectNode]
-        actions += commitInfoAction("MERGE",
-          Map("matchedClauses" -> probeSpec.matched.size.toString,
-            "notMatchedClauses" -> probeSpec.notMatched.size.toString,
-            "notMatchedBySourceClauses" -> probeSpec.notMatchedBySource.size.toString) ++
-            probeMetrics(touched, matched), ts)
-        touched.foreach(f => actions += removeAction(f.path, ts))
-        adds.foreach(a => actions += addAction(a))
-        commitPinned(snap.version, actions.result())
+        rewriteTouched(snap, touched, data, "MERGE",
+          spec.clauseCounts ++ probeMetrics(touched, matched))
       }
     } finally src.unpersist()
   }
@@ -1586,9 +1488,6 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       src: DataFrame,
       probe: DataFrame,
       spec: MergeSpec): Unit = {
-    val schema = snap.schema
-    def tcol(df: DataFrame, c: String): Column = df(s"`${c.replace("`", "``")}`")
-
     // ONE target-side join pass feeds everything downstream. The
     // source of a standing MERGE pipeline is batch-sized — orders of
     // magnitude under the table — so the preferred plan broadcasts it
@@ -1598,9 +1497,8 @@ final class LakeTable(spark: SparkSession, val path: Path) {
     // full_outer: ONE table shuffle that serves matched AND insert
     // rows, instead of the per-consumer join the pre-r9 shape re-ran
     // (cardinality check, acted, insert anti-join — three table
-    // passes). The matched-empty shape keeps the semi/anti split:
-    // with no matched clause nothing is ambiguous, and a fan-out
-    // would duplicate target rows.
+    // passes). The matched-empty shape keeps the semi/anti split
+    // ([[MergeSpec.joinSource]]).
     val tPresent = col("__graft_file").isNotNull
     // plan-stats estimate — deliberately NOT an exact count (a
     // standalone materializing job costs ~a second that the first
@@ -1610,39 +1508,21 @@ final class LakeTable(spark: SparkSession, val path: Path) {
     // pathological under-estimate.
     val srcBytes = src.queryExecution.optimizedPlan.stats.sizeInBytes
     val srcFits = srcBytes <= 4 * DvBroadcastBytes
-    val srcS = src.withColumn("__graft_s", lit(true))
-    val joined =
-      if (spec.matched.isEmpty)
-        probe.join(src, spec.condition, "left_semi")
-          .withColumn("__graft_s", lit(true))
-          .unionByName(
-            probe.join(src, spec.condition, "left_anti")
-              .withColumn("__graft_s", lit(false)))
-      else if (srcFits)
-        probe.join(broadcast(srcS), spec.condition, "left_outer")
-      else
-        probe.join(srcS, spec.condition,
-          if (spec.notMatched.nonEmpty) "full_outer" else "left_outer")
-    val sPresent = coalesce(col("__graft_s"), lit(false))
-    // tPresent guards keep full_outer's probe-null insert rows out of
-    // the matched clauses (vacuous under left_outer / the split)
-    val clauses: Seq[(Column, MergeClause)] =
-      spec.matched.map(c =>
-        (tPresent && sPresent && c.condition.getOrElse(lit(true)), c)) ++
-        spec.notMatchedBySource.map(c =>
-          (tPresent && !sPresent && c.condition.getOrElse(lit(true)), c))
-    val idx = clauses.zipWithIndex.foldRight(lit(-1)) {
-      case (((guard, _), i), acc) => when(guard, lit(i)).otherwise(acc)
-    }
+    val outer = !srcFits && spec.notMatched.nonEmpty
+    val sPresent = MergeSpec.SourcePresent
+    val claimed = MergeSpec.ClauseIndex >= 0
     // the single materialized frame: matched pairs (cardinality
     // check), clause-claimed target rows (DVs + rewrite), and
     // source-unmatched rows (inserts). O(affected rows), never
     // O(table): target rows no clause can touch are dropped inside
     // the join task and never reach the cache — the previous shape
     // re-ran the probe join once per consumer (check, acted, insert
-    // anti-join), tripling the table scans.
-    val changes = joined.withColumn("__graft_idx", idx)
-      .where(sPresent || col("__graft_idx") >= 0).cache()
+    // anti-join), tripling the table scans. The tPresent guard keeps
+    // full_outer's probe-null insert rows out of the matched clauses.
+    val changes = spec.withClauseIndex(
+        spec.joinSource(probe, src, if (outer) "full_outer" else "left_outer", srcFits),
+        tPresent)
+      .where(sPresent || claimed).cache()
     try {
       // ONE stats job over the cached frame materializes it and yields
       // the ANSI cardinality verdict AND the per-file claimed counts
@@ -1653,85 +1533,37 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       val fileStats = changes.where(tPresent)
         .groupBy(col("__graft_file"), col("__graft_row"))
         .agg(sum(when(sPresent, 1L).otherwise(0L)).as("__m"),
-          max(when(col("__graft_idx") >= 0, 1L).otherwise(0L)).as("__a"))
+          max(when(claimed, 1L).otherwise(0L)).as("__a"))
         .groupBy(col("__graft_file"))
         .agg(sum(col("__a")).as("__claimed"), max(col("__m")).as("__maxm"))
         .collect()
-      if (spec.matched.nonEmpty) {
-        // ANSI cardinality rule — (file, row-index) IS a target row
-        // id; counted over ALL matched pairs, claimed or not (a
-        // doubly-matched row is ambiguous even when clause conditions
-        // end up claiming neither copy — same contract as the
-        // copy-on-write path)
-        if (fileStats.exists(r => r.getLong(2) > 1)) throw UserException(
+      // ANSI cardinality rule — (file, row-index) IS a target row id;
+      // counted over ALL matched pairs, claimed or not (a doubly-matched
+      // row is ambiguous even when clause conditions end up claiming
+      // neither copy — same contract as the copy-on-write path)
+      if (spec.matched.nonEmpty && fileStats.exists(r => r.getLong(2) > 1))
+        throw UserException(
           "MERGE: a target row matched multiple source rows; " +
             "deduplicate the source on the merge keys first")
-      }
       val newCounts: Map[String, Long] = fileStats
         .filter(_.getLong(1) > 0)
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       // only rows a clause CLAIMS leave their files; everything else
       // stays live in place — the whole point of merge-on-read
-      val acted = changes.where(col("__graft_idx") >= 0)
-      val deleteIdx = clauses.map(_._2).zipWithIndex.collect {
-        case (_: MergeClause.Delete, i) => i
-      }
-      val kept =
-        if (deleteIdx.isEmpty) acted
-        else acted.where(!col("__graft_idx").isin(deleteIdx.map(Integer.valueOf): _*))
-      val updates = clauses.map(_._2).zipWithIndex.collect {
-        case (u: MergeClause.Update, i) => (i, u.assignments)
-      }
-      val rewritten = kept.select(schema.fields.toSeq.map { f =>
-        val base = tcol(probe, f.name)
-        updates.foldRight(base) { case ((i, assigns), acc) =>
-          assigns.get(f.name) match {
-            case Some(v) => when(col("__graft_idx") === i, v).otherwise(acc)
-            case None    => acc
-          }
-        }.cast(f.dataType).as(f.name)
-      }: _*)
-
-      val inserts: Option[DataFrame] =
-        if (spec.notMatched.isEmpty) None
-        else {
-          // under full_outer the probe-null rows ARE the unmatched
-          // source rows — no separate anti-join pass. The broadcast
-          // shapes anti-join instead: column pruning cuts the probe
-          // scan to the condition's columns and AQE broadcasts the
-          // small build side, so it never re-shuffles the table.
-          val unmatched =
-            if (snap.files.isEmpty) src
-            else if (spec.matched.nonEmpty && !srcFits && spec.notMatched.nonEmpty)
-              changes.where(!tPresent)
-            else src.join(probe, spec.condition, "left_anti")
-          val ins = spec.notMatched
-          val insIdx = ins.zipWithIndex.foldRight(lit(-1)) {
-            case ((c, i), acc) =>
-              when(c.condition.getOrElse(lit(true)), lit(i)).otherwise(acc)
-          }
-          val withIdx = unmatched.withColumn("__graft_ins", insIdx)
-            .where(col("__graft_ins") >= 0)
-          Some(withIdx.select(schema.fields.toSeq.map { f =>
-            ins.zipWithIndex.foldRight(lit(null).cast(f.dataType)) {
-              case ((c, i), acc) =>
-                c.assignments.get(f.name) match {
-                  case Some(v) => when(col("__graft_ins") === i, v).otherwise(acc)
-                  case None    => acc
-                }
-            }.cast(f.dataType).as(f.name)
-          }: _*))
-        }
-      val appendDf = inserts match {
-        case Some(i) => alignToSchema(rewritten, schema)
-          .unionByName(alignToSchema(i, schema))
-        case None => alignToSchema(rewritten, schema)
-      }
+      val acted = changes.where(claimed)
+      // under full_outer the probe-null rows ARE the unmatched source
+      // rows — no separate anti-join pass. The broadcast shapes
+      // anti-join instead: column pruning cuts the probe scan to the
+      // condition's columns and AQE broadcasts the small build side,
+      // so it never re-shuffles the table.
+      val inserts = Option.when(spec.notMatched.nonEmpty)(spec.insertRows(
+        if (snap.files.isEmpty) src
+        else if (spec.matched.nonEmpty && outer) changes.where(!tPresent)
+        else src.join(probe, spec.condition, "left_anti"), snap.schema))
+      val appendDf = (spec.applyClauses(acted, probe, snap.schema) +: inserts.toSeq)
+        .reduce(_ unionByName _)
       enforceConstraints(appendDf, snap)
-      commitMorDeletes(snap, acted, Some(appendDf), "MERGE",
-        Map("matchedClauses" -> spec.matched.size.toString,
-          "notMatchedClauses" -> spec.notMatched.size.toString,
-          "notMatchedBySourceClauses" -> spec.notMatchedBySource.size.toString),
+      commitMorDeletes(snap, acted, Some(appendDf), "MERGE", spec.clauseCounts,
         newCounts = Some(newCounts))
     } finally changes.unpersist()
   }
@@ -1758,90 +1590,67 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       protocolAction(), metadataAction(meta)))
   }
 
-  /** DELETE: on a copy-on-write table, files that contain matching
-    * rows are rewritten without them; untouched files survive as-is.
-    * One probe job counts the matches per `_metadata.file_path`
-    * (stats/partition pruning applies to it): the counts name the
-    * touched files and sum to the deleted rows, since the probe and
-    * the rewrite read the same files under the same DV filter. On a
-    * merge-on-read table the matched rows become DV pairs — no file is
-    * rewritten, write cost O(deleted rows) — the scale-safe strategy for a
-    * standing GDPR-delete pipeline with scattered keys. NULL-valued
-    * conditions keep the row (SQL DELETE semantics). Returns the
-    * number of deleted rows.
+  /** DELETE: rows matching `condition` are removed; NULL-valued
+    * conditions keep the row (SQL DELETE semantics). Shares one body
+    * with [[update]] ([[rewriteMatches]]): on a copy-on-write table one
+    * probe job ([[probeTouched]]) counts the matches per file — the
+    * counts name the touched files and sum to the deleted rows, since
+    * the probe and the rewrite read the same files under the same DV
+    * filter — and [[rewriteTouched]] rewrites those files without them;
+    * untouched files survive as-is. On a merge-on-read table the
+    * matched rows become DV pairs — no file is rewritten, write cost
+    * O(deleted rows) — the scale-safe strategy for a standing
+    * GDPR-delete pipeline with scattered keys. Returns the number of
+    * deleted rows.
     */
-  def delete(condition: Column): Long = {
-    if (!exists) return 0L
-    val snap = snapshot(path)
-    val hits = readWithProvenance(snap).where(condition)
-    if (mergeModeOf(snap) == "merge-on-read")
-      return commitMorDeletes(snap, hits, None, "DELETE", Map.empty)
-    val matched = touchedFileCounts(hits, "__graft_file")
-    if (matched.isEmpty) return 0L
-    val touched = snap.files.filter(touchedMatcher(matched.keySet))
-    // the probe read the rewrite's files under the same DV filter, so
-    // its counts ARE the deleted rows — no second count job
-    val deleted = matched.values.sum
-    val kept = readFiles(snap, touched).where(!coalesce(condition, lit(false)))
-    val adds = writeDataFiles(bucketize(kept, bucketingOf(snap)),
-      snap.metadata.partitionColumns, "snappy", bucketingOf(snap), mappingOf(snap))
-    val ts = System.currentTimeMillis()
-    val actions = Seq.newBuilder[com.fasterxml.jackson.databind.node.ObjectNode]
-    actions += commitInfoAction("DELETE", Map("numDeleted" -> deleted.toString), ts)
-    touched.foreach(f => actions += removeAction(f.path, ts))
-    adds.foreach(a => actions += addAction(a))
-    commitPinned(snap.version, actions.result())
-    deleted
-  }
+  def delete(condition: Column): Long = rewriteMatches(condition, None)
 
   /** UPDATE: rows matching `condition` get each column in
     * `assignments` replaced by its expression (evaluated against the
-    * OLD row, SQL UPDATE semantics). Copy-on-write rewrites only the
-    * files containing matches, found and counted by the same one-job
-    * probe as [[delete]]; merge-on-read DVs the old row versions
+    * OLD row, SQL UPDATE semantics). Same probe and rewrite as
+    * [[delete]] ([[rewriteMatches]]): copy-on-write rewrites only the
+    * files containing matches; merge-on-read DVs the old row versions
     * and appends the new ones — write cost O(updated rows), not
     * O(touched bytes). Returns the number of updated rows.
     */
-  def update(condition: Column, assignments: Map[String, Column]): Long = {
+  def update(condition: Column, assignments: Map[String, Column]): Long =
+    rewriteMatches(condition, Some(assignments))
+
+  /** DELETE and UPDATE in one: a DELETE is an UPDATE (`assignments`
+    * None) that drops the matched rows instead of rewriting them.
+    */
+  private def rewriteMatches(
+      condition: Column, assignments: Option[Map[String, Column]]): Long = {
     if (!exists) return 0L
     val snap = snapshot(path)
-    val badCols = assignments.keySet.diff(snap.schema.fieldNames.toSet)
+    val badCols = assignments.fold(Set.empty[String])(_.keySet.diff(snap.schema.fieldNames.toSet))
     if (badCols.nonEmpty)
       throw UserException(s"UPDATE of unknown columns: ${badCols.mkString(",")}")
-    val hits = readWithProvenance(snap).where(condition)
-    if (mergeModeOf(snap) == "merge-on-read") {
-      val rewritten = hits.select(snap.schema.fieldNames.toSeq.map { c =>
-        assignments.get(c) match {
-          case Some(expr) => expr.cast(snap.schema(c).dataType).as(c)
-          case None       => col(c)
-        }
+    val op = if (assignments.isEmpty) "DELETE" else "UPDATE"
+    // `df` with the assigned columns replaced where `isMatch` holds
+    // (on every row when None), checked against the constraints
+    def updated(df: DataFrame, assigns: Map[String, Column], isMatch: Option[Column]) = {
+      val out = df.select(snap.schema.fields.toSeq.map { f =>
+        assigns.get(f.name).fold(col(f.name))(e =>
+          isMatch.fold(e)(m => when(m, e).otherwise(col(f.name))).cast(f.dataType).as(f.name))
       }: _*)
-      enforceConstraints(rewritten, snap)
-      return commitMorDeletes(snap, hits, Some(rewritten), "UPDATE", Map.empty)
+      enforceConstraints(out, snap)
+      out
     }
-    val matched = touchedFileCounts(hits, "__graft_file")
+    val hits = readWithProvenance(snap).where(condition)
+    if (mergeModeOf(snap) == "merge-on-read")
+      return commitMorDeletes(snap, hits, assignments.map(updated(hits, _, None)), op, Map.empty)
+    val (matched, touched) = probeTouched(snap, hits)
     if (matched.isEmpty) return 0L
-    val touched = snap.files.filter(touchedMatcher(matched.keySet))
-    val touchedDf = readFiles(snap, touched)
-    val updated = matched.values.sum
+    // the probe read the rewrite's files under the same DV filter, so
+    // its counts ARE the matched rows — no second count job
+    val n = matched.values.sum
+    val old = readFiles(snap, touched)
     val isMatch = coalesce(condition, lit(false))
-    val rewritten = touchedDf.select(snap.schema.fieldNames.toSeq.map { c =>
-      assignments.get(c) match {
-        case Some(expr) => when(isMatch, expr).otherwise(col(c))
-          .cast(snap.schema(c).dataType).as(c)
-        case None => col(c)
-      }
-    }: _*)
-    enforceConstraints(rewritten, snap)
-    val adds = writeDataFiles(bucketize(rewritten, bucketingOf(snap)),
-      snap.metadata.partitionColumns, "snappy", bucketingOf(snap), mappingOf(snap))
-    val ts = System.currentTimeMillis()
-    val actions = Seq.newBuilder[com.fasterxml.jackson.databind.node.ObjectNode]
-    actions += commitInfoAction("UPDATE", Map("numUpdated" -> updated.toString), ts)
-    touched.foreach(f => actions += removeAction(f.path, ts))
-    adds.foreach(a => actions += addAction(a))
-    commitPinned(snap.version, actions.result())
-    updated
+    rewriteTouched(snap, touched,
+      assignments.fold(old.where(!isMatch))(updated(old, _, Some(isMatch))), op,
+      Map((if (assignments.isEmpty) "numDeleted" else "numUpdated") -> n.toString))
+    n
   }
 
   /** Small-file compaction (OPTIMIZE): partitions whose live-file
@@ -1913,15 +1722,13 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       case None if sortBy.nonEmpty =>
         raw.repartitionByRange(n, sortBy.map(col): _*)
           .sortWithinPartitions(sortBy.map(col): _*)
-      case None if bucketed.isDefined =>
-        // Bucketed compaction folds each bucket's small files into one
-        // file per bucket — the layout is re-derived, never inferred
-        // from the inputs, so mixed small files re-cluster correctly.
-        bucketize(raw, bucketed)
+      // Bucketed compaction folds each bucket's small files into one
+      // file per bucket — writeFor re-derives the layout, never inferred
+      // from the inputs, so mixed small files re-cluster correctly.
+      case None if bucketed.isDefined => raw
       case None => raw.coalesce(n)
     }
-    val adds = writeDataFiles(df, snap.metadata.partitionColumns, "snappy", bucketed,
-      mappingOf(snap))
+    val adds = writeFor(snap, df)
     val ts = System.currentTimeMillis()
     val actions = Seq.newBuilder[com.fasterxml.jackson.databind.node.ObjectNode]
     actions += commitInfoAction("OPTIMIZE",

@@ -269,4 +269,54 @@ class LakeDmlSpec extends AnyFunSuite {
     assert(files.forall(_.stats.isEmpty))
     assert(t.read().count() == 100)
   }
+
+  test("a NOT NULL column rejects NULLs from append, upsert and UPDATE; never reads back 0") {
+    val t = tmpTable()
+    t.createEmpty(org.apache.spark.sql.types.StructType.fromDDL("id BIGINT NOT NULL, s STRING"),
+      Nil, Map.empty)
+    t.write(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), "append")
+    val nullKey = Seq[(Option[Long], String)]((None, "z")).toDF("id", "s")
+    def rejected(body: => Any): Unit = {
+      val e = intercept[graft.core.UserException](body)
+      assert(e.getMessage.contains("id"), e.getMessage)
+    }
+    rejected(t.write(nullKey, "append"))
+    rejected(t.merge(nullKey, Seq("id")))
+    rejected(t.update($"id" === 2, Map("id" -> lit(null))))
+    assert(sorted(t.read().collect()) == Seq("[1,a]", "[2,b]"))
+    assert(t.version == 1)
+  }
+
+  test("the copy-on-write rewrite of an unpartitioned table without DVs reads no _metadata field") {
+    val t = seeded()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(
+          f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(
+          f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // the trace's closing marker comes after every execution-end event
+    // on the same listener queue
+    try JobTrace.traced(spark)(t.merge(spark.range(990, 1010).select($"id",
+      lit(1).as("v"), lit("u").as("s")), Seq("id")))
+    finally spark.listenerManager.unregister(listener)
+    object Scans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    // the rewrite reads its files through a plain parquet scan; the
+    // probe reads the snapshot through the log-backed index
+    val rewriteScans = plans.toArray.toSeq.flatMap(p => Scans.collect(p.asInstanceOf[
+      org.apache.spark.sql.execution.SparkPlan]) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if !s.relation.location.isInstanceOf[graft.lake.GraftFileIndex] => s
+    })
+    assert(rewriteScans.nonEmpty)
+    rewriteScans.foreach { s =>
+      val read = s.output.map(_.name)
+      assert(read.forall(n => Seq("id", "v", "s").contains(n)), read)
+    }
+    assert(t.read().count() == 1010)
+  }
 }
