@@ -968,8 +968,8 @@ final class LakeTable(spark: SparkSession, val path: Path) {
 
   /** Fails the write when incoming rows violate a recorded CHECK
     * constraint or put a NULL into a column the schema declares NOT
-    * NULL (Delta's write invariant: such a NULL would read back as 0
-    * or an empty value through the non-nullable read schema). One job
+    * NULL (Delta's write invariant: the non-nullable read schema
+    * would read such a NULL back as a value, e.g. 0). One job
     * over the incoming batch only — never the table — and none when
     * the table has neither; NULL predicate results pass (SQL CHECK
     * semantics).
