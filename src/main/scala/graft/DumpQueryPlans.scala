@@ -19,8 +19,7 @@ import java.nio.file.{Files, Paths}
   * shapes. Run after any query or operator change that could move a
   * plan:
   *
-  *   sbt "runMain graft.DumpQueryPlans --plans-md"       // PLANS.md at sf0.01
-  *   sbt "runMain graft.DumpQueryPlans --plans-md /path/out.md /root/testdata/sf0.01"
+  *   sbt "runMain graft.DumpQueryPlans --plans-md PLANS.md <sf0.01 dir>"
   *
   * Each query is EXECUTED first (toRdd.foreach on its own
   * QueryExecution) so AQE finalizes the plan — `isFinalPlan=true` is
@@ -58,9 +57,18 @@ object DumpQueryPlans {
     // NO join node at any probe count (r14)
     "q70_ann_chunked")
 
-  def main(args: Array[String]): Unit =
-    if (args.headOption.contains("--plans-md")) plansMd(args.drop(1))
-    else perQuery(args)
+  def main(args: Array[String]): Unit = args.toSeq match {
+    case Seq("--plans-md", out, sfDir) => plansMd(out, sfDir)
+    case Seq("--plans-md", _*) => usage()
+    case _ => perQuery(args)
+  }
+
+  private def usage(): Unit = {
+    System.err.println(
+      "usage: DumpQueryPlans <outDir> <tag> <sfDir> <query>...\n" +
+        "       DumpQueryPlans --plans-md <out.md> <sfDir>")
+    sys.exit(2)
+  }
 
   private def session(cpus: String): SparkSession = {
     val spark = SparkEntry.configure(
@@ -82,12 +90,7 @@ object DumpQueryPlans {
     // validate argc and query names BEFORE the session spins up: an
     // unknown name used to throw a raw NoSuchElementException with
     // the JVM already warm (ADVICE r17)
-    if (args.length < 4) {
-      System.err.println(
-        "usage: DumpQueryPlans <outDir> <tag> <sfDir> <query>...\n" +
-          "       DumpQueryPlans --plans-md [out.md] [sfDir]")
-      sys.exit(2)
-    }
+    if (args.length < 4) usage()
     val outDir = args(0)
     val tag = args(1)
     val sfDir = args(2)
@@ -113,9 +116,7 @@ object DumpQueryPlans {
     spark.stop()
   }
 
-  private def plansMd(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("PLANS.md")
-    val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.01")
+  private def plansMd(out: String, sfDir: String): Unit = {
     val spark = session("4")
     import spark.implicits._
     import org.apache.spark.sql.functions.col
@@ -124,7 +125,7 @@ object DumpQueryPlans {
       sb ++= s"\n## $title\n\n```\n${executedPlan(df).linesIterator.take(60).mkString("\n")}\n```\n"
     sb ++= s"""# PLANS — physical plans of headline queries (${Paths.get(sfDir).getFileName}, AQE on)
               |
-              |Generated by `sbt "runMain graft.DumpQueryPlans --plans-md"`; refreshed when plans change.
+              |Generated by `sbt "runMain graft.DumpQueryPlans --plans-md PLANS.md <sfDir>"`; refreshed when plans change.
               |What to look for: `PushedFilters`/pruned `ReadSchema` at scans,
               |`BroadcastHashJoin` (never SortMergeJoin) in star joins, partial
               |`HashAggregate` before every exchange, `WindowGroupLimit` for top-k,

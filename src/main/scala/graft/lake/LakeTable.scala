@@ -1330,11 +1330,12 @@ final class LakeTable(spark: SparkSession, val path: Path) {
 
   /** MERGE upsert (U3): update-all-when-matched / insert-all-when-not,
     * keys from the table manifest PKs
-    * (/root/reference/src/component.py:238-260). One probe semi-joins
-    * the snapshot (cut to the buckets the source keys hash into, see
-    * [[bucketPrunedSnapshot]]) to the source keys — no dedup: a
-    * semi-join emits each target row at most once. Copy-on-write
-    * counts its matches per file ([[probeTouched]]), which name the
+    * (/root/reference/src/component.py:238-260). Copy-on-write with
+    * file pruning: one probe semi-joins the snapshot (cut to the
+    * buckets the source keys hash into, see [[bucketPrunedSnapshot]])
+    * to the source keys — no dedup: a semi-join emits each target row
+    * at most once — and [[probeTouched]] counts its matches per file,
+    * which name the
     * files to rewrite and give the commitInfo's
     * `numTargetFilesRewritten` / `numTargetRowsMatched`, and
     * [[rewriteTouched]] commits the rewrite; merge-on-read records the
