@@ -160,7 +160,7 @@ object DumpQueryPlans {
       batches.foreach { case (lo, hi) =>
         t.write((lo to hi).map(i => (i, s"v$i")).toDF("id", "v"), "append")
       }
-      t.alterSetProperties(Map("graft.merge.mode" -> "merge-on-read") ++ props)
+      t.alterSetProperties(Map(graft.lake.LakeTable.MergeModeKey -> "merge-on-read") ++ props)
       t
     }
     val scattered = dvTable("graft-plans-dv", Seq((1L, 100000L)), Map.empty)

@@ -625,13 +625,17 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       opParams: Map[String, String],
       newCounts: Option[Map[String, Long]] = None): Long = {
     import spark.implicits._
-    // DV rows keep the scan path as their file key ([[touchedBy]])
-    val cached = matched.select(col("__graft_file"), col("__graft_row")).cache()
+    // DV rows keep the scan path as their file key ([[touchedBy]]).
+    // Cached only when the probe count job below reads them too: with
+    // the caller's counts the DV write is their one reader, and under
+    // AQE a cache costs its own cache-build job
+    val rows = matched.select(col("__graft_file"), col("__graft_row"))
+    val dvRows = if (newCounts.isEmpty) rows.cache() else rows
     try {
       // ONE stats job (unless the caller already aggregated): per-file
       // new-delete counts carry the touched set, the deleted total,
       // AND the DV writer's cardinalities
-      val (nc, touched) = newCounts.fold(probeTouched(snap, cached))(c => (c, touchedBy(snap, c)))
+      val (nc, touched) = newCounts.fold(probeTouched(snap, dvRows))(c => (c, touchedBy(snap, c)))
       val newDeleted = nc.values.sum
       // carry forward re-touched files' old rows, translated old
       // (path, fid) → current scan path; files NOT re-touched keep
@@ -651,7 +655,7 @@ final class LakeTable(spark: SparkSession, val path: Path) {
             .join(broadcast(m), "fid")
             .select(col("__graft_file"), col("row").as("__graft_row"))
         }
-      val dvAll = oldPairs.foldLeft(cached)(_ unionByName _)
+      val dvAll = oldPairs.foldLeft(dvRows)(_ unionByName _)
       // the DV write and the append write are independent job chains —
       // overlap them (local[32] and a real cluster both have the slack;
       // sequential, they'd serialize two sub-second tails), each under
@@ -687,7 +691,7 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       commitPinned(snap.version, actions.result())
       applyDvPolicy(snap.metadata.configuration)
       newDeleted
-    } finally cached.unpersist()
+    } finally if (newCounts.isEmpty) dvRows.unpersist()
   }
 
   // ---- DV steady-state policy ---------------------------------------------

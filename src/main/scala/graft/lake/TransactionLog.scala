@@ -386,10 +386,14 @@ object TransactionLog {
       }
     }
 
-  /** Commit history, newest first (like DESCRIBE HISTORY). */
+  /** Commit history, newest first (like DESCRIBE HISTORY), as of the
+    * latest version at the call. Lazy: a commit's JSON is read only
+    * when the caller reaches it, so a newest-first lookup that stops
+    * early reads only the tail of the log.
+    */
   def history(table: Path): Seq[CommitInfo] = {
     val latest = latestVersion(table)
-    (0L to latest).flatMap { v =>
+    LazyList.from(latest to 0L by -1L).flatMap { v =>
       val file = versionFile(table, v)
       if (!Files.exists(file)) None
       else Files.readAllLines(file).asScala.collectFirst {
@@ -400,7 +404,7 @@ object TransactionLog {
               p.properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap
             }.getOrElse(Map.empty))
       }
-    }.reverse
+    }
   }
 
   def pathOf(s: String): Path = Paths.get(s)

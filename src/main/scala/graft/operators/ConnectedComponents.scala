@@ -144,22 +144,7 @@ object ConnectedComponents {
       import spark.implicits._
       val flat = e.select(col("u"), col("v")).as[(Long, Long)]
         .coalesce(1)
-        .mapPartitions { it =>
-          val parent = scala.collection.mutable.LongMap.empty[Long]
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.getOrElse(r, r) != r) r = parent(r)
-            var c = x
-            while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-            r
-          }
-          it.foreach { case (u, v) =>
-            val ru = find(u); val rv = find(v)
-            if (ru != rv) { if (ru < rv) parent(rv) = ru else parent(ru) = rv }
-          }
-          val ks = parent.keysIterator.toArray
-          ks.iterator.map(k => (k, find(k)))
-        }
+        .mapPartitions(minRootStars)
         .toDF("u", "v")
       val (stars, releaseStars) = cut(flat)
       // checkpoint() is already eager; the persist branch needs an
@@ -197,6 +182,28 @@ object ConnectedComponents {
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
   }
 
+  /** Partition-local union-find (union-by-min-root + path compression,
+    * O(E α)) over one partition's edges, shared by the [[labels]]
+    * small-graph fast path and [[spanningForest]]: one `(vertex, root)`
+    * star edge per non-root vertex seen, each root its tree's minimum
+    * id. Roots never enter the map, so no self-edge is emitted.
+    */
+  private def minRootStars(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (u, v) =>
+      val ru = find(u); val rv = find(v)
+      if (ru != rv) { if (ru < rv) parent(rv) = ru else parent(ru) = rv }
+    }
+    parent.keysIterator.toArray.iterator.map(k => (k, find(k)))
+  }
+
   /** Spanning forest of an edge set: a connectivity-equivalent edge
     * set whose SIZE is bounded by the number of distinct vertices, not
     * by the number of edges — the linear-output reduction for
@@ -204,16 +211,16 @@ object ConnectedComponents {
     * pair-verification stage emits ~n² pairs inside a near-dup
     * cluster; its closure needs only ~n of them).
     *
-    * One map-side pass, NO shuffle: each task runs union-find
-    * (union-by-min-root + path compression — the same kernel as the
-    * small-graph fast path above) over its partition's edges and emits
-    * one star edge per non-root vertex it saw. Correctness is the
-    * classical composition fact: a spanning forest of each partition's
-    * edge subset preserves that subset's transitive closure exactly,
-    * and the closure of a union of edge sets depends only on the
-    * closures of its parts — so `labels(spanningForest(E)) ==
-    * labels(E)` for every vertex (spec-pinned; isolated vertices never
-    * appear in either edge set and label themselves in both).
+    * One map-side pass, NO shuffle: each task runs [[minRootStars]]
+    * (the small-graph fast path's union-find) over its partition's
+    * edges and emits one star edge per non-root vertex it saw.
+    * Correctness is the classical composition fact: a spanning forest
+    * of each partition's edge subset preserves that subset's
+    * transitive closure exactly, and the closure of a union of edge
+    * sets depends only on the closures of its parts — so
+    * `labels(spanningForest(E)) == labels(E)` for every vertex
+    * (spec-pinned; isolated vertices never appear in either edge set
+    * and label themselves in both).
     *
     * Output is ≤ (distinct vertex ids in the partition) rows per
     * partition — for a verify stage over candidate pairs that is
@@ -239,23 +246,20 @@ object ConnectedComponents {
     edges.select(col(ea).cast("long"), col(eb).cast("long"))
       .where(col(ea) =!= col(eb)) // drops self-loops AND null endpoints
       .as[(Long, Long)]
-      .mapPartitions { it =>
-        val parent = scala.collection.mutable.LongMap.empty[Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        it.foreach { case (u, v) =>
-          val ru = find(u); val rv = find(v)
-          if (ru != rv) { if (ru < rv) parent(rv) = ru else parent(ru) = rv }
-        }
-        val ks = parent.keysIterator.toArray
-        ks.iterator.map(k => (k, find(k))).filter { case (k, r) => k != r }
-      }
+      .mapPartitions(minRootStars)
       .toDF(ea, eb)
+  }
+
+  /** Min-id dedup applied: the rows of `rows` whose `idCol` is the
+    * minimum id of its connected component over `vertices` (id column
+    * `idCol`) and `edges` — the kept representative per near-dup
+    * cluster, as one left-semi join back onto `rows`.
+    */
+  def keepMinIds(rows: DataFrame, idCol: String, vertices: DataFrame, edges: DataFrame): DataFrame = {
+    val keep = labels(vertices, idCol, edges)
+      .where(col("id") === col("component"))
+      .select(col("id").as(idCol))
+    rows.join(keep, Seq(idCol), "left_semi")
   }
 
   /** Duplicate-cluster summary: one row per component with its size and

@@ -467,10 +467,7 @@ object Dedup {
     // closure is identical and edge growth stays linear in corpus
     // size where all-pairs grows with near-dup cluster size SQUARED
     val edges = lshClusterEdges(docs, idCol, textCol, k, bands)
-    val keep = ConnectedComponents.labels(docs, idCol, edges)
-      .where(col("id") === col("component"))
-      .select(col("id").as(idCol))
-    docs.join(keep, Seq(idCol), "left_semi")
+    ConnectedComponents.keepMinIds(docs, idCol, docs, edges)
   }
 
   /** Exact set-overlap counts for candidate pairs, computed with the
@@ -921,6 +918,59 @@ object Dedup {
     */
   val VerifiedBucketMaxIds: Int = 1 << 17
 
+  /** The bucket-local verification kernel of [[lshVerifiedClusterEdges]]
+    * and `IncrementalDedup.verifiedArrivalEdges`: one band bucket's
+    * members `(id, sorted distinct gram hashes, isNew)`, checked pair
+    * by pair in sorted-id order under a local union-find. Only pairs
+    * with a new endpoint are checked (every member is new in the batch
+    * path; an arrival's old-old pairs were checked in their own later
+    * doc's round), and a pair already connected is skipped unscored.
+    * Returns the union-find's successful merges.
+    */
+  private[operators] def verifyBucket(
+      bucket: Long,
+      members: Array[(Long, Array[Long], Boolean)],
+      minJaccard: Double): Iterator[(Long, Long)] = {
+    if (members.length > VerifiedBucketMaxIds)
+      throw new IllegalStateException(
+        s"LSH bucket exceeds $VerifiedBucketMaxIds ids (bucket $bucket, " +
+          s"${members.length} ids) for bucket-local verification — " +
+          "run exact dedup first to collapse degenerate boilerplate")
+    // sorted-id order: deterministic pair iteration (and therefore
+    // deterministic emitted edges) under task retries
+    scala.util.Sorting.quickSort(members)(Ordering.by(_._1))
+    val n = members.length
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    var i = 0
+    while (i < n - 1) {
+      var j = i + 1
+      while (j < n) {
+        if (members(i)._3 || members(j)._3) {
+          val ri = find(i); val rj = find(j)
+          if (ri != rj) {
+            val ea = members(i)._2; val eb = members(j)._2
+            val ni = graft.functions.SetKernels.sortedIntersectCountLongArrays(ea, eb)
+            if (ni >= minJaccard * (ea.length + eb.length - ni)) {
+              if (ri < rj) parent(rj) = ri else parent(ri) = rj
+              out += ((members(i)._1, members(j)._1))
+            }
+          }
+        }
+        j += 1
+      }
+      i += 1
+    }
+    out.iterator
+  }
+
   /** Verified duplicate-cluster edges for the LSH pipeline, computed
     * BUCKET-LOCALLY — the 100 TB path behind [[dedupCorpusVerified]].
     *
@@ -993,44 +1043,7 @@ object Dedup {
       .as[(Long, Long, Array[Long])]
       .groupByKey(_._1)
       .flatMapGroups { (bucket: Long, it: Iterator[(Long, Long, Array[Long])]) =>
-        val members = it.map(m => (m._2, m._3)).toArray
-        if (members.length > VerifiedBucketMaxIds)
-          throw new IllegalStateException(
-            s"LSH bucket exceeds $VerifiedBucketMaxIds ids (bucket $bucket, " +
-              s"${members.length} ids) for bucket-local verification — " +
-              "run exact dedup first to collapse degenerate boilerplate")
-        // sorted-id order: deterministic pair iteration (and therefore
-        // deterministic emitted edges) under task retries
-        scala.util.Sorting.quickSort(members)(Ordering.by(_._1))
-        val n = members.length
-        val parent = Array.tabulate(n)(identity)
-        def find(x: Int): Int = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-          r
-        }
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        var i = 0
-        while (i < n - 1) {
-          var j = i + 1
-          while (j < n) {
-            val ri = find(i); val rj = find(j)
-            if (ri != rj) {
-              val ea = members(i)._2; val eb = members(j)._2
-              val ni = graft.functions.SetKernels
-                .sortedIntersectCountLongArrays(ea, eb)
-              if (ni >= minJaccard * (ea.length + eb.length - ni)) {
-                if (ri < rj) parent(rj) = ri else parent(ri) = rj
-                out += ((members(i)._1, members(j)._1))
-              }
-            }
-            j += 1
-          }
-          i += 1
-        }
-        out.iterator
+        verifyBucket(bucket, it.map(m => (m._2, m._3, true)).toArray, minJaccard)
       }
       .toDF("id_a", "id_b")
   }
@@ -1058,10 +1071,7 @@ object Dedup {
       bands: Int = 4,
       minJaccard: Double = 0.5): DataFrame = {
     val edges = lshVerifiedClusterEdges(docs, idCol, textCol, k, bands, minJaccard)
-    val keep = ConnectedComponents.labels(docs, idCol, edges)
-      .where(col("id") === col("component"))
-      .select(col("id").as(idCol))
-    docs.join(keep, Seq(idCol), "left_semi")
+    ConnectedComponents.keepMinIds(docs, idCol, docs, edges)
   }
 
   /** Char n-gram Jaccard stats for candidate pairs — the char-level

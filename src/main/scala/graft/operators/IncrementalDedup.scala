@@ -38,6 +38,13 @@ import org.apache.spark.sql.functions._
   *     buckets and appends the new connectivity edges (or, under
   *     `storePairs`, the normalized all-pairs candidates).
   *
+  * Steps 3–4 are one function over (store, version), [[arrivalEdges]];
+  * the verified form's edge step is [[verifiedEdgesAt]]. The streaming
+  * front ends (`graft.streaming.StreamingDedup`,
+  * `StreamingVerifiedDedup`) run the same functions, pinned to their
+  * batch's commits and stamped with the batch id for exactly-once
+  * replay.
+  *
   * Connectivity invariant (induction over arrivals): after every
   * shard, all ids sharing a band bucket are in one component of the
   * edge store. Each arrival connects the bucket's NEW ids to the
@@ -76,35 +83,38 @@ object IncrementalDedup {
       k: Int = 8,
       bands: Int = 4,
       storePairs: Boolean = false): Long = {
-    val before = if (sigStore.exists) sigStore.version else -1L
-    val sigs = Dedup.minhashSignatures(shard, idCol, textCol, k)
-    sigStore.write(sigs, if (before < 0L) "error" else "append")
+    sigStore.write(Dedup.minhashSignatures(shard, idCol, textCol, k), "append")
     val v = sigStore.version
-
-    // CDC re-read: ONLY the files this commit appended. This is the
-    // point of the design — the shard's signatures come back off the
-    // lake (exactly-once, restart-safe) without touching the rest of
-    // the store's data files, and the corpus text not at all.
-    val newSigs = sigStore.changes(before, v).drop("_commit_version")
-    val newBuckets = Dedup.bandBuckets(newSigs, k, bands)
-    val allBuckets = Dedup.bandBuckets(sigStore.read(), k, bands)
-    val edges =
-      if (storePairs)
-        // pairs ARE the product: full candidate set, quadratic in
-        // cluster size — every pair of the union discovered exactly
-        // once, in the arrival round of its LATER document
-        newBuckets.as("n")
-          .join(allBuckets.as("a"), "bucket")
-          .where(col("n.id") =!= col("a.id"))
-          .select(
-            least(col("n.id"), col("a.id")).as("id_a"),
-            greatest(col("n.id"), col("a.id")).as("id_b"))
-          .distinct()
-      else
-        incrementalClusterEdges(newBuckets, allBuckets,
-          newSigs.select(col("id")))
-    pairStore.write(edges, if (pairStore.exists) "append" else "error")
+    pairStore.write(arrivalEdges(sigStore, v, k, bands, storePairs), "append")
     v
+  }
+
+  /** The edges the shard committed at signature-store version `v`
+    * adds — step 4 of [[ingestShard]], shared with the streaming front
+    * end, which stamps its own commits. Reads are pinned to `v`: the
+    * shard's signatures come back through the store's CDC `changes()`
+    * (ONLY the files that commit appended — the rest of the store's
+    * data files and the corpus text are not touched) and band against
+    * the store as of `v`, so a replay recomputes the same edges.
+    * Connectivity edges ([[incrementalClusterEdges]]), or under
+    * `storePairs` the normalized all-pairs candidates: quadratic in
+    * cluster size, every pair of the union discovered exactly once, in
+    * the arrival round of its LATER document.
+    */
+  private[graft] def arrivalEdges(
+      sigStore: LakeTable, v: Long, k: Int, bands: Int, storePairs: Boolean): DataFrame = {
+    val newSigs = sigStore.changes(v - 1, v).drop("_commit_version")
+    val newBuckets = Dedup.bandBuckets(newSigs, k, bands)
+    val allBuckets = Dedup.bandBuckets(sigStore.read(versionAsOf = v), k, bands)
+    if (storePairs)
+      newBuckets.as("n")
+        .join(allBuckets.as("a"), "bucket")
+        .where(col("n.id") =!= col("a.id"))
+        .select(
+          least(col("n.id"), col("a.id")).as("id_a"),
+          greatest(col("n.id"), col("a.id")).as("id_b"))
+        .distinct()
+    else incrementalClusterEdges(newBuckets, allBuckets, newSigs.select(col("id")))
   }
 
   /** The incremental counterpart of [[Dedup.lshClusterEdges]]: the
@@ -157,10 +167,7 @@ object IncrementalDedup {
     */
   def keptIds(sigStore: LakeTable, pairStore: LakeTable): DataFrame = {
     val ids = sigStore.read().select("id")
-    val pairs = pairStore.read().select("id_a", "id_b")
-    ConnectedComponents.labels(ids, "id", pairs)
-      .where(col("id") === col("component"))
-      .select(col("id"))
+    ConnectedComponents.keepMinIds(ids, "id", ids, pairStore.read().select("id_a", "id_b"))
   }
 
   /** Incremental connected-components labels: [[ingestShard]] plus a
@@ -202,7 +209,7 @@ object IncrementalDedup {
       k: Int = 8,
       bands: Int = 4,
       storePairs: Boolean = false): Long = {
-    val pairsBefore = if (pairStore.exists) pairStore.version else -1L
+    val pairsBefore = pairStore.version
     val v = ingestShard(sigStore, pairStore, shard, idCol, textCol, k, bands,
       storePairs)
     val newPairs = pairStore.changes(pairsBefore)
@@ -258,9 +265,9 @@ object IncrementalDedup {
       .select(col("id"), coalesce(col("qc"), col("id")).as("component"))
     val upsert = updatedOld.unionByName(newRows)
     if (!labelStore.exists) {
-      labelStore.write(upsert, "error")
+      labelStore.write(upsert, "append")
       // standing scattered-key upserts: merge-on-read from day one
-      labelStore.alterSetProperties(Map("graft.merge.mode" -> "merge-on-read"))
+      labelStore.alterSetProperties(Map(LakeTable.MergeModeKey -> "merge-on-read"))
     } else labelStore.merge(upsert, Seq("id"))
   }
 
@@ -311,22 +318,12 @@ object IncrementalDedup {
       k: Int = 8,
       bands: Int = 4,
       minJaccard: Double = 0.5): Long = {
-    val spark = shard.sparkSession
-    import spark.implicits._
-    val before = if (sigStore.exists) sigStore.version else -1L
-    val sigs = Dedup.minhashSignatures(shard, idCol, textCol, k)
-    sigStore.write(sigs, if (before < 0L) "error" else "append")
+    sigStore.write(Dedup.minhashSignatures(shard, idCol, textCol, k), "append")
     val v = sigStore.version
-    gramStore.write(shardGramSets(shard, idCol, textCol),
-      if (gramStore.exists) "append" else "error")
-
-    // CDC transport, exactly as ingestShard: the shard's signatures
-    // come back off the lake without touching the rest of the store
-    val newSigs = sigStore.changes(before, v).drop("_commit_version")
-    val edges = verifiedArrivalEdges(
-      newSigs, sigStore.read(), gramStore.read(), k, bands, minJaccard)
-    val edgesBefore = if (edgeStore.exists) edgeStore.version else -1L
-    edgeStore.write(edges, if (edgesBefore < 0L) "error" else "append")
+    gramStore.write(shardGramSets(shard, idCol, textCol), "append")
+    val edgesBefore = edgeStore.version
+    edgeStore.write(verifiedEdgesAt(sigStore, v, gramStore, gramStore.version,
+      k, bands, minJaccard), "append")
     val newEdges = edgeStore.changes(edgesBefore)
       .select(col("id_a").cast("long").as("id_a"),
         col("id_b").cast("long").as("id_b"))
@@ -336,13 +333,12 @@ object IncrementalDedup {
   }
 
   /** The verified edges ONE arrival adds (the kernel behind
-    * [[ingestShardVerified]] and the streaming front end): bucket-local
-    * verification of the buckets `newSigs` touches, restricted to
-    * pairs with a new endpoint — see ingestShardVerified's scaladoc for
-    * the exactly-once-per-pair and closure arguments. `allSigs` /
-    * `allGrams` are the signature and gram stores INCLUDING this
-    * arrival (streaming callers pass version-pinned reads so replays
-    * are bit-identical).
+    * [[verifiedEdgesAt]]): bucket-local verification of the buckets
+    * `newSigs` touches by [[Dedup.lshVerifiedClusterEdges]]' kernel
+    * (`Dedup.verifyBucket`), restricted to pairs with a new endpoint —
+    * see ingestShardVerified's scaladoc for the exactly-once-per-pair
+    * and closure arguments. `allSigs` / `allGrams` are the signature
+    * and gram stores INCLUDING this arrival.
     */
   def verifiedArrivalEdges(
       newSigs: DataFrame,
@@ -365,49 +361,30 @@ object IncrementalDedup {
       .as[(Long, Long, Array[Long], Boolean)]
     members.groupByKey(_._1)
       .flatMapGroups { (bucket: Long, it: Iterator[(Long, Long, Array[Long], Boolean)]) =>
-        val ms = it.map(m => (m._2, m._3, m._4)).toArray
-        if (ms.length > Dedup.VerifiedBucketMaxIds)
-          throw new IllegalStateException(
-            s"LSH bucket exceeds ${Dedup.VerifiedBucketMaxIds} ids (bucket " +
-              s"$bucket, ${ms.length} ids) for bucket-local verification — " +
-              "run exact dedup first to collapse degenerate boilerplate")
-        scala.util.Sorting.quickSort(ms)(Ordering.by(_._1))
-        val n = ms.length
-        val parent = Array.tabulate(n)(identity)
-        def find(x: Int): Int = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-          r
-        }
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        var i = 0
-        while (i < n - 1) {
-          var j = i + 1
-          while (j < n) {
-            // only pairs with a NEW endpoint: old-old pairs were
-            // verified in their own (later doc's) arrival round
-            if (ms(i)._3 || ms(j)._3) {
-              val ri = find(i); val rj = find(j)
-              if (ri != rj) {
-                val ea = ms(i)._2; val eb = ms(j)._2
-                val ni = graft.functions.SetKernels
-                  .sortedIntersectCountLongArrays(ea, eb)
-                if (ni >= minJaccard * (ea.length + eb.length - ni)) {
-                  if (ri < rj) parent(rj) = ri else parent(ri) = rj
-                  out += ((ms(i)._1, ms(j)._1))
-                }
-              }
-            }
-            j += 1
-          }
-          i += 1
-        }
-        out.iterator
+        Dedup.verifyBucket(bucket, it.map(m => (m._2, m._3, m._4)).toArray, minJaccard)
       }
       .toDF("id_a", "id_b")
   }
+
+  /** The verified edges of the shard committed at signature-store
+    * version `sigV` and gram-store version `gramV` — the edge step of
+    * [[ingestShardVerified]], shared with the streaming front end.
+    * Reads are pinned to those versions: the shard's signatures come
+    * back through the signature store's CDC `changes()` (only the
+    * files that commit appended), and a replay recomputes the same
+    * edges.
+    */
+  private[graft] def verifiedEdgesAt(
+      sigStore: LakeTable,
+      sigV: Long,
+      gramStore: LakeTable,
+      gramV: Long,
+      k: Int,
+      bands: Int,
+      minJaccard: Double): DataFrame =
+    verifiedArrivalEdges(sigStore.changes(sigV - 1, sigV).drop("_commit_version"),
+      sigStore.read(versionAsOf = sigV), gramStore.read(versionAsOf = gramV),
+      k, bands, minJaccard)
 
   /** The sorted distinct 60-bit gram sets of one shard — the
     * verification-side state [[ingestShardVerified]] persists (shared

@@ -138,8 +138,9 @@ object EventStreams {
 
   /** Starts a stream writing into a graft lake table via foreachBatch.
     * Exactly-once across restarts: each commit records its stream
-    * batch id in commitInfo; replayed batches (checkpoint rewind) are
-    * skipped when their id is ≤ the last recorded one.
+    * batch id in commitInfo ([[BatchStamp]]); replayed batches
+    * (checkpoint rewind) are skipped when their id is ≤ the newest
+    * recorded one.
     */
   def toLake(
       stream: DataFrame,
@@ -158,15 +159,11 @@ object EventStreams {
   def appendBatchIdempotent(
       batch: DataFrame, tablePath: Path, batchId: Long): Unit = {
     val lake = new LakeTable(batch.sparkSession, tablePath)
-    val last = lastCommittedBatchId(lake)
-    if (last.forall(batchId > _))
+    if (lastCommittedBatchId(lake).forall(batchId > _))
       lake.write(batch, "append",
-        operationParams = Map("streamBatchId" -> batchId.toString))
+        operationParams = Map(BatchStamp.Key -> batchId.toString))
   }
 
-  def lastCommittedBatchId(lake: LakeTable): Option[Long] =
-    if (!lake.exists) None
-    else lake.historyInfo
-      .flatMap(_.operationParameters.get("streamBatchId"))
-      .map(_.toLong).sorted.lastOption
+  /** The newest batch id stamped on `lake` ([[BatchStamp.newest]]). */
+  def lastCommittedBatchId(lake: LakeTable): Option[Long] = BatchStamp.newest(lake)
 }

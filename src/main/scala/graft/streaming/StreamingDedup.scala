@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.file.Path
 
 import graft.lake.LakeTable
-import graft.operators.{ConnectedComponents, Dedup}
+import graft.operators.{ConnectedComponents, Dedup, IncrementalDedup}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
@@ -18,23 +18,26 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   * growth; see [[graft.operators.IncrementalDedup]]), and the
   * deduplicated output corpus —
   * and every per-batch commit to each is stamped with the stream's
-  * batch id, which makes the whole pipeline EXACTLY-ONCE under
-  * checkpoint replay with no coordination beyond the stamps: a
-  * replayed batch finds each already-stamped commit and skips it, a
-  * partially-applied batch (crash between the signature and pair
-  * commits) re-runs only the missing steps, and every recomputation
-  * reads the stores AS OF the versions the first attempt produced
-  * (time travel), so the redo is bit-identical. The checkpoint
-  * guarantees batch N+1 is never attempted until batch N's
+  * batch id ([[BatchStamp]]), which makes the whole pipeline
+  * EXACTLY-ONCE under checkpoint replay with no coordination beyond
+  * the stamps: a replayed batch finds each already-stamped commit and
+  * skips it, a partially-applied batch (crash between the signature
+  * and pair commits) re-runs only the missing steps, and every
+  * recomputation reads the stores AS OF the versions the first
+  * attempt produced (time travel), so the redo is bit-identical. The
+  * checkpoint guarantees batch N+1 is never attempted until batch N's
   * foreachBatch returned, so "latest version" never races the stamps.
   *
   * Per batch the corpus text is scanned exactly once (the signature
-  * kernel); the pair discovery bucket-joins the NEW signatures —
-  * re-read through the store's CDC `changes()`, touching only the
-  * files the signature commit appended — against the store's band
-  * buckets. Identical arithmetic to the batch operator, so
-  * StreamingSpec pins: streamed shards ⇒ the same kept set as one
-  * batch `Dedup.dedupCorpus` over the concatenated input.
+  * kernel); the pair discovery is the batch operator's own edge step
+  * ([[IncrementalDedup.arrivalEdges]]), pinned to the signature
+  * commit: it bucket-joins the NEW signatures — re-read through the
+  * store's CDC `changes()`, touching only the files the signature
+  * commit appended — against the store's band buckets, and the
+  * survivors are [[ConnectedComponents.keepMinIds]] over the stores.
+  * Identical arithmetic to the batch operator, so StreamingSpec pins:
+  * streamed shards ⇒ the same kept set as one batch
+  * `Dedup.dedupCorpus` over the concatenated input.
   *
   * Output contract (the standard one for streaming dedup): each
   * batch appends the rows of ITS shard that survive dedup against
@@ -45,8 +48,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   * exact retroactive answer at any time.
   */
 object StreamingDedup {
-
-  private val BatchKey = "streamBatchId"
 
   def dedupedIngest(
       stream: DataFrame,
@@ -89,48 +90,20 @@ object StreamingDedup {
     val out = new LakeTable(spark, outPath)
 
     // 1. signatures: the shard text's only scan, one stamped commit
-    val sigV = committedVersion(sig, batchId).getOrElse {
-      val before = if (sig.exists) sig.version else -1L
-      sig.write(
-        Dedup.minhashSignatures(batch, idCol, textCol, k),
-        if (before < 0L) "error" else "append",
-        operationParams = Map(BatchKey -> batchId.toString))
-      sig.version
-    }
+    val sigV = BatchStamp.append(sig, batchId)(
+      Dedup.minhashSignatures(batch, idCol, textCol, k))
 
-    // 2. new connectivity edges: CDC re-read of exactly the signature
-    //    commit, banded against the store AS OF that commit. Star
-    //    edges (IncrementalDedup.incrementalClusterEdges), not
-    //    all-pairs — a standing stream's durable store must grow
-    //    linearly in corpus size, and CC closure is all step 3 needs.
-    val pairV = committedVersion(pair, batchId).getOrElse {
-      val newSigs = sig.changes(sigV - 1, sigV).drop("_commit_version")
-      val newBuckets = Dedup.bandBuckets(newSigs, k, bands)
-      val allBuckets = Dedup.bandBuckets(sig.read(versionAsOf = sigV), k, bands)
-      val edges = graft.operators.IncrementalDedup.incrementalClusterEdges(
-        newBuckets, allBuckets, newSigs.select(col("id")))
-      pair.write(edges, if (pair.exists) "append" else "error",
-        operationParams = Map(BatchKey -> batchId.toString))
-      pair.version
-    }
+    // 2. new connectivity edges: IncrementalDedup.ingestShard's edge
+    //    step pinned to the signature commit — star edges, not
+    //    all-pairs, since a standing stream's durable store must grow
+    //    linearly in corpus size, and CC closure is all step 3 needs
+    val pairV = BatchStamp.append(pair, batchId)(
+      IncrementalDedup.arrivalEdges(sig, sigV, k, bands, storePairs = false))
 
     // 3. survivors of THIS shard vs the corpus so far (stores as of
     //    this batch's own commits — replay-stable)
-    if (committedVersion(out, batchId).isEmpty) {
-      val ids = sig.read(versionAsOf = sigV).select("id")
-      val pairs = pair.read(versionAsOf = pairV).select("id_a", "id_b")
-      val kept = ConnectedComponents.labels(ids, "id", pairs)
-        .where(col("id") === col("component"))
-        .select(col("id").as(idCol))
-      val survivors = batch.join(kept, Seq(idCol), "left_semi")
-      out.write(survivors, if (out.exists) "append" else "error",
-        operationParams = Map(BatchKey -> batchId.toString))
-    }
+    BatchStamp.append(out, batchId)(ConnectedComponents.keepMinIds(batch, idCol,
+      sig.read(versionAsOf = sigV).select(col("id").as(idCol)),
+      pair.read(versionAsOf = pairV).select("id_a", "id_b")))
   }
-
-  private def committedVersion(t: LakeTable, batchId: Long): Option[Long] =
-    if (!t.exists) None
-    else t.historyInfo
-      .filter(_.operationParameters.get(BatchKey).contains(batchId.toString))
-      .map(_.version).sorted.lastOption
 }

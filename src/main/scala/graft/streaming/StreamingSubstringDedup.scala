@@ -26,11 +26,11 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   *    steady-state policy keeps scans broadcast-gated).
   *
   * Exactly-once by the same batch-stamp discipline as
-  * [[StreamingDedup]]: each store commit carries the stream's batch
-  * id; a replayed batch finds the stamp and skips, a partial batch
-  * re-runs only the missing steps, and recomputations read the stores
-  * AS OF the first attempt's versions (CDC + time travel), so the
-  * redo is bit-identical.
+  * [[StreamingDedup]] ([[BatchStamp]]): each store commit carries the
+  * stream's batch id; a replayed batch finds the stamp and skips, a
+  * partial batch re-runs only the missing steps, and recomputations
+  * read the stores AS OF the first attempt's versions (CDC + time
+  * travel), so the redo is bit-identical.
   *
   * Output contract (mirrors StreamingDedup's): each batch appends the
   * repeated spans of ITS shard's documents judged against the corpus
@@ -41,8 +41,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   * `repeatedSpans` over the concatenated input).
   */
 object StreamingSubstringDedup {
-
-  private val BatchKey = "streamBatchId"
 
   def spanIngest(
       stream: DataFrame,
@@ -81,25 +79,20 @@ object StreamingSubstringDedup {
     val site = new LakeTable(spark, sitePath)
     val gram = new LakeTable(spark, gramPath)
     val out = new LakeTable(spark, outPath)
-    val stamp = Map(BatchKey -> batchId.toString)
 
     // 1. window sites: the shard text's ONLY scan, one stamped commit
-    val siteV = committedVersion(site, batchId).getOrElse {
-      site.write(
-        SubstringDedup.windowSites(batch, idCol, textCol, windowTokens)
-          .withColumnRenamed(idCol, "id"),
-        if (site.exists) "append" else "error", operationParams = stamp)
-      site.version
-    }
+    val siteV = BatchStamp.append(site, batchId)(
+      SubstringDedup.windowSites(batch, idCol, textCol, windowTokens)
+        .withColumnRenamed(idCol, "id"))
 
     // 2. additive gram-count upsert: CDC re-read of exactly the site
     //    commit, counts summed into the store (old + new for grams the
     //    corpus already holds) — only the shard's grams are touched
-    val gramV = committedVersion(gram, batchId).getOrElse {
+    val gramV = BatchStamp.step(gram, batchId) { stamp =>
       val newCounts = site.changes(siteV - 1, siteV)
         .groupBy("hi", "lo").agg(count(lit(1)).as("n"))
       if (!gram.exists) {
-        gram.write(newCounts, "error", operationParams = stamp)
+        gram.write(newCounts, "append", operationParams = stamp)
         // standing scattered-key upserts: merge-on-read from day one
         gram.alterSetProperties(Map(LakeTable.MergeModeKey -> "merge-on-read"))
       } else {
@@ -110,20 +103,17 @@ object StreamingSubstringDedup {
             (col("c.n") + coalesce(col("g.n"), lit(0L))).as("n"))
         gram.merge(merged, Seq("hi", "lo"), operationParams = stamp)
       }
-      committedVersion(gram, batchId).get
     }
 
     // 3. spans of THIS shard vs the corpus so far (stores as of this
     //    batch's own commits — replay-stable)
-    if (committedVersion(out, batchId).isEmpty) {
+    BatchStamp.append(out, batchId) {
       val shardSites = site.changes(siteV - 1, siteV)
         .select(col("id").as(idCol), col("pos"), col("hi"), col("lo"))
       val dup = gram.read(versionAsOf = gramV)
         .where(col("n") > 1).select("hi", "lo")
       val hits = shardSites.join(dup, Seq("hi", "lo"), "left_semi")
-      val spans = SubstringDedup.spansFromHits(hits, idCol, windowTokens)
-      out.write(spans, if (out.exists) "append" else "error",
-        operationParams = stamp)
+      SubstringDedup.spansFromHits(hits, idCol, windowTokens)
     }
   }
 
@@ -147,10 +137,4 @@ object StreamingSubstringDedup {
       .join(dup, Seq("hi", "lo"), "left_semi")
     SubstringDedup.spansFromHits(hits, idCol, windowTokens)
   }
-
-  private def committedVersion(t: LakeTable, batchId: Long): Option[Long] =
-    if (!t.exists) None
-    else t.historyInfo
-      .filter(_.operationParameters.get(BatchKey).contains(batchId.toString))
-      .map(_.version).sorted.lastOption
 }

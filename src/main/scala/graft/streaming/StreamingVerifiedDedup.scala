@@ -19,18 +19,19 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   * sets (the verification-side state; text is scanned exactly once,
   * on arrival), VERIFIED edges, and the deduplicated output corpus.
   * Exactly-once under checkpoint replay by the same per-table batch
-  * stamps as [[StreamingDedup]]: a replayed batch finds each
-  * already-stamped commit and skips it, a partially-applied batch
+  * stamps as [[StreamingDedup]] ([[BatchStamp]]): a replayed batch
+  * finds each already-stamped commit and skips it, a partially-applied batch
   * re-runs only the missing steps, and every recomputation reads the
   * stores AS OF the versions the first attempt produced, so the redo
   * is bit-identical (the bucket-local verification kernel is
   * deterministic given store contents).
   *
-  * Per batch: one text scan (signatures + gram sets), then
-  * bucket-local verification of the buckets the batch touches,
-  * restricted to pairs with a new endpoint — every candidate pair of
-  * the accumulated corpus is verified exactly once, in its later
-  * doc's batch ([[IncrementalDedup.verifiedArrivalEdges]]). The
+  * Per batch: one text scan (signatures + gram sets), then the batch
+  * operator's own edge step ([[IncrementalDedup.verifiedEdgesAt]],
+  * pinned to this batch's commits): bucket-local verification of the
+  * buckets the batch touches, restricted to pairs with a new endpoint
+  * — every candidate pair of the accumulated corpus is verified
+  * exactly once, in its later doc's batch. The
   * verified edge store grows corpus-linearly (≤ |bucket|−1 edges per
   * touched bucket per batch), so the per-batch closure over it stays
   * cheap; StreamingSpec pins streamed shards ⇒ the same kept set as
@@ -40,8 +41,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   * the edge store's closure remains the exact retroactive answer.
   */
 object StreamingVerifiedDedup {
-
-  private val BatchKey = "streamBatchId"
 
   def dedupedIngest(
       stream: DataFrame,
@@ -89,54 +88,22 @@ object StreamingVerifiedDedup {
     val out = new LakeTable(spark, outPath)
 
     // 1. signatures: one stamped commit off the shard's only text scan
-    val sigV = committedVersion(sig, batchId).getOrElse {
-      val before = if (sig.exists) sig.version else -1L
-      sig.write(
-        Dedup.minhashSignatures(batch, idCol, textCol, k),
-        if (before < 0L) "error" else "append",
-        operationParams = Map(BatchKey -> batchId.toString))
-      sig.version
-    }
+    val sigV = BatchStamp.append(sig, batchId)(
+      Dedup.minhashSignatures(batch, idCol, textCol, k))
 
     // 2. gram sets: the verification-side state, same scan shape
-    val gramV = committedVersion(gram, batchId).getOrElse {
-      gram.write(IncrementalDedup.shardGramSets(batch, idCol, textCol),
-        if (gram.exists) "append" else "error",
-        operationParams = Map(BatchKey -> batchId.toString))
-      gram.version
-    }
+    val gramV = BatchStamp.append(gram, batchId)(
+      IncrementalDedup.shardGramSets(batch, idCol, textCol))
 
-    // 3. verified edges: bucket-local verification of the touched
-    //    buckets, new-endpoint pairs only, against version-pinned
-    //    stores (replay-stable)
-    val edgeV = committedVersion(edge, batchId).getOrElse {
-      val newSigs = sig.changes(sigV - 1, sigV).drop("_commit_version")
-      val edges = IncrementalDedup.verifiedArrivalEdges(
-        newSigs,
-        sig.read(versionAsOf = sigV),
-        gram.read(versionAsOf = gramV),
-        k, bands, minJaccard)
-      edge.write(edges, if (edge.exists) "append" else "error",
-        operationParams = Map(BatchKey -> batchId.toString))
-      edge.version
-    }
+    // 3. verified edges: IncrementalDedup.ingestShardVerified's edge
+    //    step against the stores pinned to this batch's commits
+    //    (replay-stable)
+    val edgeV = BatchStamp.append(edge, batchId)(
+      IncrementalDedup.verifiedEdgesAt(sig, sigV, gram, gramV, k, bands, minJaccard))
 
     // 4. survivors of THIS shard vs the verified closure so far
-    if (committedVersion(out, batchId).isEmpty) {
-      val ids = sig.read(versionAsOf = sigV).select("id")
-      val edges = edge.read(versionAsOf = edgeV).select("id_a", "id_b")
-      val kept = ConnectedComponents.labels(ids, "id", edges)
-        .where(col("id") === col("component"))
-        .select(col("id").as(idCol))
-      val survivors = batch.join(kept, Seq(idCol), "left_semi")
-      out.write(survivors, if (out.exists) "append" else "error",
-        operationParams = Map(BatchKey -> batchId.toString))
-    }
+    BatchStamp.append(out, batchId)(ConnectedComponents.keepMinIds(batch, idCol,
+      sig.read(versionAsOf = sigV).select(col("id").as(idCol)),
+      edge.read(versionAsOf = edgeV).select("id_a", "id_b")))
   }
-
-  private def committedVersion(t: LakeTable, batchId: Long): Option[Long] =
-    if (!t.exists) None
-    else t.historyInfo
-      .filter(_.operationParameters.get(BatchKey).contains(batchId.toString))
-      .map(_.version).sorted.lastOption
 }

@@ -49,6 +49,23 @@ class StreamingSpec extends AnyFunSuite {
     assert(lake.read().count() == 15)
   }
 
+  test("lake sink: a replayed batch is skipped past an unstamped commit; the next batch lands") {
+    val lakeDir = Files.createTempDirectory("graft-stream-stamp").resolve("lake")
+    def rows(lo: Long) = spark.range(lo, lo + 3).select($"id", lit("s").as("v")).toDF()
+    EventStreams.appendBatchIdempotent(rows(0), lakeDir, 0L)
+    EventStreams.appendBatchIdempotent(rows(10), lakeDir, 1L)
+    val lake = new LakeTable(spark, lakeDir)
+    // an OPTIMIZE commit carries no batch stamp and is now the newest
+    val stamped = lake.version
+    assert(lake.compact() > 0 && lake.version == stamped + 1)
+    assert(!lake.historyInfo.head.operationParameters.contains("streamBatchId"))
+    val before = lake.version
+    EventStreams.appendBatchIdempotent(rows(20), lakeDir, 1L)
+    assert(lake.version == before && lake.read().count() == 6)
+    EventStreams.appendBatchIdempotent(rows(30), lakeDir, 2L)
+    assert(lake.version == before + 1 && lake.read().count() == 9)
+  }
+
   test("lake streaming SOURCE: tails the log, initial snapshot + incremental appends, resumes from checkpoint") {
     val root = Files.createTempDirectory("graft-stream-src")
     val lakeDir = root.resolve("src_lake")
@@ -443,6 +460,30 @@ class StreamingSpec extends AnyFunSuite {
     val (vS, vG, vO) = (site.version, gram.version, out.version)
     StreamingSubstringDedup.ingestBatch(shards(0), 0L, sitePath, gramPath,
       outPath, "doc_id", "text", w)
+    assert((site.version, gram.version, out.version) == ((vS, vG, vO)))
+  }
+
+  test("substring sink: a replayed batch is a no-op when an unstamped ALTER follows its gram commit") {
+    import graft.streaming.StreamingSubstringDedup
+    // 40 docs over a 50-word cycle: many shared 10-token windows
+    val shard = (0L until 40L).map(i =>
+      (i, (0 until 30).map(j => s"w${(i * 7 + j) % 50}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val root = Files.createTempDirectory("graft-streamspan-stamp")
+    val sitePath = root.resolve("sites"); val gramPath = root.resolve("grams")
+    val outPath = root.resolve("spans")
+    StreamingSubstringDedup.ingestBatch(shard, 0L, sitePath, gramPath,
+      outPath, "doc_id", "text", 10)
+    val site = new LakeTable(spark, sitePath)
+    val gram = new LakeTable(spark, gramPath)
+    val out = new LakeTable(spark, outPath)
+    // the first gram commit is followed by the merge-on-read ALTER,
+    // which carries no stamp
+    assert(gram.historyInfo.head.operation == "ALTER.SetProperties")
+    assert(!gram.historyInfo.head.operationParameters.contains("streamBatchId"))
+    val (vS, vG, vO) = (site.version, gram.version, out.version)
+    StreamingSubstringDedup.ingestBatch(shard, 0L, sitePath, gramPath,
+      outPath, "doc_id", "text", 10)
     assert((site.version, gram.version, out.version) == ((vS, vG, vO)))
   }
 
