@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: runs every registered query on
@@ -17,11 +18,15 @@ object Bench {
         .config("spark.sql.shuffle.partitions", cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Three timed runs per query, report the min: the first run pays
-    // one-time codegen/JIT compilation (~1-2 s per distinct plan),
-    // which at a 1000-executor scale amortizes to nothing and would
-    // otherwise swamp the sub-second operators; the extra iteration
-    // also damps co-tenant host noise in the reported minimum.
+    // Three timed runs per query, report the min. The min drops what
+    // only a query's first run pays (Janino compiles of its generated
+    // classes, the JIT's first pass over them) and damps co-tenant
+    // bursts. What it hides: back-to-back runs keep one query's classes
+    // in Spark's generated-class cache, so a session that cycles
+    // through more plan shapes than that cache holds (a corpus pass, a
+    // DML loop, a stream) pays the compiles again on every pass and the
+    // min never shows it. `codegen_compiles` (Janino compiles over a
+    // query's timed runs) is reported beside each min for that reason.
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     // A query that throws must NOT masquerade as a (fast) timing — a
     // regression would silently *improve* the bench. Failed queries
@@ -67,6 +72,8 @@ object Bench {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
       var ok = true
+      val load1m = currentLoad1m()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val times = (1 to iters).map { _ =>
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -84,18 +91,21 @@ object Bench {
       // the driver's full run is one long JVM with the same exposure
       try spark.catalog.clearCache() catch { case _: Throwable => () }
       System.gc()
-      (name, times.min, ok)
+      (name, times.min, ok, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0, load1m)
     }
-    val qs = results.map { case (k, v, ok) =>
-      "\"" + k + "\":" + (if (ok) v.toString else "\"failed\"")
-    }.mkString("{", ",", "}")
-    val failed = results.collect { case (k, _, false) => "\"" + k + "\"" }
-    val total = results.collect { case (_, v, true) => v }.sum
+    def perQuery(value: ((String, Double, Boolean, Long, Option[Double])) => String): String =
+      results.map(r => "\"" + r._1 + "\":" + value(r)).mkString("{", ",", "}")
+    val qs = perQuery { case (_, v, ok, _, _) => if (ok) v.toString else "\"failed\"" }
+    val failed = results.collect { case (k, _, false, _, _) => "\"" + k + "\"" }
+    val total = results.collect { case (_, v, true, _, _) => v }.sum
     // `loadavg` = the START stamp (the run-validity signal: a
     // co-tenant-loaded run reads very differently from an idle one —
     // r3's 3.0x-vs-1.4x lesson); `loadavg_end` recorded too so a
-    // burst ARRIVING mid-run is still visible
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":${failed.mkString("[", ",", "]")},"loadavg":$loadavgStart,"load_gated":$gatePassed,"loadavg_end":${readLoadavg()},"sf":"$sfDir"}"""
+    // burst ARRIVING mid-run is still visible; `loadavg1m` is the
+    // 1-min loadavg as each query started (null where unreadable)
+    val compiles = perQuery(_._4.toString)
+    val loads = perQuery(_._5.fold("null")(_.toString))
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":${failed.mkString("[", ",", "]")},"loadavg":$loadavgStart,"load_gated":$gatePassed,"loadavg_end":${readLoadavg()},"sf":"$sfDir","codegen_compiles":$compiles,"loadavg1m":$loads}"""
     // BENCH_r07's captured stdout tail was truncated and lost four
     // queries — the record must survive any capture window, so it is
     // ALSO written whole to a file (path overridable, announced on
