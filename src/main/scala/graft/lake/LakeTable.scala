@@ -2,7 +2,7 @@ package graft.lake
 
 import graft.core.UserException
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, element_at, lit, max, monotonically_increasing_id, split, sum, when}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, element_at, lit, max, split, sum, when}
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import java.net.URLDecoder
@@ -393,15 +393,6 @@ final class LakeTable(spark: SparkSession, val path: Path) {
     writeDataFiles(bucketize(df, b), snap.metadata.partitionColumns, "snappy", b, mappingOf(snap))
   }
 
-  /** What a copy-on-write MERGE's commitInfo records from its probe, at
-    * no job cost: the files it rewrites and, when the probe ran, the
-    * target rows it matched (how much of the table the probe pruned).
-    */
-  private def probeMetrics(
-      touched: Seq[AddFile], matched: Option[Map[String, Long]]): Map[String, String] =
-    Map("numTargetFilesRewritten" -> touched.size.toString) ++
-      matched.map(m => "numTargetRowsMatched" -> m.values.sum.toString)
-
   // ---- deletion vectors (merge-on-read) -----------------------------------
   //
   // Copy-on-write MERGE rewrites every byte of every touched file; with
@@ -561,6 +552,7 @@ final class LakeTable(spark: SparkSession, val path: Path) {
     * `graft.merge.mode` on an existing table).
     */
   def alterSetProperties(props: Map[String, String]): Unit = {
+    LakeTable.checkProperties(props)
     val snap = snapshot(path)
     commitAlter(snap.version,
       snap.metadata.copy(configuration = snap.metadata.configuration ++ props),
@@ -570,14 +562,11 @@ final class LakeTable(spark: SparkSession, val path: Path) {
   /** MERGE strategy recorded on the table
     * (`graft.merge.mode` ∈ copy-on-write | merge-on-read).
     */
-  private def mergeModeOf(snap: Snapshot): String =
-    snap.metadata.configuration
-      .getOrElse(LakeTable.MergeModeKey, "copy-on-write") match {
-      case m @ ("copy-on-write" | "merge-on-read") => m
-      case other => throw UserException(
-        s"Unknown ${LakeTable.MergeModeKey}: $other " +
-          "(expected copy-on-write or merge-on-read)")
-    }
+  private def mergeModeOf(snap: Snapshot): String = {
+    val mode = snap.metadata.configuration.getOrElse(LakeTable.MergeModeKey, "copy-on-write")
+    LakeTable.checkProperties(Map(LakeTable.MergeModeKey -> mode))
+    mode
+  }
 
   /** Writes `rows` (`__graft_file`, `__graft_row`) — the scan path
     * ([[scanPathOf]]) of the data file each deleted row belongs to and
@@ -625,6 +614,9 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       opParams: Map[String, String],
       newCounts: Option[Map[String, Long]] = None): Long = {
     import spark.implicits._
+    // the policy is read before any write: a malformed property fails
+    // here, not after the commit (where a retry would re-apply the DML)
+    val (autoOptimize, _, _) = dvPolicyOf(snap.metadata.configuration)
     // DV rows keep the scan path as their file key ([[touchedBy]]).
     // Cached only when the probe count job below reads them too: with
     // the caller's counts the DV write is their one reader, and under
@@ -689,7 +681,7 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       }
       adds.foreach(a => actions += addAction(a))
       commitPinned(snap.version, actions.result())
-      applyDvPolicy(snap.metadata.configuration)
+      if (autoOptimize) applyDvPolicy()
       newDeleted
     } finally if (newCounts.isEmpty) dvRows.unpersist()
   }
@@ -705,10 +697,12 @@ final class LakeTable(spark: SparkSession, val path: Path) {
   // files, never the table. `graft.dv.autoOptimize=false` keeps MoR
   // commits pure and leaves the check to `dvOptimizeRecommended`.
 
-  private def dvPolicyOf(conf: Map[String, String]): (Boolean, Double, Long) = (
-    conf.getOrElse(LakeTable.DvAutoOptimizeKey, "true").toBoolean,
-    conf.get(LakeTable.DvMaxRatioKey).map(_.toDouble).getOrElse(0.5),
-    conf.get(LakeTable.DvMaxBytesKey).map(_.toLong).getOrElse(DvBroadcastBytes))
+  private def dvPolicyOf(conf: Map[String, String]): (Boolean, Double, Long) = {
+    LakeTable.checkProperties(conf)
+    (conf.getOrElse(LakeTable.DvAutoOptimizeKey, "true").toBoolean,
+      conf.get(LakeTable.DvMaxRatioKey).map(_.toDouble).getOrElse(0.5),
+      conf.get(LakeTable.DvMaxBytesKey).map(_.toLong).getOrElse(DvBroadcastBytes))
+  }
 
   /** Files currently over the policy threshold (empty when healthy). */
   private def dvOverThreshold(snap: Snapshot): Seq[AddFile] = {
@@ -745,9 +739,7 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       dvOverThreshold(snap).size)
   }
 
-  private def applyDvPolicy(conf: Map[String, String]): Unit = {
-    val (auto, _, _) = dvPolicyOf(conf)
-    if (!auto) return
+  private def applyDvPolicy(): Unit = {
     // the triggering DML has ALREADY committed — a policy pass losing a
     // race must not fail it. One fresh-snapshot retry, then defer to
     // the next MoR commit (steady-state pressure, not a transaction).
@@ -1376,8 +1368,10 @@ final class LakeTable(spark: SparkSession, val path: Path) {
         // source row matching an untouched file cannot exist by
         // construction, so all source rows land in the rewrite.
         val old = if (touched.isEmpty) emptyFrame(snap.schema) else readFiles(snap, touched)
+        // the commitInfo records how much of the table the probe pruned
         rewriteTouched(snap, touched, graft.operators.MergeOps.upsert(old, src, keys), "MERGE",
-          params ++ probeMetrics(touched, Some(matched)))
+          params ++ Map("numTargetFilesRewritten" -> touched.size.toString,
+            "numTargetRowsMatched" -> matched.values.sum.toString))
       }
     } finally src.unpersist()
   }
@@ -1385,19 +1379,24 @@ final class LakeTable(spark: SparkSession, val path: Path) {
   /** General SQL MERGE (the reference's generated `MERGE INTO … WHEN
     * MATCHED THEN UPDATE … WHEN NOT MATCHED THEN INSERT …`,
     * /root/reference/src/component.py:249-258, plus conditioned clauses,
-    * DELETE actions and NOT MATCHED BY SOURCE). Copy-on-write with the
-    * same probe as `merge` ([[probeTouched]]): only files containing
-    * matched rows are rewritten (all files when NOT MATCHED BY SOURCE
-    * clauses exist, since any file may hold an unmatched row), through
-    * [[rewriteTouched]]; INSERT rows append. Merge-on-read:
-    * [[morMergeInto]]. Both evaluate the clauses through the one
-    * compiler on [[MergeSpec]].
+    * DELETE actions and NOT MATCHED BY SOURCE), in Delta's two passes
+    * for both storage modes. The first pass joins the probe to the
+    * source once, numbers the acting clause of every row
+    * ([[MergeSpec]]'s compiler), caches the rows a clause claims or a
+    * source row matched, and one stats job over that cache gives the
+    * ANSI cardinality verdict, the claimed rows per file and the
+    * matched-row count. The second pass commits, and only there do the
+    * modes differ: merge-on-read records the claimed rows as DV pairs
+    * and appends their post-clause versions plus the inserts
+    * ([[commitMorDeletes]]); copy-on-write rewrites the files holding
+    * claimed rows — their other rows, the post-clause rows and the
+    * inserts — through [[rewriteTouched]].
     *
     * `build` is called with concrete (target, source) frames and must
     * return the clause spec resolved against THEM — this inversion lets
     * the SQL command layer rebind analyzed expressions onto whichever
-    * frame the engine is scanning (probe vs. rewrite) without the
-    * engine knowing about Catalyst attributes.
+    * probe the engine scans (the full snapshot or its bucket-pruned
+    * subset) without the engine knowing about Catalyst attributes.
     *
     * Clause order is SQL's: the first WHEN whose condition holds acts.
     * A target row matching >1 source row errors when a MATCHED clause
@@ -1407,7 +1406,6 @@ final class LakeTable(spark: SparkSession, val path: Path) {
     if (!exists)
       throw UserException(s"MERGE INTO target does not exist: $path")
     val snap = snapshot(path)
-    val schema = snap.schema
     val src = source.cache()
     try {
       // the probe carries __graft_file/__graft_row provenance (derived
@@ -1438,139 +1436,95 @@ final class LakeTable(spark: SparkSession, val path: Path) {
                (p, build(p, src))
              }
          }).getOrElse((fullProbe, fullSpec))
-      if (mergeModeOf(snap) == "merge-on-read") {
-        morMergeInto(snap, src, probe, spec)
-        return
-      }
-
-      val (matched, touched) =
-        if (spec.notMatchedBySource.nonEmpty) (None, snap.files)
-        else if (snap.files.isEmpty || spec.matched.isEmpty) (None, Nil)
-        else {
-          val (m, t) = probeTouched(snap, probe.join(src, spec.condition, "left_semi"))
-          (Some(m), t)
-        }
-      // rewrite of touched files: matched + not-matched-by-source
-      val rewritten = Option.when(touched.nonEmpty) {
-        val affected = readFiles(snap, touched)
-        val s = build(affected, src)
-        if (s.matched.nonEmpty) {
-          // ANSI cardinality rule: a target row may be updated/deleted
-          // by at most one source row
-          val tid = monotonically_increasing_id().as("__graft_tid")
-          val dup = affected.select(tid +: schema.fieldNames.toSeq.map(affected(_)): _*)
-          val dupes = dup.join(src, s.condition, "inner")
-            .groupBy(col("__graft_tid")).count()
-            .where(col("count") > 1).limit(1).count()
-          if (dupes > 0) throw UserException(
+      // ONE target-side join pass feeds everything downstream. The
+      // source of a standing MERGE pipeline is batch-sized — orders of
+      // magnitude under the table — so the preferred plan broadcasts it
+      // into a left_outer over the probe (no shuffle of the table at
+      // all; measured from the source's plan stats, gated like the DV
+      // broadcast). A too-big source falls back to full_outer: ONE
+      // table shuffle that serves matched AND insert rows. The
+      // matched-empty shape keeps the semi/anti split
+      // ([[MergeSpec.joinSource]]).
+      val tPresent = col("__graft_file").isNotNull
+      // plan-stats estimate — deliberately NOT an exact count (a
+      // standalone materializing job costs ~a second that the first
+      // real consumer would overlap for free). Estimates for projected
+      // sources run high, so the gate is 4× the DV broadcast budget;
+      // the 8 GB driver-side broadcast hard cap still backstops a
+      // pathological under-estimate.
+      val srcFits = src.queryExecution.optimizedPlan.stats.sizeInBytes <= 4 * DvBroadcastBytes
+      val outer = !srcFits && spec.notMatched.nonEmpty
+      val sPresent = MergeSpec.SourcePresent
+      val claimed = MergeSpec.ClauseIndex >= 0
+      // the single materialized frame: matched pairs (cardinality
+      // check), clause-claimed target rows (deletes + post-clause
+      // rows), and source-unmatched rows (full_outer's inserts).
+      // O(affected rows), never O(table): target rows no clause can
+      // touch are dropped inside the join task and never reach the
+      // cache. The tPresent guard keeps full_outer's probe-null insert
+      // rows out of the matched clauses.
+      val changes = spec.withClauseIndex(
+          spec.joinSource(probe, src, if (outer) "full_outer" else "left_outer", srcFits),
+          tPresent)
+        .where(sPresent || claimed).cache()
+      try {
+        // ONE stats job over the cached frame materializes it: level 1
+        // groups matched pairs by target row id ((file, row index)),
+        // level 2 rolls up to the file grain — file count is
+        // metadata-sized, so the collect is safe at any scale. The
+        // shuffle makes the verdict exact however the scan splits a
+        // file across tasks.
+        val fileStats = changes.where(tPresent)
+          .groupBy(col("__graft_file"), col("__graft_row"))
+          .agg(sum(when(sPresent, 1L).otherwise(0L)).as("__m"),
+            max(when(claimed, 1L).otherwise(0L)).as("__a"))
+          .groupBy(col("__graft_file"))
+          .agg(sum(col("__a")).as("__claimed"), max(col("__m")).as("__maxm"),
+            sum(when(col("__m") > 0, 1L).otherwise(0L)).as("__matched"))
+          .collect()
+        // ANSI cardinality rule, counted over ALL matched pairs, claimed
+        // or not: a doubly-matched row is ambiguous even when clause
+        // conditions end up claiming neither copy
+        if (spec.matched.nonEmpty && fileStats.exists(r => r.getLong(2) > 1))
+          throw UserException(
             "MERGE: a target row matched multiple source rows; " +
               "deduplicate the source on the merge keys first")
+        val claimedCounts: Map[String, Long] = fileStats
+          .filter(_.getLong(1) > 0)
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        val params = spec.clauseCounts +
+          ("numTargetRowsMatched" -> fileStats.map(_.getLong(3)).sum.toString)
+        // only rows a clause CLAIMS leave their files
+        val acted = changes.where(claimed)
+        // under full_outer the probe-null rows ARE the unmatched source
+        // rows — no separate anti-join pass. The broadcast shapes
+        // anti-join instead: column pruning cuts the probe scan to the
+        // condition's columns and AQE broadcasts the small build side,
+        // so it never re-shuffles the table.
+        val inserts = Option.when(spec.notMatched.nonEmpty)(spec.insertRows(
+          if (snap.files.isEmpty) src
+          else if (spec.matched.nonEmpty && outer) changes.where(!tPresent)
+          else src.join(probe, spec.condition, "left_anti"), snap.schema))
+        val changed = (spec.applyClauses(acted, probe, snap.schema) +: inserts.toSeq)
+          .reduce(_ unionByName _)
+        enforceConstraints(changed, snap)
+        if (mergeModeOf(snap) == "merge-on-read")
+          commitMorDeletes(snap, acted, Some(changed), "MERGE", params,
+            newCounts = Some(claimedCounts))
+        else {
+          val touched = touchedBy(snap, claimedCounts)
+          // the touched files' rows minus the claimed (file, row) pairs
+          def kept = readWithProvenance(snap.copy(files = touched))
+            .join(acted.select(col("__graft_file"), col("__graft_row")),
+              Seq("__graft_file", "__graft_row"), "left_anti")
+            .drop("__graft_file", "__graft_row")
+          if (touched.nonEmpty || inserts.nonEmpty)
+            rewriteTouched(snap, touched,
+              if (touched.isEmpty) changed else kept.unionByName(changed), "MERGE",
+              params + ("numTargetFilesRewritten" -> touched.size.toString))
         }
-        s.applyClauses(s.withClauseIndex(
-          s.joinSource(affected, src, "left_outer", broadcastSource = false), lit(true)),
-          affected, schema)
-      }
-      // NOT MATCHED inserts: source rows matching NO target row
-      val inserts = Option.when(spec.notMatched.nonEmpty)(spec.insertRows(
-        if (snap.files.isEmpty) src else src.join(probe, spec.condition, "left_anti"), schema))
-      (rewritten ++ inserts).reduceOption(_ unionByName _).foreach { data =>
-        enforceConstraints(data, snap)
-        rewriteTouched(snap, touched, data, "MERGE",
-          spec.clauseCounts ++ probeMetrics(touched, matched))
-      }
+      } finally changes.unpersist()
     } finally src.unpersist()
-  }
-
-  /** Merge-on-read half of [[mergeInto]]: instead of rewriting every
-    * touched file, the rows a clause ACTS on are recorded as DV pairs
-    * and only their post-clause versions (plus inserts) append — write
-    * cost O(acted rows), not O(touched bytes). `spec` was resolved
-    * against `probe`; every frame here derives from `probe`, so its
-    * expressions stay bound (same exprIds) — no re-`build` needed.
-    */
-  private def morMergeInto(
-      snap: Snapshot,
-      src: DataFrame,
-      probe: DataFrame,
-      spec: MergeSpec): Unit = {
-    // ONE target-side join pass feeds everything downstream. The
-    // source of a standing MERGE pipeline is batch-sized — orders of
-    // magnitude under the table — so the preferred plan broadcasts it
-    // into a left_outer over the probe (no shuffle of the table at
-    // all; measured from the source's materialized cache stats, gated
-    // like the DV broadcast). A too-big source falls back to
-    // full_outer: ONE table shuffle that serves matched AND insert
-    // rows, instead of the per-consumer join the pre-r9 shape re-ran
-    // (cardinality check, acted, insert anti-join — three table
-    // passes). The matched-empty shape keeps the semi/anti split
-    // ([[MergeSpec.joinSource]]).
-    val tPresent = col("__graft_file").isNotNull
-    // plan-stats estimate — deliberately NOT an exact count (a
-    // standalone materializing job costs ~a second that the first
-    // real consumer would overlap for free). Estimates for projected
-    // sources run high, so the gate is 4× the DV broadcast budget;
-    // the 8 GB driver-side broadcast hard cap still backstops a
-    // pathological under-estimate.
-    val srcBytes = src.queryExecution.optimizedPlan.stats.sizeInBytes
-    val srcFits = srcBytes <= 4 * DvBroadcastBytes
-    val outer = !srcFits && spec.notMatched.nonEmpty
-    val sPresent = MergeSpec.SourcePresent
-    val claimed = MergeSpec.ClauseIndex >= 0
-    // the single materialized frame: matched pairs (cardinality
-    // check), clause-claimed target rows (DVs + rewrite), and
-    // source-unmatched rows (inserts). O(affected rows), never
-    // O(table): target rows no clause can touch are dropped inside
-    // the join task and never reach the cache — the previous shape
-    // re-ran the probe join once per consumer (check, acted, insert
-    // anti-join), tripling the table scans. The tPresent guard keeps
-    // full_outer's probe-null insert rows out of the matched clauses.
-    val changes = spec.withClauseIndex(
-        spec.joinSource(probe, src, if (outer) "full_outer" else "left_outer", srcFits),
-        tPresent)
-      .where(sPresent || claimed).cache()
-    try {
-      // ONE stats job over the cached frame materializes it and yields
-      // the ANSI cardinality verdict AND the per-file claimed counts
-      // (which commitMorDeletes would otherwise re-aggregate): level 1
-      // groups matched pairs by target row id, level 2 rolls up to the
-      // file grain — file count is metadata-sized, so the collect is
-      // safe at any scale.
-      val fileStats = changes.where(tPresent)
-        .groupBy(col("__graft_file"), col("__graft_row"))
-        .agg(sum(when(sPresent, 1L).otherwise(0L)).as("__m"),
-          max(when(claimed, 1L).otherwise(0L)).as("__a"))
-        .groupBy(col("__graft_file"))
-        .agg(sum(col("__a")).as("__claimed"), max(col("__m")).as("__maxm"))
-        .collect()
-      // ANSI cardinality rule — (file, row-index) IS a target row id;
-      // counted over ALL matched pairs, claimed or not (a doubly-matched
-      // row is ambiguous even when clause conditions end up claiming
-      // neither copy — same contract as the copy-on-write path)
-      if (spec.matched.nonEmpty && fileStats.exists(r => r.getLong(2) > 1))
-        throw UserException(
-          "MERGE: a target row matched multiple source rows; " +
-            "deduplicate the source on the merge keys first")
-      val newCounts: Map[String, Long] = fileStats
-        .filter(_.getLong(1) > 0)
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      // only rows a clause CLAIMS leave their files; everything else
-      // stays live in place — the whole point of merge-on-read
-      val acted = changes.where(claimed)
-      // under full_outer the probe-null rows ARE the unmatched source
-      // rows — no separate anti-join pass. The broadcast shapes
-      // anti-join instead: column pruning cuts the probe scan to the
-      // condition's columns and AQE broadcasts the small build side,
-      // so it never re-shuffles the table.
-      val inserts = Option.when(spec.notMatched.nonEmpty)(spec.insertRows(
-        if (snap.files.isEmpty) src
-        else if (spec.matched.nonEmpty && outer) changes.where(!tPresent)
-        else src.join(probe, spec.condition, "left_anti"), snap.schema))
-      val appendDf = (spec.applyClauses(acted, probe, snap.schema) +: inserts.toSeq)
-        .reduce(_ unionByName _)
-      enforceConstraints(appendDf, snap)
-      commitMorDeletes(snap, acted, Some(appendDf), "MERGE", spec.clauseCounts,
-        newCounts = Some(newCounts))
-    } finally changes.unpersist()
   }
 
   /** Metadata-only CREATE TABLE: schema + partitioning + configuration
@@ -1585,6 +1539,7 @@ final class LakeTable(spark: SparkSession, val path: Path) {
     val missing = partitionBy.filterNot(schema.fieldNames.contains)
     if (missing.nonEmpty)
       throw UserException(s"Partition columns not in schema: ${missing.mkString(",")}")
+    LakeTable.checkProperties(configuration)
     val ts = System.currentTimeMillis()
     val meta = Metadata(UUID.randomUUID().toString, schema, partitionBy, configuration)
     // pinned at version 0: a concurrent creation race must fail, not stack
@@ -2036,6 +1991,23 @@ object LakeTable {
   private[graft] val DvAutoOptimizeKey = "graft.dv.autoOptimize"
   private[graft] val DvMaxRatioKey = "graft.dv.maxRatio"
   private[graft] val DvMaxBytesKey = "graft.dv.maxBytes"
+
+  /** Rejects a malformed merge-mode or DV-policy value in `props` with
+    * an error naming the key and the value, so it fails the ALTER or
+    * CREATE that sets it instead of a later DML.
+    */
+  private[lake] def checkProperties(props: Map[String, String]): Unit =
+    props.foreach { case (k, v) =>
+      val expected = k match {
+        case MergeModeKey if v != "copy-on-write" && v != "merge-on-read" =>
+          Some("copy-on-write or merge-on-read")
+        case DvAutoOptimizeKey if v.toBooleanOption.isEmpty => Some("true or false")
+        case DvMaxRatioKey if !v.toDoubleOption.exists(_ >= 0) => Some("a number >= 0")
+        case DvMaxBytesKey if !v.toLongOption.exists(_ >= 0) => Some("an integer >= 0")
+        case _ => None
+      }
+      expected.foreach(e => throw UserException(s"Invalid table property $k = '$v' (expected $e)"))
+    }
 
   /** Session conf capping the mask scan path (tier 1 of
     * applyDvFilter) by total deleted rows; above it the broadcast

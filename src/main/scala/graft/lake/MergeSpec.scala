@@ -36,11 +36,13 @@ object MergeClause {
   * holds Inserts.
   *
   * The clause compiler below is the one evaluation of SQL's "first
-  * WHEN clause whose condition holds acts" rule, shared by the
-  * copy-on-write and merge-on-read MERGE of [[LakeTable.mergeInto]]:
-  * [[joinSource]] pairs target rows with source rows,
+  * WHEN clause whose condition holds acts" rule, run once per MERGE
+  * by the first pass [[LakeTable.mergeInto]] shares across both
+  * storage modes: [[joinSource]] pairs probe rows with source rows,
   * [[withClauseIndex]] numbers the acting clause, [[applyClauses]]
-  * applies it and [[insertRows]] builds the NOT MATCHED inserts.
+  * applies it to the claimed rows and [[insertRows]] builds the NOT
+  * MATCHED inserts. The modes differ only in how the claimed rows
+  * leave their files (a DV, or a rewrite of those files).
   */
 final case class MergeSpec(
     condition: Column,

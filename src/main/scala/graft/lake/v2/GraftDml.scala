@@ -116,9 +116,10 @@ case class GraftUpdateCommand(
 /** SQL MERGE INTO on a graft table → `LakeTable.mergeInto`. The
   * analyzed source plan runs as-is (exprIds intact), so clause
   * expressions referencing source columns stay bound; target-side
-  * references are rebound by name onto whichever target frame the
-  * engine scans (probe for file pruning, then the touched-file
-  * rewrite).
+  * references are rebound by name onto whichever probe the engine
+  * scans (the full snapshot, then its bucket-pruned subset when the ON
+  * condition allows one). Both storage modes evaluate every clause
+  * over that probe's one join; no rewrite frame is ever rebound.
   */
 case class GraftMergeCommand(
     path: String,

@@ -226,15 +226,13 @@ object IncrementalDedup {
     */
   private def updateLabels(
       labelStore: LakeTable, newPairs: DataFrame, newIds: DataFrame): Unit = {
-    val labels =
-      if (labelStore.exists) labelStore.read()
-      else newIds.sparkSession.createDataFrame(
-        newIds.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("component",
-            org.apache.spark.sql.types.LongType, nullable = false))))
+    // standing scattered-key upserts: the store is created
+    // merge-on-read in its first commit (nullable: a NOT NULL column
+    // would cost every merge a check job)
+    if (!labelStore.exists)
+      labelStore.createEmpty(org.apache.spark.sql.types.StructType.fromDDL(
+        "id BIGINT, component BIGINT"), Nil, Map(LakeTable.MergeModeKey -> "merge-on-read"))
+    val labels = labelStore.read()
 
     // endpoints through the store: labeled → rep, unseen → self
     val qEdges = newPairs
@@ -263,12 +261,7 @@ object IncrementalDedup {
     val newRows = newIds
       .join(qLabels.withColumnRenamed("component", "qc"), Seq("id"), "left")
       .select(col("id"), coalesce(col("qc"), col("id")).as("component"))
-    val upsert = updatedOld.unionByName(newRows)
-    if (!labelStore.exists) {
-      labelStore.write(upsert, "append")
-      // standing scattered-key upserts: merge-on-read from day one
-      labelStore.alterSetProperties(Map(LakeTable.MergeModeKey -> "merge-on-read"))
-    } else labelStore.merge(upsert, Seq("id"))
+    labelStore.merge(updatedOld.unionByName(newRows), Seq("id"))
   }
 
   /** Kept ids straight off the incrementally-maintained label store —

@@ -6,6 +6,7 @@ import graft.lake.LakeTable
 import graft.operators.SubstringDedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SparkBridge
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** Structured-Streaming front end of
@@ -91,18 +92,18 @@ object StreamingSubstringDedup {
     val gramV = BatchStamp.step(gram, batchId) { stamp =>
       val newCounts = site.changes(siteV - 1, siteV)
         .groupBy("hi", "lo").agg(count(lit(1)).as("n"))
-      if (!gram.exists) {
-        gram.write(newCounts, "append", operationParams = stamp)
-        // standing scattered-key upserts: merge-on-read from day one
-        gram.alterSetProperties(Map(LakeTable.MergeModeKey -> "merge-on-read"))
-      } else {
-        val existing = gram.read()
-        val merged = newCounts.as("c")
-          .join(existing.as("g"), Seq("hi", "lo"), "left")
-          .select(col("hi"), col("lo"),
-            (col("c.n") + coalesce(col("g.n"), lit(0L))).as("n"))
-        gram.merge(merged, Seq("hi", "lo"), operationParams = stamp)
-      }
+      // standing scattered-key upserts: the store is created
+      // merge-on-read in its first commit, so no crash can leave a
+      // stamped copy-on-write store behind (nullable: a NOT NULL
+      // column would cost every merge a check job)
+      if (!gram.exists)
+        gram.createEmpty(SparkBridge.asNullable(newCounts.schema), Nil,
+          Map(LakeTable.MergeModeKey -> "merge-on-read"))
+      val merged = newCounts.as("c")
+        .join(gram.read().as("g"), Seq("hi", "lo"), "left")
+        .select(col("hi"), col("lo"),
+          (col("c.n") + coalesce(col("g.n"), lit(0L))).as("n"))
+      gram.merge(merged, Seq("hi", "lo"), operationParams = stamp)
     }
 
     // 3. spans of THIS shard vs the corpus so far (stores as of this

@@ -68,13 +68,12 @@ class ConfigJsonSpec extends AnyFunSuite {
   }
 
   test("reference sample config.json fails exactly like pydantic would") {
-    // the reference repo's sample-config is the generic component
+    // the sample-config is the generic component
     // template (hubspot-ish parameters, no destination); its own
     // pydantic Configuration model would reject it with a
     // required-field error — so must we, with the same message shape
     val ref = Paths.get("/root/reference/component_config/sample-config")
-    assume(Files.exists(ref.resolve("config.json")))
-    val e = intercept[UserException](DataDirConfig.load(ref))
+    val e = intercept[UserException](DataDirConfig.load(SampleConfig.dir(ref)))
     assert(e.getMessage.startsWith("Validation Error: "))
     assert(e.getMessage.contains("destination: Field required"))
   }

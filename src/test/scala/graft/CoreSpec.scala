@@ -60,8 +60,8 @@ class CoreSpec extends AnyFunSuite {
   test("reference sample manifest parses (all STRING, no pk)") {
     val p = Paths.get(
       "/root/reference/component_config/sample-config/in/tables/test.csv.manifest")
-    assume(Files.exists(p))
-    val td = TableDef.fromManifest(p)
+    val td = TableDef.fromManifest(
+      if (Files.exists(p)) p else SampleConfig.dir(p).resolve("in/tables/test.csv.manifest"))
     assert(td.columns.size == 7)
     assert(td.primaryKey.isEmpty)
     assert(td.sparkSchema.fields.forall(_.dataType == StringType))

@@ -18,14 +18,33 @@ class UnreadableLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
     throw new java.io.IOException(s"unreadable: $f")
 }
 
-/** Copy-on-write DML: one probe job names the touched files AND counts
-  * the matched rows, and the commit harvests footer stats concurrently.
+/** Lake DML: the probe names the touched files AND counts the matched
+  * rows, SQL MERGE shares one first pass across both storage modes,
+  * and the commit harvests footer stats concurrently.
   */
 class LakeDmlSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def jobs(body: => Any): Int = JobTrace.traced(spark)(body).jobs
+
+  /** (jobs, SQL executions) of `body`; the trace's closing marker comes
+    * after every execution-end event on the same listener queue.
+    */
+  private def jobsAndExecutions(body: => Any): (Int, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(
+          f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        n.incrementAndGet()
+      override def onFailure(
+          f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        n.incrementAndGet()
+    }
+    spark.listenerManager.register(listener)
+    try (JobTrace.traced(spark)(body).jobs, n.get)
+    finally spark.listenerManager.unregister(listener)
+  }
 
   private def tmpTable(): LakeTable =
     LakeTable.forPath(spark, Files.createTempDirectory("graft-dml").resolve("t").toString)
@@ -77,8 +96,10 @@ class LakeDmlSpec extends AnyFunSuite {
 
   test("copy-on-write SQL MERGE runs a fixed number of jobs") {
     val t = seeded()
-    // source cache build, probe, cardinality check, rewrite with inserts
-    assert(jobs(sqlMerge(t)) == 10)
+    // the stats pass: source cache, source broadcast, changes cache,
+    // two shuffles, collect; the rewrite: claimed-pair broadcast,
+    // insert anti-join broadcast, write
+    assert(jobsAndExecutions(sqlMerge(t)) == ((9, 2)))
     assert(t.read().count() == 1001)
   }
 
@@ -224,15 +245,106 @@ class LakeDmlSpec extends AnyFunSuite {
     assert(lastParams(t)("numTargetFilesRewritten") == "2")
     assert(t.read().count() == 1001)
     assert(t.read().where($"s".isin("x", "y", "z", "w")).count() == 4)
-    // NOT MATCHED BY SOURCE rewrites every file without a probe: no row count
-    val live = t.snapshotNow.files.size
+    // NOT MATCHED BY SOURCE rewrites only the file holding the row it
+    // claims (id 0, in the first file), and the probe counts the rows
+    // the source matched (3, 251, 252 and the inserted 5000)
+    val expected = t.read().collect().map(r =>
+      if (r.getLong(0) == 0L) Row(r.get(0), r.get(1), "gone") else r)
     t.mergeInto(src) { (target, s) =>
       MergeSpec(target("id") === s("sid"), matched = Nil, notMatched = Nil,
         notMatchedBySource = Seq(MergeClause.Update(
           Some(target("id") === 0), Map("s" -> lit("gone")))))
     }
-    assert(lastParams(t)("numTargetFilesRewritten") == live.toString)
-    assert(!lastParams(t).contains("numTargetRowsMatched"))
+    assert(lastParams(t)("numTargetFilesRewritten") == "1")
+    assert(lastParams(t)("numTargetRowsMatched") == "4")
+    assert(sorted(t.read().collect()) == sorted(expected))
+  }
+
+  /** Ids 0..19999 in ONE file of several row groups, in `mode`. */
+  private def oneFileTable(mode: String): LakeTable = {
+    val t = tmpTable()
+    spark.conf.set("parquet.block.size", "16384")
+    try t.write(spark.range(0, 20000, 1, 1).select(when($"id" >= 0, $"id").as("id"),
+      ($"id" % 7).cast("int").as("v"), ($"id" % 3).cast("string").as("s")), "append")
+    finally spark.conf.unset("parquet.block.size")
+    t.alterSetProperties(Map(LakeTable.MergeModeKey -> mode))
+    assert(t.snapshotNow.files.size == 1)
+    t
+  }
+
+  /** `body` with the scan splitting one file across several tasks. */
+  private def withSplitScans[A](body: => A): A = {
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "16384")
+    spark.conf.set("spark.sql.files.openCostInBytes", "0")
+    try body finally {
+      spark.conf.unset("spark.sql.files.maxPartitionBytes")
+      spark.conf.unset("spark.sql.files.openCostInBytes")
+    }
+  }
+
+  test("SQL MERGE, both modes, one file split across scan tasks: same cardinality error, same contents") {
+    val modes = Seq("copy-on-write", "merge-on-read")
+    val tables = modes.map(oneFileTable)
+    withSplitScans {
+      // the one file really is read by several tasks
+      assert(tables.head.read().rdd.mapPartitions(it => Iterator(it.size))
+        .collect().count(_ > 0) > 1)
+      // target row 15000 matched by two source rows
+      val twice = Seq((15000L, "a"), (15000L, "b"), (7L, "c")).toDF("sid", "sname")
+      tables.foreach { t =>
+        val v = t.version
+        val e = intercept[graft.core.UserException](t.mergeInto(twice) { (target, s) =>
+          MergeSpec(target("id") === s("sid"),
+            matched = Seq(MergeClause.Update(None, Map("s" -> s("sname")))),
+            notMatched = Nil, notMatchedBySource = Nil)
+        })
+        assert(e.getMessage.contains("matched multiple source rows"), e.getMessage)
+        assert(t.version == v)
+      }
+      // conditioned DELETE and UPDATE, a conditioned INSERT, then NOT
+      // MATCHED BY SOURCE UPDATE and DELETE
+      val src = spark.range(0, 1000, 1, 2).select(($"id" * 37).as("sid"))
+      tables.foreach { t =>
+        t.mergeInto(src) { (target, s) =>
+          MergeSpec(target("id") === s("sid"),
+            matched = Seq(
+              MergeClause.Delete(Some(s("sid") % 2 === 0)),
+              MergeClause.Update(Some(target("v") > 2), Map("v" -> lit(-1), "s" -> lit("u")))),
+            notMatched = Seq(MergeClause.Insert(Some(s("sid") % 3 === 0),
+              Map("id" -> s("sid"), "v" -> lit(0), "s" -> lit("i")))),
+            notMatchedBySource = Nil)
+        }
+        t.mergeInto(src) { (target, s) =>
+          MergeSpec(target("id") === s("sid"), matched = Nil, notMatched = Nil,
+            notMatchedBySource = Seq(
+              MergeClause.Update(Some(target("id") < 50), Map("s" -> lit("nm"))),
+              MergeClause.Delete(Some(target("id").between(100, 120)))))
+        }
+      }
+    }
+    val Seq(cow, mor) = tables.map(t => sorted(t.read().collect()))
+    assert(cow == mor)
+    assert(mor.size == 20000 - 271 + 153 - 20)
+    assert(tables(1).hasDeletionVectors)
+  }
+
+  test("malformed merge-mode and DV-policy properties fail by name before anything commits") {
+    val t = seeded()
+    t.alterSetProperties(Map(LakeTable.MergeModeKey -> "merge-on-read"))
+    val v = t.version
+    val bad = Seq(LakeTable.DvMaxRatioKey -> "lots", LakeTable.DvMaxRatioKey -> "-1",
+      LakeTable.DvMaxBytesKey -> "lots", LakeTable.DvMaxBytesKey -> "-1",
+      LakeTable.DvAutoOptimizeKey -> "yes", LakeTable.MergeModeKey -> "yes")
+    bad.foreach { case (k, value) =>
+      Seq[() => Unit](() => t.alterSetProperties(Map(k -> value)),
+        () => tmpTable().createEmpty(t.snapshotNow.schema, Nil, Map(k -> value))).foreach { op =>
+        val e = intercept[graft.core.UserException](op())
+        assert(e.getMessage.contains(s"$k = '$value'"), e.getMessage)
+      }
+    }
+    assert(t.version == v)
+    assert(t.delete($"id" < 10) == 10)
+    assert(t.read().count() == 990)
   }
 
   test("stats harvest: concurrent footers equal the sequential harvest") {

@@ -9,47 +9,46 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 
 /** Entry-point parity tests, including the golden E2E on the
-  * reference's own sample datadir (SURVEY.md §7.6.2).
+  * reference's sample datadir (SURVEY.md §7.6.2, [[SampleConfig]]).
   */
 class RunnerSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private val sampleDir = Paths.get("/root/reference/component_config/sample-config")
+  private val sample = SampleConfig.dir(sampleDir)
 
   private def tmp(): Path = Files.createTempDirectory("graft-runner")
 
   test("golden E2E: sample datadir → lake table matches out/ mirror") {
-    assume(Files.exists(sampleDir))
     val dest = tmp().resolve("t")
     val cfg = Config(destination = Destination(mode = LoadType.Append))
-    Runner.run(spark, cfg, sampleDir, dest)
+    Runner.run(spark, cfg, sample, dest)
     val got = new LakeTable(spark, dest).read()
     // the reference's out/tables/test.csv mirrors the input byte-for-byte
     val expected = spark.read.option("header", "true")
-      .csv(sampleDir.resolve("out/tables/test.csv").toString)
+      .csv(sample.resolve("out/tables/test.csv").toString)
     assert(got.columns.toSeq == expected.columns.toSeq)
     assert(got.count() == 21)
     assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
   }
 
   test("mode=error on existing table raises; overwrite replaces") {
-    assume(Files.exists(sampleDir))
     val dest = tmp().resolve("t")
     def cfg(m: LoadType.Value) = Config(destination = Destination(mode = m))
-    Runner.run(spark, cfg(LoadType.Error), sampleDir, dest)
-    val e = intercept[UserException](Runner.run(spark, cfg(LoadType.Error), sampleDir, dest))
+    Runner.run(spark, cfg(LoadType.Error), sample, dest)
+    val e = intercept[UserException](Runner.run(spark, cfg(LoadType.Error), sample, dest))
     assert(e.getMessage.contains("already exists"))
-    Runner.run(spark, cfg(LoadType.Append), sampleDir, dest)
+    Runner.run(spark, cfg(LoadType.Append), sample, dest)
     assert(new LakeTable(spark, dest).read().count() == 42)
-    Runner.run(spark, cfg(LoadType.Overwrite), sampleDir, dest)
+    Runner.run(spark, cfg(LoadType.Overwrite), sample, dest)
     assert(new LakeTable(spark, dest).read().count() == 21)
   }
 
   test("external mode gate rejects upsert (M2)") {
     val cfg = Config(destination = Destination(mode = LoadType.Upsert))
     val e = intercept[UserException](
-      Runner.run(spark, cfg, sampleDir, tmp().resolve("t")))
+      Runner.run(spark, cfg, sample, tmp().resolve("t")))
     assert(e.getMessage.contains("Unsupported mode for external table"))
   }
 
@@ -84,11 +83,11 @@ class RunnerSpec extends AnyFunSuite {
   }
 
   test("native mode gate: upsert without PKs raises the reference error") {
-    assume(Files.exists(sampleDir)) // sample manifest has no PKs
+    // the sample manifest has no PKs
     val cfg = Config(destination = Destination(
       mode = LoadType.Upsert, tableType = TableType.Native, warehouse = "local"))
     val e = intercept[UserException](
-      Runner.run(spark, cfg, sampleDir, tmp().resolve("t")))
+      Runner.run(spark, cfg, sample, tmp().resolve("t")))
     assert(e.getMessage.contains("primary keys"))
   }
 
@@ -108,23 +107,21 @@ class RunnerSpec extends AnyFunSuite {
   }
 
   test("dedup-on-ingest drops the sample fixture's duplicate rows") {
-    assume(Files.exists(sampleDir))
     val dest = tmp().resolve("t")
     val cfg = Config(destination = Destination(
       mode = LoadType.Append, dedupColumns = Seq("Eventbrite_link")))
-    Runner.run(spark, cfg, sampleDir, dest)
+    Runner.run(spark, cfg, sample, dest)
     val got = new LakeTable(spark, dest).read()
     assert(got.count() < 21)
     assert(got.select("Eventbrite_link").distinct().count() == got.count())
   }
 
   test("bucketing flows from the component config to the table layout") {
-    assume(Files.exists(sampleDir))
     val dest = tmp().resolve("t")
     val cfg = Config(destination = Destination(
       mode = LoadType.Append,
       bucketBy = Seq("Eventbrite_link"), numBuckets = 2))
-    Runner.run(spark, cfg, sampleDir, dest)
+    Runner.run(spark, cfg, sample, dest)
     val t = new LakeTable(spark, dest)
     assert(t.bucketing.contains(graft.lake.Bucketing(2, Seq("Eventbrite_link"))))
     assert(t.read().count() == 21)
@@ -138,10 +135,9 @@ class RunnerSpec extends AnyFunSuite {
   }
 
   test("keep_stage keeps the all-string staged frame as a temp view; default drops it") {
-    assume(Files.exists(sampleDir))
     val keep = Config(destination = Destination(mode = LoadType.Append),
       keepStage = true)
-    Runner.run(spark, keep, sampleDir, tmp().resolve("t"))
+    Runner.run(spark, keep, sample, tmp().resolve("t"))
     val view = spark.table("graft_stage_test")
     // the staged frame is the pre-cast ingest: all columns STRING
     assert(view.schema.fields.forall(_.dataType ==
@@ -149,7 +145,7 @@ class RunnerSpec extends AnyFunSuite {
     assert(view.count() == 21)
     // a later run without keep_stage drops the stale view (D3 semantics)
     Runner.run(spark, Config(destination = Destination(mode = LoadType.Append)),
-      sampleDir, tmp().resolve("t"))
+      sample, tmp().resolve("t"))
     assert(!spark.catalog.tableExists("graft_stage_test"))
   }
 

@@ -477,14 +477,39 @@ class StreamingSpec extends AnyFunSuite {
     val site = new LakeTable(spark, sitePath)
     val gram = new LakeTable(spark, gramPath)
     val out = new LakeTable(spark, outPath)
-    // the first gram commit is followed by the merge-on-read ALTER,
-    // which carries no stamp
+    // an ALTER after the batch's gram commit carries no stamp
+    gram.alterSetProperties(Map(LakeTable.DvAutoOptimizeKey -> "false"))
     assert(gram.historyInfo.head.operation == "ALTER.SetProperties")
     assert(!gram.historyInfo.head.operationParameters.contains("streamBatchId"))
     val (vS, vG, vO) = (site.version, gram.version, out.version)
     StreamingSubstringDedup.ingestBatch(shard, 0L, sitePath, gramPath,
       outPath, "doc_id", "text", 10)
     assert((site.version, gram.version, out.version) == ((vS, vG, vO)))
+  }
+
+  test("substring sink: a crash right after the gram store's stamped commit leaves it merge-on-read") {
+    import graft.streaming.StreamingSubstringDedup
+    val shard = (0L until 20L).map(i =>
+      (i, (0 until 20).map(j => s"w${(i * 3 + j) % 30}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val root = Files.createTempDirectory("graft-streamspan-crash")
+    val sitePath = root.resolve("sites"); val gramPath = root.resolve("grams")
+    val outPath = root.resolve("spans")
+    def ingest(): Unit = StreamingSubstringDedup.ingestBatch(shard, 0L, sitePath, gramPath,
+      outPath, "doc_id", "text", 10)
+    ingest()
+    val gram = new LakeTable(spark, gramPath)
+    // the log a crash right after the stamped gram commit leaves: every
+    // later version cut away
+    val stamped = gram.historyInfo.filter(_.operationParameters.contains("streamBatchId"))
+    assert(stamped.size == 1)
+    (stamped.head.version + 1 to gram.version).foreach(v => Files.delete(
+      graft.lake.TransactionLog.logDir(gramPath).resolve(f"$v%020d.json")))
+    val v = gram.version
+    ingest()
+    assert(gram.version == v)
+    assert(gram.snapshotNow.metadata.configuration
+      .get(LakeTable.MergeModeKey).contains("merge-on-read"))
   }
 
   private def copyParts(stage: java.nio.file.Path, dest: java.nio.file.Path, prefix: String): Unit = {
