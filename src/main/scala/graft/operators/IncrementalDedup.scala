@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * shards arrive daily and must be deduplicated against everything
   * ingested before WITHOUT rescanning the corpus text.
   *
-  * Two lake tables carry all accumulated state:
+  * Three lake tables carry all accumulated state:
   *  - a signature store `(id, mh0..mh{k-1})`: one row per document
   *    ever ingested. ~k·8 bytes per doc — at 100 TB of text (~3 KB/doc
   *    average) the store is ~0.25% of corpus bytes, so scanning IT is
@@ -18,32 +18,36 @@ import org.apache.spark.sql.functions._
   *    bucket min-id stars ([[incrementalClusterEdges]]), not all
   *    candidate pairs. Near-dup cluster size grows with corpus size
   *    (measured: all-pairs edges grew 99× for 10× docs at sf10,
-  *    DriveCC), so a durable all-pairs store inherits that quadratic
-  *    curve; the star store grows ≤ 2·bands rows per ingested doc —
-  *    LINEAR in corpus size — while its transitive closure stays
-  *    exactly `labels(bandingPairs(signatures of the union))`, the
-  *    contract every consumer here ([[keptIds]], [[labeledKeptIds]])
-  *    actually needs. Callers for whom the PAIRS are the product
-  *    (pair-level verification scoring) opt into the all-pairs store
-  *    with `storePairs = true` and pay its growth knowingly.
+  *    DriveCC), so a durable all-pairs store would inherit that
+  *    quadratic curve; the star store grows ≤ 2·bands rows per
+  *    ingested doc — LINEAR in corpus size — while its transitive
+  *    closure stays exactly `labels(bandingPairs(signatures of the
+  *    union))`. [[Dedup.bandingPairs]] is the pairs API;
+  *  - a label store `(id, component)`: every ingested id with the min
+  *    id of its near-dup component ([[ConnectedComponents.labels]]'
+  *    contract), merge-on-read.
   *
-  * Per shard, [[ingestShard]]:
-  *  1. computes minhash signatures of the SHARD text only (map-side
-  *     kernel, the single text scan that shard will ever get);
-  *  2. appends them to the signature store — one atomic lake commit;
-  *  3. re-reads exactly those rows back through the store's CDC
-  *     `changes()` (only the files the commit appended — the
-  *     incremental transport, not a table rescan);
-  *  4. bucket-joins the shard's band buckets against the FULL store's
-  *     buckets and appends the new connectivity edges (or, under
-  *     `storePairs`, the normalized all-pairs candidates).
-  *
-  * Steps 3–4 are one function over (store, version), [[arrivalEdges]];
-  * the verified form's edge step is [[verifiedEdgesAt]]. The streaming
-  * front ends (`graft.streaming.StreamingDedup`,
-  * `StreamingVerifiedDedup`) run the same functions, pinned to their
-  * batch's commits and stamped with the batch id for exactly-once
-  * replay.
+  * Every arrival runs ONE step sequence ([[arrive]]; the verified
+  * form's is [[arriveVerified]]), each step one commit:
+  *  1. minhash signatures of the SHARD text only (map-side kernel, the
+  *     single text scan that shard will ever get), appended;
+  *  2. the shard's signatures re-read through the store's CDC
+  *     `changes()` (only the files step 1 appended) and bucket-joined
+  *     against the store's buckets; the new connectivity edges are
+  *     appended;
+  *  3. exactly those edges — re-read through the edge store's
+  *     `changes()` — folded into the label store by quotient
+  *     contraction ([[updateLabels]]);
+  *  4. the survivors: the shard's rows whose label, read pinned to
+  *     step 3's commit, is their own id ([[labeledKeptIds]]).
+  * The batch API commits each step plainly; the streaming sinks
+  * (`graft.streaming.StreamingDedup`, `StreamingVerifiedDedup`) run
+  * the same sequence with every commit stamped by the stream's batch
+  * id, so a replay skips the steps it already committed. Every read
+  * is pinned to the versions the earlier steps yielded, so a redone
+  * step recomputes the same frame. No step scans the edge store
+  * beyond the arrival's own commit, and no connected components run
+  * over the store's lifetime.
   *
   * Connectivity invariant (induction over arrivals): after every
   * shard, all ids sharing a band bucket are in one component of the
@@ -52,69 +56,79 @@ import org.apache.spark.sql.functions._
   * bridges it to the bucket's pre-existing members (one edge to the
   * old min), which were already mutually connected by their own
   * arrival rounds. Hence components over the edge store ≡ components
-  * over `bandingPairs(union)` after any sequence of shards — which
-  * makes [[keptIds]] (min-id representative per connected component)
+  * over `bandingPairs(union)` after any sequence of shards, and the
+  * label store's kept ids (min-id representative per component) are
   * IDENTICAL to a from-scratch [[Dedup.dedupCorpus]] over the
   * concatenated corpus. OperatorSpec proves the closure equivalence on
-  * a sharded corpus, the linear-growth bound, the `storePairs`
-  * all-pairs contract, and that `changes()` is the only transport.
+  * a sharded corpus, the linear-growth bound, and that `changes()` is
+  * the only transport.
   *
   * Contract: document ids are globally unique across shards (same
   * contract as [[Dedup.minhashSignatures]]); re-ingesting an id is
-  * undefined (dedup the shard stream first).
+  * undefined (dedup the shard stream first). A shard row with NULL
+  * text has no signature and no edge, so it labels itself and
+  * survives, as in [[Dedup.dedupCorpus]].
   *
   * No reference analog (the reference writes tables; it has no dedup);
   * extension tier per SURVEY §7.5.
   */
 object IncrementalDedup {
 
-  /** Ingest one shard: append its signatures (one commit) and the new
-    * connectivity edges it introduces (one commit; all candidate pairs
-    * instead iff `storePairs`). Returns the signature store version of
-    * the shard's commit — the `changes()` cursor a resuming pipeline
-    * persists.
+  /** How one step of an arrival commits: given the table and the
+    * commit (which takes the operation parameters to record), run it
+    * and return the version that holds the step. The batch API commits
+    * plainly; a streaming sink passes `BatchStamp.step(_, batchId)`.
     */
-  def ingestShard(
+  private[graft] type Step = LakeTable => (Map[String, String] => Unit) => Long
+
+  private val plain: Step = t => commit => { commit(Map.empty); t.version }
+
+  private def append(step: Step, t: LakeTable)(df: => DataFrame): Long =
+    step(t)(params => t.write(df, "append", operationParams = params))
+
+  /** One arrival of `shard` through the three stores (steps 1–4 of the
+    * object doc). Returns the signature commit's version — the
+    * `changes()` cursor a resuming pipeline persists — and the shard's
+    * survivors.
+    */
+  private[graft] def arrive(
+      step: Step,
       sigStore: LakeTable,
-      pairStore: LakeTable,
+      edgeStore: LakeTable,
+      labelStore: LakeTable,
       shard: DataFrame,
       idCol: String,
       textCol: String,
-      k: Int = 8,
-      bands: Int = 4,
-      storePairs: Boolean = false): Long = {
-    sigStore.write(Dedup.minhashSignatures(shard, idCol, textCol, k), "append")
-    val v = sigStore.version
-    pairStore.write(arrivalEdges(sigStore, v, k, bands, storePairs), "append")
-    v
+      k: Int,
+      bands: Int): (Long, DataFrame) = {
+    val sigV = append(step, sigStore)(Dedup.minhashSignatures(shard, idCol, textCol, k))
+    val edgeV = append(step, edgeStore) {
+      val newSigs = sigStore.changes(sigV - 1, sigV).drop("_commit_version")
+      incrementalClusterEdges(Dedup.bandBuckets(newSigs, k, bands),
+        Dedup.bandBuckets(sigStore.read(versionAsOf = sigV), k, bands), newSigs.select(col("id")))
+    }
+    (sigV, survivors(step, edgeStore, edgeV, labelStore, shard, idCol))
   }
 
-  /** The edges the shard committed at signature-store version `v`
-    * adds — step 4 of [[ingestShard]], shared with the streaming front
-    * end, which stamps its own commits. Reads are pinned to `v`: the
-    * shard's signatures come back through the store's CDC `changes()`
-    * (ONLY the files that commit appended — the rest of the store's
-    * data files and the corpus text are not touched) and band against
-    * the store as of `v`, so a replay recomputes the same edges.
-    * Connectivity edges ([[incrementalClusterEdges]]), or under
-    * `storePairs` the normalized all-pairs candidates: quadratic in
-    * cluster size, every pair of the union discovered exactly once, in
-    * the arrival round of its LATER document.
+  /** Steps 3–4 of an arrival whose edges `edgeStore` committed at
+    * `edgeV`: fold them into the label store, and return the shard's
+    * rows whose label as of that commit is their own id.
     */
-  private[graft] def arrivalEdges(
-      sigStore: LakeTable, v: Long, k: Int, bands: Int, storePairs: Boolean): DataFrame = {
-    val newSigs = sigStore.changes(v - 1, v).drop("_commit_version")
-    val newBuckets = Dedup.bandBuckets(newSigs, k, bands)
-    val allBuckets = Dedup.bandBuckets(sigStore.read(versionAsOf = v), k, bands)
-    if (storePairs)
-      newBuckets.as("n")
-        .join(allBuckets.as("a"), "bucket")
-        .where(col("n.id") =!= col("a.id"))
-        .select(
-          least(col("n.id"), col("a.id")).as("id_a"),
-          greatest(col("n.id"), col("a.id")).as("id_b"))
-        .distinct()
-    else incrementalClusterEdges(newBuckets, allBuckets, newSigs.select(col("id")))
+  private def survivors(
+      step: Step,
+      edgeStore: LakeTable,
+      edgeV: Long,
+      labelStore: LakeTable,
+      shard: DataFrame,
+      idCol: String): DataFrame = {
+    val labelV = step(labelStore) { params =>
+      val newEdges = edgeStore.changes(edgeV - 1, edgeV)
+        .select(col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b"))
+      updateLabels(labelStore, newEdges,
+        shard.select(col(idCol).cast("long").as("id")).distinct(), params)
+    }
+    shard.join(labeledKeptIds(labelStore, labelV).withColumnRenamed("id", idCol),
+      Seq(idCol), "left_semi")
   }
 
   /** The incremental counterpart of [[Dedup.lshClusterEdges]]: the
@@ -162,30 +176,21 @@ object IncrementalDedup {
       .distinct()
   }
 
-  /** Ids the full-corpus dedup would KEEP (min-id representative per
-    * near-dup component), computed from the stores alone — no text.
-    */
-  def keptIds(sigStore: LakeTable, pairStore: LakeTable): DataFrame = {
-    val ids = sigStore.read().select("id")
-    ConnectedComponents.keepMinIds(ids, "id", ids, pairStore.read().select("id_a", "id_b"))
-  }
-
-  /** Incremental connected-components labels: [[ingestShard]] plus a
-    * persisted LABEL STORE `(id, component)` — component = min id of
-    * the near-dup component, exactly [[ConnectedComponents.labels]]'
-    * contract — maintained per shard WITHOUT re-running CC over the
-    * ever-growing pair store ([[keptIds]]' cost profile: correct, but
-    * a daily pipeline re-pays the full closure on every arrival).
+  /** Ingest one shard: [[arrive]] with plain commits — signatures,
+    * connectivity edges, and the label-store update, one commit each.
+    * Returns the signature store version of the shard's commit — the
+    * `changes()` cursor a resuming pipeline persists.
     *
-    * The incremental step is a QUOTIENT-GRAPH contraction. Every
+    * The label update is a QUOTIENT-GRAPH contraction ([[updateLabels]])
+    * that never re-runs CC over the ever-growing edge store. Every
     * stored component is internally connected, so for connectivity it
     * collapses to its representative; and because the representative
     * IS the component minimum, the min-label of a merged component
     * over the full graph equals the min over (old reps ∪ new ids) —
     * the quotient answer is exact, not an approximation. Per shard:
-    *  1. map the shard's new pairs' endpoints through the store
+    *  1. map the shard's new edges' endpoints through the store
     *     (labeled id → its rep; unseen id → itself);
-    *  2. run CC on that quotient graph — |new pairs| edges over
+    *  2. run CC on that quotient graph — |new edges| edges over
     *     (reps touched by this shard ∪ new ids) vertices, i.e. work
     *     bounded by the shard's component NEIGHBORHOOD, never corpus
     *     size. An unbounded cascade (one shard bridging many old
@@ -197,7 +202,7 @@ object IncrementalDedup {
     *     labels), not a store rewrite), new ids insert.
     *
     * OperatorSpec pins shard-incremental labels ≡ one-shot
-    * [[ConnectedComponents.labels]] over the full pair store.
+    * [[ConnectedComponents.labels]] over the full edge store.
     */
   def ingestShardLabeled(
       sigStore: LakeTable,
@@ -207,25 +212,19 @@ object IncrementalDedup {
       idCol: String,
       textCol: String,
       k: Int = 8,
-      bands: Int = 4,
-      storePairs: Boolean = false): Long = {
-    val pairsBefore = pairStore.version
-    val v = ingestShard(sigStore, pairStore, shard, idCol, textCol, k, bands,
-      storePairs)
-    val newPairs = pairStore.changes(pairsBefore)
-      .select(col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b"))
-    val newIds = shard.select(col(idCol).cast("long").as("id")).distinct()
-    updateLabels(labelStore, newPairs, newIds)
-    v
-  }
+      bands: Int = 4): Long =
+    arrive(plain, sigStore, pairStore, labelStore, shard, idCol, textCol, k, bands)._1
 
-  /** The label-store maintenance step shared by [[ingestShardLabeled]]
-    * and [[ingestShardVerified]]: fold ONE arrival's new edges into the
-    * persisted `(id, component)` store via the quotient-graph
-    * contraction described on ingestShardLabeled.
+  /** The label-store step of every arrival: fold ONE arrival's new
+    * edges into the persisted `(id, component)` store via the
+    * quotient-graph contraction described on [[ingestShardLabeled]],
+    * as one merge recording `params`.
     */
   private def updateLabels(
-      labelStore: LakeTable, newPairs: DataFrame, newIds: DataFrame): Unit = {
+      labelStore: LakeTable,
+      newPairs: DataFrame,
+      newIds: DataFrame,
+      params: Map[String, String]): Unit = {
     // standing scattered-key upserts: the store is created
     // merge-on-read in its first commit (nullable: a NOT NULL column
     // would cost every merge a check job)
@@ -261,16 +260,18 @@ object IncrementalDedup {
     val newRows = newIds
       .join(qLabels.withColumnRenamed("component", "qc"), Seq("id"), "left")
       .select(col("id"), coalesce(col("qc"), col("id")).as("component"))
-    labelStore.merge(updatedOld.unionByName(newRows), Seq("id"))
+    labelStore.merge(updatedOld.unionByName(newRows), Seq("id"), operationParams = params)
   }
 
-  /** Kept ids straight off the incrementally-maintained label store —
-    * a metadata-cheap filter, no connected-components run at all.
+  /** Kept ids straight off the incrementally-maintained label store
+    * (as of `versionAsOf`, default latest) — a filter, no connected
+    * components run at all. At the latest version this is the exact
+    * retroactive kept set of everything ingested so far.
     */
-  def labeledKeptIds(labelStore: LakeTable): DataFrame =
-    labelStore.read().where(col("id") === col("component")).select(col("id"))
+  def labeledKeptIds(labelStore: LakeTable, versionAsOf: Long = -1L): DataFrame =
+    labelStore.read(versionAsOf).where(col("id") === col("component")).select(col("id"))
 
-  /** Shard-incremental VERIFIED near-dup detection — [[ingestShard]]'s
+  /** Shard-incremental VERIFIED near-dup detection — [[arrive]]'s
     * candidate connectivity replaced by exact shingle-Jaccard
     * verification at `minJaccard` (the incremental counterpart of
     * [[Dedup.dedupCorpusVerified]]). One more lake table carries the
@@ -298,7 +299,8 @@ object IncrementalDedup {
     * from-scratch `dedupCorpusVerified` over the concatenated corpus
     * after every arrival. Per-arrival cost is bounded by the shard's
     * bucket neighborhood (members × grams of touched buckets), never
-    * corpus size.
+    * corpus size. Runs [[arriveVerified]] with plain commits and
+    * returns the signature commit's version.
     */
   def ingestShardVerified(
       sigStore: LakeTable,
@@ -310,23 +312,36 @@ object IncrementalDedup {
       textCol: String,
       k: Int = 8,
       bands: Int = 4,
-      minJaccard: Double = 0.5): Long = {
-    sigStore.write(Dedup.minhashSignatures(shard, idCol, textCol, k), "append")
-    val v = sigStore.version
-    gramStore.write(shardGramSets(shard, idCol, textCol), "append")
-    val edgesBefore = edgeStore.version
-    edgeStore.write(verifiedEdgesAt(sigStore, v, gramStore, gramStore.version,
-      k, bands, minJaccard), "append")
-    val newEdges = edgeStore.changes(edgesBefore)
-      .select(col("id_a").cast("long").as("id_a"),
-        col("id_b").cast("long").as("id_b"))
-    updateLabels(labelStore,
-      newEdges, shard.select(col(idCol).cast("long").as("id")).distinct())
-    v
+      minJaccard: Double = 0.5): Long =
+    arriveVerified(plain, sigStore, gramStore, edgeStore, labelStore, shard,
+      idCol, textCol, k, bands, minJaccard)._1
+
+  /** [[arrive]] for the verified form: signatures, gram sets, verified
+    * edges, label update — one commit each — then the survivors.
+    */
+  private[graft] def arriveVerified(
+      step: Step,
+      sigStore: LakeTable,
+      gramStore: LakeTable,
+      edgeStore: LakeTable,
+      labelStore: LakeTable,
+      shard: DataFrame,
+      idCol: String,
+      textCol: String,
+      k: Int,
+      bands: Int,
+      minJaccard: Double): (Long, DataFrame) = {
+    val sigV = append(step, sigStore)(Dedup.minhashSignatures(shard, idCol, textCol, k))
+    val gramV = append(step, gramStore)(shardGramSets(shard, idCol, textCol))
+    val edgeV = append(step, edgeStore)(verifiedArrivalEdges(
+      sigStore.changes(sigV - 1, sigV).drop("_commit_version"),
+      sigStore.read(versionAsOf = sigV), gramStore.read(versionAsOf = gramV),
+      k, bands, minJaccard))
+    (sigV, survivors(step, edgeStore, edgeV, labelStore, shard, idCol))
   }
 
-  /** The verified edges ONE arrival adds (the kernel behind
-    * [[verifiedEdgesAt]]): bucket-local verification of the buckets
+  /** The verified edges ONE arrival adds (the edge step of
+    * [[arriveVerified]]): bucket-local verification of the buckets
     * `newSigs` touches by [[Dedup.lshVerifiedClusterEdges]]' kernel
     * (`Dedup.verifyBucket`), restricted to pairs with a new endpoint —
     * see ingestShardVerified's scaladoc for the exactly-once-per-pair
@@ -359,29 +374,8 @@ object IncrementalDedup {
       .toDF("id_a", "id_b")
   }
 
-  /** The verified edges of the shard committed at signature-store
-    * version `sigV` and gram-store version `gramV` — the edge step of
-    * [[ingestShardVerified]], shared with the streaming front end.
-    * Reads are pinned to those versions: the shard's signatures come
-    * back through the signature store's CDC `changes()` (only the
-    * files that commit appended), and a replay recomputes the same
-    * edges.
-    */
-  private[graft] def verifiedEdgesAt(
-      sigStore: LakeTable,
-      sigV: Long,
-      gramStore: LakeTable,
-      gramV: Long,
-      k: Int,
-      bands: Int,
-      minJaccard: Double): DataFrame =
-    verifiedArrivalEdges(sigStore.changes(sigV - 1, sigV).drop("_commit_version"),
-      sigStore.read(versionAsOf = sigV), gramStore.read(versionAsOf = gramV),
-      k, bands, minJaccard)
-
   /** The sorted distinct 60-bit gram sets of one shard — the
-    * verification-side state [[ingestShardVerified]] persists (shared
-    * with the streaming front end).
+    * verification-side state [[arriveVerified]] persists.
     */
   def shardGramSets(shard: DataFrame, idCol: String, textCol: String): DataFrame =
     Dedup.rebalance(
@@ -406,27 +400,18 @@ object IncrementalDedup {
       textCol: String,
       k: Int = 8,
       bands: Int = 4,
-      minJaccard: Double = 0.5): DataFrame = {
-    ingestShardVerified(sigStore, gramStore, edgeStore, labelStore, shard,
-      idCol, textCol, k, bands, minJaccard)
-    shard.join(
-      labeledKeptIds(labelStore).withColumnRenamed("id", idCol),
-      Seq(idCol), "left_semi")
-  }
+      minJaccard: Double = 0.5): DataFrame =
+    arriveVerified(plain, sigStore, gramStore, edgeStore, labelStore, shard,
+      idCol, textCol, k, bands, minJaccard)._2
 
   /** Ingest `shard` and return only its rows that survive dedup
     * against everything ingested so far (including the shard itself) —
-    * the per-arrival output of the standing pipeline.
-    *
-    * Routed through the LABEL STORE ([[ingestShardLabeled]] +
-    * [[labeledKeptIds]]): per-arrival cost is bounded by the shard's
-    * component NEIGHBORHOOD, not by the accumulated edge store — the
-    * earlier formulation re-ran the full transitive closure
-    * ([[keptIds]]) over the ever-growing store on EVERY arrival, a
-    * per-day cost that grows with corpus lifetime. All arrivals must
+    * the per-arrival output of the standing pipeline: the shard's ids
+    * whose label-store component, as of this arrival's label commit, is
+    * their own. Per-arrival cost is bounded by the shard's component
+    * NEIGHBORHOOD, not by the accumulated edge store. All arrivals must
     * flow through this method (or [[ingestShardLabeled]]) so the label
-    * store stays complete; one-shot audits over stores built without
-    * labels use [[ingestShard]] + [[keptIds]] directly.
+    * store stays complete.
     */
   def dedupShard(
       sigStore: LakeTable,
@@ -436,12 +421,6 @@ object IncrementalDedup {
       idCol: String,
       textCol: String,
       k: Int = 8,
-      bands: Int = 4,
-      storePairs: Boolean = false): DataFrame = {
-    ingestShardLabeled(sigStore, pairStore, labelStore, shard, idCol, textCol,
-      k, bands, storePairs)
-    shard.join(
-      labeledKeptIds(labelStore).withColumnRenamed("id", idCol),
-      Seq(idCol), "left_semi")
-  }
+      bands: Int = 4): DataFrame =
+    arrive(plain, sigStore, pairStore, labelStore, shard, idCol, textCol, k, bands)._2
 }

@@ -3,9 +3,8 @@ package graft.streaming
 import java.nio.file.Path
 
 import graft.lake.LakeTable
-import graft.operators.{ConnectedComponents, Dedup, IncrementalDedup}
+import graft.operators.IncrementalDedup
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** Structured-Streaming front end of the VERIFIED incremental dedup
@@ -15,30 +14,30 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   * shingle-Jaccard verification of the LSH candidates, without ever
   * rescanning corpus text.
   *
-  * Four lake tables carry all state — signatures, per-doc sorted gram
+  * Five lake tables carry all state — signatures, per-doc sorted gram
   * sets (the verification-side state; text is scanned exactly once,
-  * on arrival), VERIFIED edges, and the deduplicated output corpus.
-  * Exactly-once under checkpoint replay by the same per-table batch
-  * stamps as [[StreamingDedup]] ([[BatchStamp]]): a replayed batch
-  * finds each already-stamped commit and skips it, a partially-applied batch
-  * re-runs only the missing steps, and every recomputation reads the
-  * stores AS OF the versions the first attempt produced, so the redo
-  * is bit-identical (the bucket-local verification kernel is
-  * deterministic given store contents).
+  * on arrival), VERIFIED edges, the `(id, component)` label store, and
+  * the deduplicated output corpus. Each batch runs the batch
+  * operator's own step sequence (`IncrementalDedup.arriveVerified`)
+  * with every commit stamped with the stream's batch id
+  * ([[BatchStamp]]), then appends the survivors under the same stamp:
+  * a replayed batch finds each already-stamped commit and skips it, a
+  * partially-applied batch re-runs only the missing steps, and every
+  * recomputation reads the stores AS OF the versions the first
+  * attempt produced, so the redo is bit-identical (the bucket-local
+  * verification kernel is deterministic given store contents).
   *
-  * Per batch: one text scan (signatures + gram sets), then the batch
-  * operator's own edge step ([[IncrementalDedup.verifiedEdgesAt]],
-  * pinned to this batch's commits): bucket-local verification of the
-  * buckets the batch touches, restricted to pairs with a new endpoint
-  * — every candidate pair of the accumulated corpus is verified
-  * exactly once, in its later doc's batch. The
-  * verified edge store grows corpus-linearly (≤ |bucket|−1 edges per
-  * touched bucket per batch), so the per-batch closure over it stays
-  * cheap; StreamingSpec pins streamed shards ⇒ the same kept set as
-  * one batch [[Dedup.dedupCorpusVerified]] over the concatenated
-  * input. Output contract as StreamingDedup: each batch appends ITS
-  * shard's survivors; a later bridge cannot retract an earlier emit —
-  * the edge store's closure remains the exact retroactive answer.
+  * Per batch: one text scan (signatures + gram sets), bucket-local
+  * verification of the buckets the batch touches, restricted to pairs
+  * with a new endpoint — every candidate pair of the accumulated
+  * corpus is verified exactly once, in its later doc's batch — and a
+  * label update over the batch's own verified edges. The survivors
+  * are the batch's ids whose label is their own; StreamingSpec pins
+  * streamed shards ⇒ the same kept set as one batch
+  * `Dedup.dedupCorpusVerified` over the concatenated input. Output
+  * contract as StreamingDedup: each batch appends ITS shard's
+  * survivors; a later bridge cannot retract an earlier emit — the
+  * label store remains the exact retroactive answer.
   */
 object StreamingVerifiedDedup {
 
@@ -47,6 +46,7 @@ object StreamingVerifiedDedup {
       sigPath: Path,
       gramPath: Path,
       edgePath: Path,
+      labelPath: Path,
       outPath: Path,
       checkpointDir: String,
       idCol: String,
@@ -60,12 +60,12 @@ object StreamingVerifiedDedup {
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, sigPath, gramPath, edgePath, outPath,
+        ingestBatch(batch, batchId, sigPath, gramPath, edgePath, labelPath, outPath,
           idCol, textCol, k, bands, minJaccard)
       }
       .start()
 
-  /** One shard through the four stores; idempotent per (table,
+  /** One shard through the five stores; idempotent per (table,
     * batchId). Public so a non-streaming caller (backfill, test) can
     * drive the identical path.
     */
@@ -75,35 +75,17 @@ object StreamingVerifiedDedup {
       sigPath: Path,
       gramPath: Path,
       edgePath: Path,
+      labelPath: Path,
       outPath: Path,
       idCol: String,
       textCol: String,
       k: Int,
       bands: Int,
       minJaccard: Double): Unit = {
-    val spark = batch.sparkSession
-    val sig = new LakeTable(spark, sigPath)
-    val gram = new LakeTable(spark, gramPath)
-    val edge = new LakeTable(spark, edgePath)
-    val out = new LakeTable(spark, outPath)
-
-    // 1. signatures: one stamped commit off the shard's only text scan
-    val sigV = BatchStamp.append(sig, batchId)(
-      Dedup.minhashSignatures(batch, idCol, textCol, k))
-
-    // 2. gram sets: the verification-side state, same scan shape
-    val gramV = BatchStamp.append(gram, batchId)(
-      IncrementalDedup.shardGramSets(batch, idCol, textCol))
-
-    // 3. verified edges: IncrementalDedup.ingestShardVerified's edge
-    //    step against the stores pinned to this batch's commits
-    //    (replay-stable)
-    val edgeV = BatchStamp.append(edge, batchId)(
-      IncrementalDedup.verifiedEdgesAt(sig, sigV, gram, gramV, k, bands, minJaccard))
-
-    // 4. survivors of THIS shard vs the verified closure so far
-    BatchStamp.append(out, batchId)(ConnectedComponents.keepMinIds(batch, idCol,
-      sig.read(versionAsOf = sigV).select(col("id").as(idCol)),
-      edge.read(versionAsOf = edgeV).select("id_a", "id_b")))
+    def table(p: Path) = new LakeTable(batch.sparkSession, p)
+    val (_, kept) = IncrementalDedup.arriveVerified(BatchStamp.step(_, batchId),
+      table(sigPath), table(gramPath), table(edgePath), table(labelPath), batch,
+      idCol, textCol, k, bands, minJaccard)
+    BatchStamp.append(table(outPath), batchId)(kept)
   }
 }

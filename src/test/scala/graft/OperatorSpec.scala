@@ -869,8 +869,12 @@ class OperatorSpec extends AnyFunSuite {
     // growth star set, not all pairs
     IncrementalDedup.ingestShardLabeled(
       sigStore, pairStore, labelStore, shards(1), "doc_id", "text")
-    val partial = IncrementalDedup.keptIds(sigStore, pairStore)
-      .as[Long].collect().sorted.toSeq
+    // audit oracle: min-id representatives of a from-scratch CC over
+    // the whole signature and edge stores
+    def closureKept: Seq[Long] = ConnectedComponents.labels(
+        sigStore.read().select("id"), "id", pairStore.read().select("id_a", "id_b"))
+      .where($"id" === $"component").select($"id").as[Long].collect().sorted.toSeq
+    val partial = closureKept
     val fullPartial = Dedup.dedupCorpus(
       corpus.where($"doc_id" % 3 =!= 2), "doc_id", "text", 8, 4)
       .select("doc_id").as[Long].collect().sorted.toSeq
@@ -884,9 +888,7 @@ class OperatorSpec extends AnyFunSuite {
     // and its output must still equal the full-CC answer
     val kept3 = IncrementalDedup.dedupShard(
       sigStore, pairStore, labelStore, shards(2), "doc_id", "text")
-    val incremental = IncrementalDedup.keptIds(sigStore, pairStore)
-      .as[Long].collect().sorted.toSeq
-    assert(incremental == full)
+    assert(closureKept == full)
     assert(IncrementalDedup.labeledKeptIds(labelStore)
       .as[Long].collect().sorted.toSeq == full)
     // the shard's surviving rows are exactly the full answer ∩ shard
@@ -901,23 +903,6 @@ class OperatorSpec extends AnyFunSuite {
     // 2·bands·|corpus| rows regardless of near-dup cluster size —
     // where an all-pairs store grows with cluster size SQUARED
     assert(pairStore.read().count() <= 2L * 4 * nDocs)
-
-    // storePairs opt-in: when the pairs ARE the product, the store
-    // accumulates exactly bandingPairs(signatures of the union) —
-    // every pair discovered once, in its later doc's arrival round
-    val base2 = java.nio.file.Files.createTempDirectory("graft-incpairs").toString
-    val sig2 = graft.lake.LakeTable.forPath(spark, s"$base2/sigs")
-    val pair2 = graft.lake.LakeTable.forPath(spark, s"$base2/pairs")
-    shards.foreach { sh =>
-      IncrementalDedup.ingestShard(sig2, pair2, sh, "doc_id", "text",
-        storePairs = true)
-    }
-    val storedPairs = pair2.read().select("id_a", "id_b")
-      .as[(Long, Long)].collect().toSet
-    val fullPairs = Dedup.bandingPairs(
-      Dedup.minhashSignatures(corpus, "doc_id", "text", 8), 8, 4)
-      .as[(Long, Long)].collect().toSet
-    assert(storedPairs == fullPairs)
   }
 
   test("incremental VERIFIED dedup: sharded ingest equals batch dedupCorpusVerified per arrival") {
@@ -1036,11 +1021,13 @@ class OperatorSpec extends AnyFunSuite {
         .as[(Long, Long)].collect().sorted.toSeq
       assert(viaStore == fullCc)
     }
-    // kept ids off the store ≡ the CC-based keptIds ≡ full-corpus dedup
+    // kept ids off the store ≡ min-id representatives of a
+    // from-scratch CC over the stores
     val viaLabels = IncrementalDedup.labeledKeptIds(labelStore)
       .as[Long].collect().sorted.toSeq
-    val viaCc = IncrementalDedup.keptIds(sigStore, pairStore)
-      .as[Long].collect().sorted.toSeq
+    val viaCc = ConnectedComponents.labels(
+        sigStore.read().select("id"), "id", pairStore.read().select("id_a", "id_b"))
+      .where($"id" === $"component").select($"id").as[Long].collect().sorted.toSeq
     assert(viaLabels == viaCc)
     // the standing upsert runs merge-on-read (no store rewrite per shard)
     assert(labelStore.hasDeletionVectors ||
@@ -1049,12 +1036,15 @@ class OperatorSpec extends AnyFunSuite {
     // per-shard work is the quotient graph, not the corpus: a shard
     // with NO new near-dup pairs must touch no existing labels
     val vBefore = labelStore.version
+    val rowsBefore = labelStore.read().as[(Long, Long)].collect().sorted.toSeq
     val fresh = corpus.limit(0) // empty shard: nothing to relabel
     IncrementalDedup.ingestShardLabeled(
       sigStore, pairStore, labelStore, fresh, "doc_id", "text")
-    assert(IncrementalDedup.labeledKeptIds(labelStore)
-      .as[Long].collect().sorted.toSeq == viaLabels)
-    val _ = vBefore
+    assert(labelStore.read().as[(Long, Long)].collect().sorted.toSeq == rowsBefore)
+    val newCommits = labelStore.historyInfo.filter(_.version > vBefore)
+    assert(newCommits.nonEmpty &&
+      newCommits.forall(_.operationParameters.get("numDeletedRows").contains("0")),
+      newCommits.map(c => c.operation -> c.operationParameters))
   }
 
   // ---- multimodal ---------------------------------------------------------

@@ -9,6 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -279,18 +281,18 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming shard dedup: stores converge to batch dedupCorpus; batch replay is a no-op") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.operators.{Dedup, IncrementalDedup}
+    import graft.operators.{ConnectedComponents, Dedup}
     import graft.streaming.StreamingDedup
     implicit val sqlCtx = spark.sqlContext
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select($"doc_id", $"text")
     val root = Files.createTempDirectory("graft-streamdedup")
     val sigPath = root.resolve("sigs"); val pairPath = root.resolve("pairs")
-    val outPath = root.resolve("out")
+    val labelPath = root.resolve("labels"); val outPath = root.resolve("out")
 
     val mem = MemoryStream[(Long, String)]
     val q = StreamingDedup.dedupedIngest(
-      mem.toDF.toDF("doc_id", "text"), sigPath, pairPath, outPath,
+      mem.toDF.toDF("doc_id", "text"), sigPath, pairPath, labelPath, outPath,
       root.resolve("ckpt").toString, "doc_id", "text")
     val shards = Seq(
       corpus.where($"doc_id" % 2 === 0),
@@ -306,7 +308,9 @@ class StreamingSpec extends AnyFunSuite {
     val sig = new LakeTable(spark, sigPath)
     val pair = new LakeTable(spark, pairPath)
     val out = new LakeTable(spark, outPath)
-    val streamedKept = IncrementalDedup.keptIds(sig, pair)
+    val streamedKept = ConnectedComponents.labels(
+        sig.read().select("id"), "id", pair.read().select("id_a", "id_b"))
+      .where($"id" === $"component").select($"id")
       .as[Long].collect().sorted.toSeq
     val batchKept = Dedup.dedupCorpus(corpus, "doc_id", "text", 8, 4)
       .select("doc_id").as[Long].collect().sorted.toSeq
@@ -333,11 +337,12 @@ class StreamingSpec extends AnyFunSuite {
     assert(outIds.size < corpus.count()) // something was actually dropped
 
     // exactly-once: replaying batch 0 through the identical entry
-    // point adds NO commits to any store (all three stamps found)
-    val (vS, vP, vO) = (sig.version, pair.version, out.version)
-    StreamingDedup.ingestBatch(shards(0), 0L, sigPath, pairPath, outPath,
+    // point adds NO commits to any store (all four stamps found)
+    val label = new LakeTable(spark, labelPath)
+    val (vS, vP, vL, vO) = (sig.version, pair.version, label.version, out.version)
+    StreamingDedup.ingestBatch(shards(0), 0L, sigPath, pairPath, labelPath, outPath,
       "doc_id", "text", 8, 4)
-    assert((sig.version, pair.version, out.version) == ((vS, vP, vO)))
+    assert((sig.version, pair.version, label.version, out.version) == ((vS, vP, vL, vO)))
   }
 
   test("streaming VERIFIED dedup: closure equals batch dedupCorpusVerified; replay is a no-op") {
@@ -350,10 +355,11 @@ class StreamingSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-streamverified")
     val sigPath = root.resolve("sigs"); val gramPath = root.resolve("grams")
     val edgePath = root.resolve("edges"); val outPath = root.resolve("out")
+    val labelPath = root.resolve("labels")
 
     val mem = MemoryStream[(Long, String)]
     val q = StreamingVerifiedDedup.dedupedIngest(
-      mem.toDF.toDF("doc_id", "text"), sigPath, gramPath, edgePath, outPath,
+      mem.toDF.toDF("doc_id", "text"), sigPath, gramPath, edgePath, labelPath, outPath,
       root.resolve("ckpt").toString, "doc_id", "text", minJaccard = 0.5)
     val shards = Seq(
       corpus.where($"doc_id" % 2 === 0),
@@ -393,11 +399,134 @@ class StreamingSpec extends AnyFunSuite {
 
     // exactly-once: replaying batch 0 adds NO commits to any store
     val gram = new LakeTable(spark, gramPath)
-    val (vS, vG, vE, vO) = (sig.version, gram.version, edge.version, out.version)
+    val label = new LakeTable(spark, labelPath)
+    val (vS, vG, vE, vL, vO) =
+      (sig.version, gram.version, edge.version, label.version, out.version)
     StreamingVerifiedDedup.ingestBatch(shards(0), 0L, sigPath, gramPath,
-      edgePath, outPath, "doc_id", "text", 8, 4, 0.5)
-    assert((sig.version, gram.version, edge.version, out.version) ==
-      ((vS, vG, vE, vO)))
+      edgePath, labelPath, outPath, "doc_id", "text", 8, 4, 0.5)
+    assert((sig.version, gram.version, edge.version, label.version, out.version) ==
+      ((vS, vG, vE, vL, vO)))
+  }
+
+  /** One near-dup sink behind one call shape: `ingest(batch, batchId,
+    * root)` drives a batch through the sink's stores under `root`
+    * (`sigs`, `edges`, `labels`, `out`, and `grams` for the verified
+    * sink); `batchKept` is the batch operator the sink must agree with.
+    */
+  private final class NearDupSink(
+      val name: String,
+      val ingest: (org.apache.spark.sql.DataFrame, Long, java.nio.file.Path) => Unit,
+      val batchKept: org.apache.spark.sql.DataFrame => Set[Long])
+
+  private lazy val nearDupSinks: Seq[NearDupSink] = {
+    import graft.operators.Dedup
+    import graft.streaming.{StreamingDedup, StreamingVerifiedDedup}
+    def kept(df: org.apache.spark.sql.DataFrame) = df.select("doc_id").as[Long].collect().toSet
+    Seq(
+      new NearDupSink("unverified",
+        (b, id, root) => StreamingDedup.ingestBatch(b, id, root.resolve("sigs"),
+          root.resolve("edges"), root.resolve("labels"), root.resolve("out"),
+          "doc_id", "text", 8, 4),
+        docs => kept(Dedup.dedupCorpus(docs, "doc_id", "text", 8, 4))),
+      new NearDupSink("verified",
+        (b, id, root) => StreamingVerifiedDedup.ingestBatch(b, id, root.resolve("sigs"),
+          root.resolve("grams"), root.resolve("edges"), root.resolve("labels"),
+          root.resolve("out"), "doc_id", "text", 8, 4, 0.5),
+        docs => kept(Dedup.dedupCorpusVerified(docs, "doc_id", "text", 8, 4, 0.5))))
+  }
+
+  private def stampedWith(t: LakeTable, batchId: Long): Seq[Long] =
+    t.historyInfo.filter(_.operationParameters.get("streamBatchId").contains(batchId.toString))
+      .map(_.version)
+
+  private def fileNames(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
+
+  test("near-dup sinks keep a NULL-text doc, as the batch dedup does") {
+    val text = "one boilerplate paragraph that every mirror page repeats word for word"
+    val batch = Seq((1L, text), (2L, text), (3L, null: String)).toDF("doc_id", "text")
+    nearDupSinks.foreach { sink =>
+      val root = Files.createTempDirectory(s"graft-nulltext-${sink.name}")
+      sink.ingest(batch, 0L, root)
+      val out = new LakeTable(spark, root.resolve("out")).read()
+        .select("doc_id").as[Long].collect().toSet
+      assert(out == sink.batchKept(batch) && out == Set(1L, 3L), s"${sink.name}: $out")
+    }
+  }
+
+  private def sf0001Docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    .select($"doc_id", $"text")
+
+  test("near-dup sinks: batch 10 reads only its own edge commit and runs no more jobs than batch 2") {
+    val corpus = sf0001Docs
+    val shards = (0 until 10).map(i => corpus.where($"doc_id" % 10 === i))
+    nearDupSinks.foreach { sink =>
+      val root = Files.createTempDirectory(s"graft-tenbatches-${sink.name}")
+      val edge = new LakeTable(spark, root.resolve("edges"))
+      val label = new LakeTable(spark, root.resolve("labels"))
+      val batches = shards.indices.map { b =>
+        val before = if (label.exists) label.version else -1L
+        val traced = JobTrace.traced(spark)(sink.ingest(shards(b), b.toLong, root))
+        (traced, label.historyInfo.filter(c => c.version > before && c.operation == "OPTIMIZE"))
+      }
+      val Seq(v10) = stampedWith(edge, 9L)
+      val own = fileNames(edge.changes(v10 - 1, v10))
+      val read10 = batches(9)._1.files intersect fileNames(edge.read())
+      assert(own.nonEmpty && read10.nonEmpty && read10.subsetOf(own),
+        s"${sink.name}: batch 10 read edge files outside its own commit: ${read10 -- own}")
+      // Left out of the job count, by the method that submits them:
+      //  - materializeDvFiles: a DV-policy OPTIMIZE the label merge
+      //    triggers once a file's deleted share passes
+      //    graft.dv.maxRatio — store maintenance, named below;
+      //  - dvMaskFor / writeDvFile: the label store's merge-on-read
+      //    scan and DV write, one job per live DV parquet
+      //    (LakeTable's cost, not the steps')
+      val policy = "materializeDvFiles"
+      val lakeDv = Seq(policy, "dvMaskFor", "writeDvFile")
+      val perBatch = batches.map { case (t, optimized) =>
+        assert(optimized.isEmpty == !t.callSites.exists(_.contains(policy)),
+          s"${sink.name}: OPTIMIZE commits $optimized vs $policy jobs")
+        t.callSites.count(site => !lakeDv.exists(site.contains))
+      }
+      assert(perBatch(9) <= perBatch(1),
+        s"${sink.name}: jobs per batch $perBatch (all: ${batches.map(_._1.jobs)}), " +
+          "DV-policy OPTIMIZE in batches " +
+          batches.zipWithIndex.collect { case ((_, o), b) if o.nonEmpty => b + 1 -> o.map(_.version) })
+
+      // the output is the union of arrival-time survivor sets: the
+      // batch operator over each prefix, intersected with the shard
+      val out = new LakeTable(spark, root.resolve("out")).read()
+        .select("doc_id").as[Long].collect().toSet
+      val expected = shards.indices.flatMap { b =>
+        sink.batchKept(shards.take(b + 1).reduce(_ unionByName _)) intersect
+          shards(b).select("doc_id").as[Long].collect().toSet
+      }.toSet
+      assert(out == expected, s"${sink.name}: extra=${out -- expected} missing=${expected -- out}")
+    }
+  }
+
+  test("near-dup sinks: a crash between the label and output commits replays bit-identically") {
+    val corpus = sf0001Docs
+    val shards = Seq(corpus.where($"doc_id" % 2 === 0), corpus.where($"doc_id" % 2 === 1))
+    nearDupSinks.foreach { sink =>
+      val root = Files.createTempDirectory(s"graft-labelcrash-${sink.name}")
+      shards.indices.foreach(b => sink.ingest(shards(b), b.toLong, root))
+      val outPath = root.resolve("out")
+      val out = new LakeTable(spark, outPath)
+      def rows = out.read().as[(Long, String)].collect().sortBy(_._1).toSeq
+      val uncrashed = rows
+      // the log a crash right after batch 1's stamped label commit
+      // leaves: the output's batch-1 commit cut away
+      val Seq(cut) = stampedWith(out, 1L)
+      assert(cut == out.version)
+      Files.delete(graft.lake.TransactionLog.logDir(outPath).resolve(f"$cut%020d.json"))
+      assert(rows.size < uncrashed.size)
+      sink.ingest(shards(1), 1L, root)
+      assert(rows == uncrashed, sink.name)
+      val stores = Files.list(root).iterator().asScala.toSeq
+      assert(stores.size == (if (sink.name == "verified") 5 else 4))
+      stores.foreach(p => assert(stampedWith(new LakeTable(spark, p), 1L).size == 1, p))
+    }
   }
 
   test("streaming substring dedup: stores converge to batch repeatedSpans; replay is a no-op") {
