@@ -2,7 +2,7 @@ package graft.lake
 
 import graft.core.UserException
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, element_at, lit, max, split, sum, when}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, element_at, lit, max, split, sum, typedLit, when}
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import java.net.URLDecoder
@@ -427,10 +427,13 @@ final class LakeTable(spark: SparkSession, val path: Path) {
   /** All referenced DV parquets as one frame `(dvi, fid, row)`, where
     * `dvi` is the index into `dvPaths` — the second dictionary level
     * (which DV parquet), so multi-DV unions stay string-free too.
+    * `fids(i)`, when given, keeps only those fids of parquet `i` (an
+    * IN-list the parquet scan pushes down).
     */
-  private def readDvRaw(dvPaths: Seq[String]): DataFrame =
+  private def readDvRaw(dvPaths: Seq[String], fids: Seq[Seq[Int]] = Nil): DataFrame =
     dvPaths.zipWithIndex.map { case (p, i) =>
-      spark.read.schema(DvSchema).parquet(resolvePath(path, p).toString)
+      val raw = spark.read.schema(DvSchema).parquet(resolvePath(path, p).toString)
+      fids.lift(i).fold(raw)(fs => raw.where(col("fid").isin(fs: _*)))
         .select(lit(i).as("dvi"), col("fid"), col("row"))
     }.reduce(_ unionByName _)
 
@@ -502,8 +505,12 @@ final class LakeTable(spark: SparkSession, val path: Path) {
 
   /** Mask for tier 1 of [[applyDvFilter]], LRU-cached by descriptor
     * identity (scan path, DV parquet, fid — DV parquets are immutable,
-    * so equal keys mean equal content; different snapshots produce
-    * different descriptor sets and miss).
+    * so equal keys mean equal content). A snapshot whose descriptor
+    * set misses assembles its mask from the per-descriptor row sets of
+    * [[LakeTable.dvRowSets]] and collects only the descriptors no earlier
+    * mask read — one job, over every DV parquet they reference — so a
+    * new snapshot of a standing merge-on-read table reads only its new
+    * DV parquet, and none after an OPTIMIZE.
     */
   private def dvMaskFor(dvFiles: Seq[AddFile]): DvMask = {
     val key = dvFiles.map { f =>
@@ -514,29 +521,29 @@ final class LakeTable(spark: SparkSession, val path: Path) {
     hit.getOrElse {
       // build OUTSIDE the lock (it runs a collect); a racing double
       // build is harmless — last put wins, content identical
-      val byDv = dvFiles.groupBy(_.dv.get.path)
-      val m = new java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, RowSet]()
-      byDv.foreach { case (dvPath, fs) =>
-        val scanOf = fs.map(f => f.dv.get.fid -> scanPathOf(f)).toMap
-        // filter to the REFERENCED fids in the frame, not after
-        // collect: a DV parquet may hold (unboundedly many, when
-        // autoOptimize is off) rows for fids superseded by later DML,
-        // and the fid IN-list pushes down to the parquet scan so
-        // row-group stats prune them before they ever reach the driver
-        // — the collect is then bounded by the tier-1 cardinality gate
-        val rows = spark.read.schema(DvSchema)
-          .parquet(resolvePath(path, dvPath).toString)
-          .where(col("fid").isin(scanOf.keys.toSeq: _*))
-          .collect()
-        rows.groupBy(_.getInt(0)).foreach { case (fid, rs) =>
-          scanOf.get(fid).foreach { sp =>
-            val arr = rs.map(_.getLong(1))
+      def rowsKey(dvPath: String, fid: Int) = (resolvePath(path, dvPath).toString, fid)
+      def keyOf(f: AddFile) = rowsKey(f.dv.get.path, f.dv.get.fid)
+      val known = dvFiles.flatMap(f => LakeTable.dvRowSets.get(keyOf(f)).map(keyOf(f) -> _)).toMap
+      val missing = dvFiles.filterNot(f => known.contains(keyOf(f))).groupBy(_.dv.get.path).toSeq
+      // filter to the REFERENCED fids in the frame, not after collect:
+      // a DV parquet may hold (unboundedly many, when autoOptimize is
+      // off) rows for fids superseded by later DML, and the fid IN-list
+      // pushes down to the parquet scan so row-group stats prune them
+      // before they ever reach the driver — the collect is then bounded
+      // by the tier-1 cardinality gate
+      val built = if (missing.isEmpty) Map.empty[(String, Int), RowSet] else
+        readDvRaw(missing.map(_._1), missing.map(_._2.map(_.dv.get.fid))).collect()
+          .groupBy(r => (r.getInt(0), r.getInt(1))).map { case ((dvi, fid), rs) =>
+            val arr = rs.map(_.getLong(2))
             java.util.Arrays.sort(arr)
-            m.put(org.apache.spark.unsafe.types.UTF8String.fromString(sp),
-              RowSet.fromSorted(arr))
+            val (k, set) = (rowsKey(missing(dvi)._1, fid), RowSet.fromSorted(arr))
+            LakeTable.dvRowSets.put(k, set, arr.length)
+            k -> set
           }
-        }
-      }
+      val sets = known ++ built
+      val m = new java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, RowSet]()
+      dvFiles.foreach(f => sets.get(keyOf(f)).foreach(set =>
+        m.put(org.apache.spark.unsafe.types.UTF8String.fromString(scanPathOf(f)), set)))
       val mask = new DvMask(m)
       LakeTable.dvMaskCache.synchronized(LakeTable.dvMaskCache.put(key, mask))
       mask
@@ -638,14 +645,16 @@ final class LakeTable(spark: SparkSession, val path: Path) {
       val oldCard: Map[String, Long] =
         touched.flatMap(f => f.dv.map(d => scanPathOf(f) -> d.cardinality)).toMap
       val totalCounts = nc.map { case (f, c) => f -> (c + oldCard.getOrElse(f, 0L)) }
+      // — each file's fid mapped to its scan path in the scan's own
+      // projection, so carrying rows forward adds no job
       val oldPairs: Seq[DataFrame] = touched
         .flatMap(f => f.dv.map(d => (d.path, d.fid, scanPathOf(f))))
         .groupBy(_._1).toSeq.map { case (dvPath, fs) =>
-          val m = fs.map { case (_, fid, file) => (fid, file) }.toDF("fid", "__graft_file")
+          val fileOf = typedLit(fs.map { case (_, fid, file) => fid -> file }.toMap)
           spark.read.schema(DvSchema)
             .parquet(resolvePath(path, dvPath).toString)
-            .join(broadcast(m), "fid")
-            .select(col("__graft_file"), col("row").as("__graft_row"))
+            .where(col("fid").isin(fs.map(_._2): _*))
+            .select(element_at(fileOf, col("fid")).as("__graft_file"), col("row").as("__graft_row"))
         }
       val dvAll = oldPairs.foldLeft(dvRows)(_ unionByName _)
       // the DV write and the append write are independent job chains —
@@ -2032,6 +2041,25 @@ object LakeTable {
       override def removeEldestEntry(
           e: java.util.Map.Entry[Seq[(String, String, Int)], DvMask]): Boolean = size > 8
     }
+
+  /** Deleted-row sets by (absolute DV parquet, fid), the parts
+    * [[dvMaskCache]]'s masks are assembled from; LRU, bounded by the
+    * rows it holds.
+    */
+  private[lake] object dvRowSets {
+    private var held = 0L
+    private val sets = new java.util.LinkedHashMap[(String, Int), (RowSet, Long)](16, 0.75f, true)
+
+    def get(k: (String, Int)): Option[RowSet] = synchronized(Option(sets.get(k)).map(_._1))
+
+    def put(k: (String, Int), set: RowSet, rows: Long): Unit = synchronized {
+      held += rows - Option(sets.put(k, (set, rows))).fold(0L)(_._2)
+      val eldest = sets.values.iterator
+      while (held > 4 * DvMaskMaxRowsDefault && eldest.hasNext) {
+        held -= eldest.next()._2; eldest.remove()
+      }
+    }
+  }
 
   def forPath(spark: SparkSession, p: String): LakeTable =
     new LakeTable(spark, TransactionLog.pathOf(p))

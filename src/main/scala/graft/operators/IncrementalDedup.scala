@@ -45,9 +45,13 @@ import org.apache.spark.sql.functions._
   * the same sequence with every commit stamped by the stream's batch
   * id, so a replay skips the steps it already committed. Every read
   * is pinned to the versions the earlier steps yielded, so a redone
-  * step recomputes the same frame. No step scans the edge store
-  * beyond the arrival's own commit, and no connected components run
-  * over the store's lifetime.
+  * step recomputes the same frame. Once the label store holds labels,
+  * no step scans the edge store beyond the arrival's own commit and
+  * no connected components run over the store's lifetime; its first
+  * label commit is the closure of the stores it finds (for a new
+  * pipeline, the first arrival alone). What still grows with the
+  * stores' age: step 2 scans the whole signature store for the
+  * touched buckets, and steps 3–4 scan the whole label store.
   *
   * Connectivity invariant (induction over arrivals): after every
   * shard, all ids sharing a band bucket are in one component of the
@@ -107,25 +111,29 @@ object IncrementalDedup {
       incrementalClusterEdges(Dedup.bandBuckets(newSigs, k, bands),
         Dedup.bandBuckets(sigStore.read(versionAsOf = sigV), k, bands), newSigs.select(col("id")))
     }
-    (sigV, survivors(step, edgeStore, edgeV, labelStore, shard, idCol))
+    (sigV, survivors(step, sigStore.read(versionAsOf = sigV), edgeStore, edgeV, labelStore,
+      shard, idCol))
   }
 
   /** Steps 3–4 of an arrival whose edges `edgeStore` committed at
-    * `edgeV`: fold them into the label store, and return the shard's
-    * rows whose label as of that commit is their own id.
+    * `edgeV` (`allSigs`: the signature store as of the arrival's
+    * commit): fold the edges into the label store, and return the
+    * shard's rows whose label as of that commit is their own id.
     */
   private def survivors(
       step: Step,
+      allSigs: => DataFrame,
       edgeStore: LakeTable,
       edgeV: Long,
       labelStore: LakeTable,
       shard: DataFrame,
       idCol: String): DataFrame = {
+    def pairs(df: DataFrame) =
+      df.select(col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b"))
     val labelV = step(labelStore) { params =>
-      val newEdges = edgeStore.changes(edgeV - 1, edgeV)
-        .select(col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b"))
-      updateLabels(labelStore, newEdges,
-        shard.select(col(idCol).cast("long").as("id")).distinct(), params)
+      updateLabels(labelStore, shard.select(col(idCol).cast("long").as("id")).distinct(),
+        pairs(edgeStore.changes(edgeV - 1, edgeV)),
+        allSigs.select(col("id")), pairs(edgeStore.read(versionAsOf = edgeV)), params)
     }
     shard.join(labeledKeptIds(labelStore, labelV).withColumnRenamed("id", idCol),
       Seq(idCol), "left_semi")
@@ -215,15 +223,24 @@ object IncrementalDedup {
       bands: Int = 4): Long =
     arrive(plain, sigStore, pairStore, labelStore, shard, idCol, textCol, k, bands)._1
 
-  /** The label-store step of every arrival: fold ONE arrival's new
-    * edges into the persisted `(id, component)` store via the
-    * quotient-graph contraction described on [[ingestShardLabeled]],
-    * as one merge recording `params`.
+  /** The label-store step of every arrival, as one merge recording
+    * `params`: fold ONE arrival's new edges `newPairs` into the
+    * persisted `(id, component)` store via the quotient-graph
+    * contraction described on [[ingestShardLabeled]]. A store that
+    * holds no labels yet is instead seeded with the full closure of
+    * `allIds` ∪ `newIds` over `allPairs` — the signature and edge
+    * stores as of this arrival: for a new pipeline that is the arrival
+    * alone, and stores that outgrew a missing label store (a fresh
+    * `labelPath` pointed at a running pipeline's stores) get every
+    * earlier id labeled, where the quotient would map each unlabeled
+    * old endpoint to itself and keep the duplicates of its component.
     */
   private def updateLabels(
       labelStore: LakeTable,
-      newPairs: DataFrame,
       newIds: DataFrame,
+      newPairs: DataFrame,
+      allIds: => DataFrame,
+      allPairs: => DataFrame,
       params: Map[String, String]): Unit = {
     // standing scattered-key upserts: the store is created
     // merge-on-read in its first commit (nullable: a NOT NULL column
@@ -231,36 +248,41 @@ object IncrementalDedup {
     if (!labelStore.exists)
       labelStore.createEmpty(org.apache.spark.sql.types.StructType.fromDDL(
         "id BIGINT, component BIGINT"), Nil, Map(LakeTable.MergeModeKey -> "merge-on-read"))
-    val labels = labelStore.read()
+    // version 0 is that creation: no label commit yet
+    val rows = if (labelStore.version == 0)
+      ConnectedComponents.labels(allIds.unionByName(newIds).distinct(), "id", allPairs)
+    else {
+      val labels = labelStore.read()
+      // endpoints through the store: labeled → rep, unseen → self
+      val qEdges = newPairs
+        .join(labels.select(col("id").as("id_a"), col("component").as("ca")), Seq("id_a"), "left")
+        .join(labels.select(col("id").as("id_b"), col("component").as("cb")), Seq("id_b"), "left")
+        .select(
+          coalesce(col("ca"), col("id_a")).as("u"),
+          coalesce(col("cb"), col("id_b")).as("v"))
+        .where(col("u") =!= col("v"))
+        .distinct()
+      val qVerts = qEdges.select(col("u").as("id"))
+        .unionByName(qEdges.select(col("v").as("id")))
+        .unionByName(newIds)
+        .distinct()
+      val qLabels = ConnectedComponents.labels(qVerts, "id", qEdges)
 
-    // endpoints through the store: labeled → rep, unseen → self
-    val qEdges = newPairs
-      .join(labels.select(col("id").as("id_a"), col("component").as("ca")), Seq("id_a"), "left")
-      .join(labels.select(col("id").as("id_b"), col("component").as("cb")), Seq("id_b"), "left")
-      .select(
-        coalesce(col("ca"), col("id_a")).as("u"),
-        coalesce(col("cb"), col("id_b")).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-    val qVerts = qEdges.select(col("u").as("id"))
-      .unionByName(qEdges.select(col("v").as("id")))
-      .unionByName(newIds)
-      .distinct()
-    val qLabels = ConnectedComponents.labels(qVerts, "id", qEdges)
-
-    // nodes whose label moved: old reps absorbed into a smaller-min
-    // component, and new ids that are not their own component
-    val delta = qLabels.where(col("id") =!= col("component"))
-    val repRemap = delta
-      .select(col("id").as("component"), col("component").as("newComp"))
-    // members of re-labeled OLD components (bounded by affected
-    // component sizes); the rep's own row re-labels through the same join
-    val updatedOld = labels.join(repRemap, Seq("component"))
-      .select(col("id"), col("newComp").as("component"))
-    val newRows = newIds
-      .join(qLabels.withColumnRenamed("component", "qc"), Seq("id"), "left")
-      .select(col("id"), coalesce(col("qc"), col("id")).as("component"))
-    labelStore.merge(updatedOld.unionByName(newRows), Seq("id"), operationParams = params)
+      // nodes whose label moved: old reps absorbed into a smaller-min
+      // component, and new ids that are not their own component
+      val delta = qLabels.where(col("id") =!= col("component"))
+      val repRemap = delta
+        .select(col("id").as("component"), col("component").as("newComp"))
+      // members of re-labeled OLD components (bounded by affected
+      // component sizes); the rep's own row re-labels through the same join
+      val updatedOld = labels.join(repRemap, Seq("component"))
+        .select(col("id"), col("newComp").as("component"))
+      val newRows = newIds
+        .join(qLabels.withColumnRenamed("component", "qc"), Seq("id"), "left")
+        .select(col("id"), coalesce(col("qc"), col("id")).as("component"))
+      updatedOld.unionByName(newRows)
+    }
+    labelStore.merge(rows, Seq("id"), operationParams = params)
   }
 
   /** Kept ids straight off the incrementally-maintained label store
@@ -337,7 +359,8 @@ object IncrementalDedup {
       sigStore.changes(sigV - 1, sigV).drop("_commit_version"),
       sigStore.read(versionAsOf = sigV), gramStore.read(versionAsOf = gramV),
       k, bands, minJaccard))
-    (sigV, survivors(step, edgeStore, edgeV, labelStore, shard, idCol))
+    (sigV, survivors(step, sigStore.read(versionAsOf = sigV), edgeStore, edgeV, labelStore,
+      shard, idCol))
   }
 
   /** The verified edges ONE arrival adds (the edge step of

@@ -33,9 +33,15 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   * kernel); the label update sees only the batch's own new edges, and
   * the survivors are the batch's ids whose label is their own — no
   * step scans the edge store's history or runs connected components
-  * over the store's lifetime, so per-batch work does not grow with the
-  * stream's age. StreamingSpec pins: streamed shards ⇒ the same kept
-  * set as one batch `Dedup.dedupCorpus` over the concatenated input.
+  * over the store's lifetime, so the edge-store bytes a batch reads
+  * and its Spark job count stop growing with the stream's age. The
+  * signature and label stores are still scanned whole on every batch,
+  * so its wall time still grows with the stream's age.
+  * A `labelPath` with no label store yet (a new stream, or one pointed
+  * at a running stream's stores) is seeded from the closure of the
+  * stores as they stand. StreamingSpec pins: streamed shards ⇒ the
+  * same kept set as one batch `Dedup.dedupCorpus` over the
+  * concatenated input.
   *
   * Output contract (the standard one for streaming dedup): each
   * batch appends the rows of ITS shard that survive dedup against

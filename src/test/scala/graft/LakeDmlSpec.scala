@@ -110,7 +110,7 @@ class LakeDmlSpec extends AnyFunSuite {
       .select($"id", lit(1).as("v"), lit("u").as("s"))
     assert(jobs(t.merge(src, Seq("id"))) == 8)
     assert(jobs(t.update($"id" === 500, Map("s" -> lit("x")))) == 6)
-    assert(jobs(sqlMerge(t)) == 13)
+    assert(jobs(sqlMerge(t)) == 12)
     assert(t.hasDeletionVectors)
     assert(t.read().count() == 1011)
     assert(t.read().where($"s".isin("x", "y", "z", "w")).count() == 5)

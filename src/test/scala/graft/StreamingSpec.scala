@@ -457,7 +457,20 @@ class StreamingSpec extends AnyFunSuite {
   private def sf0001Docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     .select($"doc_id", $"text")
 
-  test("near-dup sinks: batch 10 reads only its own edge commit and runs no more jobs than batch 2") {
+  /** The sink's output contract: the union of arrival-time survivor
+    * sets — the batch operator over each prefix of `shards`,
+    * intersected with the arriving shard.
+    */
+  private def arrivalSurvivors(sink: NearDupSink, shards: Seq[org.apache.spark.sql.DataFrame]) =
+    shards.indices.flatMap { b =>
+      sink.batchKept(shards.take(b + 1).reduce(_ unionByName _)) intersect
+        shards(b).select("doc_id").as[Long].collect().toSet
+    }.toSet
+
+  private def outputIds(root: java.nio.file.Path): Set[Long] =
+    new LakeTable(spark, root.resolve("out")).read().select("doc_id").as[Long].collect().toSet
+
+  test("near-dup sinks: batch 10 reads only its own edge commit, and jobs per batch do not grow with age") {
     val corpus = sf0001Docs
     val shards = (0 until 10).map(i => corpus.where($"doc_id" % 10 === i))
     nearDupSinks.foreach { sink =>
@@ -474,34 +487,54 @@ class StreamingSpec extends AnyFunSuite {
       val read10 = batches(9)._1.files intersect fileNames(edge.read())
       assert(own.nonEmpty && read10.nonEmpty && read10.subsetOf(own),
         s"${sink.name}: batch 10 read edge files outside its own commit: ${read10 -- own}")
-      // Left out of the job count, by the method that submits them:
-      //  - materializeDvFiles: a DV-policy OPTIMIZE the label merge
-      //    triggers once a file's deleted share passes
-      //    graft.dv.maxRatio — store maintenance, named below;
-      //  - dvMaskFor / writeDvFile: the label store's merge-on-read
-      //    scan and DV write, one job per live DV parquet
-      //    (LakeTable's cost, not the steps')
+      // every job of the batch counts but those of a DV-policy OPTIMIZE
+      // (materializeDvFiles), which the label merge triggers once a
+      // file's deleted share passes graft.dv.maxRatio: store
+      // maintenance, named in the message when it ran
       val policy = "materializeDvFiles"
-      val lakeDv = Seq(policy, "dvMaskFor", "writeDvFile")
       val perBatch = batches.map { case (t, optimized) =>
         assert(optimized.isEmpty == !t.callSites.exists(_.contains(policy)),
           s"${sink.name}: OPTIMIZE commits $optimized vs $policy jobs")
-        t.callSites.count(site => !lakeDv.exists(site.contains))
+        t.callSites.count(!_.contains(policy))
       }
-      assert(perBatch(9) <= perBatch(1),
-        s"${sink.name}: jobs per batch $perBatch (all: ${batches.map(_._1.jobs)}), " +
+      // a batch's jobs depend on what it commits — whether it adds
+      // edges, and whether its label merge re-labels stored rows (a DV
+      // write) — not on how many batches came before: batches 2–10 that
+      // commit alike run the same number of jobs
+      val kindOf = (1 until 10).map { b =>
+        val Seq(e) = stampedWith(edge, b.toLong)
+        val Seq(l) = stampedWith(label, b.toLong)
+        val relabels = label.historyInfo.find(_.version == l)
+          .flatMap(_.operationParameters.get("numDeletedRows")).exists(_ != "0")
+        (b + 1) -> (!edge.changes(e - 1, e).isEmpty, relabels)
+      }
+      assert(kindOf.groupBy(_._2).values.forall(_.map(b => perBatch(b._1 - 1)).distinct.size == 1),
+        s"${sink.name}: jobs per batch $perBatch; (new edges, re-labels) per batch $kindOf; " +
           "DV-policy OPTIMIZE in batches " +
-          batches.zipWithIndex.collect { case ((_, o), b) if o.nonEmpty => b + 1 -> o.map(_.version) })
+          batches.zipWithIndex.collect { case ((_, o), b) if o.nonEmpty => b + 1 -> o.map(_.version).toList })
+      assert(outputIds(root) == arrivalSurvivors(sink, shards), sink.name)
+    }
+  }
 
-      // the output is the union of arrival-time survivor sets: the
-      // batch operator over each prefix, intersected with the shard
-      val out = new LakeTable(spark, root.resolve("out")).read()
-        .select("doc_id").as[Long].collect().toSet
-      val expected = shards.indices.flatMap { b =>
-        sink.batchKept(shards.take(b + 1).reduce(_ unionByName _)) intersect
-          shards(b).select("doc_id").as[Long].collect().toSet
-      }.toSet
-      assert(out == expected, s"${sink.name}: extra=${out -- expected} missing=${expected -- out}")
+  test("near-dup sinks: a fresh label store over running stores is seeded from their closure") {
+    import graft.operators.{ConnectedComponents, IncrementalDedup}
+    val corpus = sf0001Docs
+    val shards = (0 until 4).map(i => corpus.where($"doc_id" % 4 === i))
+    nearDupSinks.foreach { sink =>
+      val root = Files.createTempDirectory(s"graft-freshlabels-${sink.name}")
+      shards.indices.foreach { b =>
+        // from batch 2 on the sink writes to a new, empty label path
+        if (b == 2) org.apache.commons.io.FileUtils.deleteDirectory(root.resolve("labels").toFile)
+        sink.ingest(shards(b), b.toLong, root)
+      }
+      assert(outputIds(root) == arrivalSurvivors(sink, shards), sink.name)
+      val closure = ConnectedComponents.labels(
+          new LakeTable(spark, root.resolve("sigs")).read().select("id"), "id",
+          new LakeTable(spark, root.resolve("edges")).read().select("id_a", "id_b"))
+        .where($"id" === $"component").select("id").as[Long].collect().toSet
+      val labeled = IncrementalDedup.labeledKeptIds(new LakeTable(spark, root.resolve("labels")))
+        .as[Long].collect().toSet
+      assert(labeled == closure, sink.name)
     }
   }
 
