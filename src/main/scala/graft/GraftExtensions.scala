@@ -1,125 +1,27 @@
 package graft
 
-import graft.functions.{CosineSimilarity, DotProduct}
+import graft.functions._
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session-extension entry point: `--conf
   * spark.sql.extensions=graft.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`) registers the engine's
-  * native expressions for every session of the cluster — the
-  * deployment-grade alternative to per-session
-  * `VectorFunctions.register` (which remains for embedded use).
+  * `.withExtensions(new GraftExtensions)`) is the one path by which the
+  * engine's SQL functions, optimizer rules, DML rule and maintenance
+  * parser reach a session; `SparkEntry.configure` sets it for every
+  * graft entry point. The Column helpers under `graft.functions` build
+  * their expressions directly and need no registration.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (exprs: Seq[Expression]) => {
-        GraftExtensions.requireArity("graft_cosine", exprs, 2)
-        CosineSimilarity(exprs.head, exprs(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => {
-        GraftExtensions.requireArity("graft_dot", exprs, 2)
-        DotProduct(exprs.head, exprs(1))
-      }))
-    // mergeable KLL quantile sketch family (build / union / quantile)
-    e.injectFunction((
-      FunctionIdentifier("graft_kll_sketch"),
-      new ExpressionInfo(classOf[graft.functions.KllSketchBuild].getName, "graft_kll_sketch"),
-      graft.functions.KllFunctions.sketchBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_kll_union"),
-      new ExpressionInfo(classOf[graft.functions.KllSketchMerge].getName, "graft_kll_union"),
-      graft.functions.KllFunctions.unionBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_kll_quantile"),
-      new ExpressionInfo(classOf[graft.functions.KllQuantile].getName, "graft_kll_quantile"),
-      graft.functions.KllFunctions.quantileBuilder))
-    // mergeable frequent-items (heavy hitters) family (build / union / items)
-    e.injectFunction((
-      FunctionIdentifier("graft_freq_sketch"),
-      new ExpressionInfo(classOf[graft.functions.FreqSketchBuild].getName, "graft_freq_sketch"),
-      graft.functions.FreqFunctions.sketchBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_freq_union"),
-      new ExpressionInfo(classOf[graft.functions.FreqSketchMerge].getName, "graft_freq_union"),
-      graft.functions.FreqFunctions.unionBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_freq_items"),
-      new ExpressionInfo(classOf[graft.functions.FreqItems].getName, "graft_freq_items"),
-      graft.functions.FreqFunctions.itemsBuilder))
-    // word-n-gram rolling-hash kernel (decontamination's hot loop)
-    e.injectFunction((
-      FunctionIdentifier("graft_word_ngram_hashes"),
-      new ExpressionInfo(classOf[graft.functions.WordNgramHashes].getName,
-        "graft_word_ngram_hashes"),
-      graft.functions.GramHashFunctions.builder))
-    // md5 word-gram identities (exact-substring dedup windows)
-    e.injectFunction((
-      FunctionIdentifier("graft_word_gram_md5"),
-      new ExpressionInfo(classOf[graft.functions.WordGramMd5].getName,
-        "graft_word_gram_md5"),
-      graft.functions.GramMd5Functions.builder))
-    // dedup text kernels: minhash signature / shingle hashes /
-    // char n-grams / simhash
-    graft.functions.TextKernelFunctions.builders.foreach { case (name, b) =>
-      e.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(GraftExtensions.implClass(name), name),
-        b))
+    GraftExtensions.functions.foreach { f =>
+      e.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.exprClass.getName, f.name), f.builder))
     }
-    // single-pass top-level JSON scalar extraction (telemetry hot loop)
-    graft.functions.JsonKernelFunctions.builders.foreach { case (name, b) =>
-      e.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(GraftExtensions.implClass(name), name),
-        b))
-    }
-    // theta sketch family (distinct / build / union / union_sketch) —
-    // same builders the embedded per-session register uses
-    graft.functions.SketchFunctions.builders.foreach { case (name, b) =>
-      e.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(GraftExtensions.implClass(name), name),
-        b))
-    }
-    // exact int128 decimal sum / sum-of-products (the star-aggregate
-    // fast path replacing Spark's boxed-BigDecimal accumulator)
-    e.injectFunction((
-      FunctionIdentifier("graft_decimal_sum"),
-      new ExpressionInfo(classOf[graft.functions.DecimalSum128].getName,
-        "graft_decimal_sum"),
-      (exprs: Seq[Expression]) => {
-        GraftExtensions.requireArity("graft_decimal_sum", exprs, 1)
-        graft.functions.DecimalFunctions.sumBuilder(exprs)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_decimal_sum_product"),
-      new ExpressionInfo(classOf[graft.functions.DecimalSumProduct128].getName,
-        "graft_decimal_sum_product"),
-      graft.functions.DecimalFunctions.sumProductBuilder))
-    // allocation-light double→decimal money cast (exact cast semantics)
-    e.injectFunction((
-      FunctionIdentifier("graft_money"),
-      new ExpressionInfo(classOf[graft.functions.MoneyCastExpr].getName, "graft_money"),
-      (exprs: Seq[Expression]) => {
-        GraftExtensions.requireArity("graft_money", exprs, 3)
-        def foldInt(e: Expression): Int = e.eval() match {
-          case n: Number => n.intValue()
-          case other => throw new IllegalArgumentException(
-            s"graft_money: expected a foldable integer, got $other")
-        }
-        graft.functions.MoneyCastExpr(exprs.head, foldInt(exprs(1)), foldInt(exprs(2)))
-      }))
     // opt-in approximate COUNT(DISTINCT) via theta sketches
     // (spark.graft.approxDistinct=true)
-    e.injectOptimizerRule(_ => graft.functions.ApproxDistinctRewrite)
+    e.injectOptimizerRule(_ => ApproxDistinctRewrite)
     // exact pre-aggregated ROLLUP/CUBE/GROUPING SETS (on by default;
     // spark.graft.preAggGroupingSets=false restores Expand-first)
     e.injectOptimizerRule(_ => graft.plans.PreAggGroupingSets)
@@ -148,34 +50,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** Implementing expression class per function name — what DESCRIBE
-    * FUNCTION reports; keep in sync with the registered builders.
-    */
-  private[graft] def implClass(name: String): String = name match {
-    case "graft_theta_distinct" => classOf[graft.functions.ThetaSketchDistinct].getName
-    case "graft_theta_sketch" => classOf[graft.functions.ThetaSketchBuild].getName
-    case "graft_theta_union" | "graft_theta_union_sketch" =>
-      classOf[graft.functions.ThetaSketchMerge].getName
-    case "graft_minhash_signature" => classOf[graft.functions.MinhashSignatureExpr].getName
-    case "graft_shingle_hashes" => classOf[graft.functions.ShingleHashesExpr].getName
-    case "graft_char_ngrams" => classOf[graft.functions.CharNgramsExpr].getName
-    case "graft_simhash" => classOf[graft.functions.SimHashExpr].getName
-    case "graft_fingerprint" => classOf[graft.functions.FingerprintExpr].getName
-    case "graft_repetition_stats" => classOf[graft.functions.RepetitionStatsExpr].getName
-    case "graft_word_tf" => classOf[graft.functions.WordTfExpr].getName
-    case "graft_text_stats" => classOf[graft.functions.TextStatsExpr].getName
-    case "graft_json_long" => classOf[graft.functions.GraftJsonLongExpr].getName
-    case "graft_freq_sketch" => classOf[graft.functions.FreqSketchBuild].getName
-    case "graft_freq_union" => classOf[graft.functions.FreqSketchMerge].getName
-    case "graft_freq_items" => classOf[graft.functions.FreqItems].getName
-    case other => other // unknown name: leave as-is rather than lie
-  }
-
-  private[graft] def requireArity(name: String, exprs: Seq[Expression], n: Int): Unit =
-    if (exprs.length != n)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> name, "expectedNum" -> n.toString,
-          "actualNum" -> exprs.length.toString, "docroot" -> "-"))
+  /** Every graft SQL function, one table. */
+  private[graft] val functions: Seq[SqlFunction] = Seq(
+    VectorFunctions.sqlFunctions, TopKFunctions.sqlFunctions, KllFunctions.sqlFunctions,
+    FreqFunctions.sqlFunctions, SketchFunctions.sqlFunctions,
+    TextKernelFunctions.sqlFunctions, JsonKernelFunctions.sqlFunctions,
+    GramHashFunctions.sqlFunctions, GramMd5Functions.sqlFunctions,
+    SetKernelFunctions.sqlFunctions, DecimalFunctions.sqlFunctions).flatten
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.SparkBridge
+import org.apache.spark.sql.graftbridge.SparkBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Exact fixed-scale decimal aggregation over a two-long int128
@@ -57,9 +57,7 @@ import org.apache.spark.sql.types._
 object DecimalFunctions {
 
   /** Exact `sum` over a decimal column with precision ≤ 18. */
-  def decimalSum(c: Column): Column =
-    SparkBridge.column(
-      DecimalSum128(SparkBridge.expression(c)).toAggregateExpression())
+  def decimalSum(c: Column): Column = column(DecimalSum128(expression(c)).toAggregateExpression())
 
   /** Exact `sum(a * b)` / `sum(a * b * c)` over decimal columns whose
     * precisions sum to ≤ 36 (each ≤ 18).
@@ -67,22 +65,23 @@ object DecimalFunctions {
   def decimalSumProduct(cs: Column*): Column = {
     require(cs.length == 2 || cs.length == 3,
       s"decimalSumProduct takes 2 or 3 columns, got ${cs.length}")
-    SparkBridge.column(
-      DecimalSumProduct128(cs.map(SparkBridge.expression))
-        .toAggregateExpression())
+    column(DecimalSumProduct128(cs.map(expression)).toAggregateExpression())
   }
 
-  /** SQL registration builders (graft_decimal_sum / _sum_product). */
-  def sumBuilder(exprs: Seq[Expression]): Expression =
-    DecimalSum128(exprs.head).toAggregateExpression()
-  def sumProductBuilder(exprs: Seq[Expression]): Expression =
-    DecimalSumProduct128(exprs).toAggregateExpression()
+  private[graft] val sqlFunctions: Seq[SqlFunction] = Seq(
+    SqlFunction.of[DecimalSum128]("graft_decimal_sum", 1)(e =>
+      DecimalSum128(e(0)).toAggregateExpression()),
+    SqlFunction.of[DecimalSumProduct128]("graft_decimal_sum_product", 2, 3)(e =>
+      DecimalSumProduct128(e).toAggregateExpression()),
+    SqlFunction.of[MoneyCastExpr]("graft_money", 3)(e => MoneyCastExpr(e(0),
+      SqlFunction.intArg("graft_money", "precision", e(1)),
+      SqlFunction.intArg("graft_money", "scale", e(2)))))
 
   /** `CAST(double AS DECIMAL(p,s))` with the boxed path reserved for
     * values that need it. See [[MoneyCastExpr]].
     */
   def moneyCast(c: Column, precision: Int, scale: Int): Column =
-    SparkBridge.column(MoneyCastExpr(SparkBridge.expression(c), precision, scale))
+    column(MoneyCastExpr(expression(c), precision, scale))
 
   /** The exact built-in slow path of the double→decimal cast:
     * Double.toString-based BigDecimal (Decimal(d) goes through

@@ -9,9 +9,9 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graftbridge.SparkBridge.{column, expression}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Mergeable heavy-hitters sketches (Misra-Gries / space-saving family,
@@ -193,83 +193,27 @@ case class FreqItems(child: Expression, minCount: Long)
 }
 
 object FreqFunctions {
+
   val DefaultMapSize = 1024
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_freq_sketch", sketchBuilder, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_freq_union", unionBuilder, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_freq_items", itemsBuilder, "built-in")
-  }
+  private def mapSizeArg(name: String, exprs: Seq[Expression]): Int =
+    if (exprs.length == 2) SqlFunction.intArg(name, "maxMapSize", exprs(1))
+    else DefaultMapSize
 
-  private[functions] def intLit(name: String, arg: String, e: Expression): Int =
-    longLit(name, arg, e).toInt
+  private[graft] val sqlFunctions: Seq[SqlFunction] = Seq(
+    SqlFunction.of[FreqSketchBuild]("graft_freq_sketch", 1, 2)(e =>
+      FreqSketchBuild(e.head, mapSizeArg("graft_freq_sketch", e)).toAggregateExpression()),
+    SqlFunction.of[FreqSketchMerge]("graft_freq_union", 1, 2)(e =>
+      FreqSketchMerge(e.head, mapSizeArg("graft_freq_union", e)).toAggregateExpression()),
+    SqlFunction.of[FreqItems]("graft_freq_items", 2)(e =>
+      FreqItems(e.head, SqlFunction.longArg("graft_freq_items", "minCount", e(1)))))
 
-  private def isIntegral(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType => true
-    case _ => false
-  }
+  def freqSketch(c: Column, maxMapSize: Int = DefaultMapSize): Column =
+    column(FreqSketchBuild(expression(c), maxMapSize).toAggregateExpression())
 
-  private def longLit(name: String, arg: String, e: Expression): Long = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    e match {
-      case Literal(null, _) => throw new IllegalArgumentException(
-        s"$name: $arg must be an integer literal, got NULL")
-      case Literal(v, dt) if isIntegral(dt) => v.toString.toLong
-      case f if f.foldable && isIntegral(f.dataType) =>
-        f.eval() match {
-          case null => throw new IllegalArgumentException(
-            s"$name: $arg must be an integer literal, got NULL")
-          case v => v.toString.toLong
-        }
-      case other => throw new IllegalArgumentException(
-        s"$name: $arg must be an integer literal, got $other")
-    }
-  }
+  def freqUnion(c: Column, maxMapSize: Int = DefaultMapSize): Column =
+    column(FreqSketchMerge(expression(c), maxMapSize).toAggregateExpression())
 
-  private[graft] def sketchBuilder(exprs: Seq[Expression]): Expression = {
-    if (exprs.length < 1 || exprs.length > 2)
-      throw new IllegalArgumentException(
-        s"graft_freq_sketch takes (col[, maxMapSize]), got ${exprs.length} args")
-    val m = if (exprs.length == 2)
-      intLit("graft_freq_sketch", "maxMapSize", exprs(1)) else DefaultMapSize
-    FreqSketchBuild(exprs.head, m).toAggregateExpression()
-  }
-
-  private[graft] def unionBuilder(exprs: Seq[Expression]): Expression = {
-    if (exprs.length < 1 || exprs.length > 2)
-      throw new IllegalArgumentException(
-        s"graft_freq_union takes (col[, maxMapSize]), got ${exprs.length} args")
-    val m = if (exprs.length == 2)
-      intLit("graft_freq_union", "maxMapSize", exprs(1)) else DefaultMapSize
-    FreqSketchMerge(exprs.head, m).toAggregateExpression()
-  }
-
-  private[graft] def itemsBuilder(exprs: Seq[Expression]): Expression = {
-    graft.GraftExtensions.requireArity("graft_freq_items", exprs, 2)
-    FreqItems(exprs.head, longLit("graft_freq_items", "minCount", exprs(1)))
-  }
-
-  def freqSketch(spark: SparkSession, c: Column,
-      maxMapSize: Int = DefaultMapSize): Column = {
-    register(spark)
-    call_function("graft_freq_sketch", c,
-      org.apache.spark.sql.functions.lit(maxMapSize))
-  }
-
-  def freqUnion(spark: SparkSession, c: Column,
-      maxMapSize: Int = DefaultMapSize): Column = {
-    register(spark)
-    call_function("graft_freq_union", c,
-      org.apache.spark.sql.functions.lit(maxMapSize))
-  }
-
-  def freqItems(spark: SparkSession, sketch: Column, minCount: Long): Column = {
-    register(spark)
-    call_function("graft_freq_items", sketch,
-      org.apache.spark.sql.functions.lit(minCount))
-  }
+  def freqItems(sketch: Column, minCount: Long): Column =
+    column(FreqItems(expression(sketch), minCount))
 }

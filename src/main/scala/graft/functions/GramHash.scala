@@ -1,10 +1,12 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.graftbridge.SparkBridge.{column, expression}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.charset.StandardCharsets
@@ -132,38 +134,12 @@ case class WordNgramHashes(child: Expression, n: Int)
 }
 
 object GramHashFunctions {
-  import org.apache.spark.sql.{Column, SparkSession}
-  import org.apache.spark.sql.catalyst.expressions.Literal
-  import org.apache.spark.sql.functions.{call_function, lit}
+  private[graft] val sqlFunctions: Seq[SqlFunction] = Seq(
+    SqlFunction.of[WordNgramHashes]("graft_word_ngram_hashes", 2)(e =>
+      WordNgramHashes(e(0), SqlFunction.intArg("graft_word_ngram_hashes", "n", e(1)))))
 
-  /** Builder shared by the per-session registry and GraftExtensions:
-    * second argument must be a foldable integer (the gram length).
-    */
-  private[graft] val builder: Seq[Expression] => Expression = exprs => {
-    graft.GraftExtensions.requireArity("graft_word_ngram_hashes", exprs, 2)
-    val n = exprs(1) match {
-      case e if e.foldable && Seq(org.apache.spark.sql.types.ByteType,
-          org.apache.spark.sql.types.ShortType, IntegerType,
-          LongType).contains(e.dataType) =>
-        Option(Literal.create(e.eval(), e.dataType).value)
-          .map(_.asInstanceOf[Number].intValue()).getOrElse(
-            throw new IllegalArgumentException(
-              "graft_word_ngram_hashes: n must not be NULL"))
-      case other => throw new IllegalArgumentException(
-        s"graft_word_ngram_hashes: n must be a foldable integer, got $other")
-    }
-    WordNgramHashes(exprs.head, n)
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_word_ngram_hashes", builder, "built-in")
-
-  /** Column form over the active session (registers on first use). */
-  def wordNgramHashes(text: Column, n: Int): Column = {
-    register(SparkSession.active)
-    call_function("graft_word_ngram_hashes", text, lit(n))
-  }
+  def wordNgramHashes(text: Column, n: Int): Column =
+    column(WordNgramHashes(expression(text), n))
 }
 
 /** Compiled kernel for md5 word-n-gram identities (exact-substring
@@ -243,33 +219,10 @@ case class WordGramMd5(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object GramMd5Functions {
-  import org.apache.spark.sql.{Column, SparkSession}
-  import org.apache.spark.sql.catalyst.expressions.Literal
-  import org.apache.spark.sql.functions.{call_function, lit}
+  private[graft] val sqlFunctions: Seq[SqlFunction] = Seq(
+    SqlFunction.of[WordGramMd5]("graft_word_gram_md5", 2)(e =>
+      WordGramMd5(e(0), SqlFunction.intArg("graft_word_gram_md5", "n", e(1)))))
 
-  private[graft] val builder: Seq[Expression] => Expression = exprs => {
-    graft.GraftExtensions.requireArity("graft_word_gram_md5", exprs, 2)
-    val n = exprs(1) match {
-      case e if e.foldable && Seq(org.apache.spark.sql.types.ByteType,
-          org.apache.spark.sql.types.ShortType, IntegerType,
-          LongType).contains(e.dataType) =>
-        Option(Literal.create(e.eval(), e.dataType).value)
-          .map(_.asInstanceOf[Number].intValue()).getOrElse(
-            throw new IllegalArgumentException(
-              "graft_word_gram_md5: n must not be NULL"))
-      case other => throw new IllegalArgumentException(
-        s"graft_word_gram_md5: n must be a foldable integer, got $other")
-    }
-    WordGramMd5(exprs.head, n)
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_word_gram_md5", builder, "built-in")
-
-  /** Column form over the active session (registers on first use). */
-  def wordGramMd5(text: Column, n: Int): Column = {
-    register(SparkSession.active)
-    call_function("graft_word_gram_md5", text, lit(n))
-  }
+  def wordGramMd5(text: Column, n: Int): Column =
+    column(WordGramMd5(expression(text), n))
 }

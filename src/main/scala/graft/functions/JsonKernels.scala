@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.graftbridge.SparkBridge.{column, expression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -325,25 +326,15 @@ case class GraftJsonLongExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registry + Column surface (same pattern as TextKernelFunctions). */
+/** SQL entry + Column surface (same pattern as TextKernelFunctions). */
 object JsonKernelFunctions {
-  import org.apache.spark.sql.{Column, SparkSession}
-  import org.apache.spark.sql.functions.{call_function, lit}
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.catalyst.expressions.Literal
 
-  private[graft] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_json_long" -> { exprs =>
-      graft.GraftExtensions.requireArity("graft_json_long", exprs, 2)
-      GraftJsonLongExpr(exprs.head, exprs(1))
-    })
-
-  def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
-    }
+  private[graft] val sqlFunctions: Seq[SqlFunction] = Seq(
+    SqlFunction.of[GraftJsonLongExpr]("graft_json_long", 2)(e => GraftJsonLongExpr(e(0), e(1))))
 
   /** Top-level `key` of the json column as a nullable long. */
-  def jsonLong(json: Column, key: String): Column = {
-    register(SparkSession.active)
-    call_function("graft_json_long", json, lit(key))
-  }
+  def jsonLong(json: Column, key: String): Column =
+    column(GraftJsonLongExpr(expression(json), Literal(key)))
 }

@@ -6,9 +6,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.graftbridge.SparkBridge.{column, expression}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.Column
 
 /** Mergeable quantile sketches (KLL, Karnin-Lang-Liberty FOCS'16) —
   * the quantile complement to the theta-distinct family: exact
@@ -144,74 +144,45 @@ object KllFunctions {
   private[functions] def checkK(k: Int): Unit =
     require(k >= 8 && k <= MaxK, s"kll k must be in [8, $MaxK], got $k")
 
-  private def kArg(name: String, exprs: Seq[Expression]): Int = {
-    if (exprs.length < 1 || exprs.length > 2)
-      throw new IllegalArgumentException(
-        s"$name takes (col[, k]), got ${exprs.length} args")
-    if (exprs.length == 2) FreqFunctions.intLit(name, "k", exprs(1))
-    else DefaultK
-  }
+  private def kArg(name: String, exprs: Seq[Expression]): Int =
+    if (exprs.length == 2) SqlFunction.intArg(name, "k", exprs(1)) else DefaultK
 
-  private[graft] def sketchBuilder(exprs: Seq[Expression]): Expression =
-    KllSketchBuild(exprs.head, kArg("graft_kll_sketch", exprs))
-      .toAggregateExpression()
+  private[graft] val sqlFunctions: Seq[SqlFunction] = Seq(
+    SqlFunction.of[KllSketchBuild]("graft_kll_sketch", 1, 2)(e =>
+      KllSketchBuild(e.head, kArg("graft_kll_sketch", e)).toAggregateExpression()),
+    SqlFunction.of[KllSketchMerge]("graft_kll_union", 1, 2)(e =>
+      KllSketchMerge(e.head, kArg("graft_kll_union", e)).toAggregateExpression()),
+    SqlFunction.of[KllQuantile]("graft_kll_quantile", 2)(e =>
+      KllQuantile(e.head, quantileArg(e(1)))))
 
-  private[graft] def unionBuilder(exprs: Seq[Expression]): Expression =
-    KllSketchMerge(exprs.head, kArg("graft_kll_union", exprs))
-      .toAggregateExpression()
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_kll_sketch", sketchBuilder, "built-in")
-    reg.createOrReplaceTempFunction("graft_kll_union", unionBuilder, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_kll_quantile", quantileBuilder, "built-in")
-  }
-
-  /** Shared builder (per-session registry AND session extensions):
-    * validates the rank literal at ANALYSIS time, not per row on the
-    * executors.
+  /** The rank literal, validated at ANALYSIS time, not per row on the
+    * executors. Foldable, not only a Literal: the builder runs before
+    * constant folding, so CAST(0.5 AS DOUBLE) arrives unfolded.
     */
-  private[graft] def quantileBuilder(
-      exprs: Seq[Expression]): Expression = {
-    graft.GraftExtensions.requireArity("graft_kll_quantile", exprs, 2)
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    // NULL literals carry NumericType too — match them before extracting,
-    // and fold foldable-but-unfolded shapes (CAST(0.5 AS DOUBLE)) since
-    // this builder runs before constant folding.
-    val q = exprs(1) match {
-      case Literal(null, _) => throw new IllegalArgumentException(
-        "graft_kll_quantile: q must be a numeric literal, got NULL")
-      case Literal(v, _: NumericType) => v.toString.toDouble
-      case e if e.foldable && e.dataType.isInstanceOf[NumericType] =>
-        e.eval() match {
-          case null => throw new IllegalArgumentException(
-            "graft_kll_quantile: q must be a numeric literal, got NULL")
-          case v => v.toString.toDouble
-        }
-      case other => throw new IllegalArgumentException(
-        s"graft_kll_quantile: q must be a numeric literal, got $other")
-    }
+  private def quantileArg(arg: Expression): Double = {
+    def fail(got: Any): Nothing = throw new IllegalArgumentException(
+      s"graft_kll_quantile: q must be a numeric literal, got $got")
+    val v = if (arg.foldable) arg.eval() else fail(arg)
+    if (v == null) fail("NULL")
+    if (!arg.dataType.isInstanceOf[NumericType]) fail(arg)
+    checkQ(v.toString.toDouble)
+  }
+
+  private def checkQ(q: Double): Double = {
     // NaN compares false against both bounds, so reject it explicitly —
     // otherwise CAST('NaN' AS DOUBLE) reaches getQuantile at runtime
     if (q.isNaN || q < 0.0 || q > 1.0)
       throw new IllegalArgumentException(
         s"graft_kll_quantile: q must be in [0, 1], got $q")
-    KllQuantile(exprs.head, q)
+    q
   }
 
-  def kllSketch(spark: SparkSession, c: Column, k: Int = DefaultK): Column = {
-    register(spark)
-    call_function("graft_kll_sketch", c, org.apache.spark.sql.functions.lit(k))
-  }
+  def kllSketch(c: Column, k: Int = DefaultK): Column =
+    column(KllSketchBuild(expression(c), k).toAggregateExpression())
 
-  def kllUnion(spark: SparkSession, c: Column, k: Int = DefaultK): Column = {
-    register(spark)
-    call_function("graft_kll_union", c, org.apache.spark.sql.functions.lit(k))
-  }
+  def kllUnion(c: Column, k: Int = DefaultK): Column =
+    column(KllSketchMerge(expression(c), k).toAggregateExpression())
 
-  def kllQuantile(spark: SparkSession, sketch: Column, q: Double): Column = {
-    register(spark)
-    call_function("graft_kll_quantile", sketch, org.apache.spark.sql.functions.lit(q))
-  }
+  def kllQuantile(sketch: Column, q: Double): Column =
+    column(KllQuantile(expression(sketch), checkQ(q)))
 }

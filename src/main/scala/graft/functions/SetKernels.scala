@@ -4,9 +4,9 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.SparkBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.Column
 
 /** Sorted-set kernels for the pair-verification hot loop.
   *
@@ -124,20 +124,12 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session-registry Column front end (same shape as
-  * [[TextKernelFunctions]] / [[VectorFunctions]]: the name resolves
-  * from both the Column API and SQL text).
-  */
+/** SQL entry + Column surface (same pattern as [[TextKernelFunctions]]). */
 object SetKernelFunctions {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_intersect_count", exprs => {
-        graft.GraftExtensions.requireArity("graft_sorted_intersect_count", exprs, 2)
-        SortedIntersectCount(exprs.head, exprs(1))
-      }, "built-in")
+  private[graft] val sqlFunctions: Seq[SqlFunction] = Seq(
+    SqlFunction.of[SortedIntersectCount]("graft_sorted_intersect_count", 2)(e =>
+      SortedIntersectCount(e(0), e(1))))
 
-  def sortedIntersectCount(a: Column, b: Column): Column = {
-    register(SparkSession.active)
-    call_function("graft_sorted_intersect_count", a, b)
-  }
+  def sortedIntersectCount(a: Column, b: Column): Column =
+    column(SortedIntersectCount(expression(a), expression(b)))
 }

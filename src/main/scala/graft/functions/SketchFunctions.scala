@@ -5,9 +5,9 @@ import org.apache.datasketches.theta.{CompactSketch, SetOperation, Union}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.graftbridge.SparkBridge.{column, expression}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Approximate distinct count as a mergeable Theta sketch — a custom
@@ -198,66 +198,32 @@ case class ThetaSketchMerge(
 }
 
 object SketchFunctions {
-  /** name → SQL expression builder, shared by the per-session
-    * `register` (embedded use) and `GraftExtensions` (cluster-wide
-    * `--conf spark.sql.extensions` deployment). Every function takes
-    * an optional trailing lgK int literal.
-    */
-  private def arity12(name: String, exprs: Seq[Expression]): Int = {
-    if (exprs.length < 1 || exprs.length > 2)
-      throw new IllegalArgumentException(
-        s"$name takes (col[, lgK]), got ${exprs.length} args")
-    if (exprs.length == 2) FreqFunctions.intLit(name, "lgK", exprs(1))
-    else ThetaLg.Default
-  }
 
-  private[graft] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_theta_distinct" -> { exprs =>
-      val lgK = arity12("graft_theta_distinct", exprs)
-      ThetaSketchDistinct(exprs.head, lgK).toAggregateExpression()
-    },
-    "graft_theta_sketch" -> { exprs =>
-      val lgK = arity12("graft_theta_sketch", exprs)
-      ThetaSketchBuild(exprs.head, lgK).toAggregateExpression()
-    },
-    "graft_theta_union" -> { exprs =>
-      val lgK = arity12("graft_theta_union", exprs)
-      ThetaSketchMerge(exprs.head, emitBinary = false, lgK).toAggregateExpression()
-    },
-    "graft_theta_union_sketch" -> { exprs =>
-      val lgK = arity12("graft_theta_union_sketch", exprs)
-      ThetaSketchMerge(exprs.head, emitBinary = true, lgK).toAggregateExpression()
-    },
-  )
+  /** Every theta function takes an optional trailing lgK int literal. */
+  private def lgKArg(name: String, exprs: Seq[Expression]): Int =
+    if (exprs.length == 2) SqlFunction.intArg(name, "lgK", exprs(1)) else ThetaLg.Default
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
-    }
-  }
+  private[graft] val sqlFunctions: Seq[SqlFunction] = Seq(
+    SqlFunction.of[ThetaSketchDistinct]("graft_theta_distinct", 1, 2)(e =>
+      ThetaSketchDistinct(e.head, lgKArg("graft_theta_distinct", e)).toAggregateExpression()),
+    SqlFunction.of[ThetaSketchBuild]("graft_theta_sketch", 1, 2)(e =>
+      ThetaSketchBuild(e.head, lgKArg("graft_theta_sketch", e)).toAggregateExpression()),
+    SqlFunction.of[ThetaSketchMerge]("graft_theta_union", 1, 2)(e =>
+      ThetaSketchMerge(e.head, emitBinary = false, lgKArg("graft_theta_union", e))
+        .toAggregateExpression()),
+    SqlFunction.of[ThetaSketchMerge]("graft_theta_union_sketch", 1, 2)(e =>
+      ThetaSketchMerge(e.head, emitBinary = true, lgKArg("graft_theta_union_sketch", e))
+        .toAggregateExpression()))
 
-  def thetaDistinct(spark: SparkSession, c: Column,
-      lgK: Int = ThetaLg.Default): Column = {
-    register(spark)
-    call_function("graft_theta_distinct", c, lit(lgK))
-  }
+  def thetaDistinct(c: Column, lgK: Int = ThetaLg.Default): Column =
+    column(ThetaSketchDistinct(expression(c), lgK).toAggregateExpression())
 
-  def thetaSketch(spark: SparkSession, c: Column,
-      lgK: Int = ThetaLg.Default): Column = {
-    register(spark)
-    call_function("graft_theta_sketch", c, lit(lgK))
-  }
+  def thetaSketch(c: Column, lgK: Int = ThetaLg.Default): Column =
+    column(ThetaSketchBuild(expression(c), lgK).toAggregateExpression())
 
-  def thetaUnion(spark: SparkSession, c: Column,
-      lgK: Int = ThetaLg.Default): Column = {
-    register(spark)
-    call_function("graft_theta_union", c, lit(lgK))
-  }
+  def thetaUnion(c: Column, lgK: Int = ThetaLg.Default): Column =
+    column(ThetaSketchMerge(expression(c), emitBinary = false, lgK).toAggregateExpression())
 
-  def thetaUnionSketch(spark: SparkSession, c: Column,
-      lgK: Int = ThetaLg.Default): Column = {
-    register(spark)
-    call_function("graft_theta_union_sketch", c, lit(lgK))
-  }
+  def thetaUnionSketch(c: Column, lgK: Int = ThetaLg.Default): Column =
+    column(ThetaSketchMerge(expression(c), emitBinary = true, lgK).toAggregateExpression())
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftbridge.SparkBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -13,8 +14,9 @@ import java.security.MessageDigest
 /** Compiled kernels for the dedup operators' hot text loops —
   * minhash signatures, shingle hash sets, char n-gram sets, simhash.
   * Each is the byte-identical compiled form of a documented
-  * HOF-expression construction in graft.operators.Dedup (kept there
-  * as executable specifications; OperatorSpec asserts agreement),
+  * HOF-expression construction (kept in the test tree's
+  * `ReferenceForms` as executable specifications; OperatorSpec asserts
+  * agreement),
   * which is also why the DuckDB oracles keep matching: the math is
   * unchanged, only the evaluation strategy moves from per-element
   * interpreted lambda dispatch to one JIT'd loop per row.
@@ -396,93 +398,30 @@ case class SimHashExpr(child: Expression) extends TextKernelExpr {
     copy(child = newChild)
 }
 
-/** Registry + Column surface for the text kernels (same pattern as
-  * GramHashFunctions: per-session registry for embedded use,
-  * GraftExtensions for cluster-wide SQL).
-  */
+/** SQL entries + Column surface for the text kernels. */
 object TextKernelFunctions {
-  import org.apache.spark.sql.{Column, SparkSession}
-  import org.apache.spark.sql.functions.{call_function, lit}
+  import org.apache.spark.sql.Column
 
-  private def foldableInt(name: String, e: Expression): Int = e match {
-    case x if x.foldable && Seq[DataType](org.apache.spark.sql.types.ByteType,
-        org.apache.spark.sql.types.ShortType, org.apache.spark.sql.types.IntegerType,
-        LongType).contains(x.dataType) =>
-      Option(x.eval()).map(_.asInstanceOf[Number].intValue()).getOrElse(
-        throw new IllegalArgumentException(s"$name: argument must not be NULL"))
-    case other => throw new IllegalArgumentException(
-      s"$name: expected a foldable integer argument, got $other")
-  }
+  private[graft] val sqlFunctions: Seq[SqlFunction] = Seq(
+    SqlFunction.of[MinhashSignatureExpr]("graft_minhash_signature", 2)(e =>
+      MinhashSignatureExpr(e(0), SqlFunction.intArg("graft_minhash_signature", "k", e(1)))),
+    SqlFunction.of[ShingleHashesExpr]("graft_shingle_hashes", 1)(e => ShingleHashesExpr(e(0))),
+    SqlFunction.of[CharNgramsExpr]("graft_char_ngrams", 2)(e =>
+      CharNgramsExpr(e(0), SqlFunction.intArg("graft_char_ngrams", "n", e(1)))),
+    SqlFunction.of[SimHashExpr]("graft_simhash", 1)(e => SimHashExpr(e(0))),
+    SqlFunction.of[FingerprintExpr]("graft_fingerprint", 1)(e => FingerprintExpr(e(0))),
+    SqlFunction.of[RepetitionStatsExpr]("graft_repetition_stats", 1)(e =>
+      RepetitionStatsExpr(e(0))),
+    SqlFunction.of[WordTfExpr]("graft_word_tf", 1)(e => WordTfExpr(e(0))),
+    SqlFunction.of[TextStatsExpr]("graft_text_stats", 1)(e => TextStatsExpr(e(0))))
 
-  private[graft] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_minhash_signature" -> { exprs =>
-      graft.GraftExtensions.requireArity("graft_minhash_signature", exprs, 2)
-      MinhashSignatureExpr(exprs.head, foldableInt("graft_minhash_signature", exprs(1)))
-    },
-    "graft_shingle_hashes" -> { exprs =>
-      graft.GraftExtensions.requireArity("graft_shingle_hashes", exprs, 1)
-      ShingleHashesExpr(exprs.head)
-    },
-    "graft_char_ngrams" -> { exprs =>
-      graft.GraftExtensions.requireArity("graft_char_ngrams", exprs, 2)
-      CharNgramsExpr(exprs.head, foldableInt("graft_char_ngrams", exprs(1)))
-    },
-    "graft_simhash" -> { exprs =>
-      graft.GraftExtensions.requireArity("graft_simhash", exprs, 1)
-      SimHashExpr(exprs.head)
-    },
-    "graft_fingerprint" -> { exprs =>
-      graft.GraftExtensions.requireArity("graft_fingerprint", exprs, 1)
-      FingerprintExpr(exprs.head)
-    },
-    "graft_repetition_stats" -> { exprs =>
-      graft.GraftExtensions.requireArity("graft_repetition_stats", exprs, 1)
-      RepetitionStatsExpr(exprs.head)
-    },
-    "graft_word_tf" -> { exprs =>
-      graft.GraftExtensions.requireArity("graft_word_tf", exprs, 1)
-      WordTfExpr(exprs.head)
-    },
-    "graft_text_stats" -> { exprs =>
-      graft.GraftExtensions.requireArity("graft_text_stats", exprs, 1)
-      TextStatsExpr(exprs.head)
-    })
-
-  def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
-    }
-
-  def minhashSignature(text: Column, k: Int): Column = {
-    register(SparkSession.active)
-    call_function("graft_minhash_signature", text, lit(k))
-  }
-  def shingleHashes(text: Column): Column = {
-    register(SparkSession.active)
-    call_function("graft_shingle_hashes", text)
-  }
-  def charNgrams(text: Column, n: Int): Column = {
-    register(SparkSession.active)
-    call_function("graft_char_ngrams", text, lit(n))
-  }
-  def simhash(text: Column): Column = {
-    register(SparkSession.active)
-    call_function("graft_simhash", text)
-  }
-  def fingerprint(text: Column): Column = {
-    register(SparkSession.active)
-    call_function("graft_fingerprint", text)
-  }
-  def repetitionStats(text: Column): Column = {
-    register(SparkSession.active)
-    call_function("graft_repetition_stats", text)
-  }
-  def wordTf(text: Column): Column = {
-    register(SparkSession.active)
-    call_function("graft_word_tf", text)
-  }
-  def textStats(text: Column): Column = {
-    register(SparkSession.active)
-    call_function("graft_text_stats", text)
-  }
+  def minhashSignature(text: Column, k: Int): Column =
+    column(MinhashSignatureExpr(expression(text), k))
+  def shingleHashes(text: Column): Column = column(ShingleHashesExpr(expression(text)))
+  def charNgrams(text: Column, n: Int): Column = column(CharNgramsExpr(expression(text), n))
+  def simhash(text: Column): Column = column(SimHashExpr(expression(text)))
+  def fingerprint(text: Column): Column = column(FingerprintExpr(expression(text)))
+  def repetitionStats(text: Column): Column = column(RepetitionStatsExpr(expression(text)))
+  def wordTf(text: Column): Column = column(WordTfExpr(expression(text)))
+  def textStats(text: Column): Column = column(TextStatsExpr(expression(text)))
 }

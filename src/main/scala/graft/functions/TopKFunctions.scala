@@ -5,9 +5,9 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graftbridge.SparkBridge.{column, expression}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** Bounded top-k as a MERGEABLE aggregate — the missing piece that
   * makes per-probe nearest-neighbor ranking scale.
@@ -44,7 +44,7 @@ import org.apache.spark.sql.{Column, SparkSession}
   * `posexplode` recovers (rank, cand_id, sim).
   *
   * No reference analog (the reference ships no similarity search);
-  * extension tier per SURVEY §7.5, same registry pattern as
+  * extension tier per SURVEY §7.5, same `sqlFunctions` table as
   * SketchFunctions / FreqFunctions / KllFunctions.
   */
 object TopKFunctions {
@@ -815,7 +815,7 @@ object TopKFunctions {
       StructField("cand_key", key.dataType, nullable = false),
       StructField("sim", DoubleType, nullable = false))), containsNull = false)
 
-    private val isString = key.dataType == StringType
+    private lazy val isString = key.dataType == StringType
 
     override def checkInputDataTypes(): TypeCheckResult = {
       val simOk = sim.dataType match {
@@ -963,32 +963,16 @@ object TopKFunctions {
       copy(sim = newChildren(0), key = newChildren(1))
   }
 
-  private[graft] def topKBuilder(exprs: Seq[Expression]): Expression = {
-    graft.GraftExtensions.requireArity("graft_top_k", exprs, 3)
-    TopKAgg(exprs(0), exprs(1),
-      FreqFunctions.intLit("graft_top_k", "k", exprs(2))).toAggregateExpression()
-  }
+  private[graft] val sqlFunctions: Seq[SqlFunction] = Seq(
+    SqlFunction.of[TopKAgg]("graft_top_k", 3)(e =>
+      TopKAgg(e(0), e(1), SqlFunction.intArg("graft_top_k", "k", e(2))).toAggregateExpression()),
+    SqlFunction.of[TopKKeyAgg]("graft_top_k_key", 3)(e =>
+      TopKKeyAgg(e(0), e(1), SqlFunction.intArg("graft_top_k_key", "k", e(2)))
+        .toAggregateExpression()))
 
-  private[graft] def topKKeyBuilder(exprs: Seq[Expression]): Expression = {
-    graft.GraftExtensions.requireArity("graft_top_k_key", exprs, 3)
-    TopKKeyAgg(exprs(0), exprs(1),
-      FreqFunctions.intLit("graft_top_k_key", "k", exprs(2))).toAggregateExpression()
-  }
+  def topK(sim: Column, id: Column, k: Int): Column =
+    column(TopKAgg(expression(sim), expression(id), k).toAggregateExpression())
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_top_k", topKBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_top_k_key", topKKeyBuilder, "built-in")
-  }
-
-  def topK(spark: SparkSession, sim: Column, id: Column, k: Int): Column = {
-    register(spark)
-    call_function("graft_top_k", sim, id, lit(k))
-  }
-
-  def topKKey(spark: SparkSession, sim: Column, key: Column, k: Int): Column = {
-    register(spark)
-    call_function("graft_top_k_key", sim, key, lit(k))
-  }
+  def topKKey(sim: Column, key: Column, k: Int): Column =
+    column(TopKKeyAgg(expression(sim), expression(key), k).toAggregateExpression())
 }

@@ -5,8 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.SparkBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Embedding-vector kernels.
@@ -213,28 +214,10 @@ case class Norm2(child: Expression)
 
 object VectorFunctions {
 
-  /** Registers `graft_cosine` / `graft_dot` in the session's function
-    * registry so they resolve from both the Column API (via
-    * `call_function`) and SQL text.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_cosine", exprs => {
-        graft.GraftExtensions.requireArity("graft_cosine", exprs, 2)
-        CosineSimilarity(exprs.head, exprs(1))
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_dot", exprs => {
-        graft.GraftExtensions.requireArity("graft_dot", exprs, 2)
-        DotProduct(exprs.head, exprs(1))
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_norm2", exprs => {
-        graft.GraftExtensions.requireArity("graft_norm2", exprs, 1)
-        Norm2(exprs.head)
-      }, "built-in")
-  }
+  private[graft] val sqlFunctions: Seq[SqlFunction] = Seq(
+    SqlFunction.of[CosineSimilarity]("graft_cosine", 2)(e => CosineSimilarity(e(0), e(1))),
+    SqlFunction.of[DotProduct]("graft_dot", 2)(e => DotProduct(e(0), e(1))),
+    SqlFunction.of[Norm2]("graft_norm2", 1)(e => Norm2(e(0))))
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
@@ -242,15 +225,9 @@ object VectorFunctions {
     * natively (exact widening inside the kernel loop — no per-row
     * array<double> materialization); see [[VectorKernel]].
     */
-  def cosine(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_cosine", a, b)
-  }
+  def cosine(a: Column, b: Column): Column = column(CosineSimilarity(expression(a), expression(b)))
 
-  def dot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_dot", a, b)
-  }
+  def dot(a: Column, b: Column): Column = column(DotProduct(expression(a), expression(b)))
 
   /** L2 norm via built-ins (used rarely; not on the hot path). */
   def l2Norm(c: Column): Column =
@@ -260,8 +237,5 @@ object VectorFunctions {
     * [[Norm2]]); pair scorers combine it with [[dot]] for a one-loop
     * per-pair kernel that is bit-identical to [[cosine]].
     */
-  def norm2(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function("graft_norm2", c)
-  }
+  def norm2(c: Column): Column = column(Norm2(expression(c)))
 }

@@ -37,12 +37,11 @@ import org.apache.spark.sql.functions._
 object Clustering {
 
   /** Quantized-argmin cluster id of `vec` against literal centroids. */
-  private def assignExpr(spark: org.apache.spark.sql.SparkSession,
-      vec: Column, centroids: Array[Seq[Double]]): Column = {
+  private def assignExpr(vec: Column, centroids: Array[Seq[Double]]): Column = {
     val scored = array(centroids.zipWithIndex.map { case (c, j) =>
       val n2 = c.map(x => x * x).sum // left-to-right, replayed verbatim in SQL
       struct(
-        floor((lit(n2) - lit(2.0) * VectorFunctions.dot(spark, vec, typedlit(c)))
+        floor((lit(n2) - lit(2.0) * VectorFunctions.dot(vec, typedlit(c)))
           * lit(1e6)).cast("long").as("qd"),
         lit(j).as("cid"))
     }.toSeq: _*)
@@ -55,9 +54,9 @@ object Clustering {
     * Partial aggregation keeps the shuffle at partitions × k × dim
     * rows; the k × dim collect is metadata.
     */
-  private def updateOnce(spark: org.apache.spark.sql.SparkSession,
+  private def updateOnce(
       vecs: DataFrame, centroids: Array[Seq[Double]]): Array[Seq[Double]] = {
-    val means = vecs.withColumn("cluster", assignExpr(spark, col("v"), centroids))
+    val means = vecs.withColumn("cluster", assignExpr(col("v"), centroids))
       .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
       .groupBy("cluster", "dim").agg(avg(col("x")).as("m"))
       .collect()
@@ -71,12 +70,11 @@ object Clustering {
   private def trainedAfter(emb: DataFrame, idCol: String, vecCol: String,
       k: Int, updates: Int): (DataFrame, Array[Seq[Double]]) = {
     require(k >= 1 && updates >= 0, "k must be positive, updates non-negative")
-    val spark = emb.sparkSession
     val vecs = emb.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
     // seed: first k vectors by id — deterministic, engine-portable
     var centroids: Array[Seq[Double]] = vecs.orderBy(col("id")).limit(k)
       .select(col("v")).collect().map(_.getSeq[Double](0))
-    for (_ <- 1 to updates) centroids = updateOnce(spark, vecs, centroids)
+    for (_ <- 1 to updates) centroids = updateOnce(vecs, centroids)
     (vecs, centroids)
   }
 
@@ -93,7 +91,7 @@ object Clustering {
     require(iters >= 1, "iters must be positive")
     val (vecs, centroids) = trainedAfter(emb, idCol, vecCol, k, iters - 1)
     vecs.select(col("id").as(idCol),
-      assignExpr(emb.sparkSession, col("v"), centroids).as("cluster"))
+      assignExpr(col("v"), centroids).as("cluster"))
   }
 
   /** The trained centroids themselves: `iters` full Lloyd updates from

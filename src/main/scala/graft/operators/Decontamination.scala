@@ -47,27 +47,6 @@ object Decontamination {
   private[graft] val P1 = 31L
   private[graft] val P2 = 37L
 
-  /** 30-bit md5-derived word value — the per-word unit of gram
-    * hashing. ONE md5 per word replaces one md5 per GRAM over an
-    * n-word string: ~n× less hashing and zero gram-string
-    * materialization, the dominant cost of the n-gram scan.
-    */
-  private def wordVal30(w: Column): Column =
-    conv(substring(md5(w), 1, 8), 16, 10).cast("long")
-      .bitwiseAND(lit((1L << 30) - 1))
-
-  /** h1/h2 polynomial fold over a slice of word values, combined to a
-    * 60-bit hash (h1 · 2^30 + h2).
-    */
-  private def gramFold(sub: Column): Column = {
-    val folded = aggregate(sub,
-      struct(lit(0L).as("h1"), lit(0L).as("h2")),
-      (acc, v) => struct(
-        pmod(acc.getField("h1") * lit(P1) + v, lit(M1)).as("h1"),
-        pmod(acc.getField("h2") * lit(P2) + v, lit(M2)).as("h2")))
-    folded.getField("h1") * lit(1L << 30) + folded.getField("h2")
-  }
-
   /** 60-bit hashes of a text's word n-grams (degenerate short texts
     * fold the whole word list). Equal word sequences hash equal —
     * the verbatim-overlap contract of decontamination — without ever
@@ -77,24 +56,13 @@ object Decontamination {
     * (graft.functions.GramHashKernel): O(words) per document instead
     * of the expression form's O(words × n) slice re-folds, with no
     * per-element interpreter dispatch — measured ~3× on the sf0.1
-    * corpus scan. `gramFoldExpr` below keeps the reference expression
-    * form; OperatorSpec asserts the two agree, which is also the
-    * kernel-vs-oracle agreement proof (the oracle replays the
-    * expression form's fresh folds in DuckDB).
+    * corpus scan. The test tree's `ReferenceForms.wordNgramHashesExpr`
+    * keeps the reference expression form; OperatorSpec asserts the two
+    * agree, which is also the kernel-vs-oracle agreement proof (the
+    * oracle replays the expression form's fresh folds in DuckDB).
     */
   def wordNgramHashes(text: Column, n: Int): Column =
     graft.functions.GramHashFunctions.wordNgramHashes(text, n)
-
-  /** The HOF-expression reference form of wordNgramHashes — same math,
-    * fresh fold per gram. Kept as the executable specification the
-    * kernel is property-tested against.
-    */
-  private[graft] def wordNgramHashesExpr(text: Column, n: Int): Column = {
-    val vals = transform(TextAnalysis.words(text), w => wordVal30(w))
-    when(size(vals) < n, array(gramFold(vals))).otherwise(
-      transform(sequence(lit(1), size(vals) - (n - 1)), i =>
-        gramFold(slice(vals, i, lit(n)))))
-  }
 
   /** The distinct n-gram hash set of a benchmark corpus — build once,
     * reuse across corpus scans (callers may persist or write it out).

@@ -202,10 +202,11 @@ object Dedup {
     * values to be unique (true for document ids);
     * minhashSignaturesByKey is the grouped form for coarser keys.
     *
-    * `perRowSignaturesExpr` keeps the HOF-expression reference form —
-    * the executable specification the kernel is property-tested
-    * against (OperatorSpec), which is also the kernel-vs-oracle
-    * agreement proof (the DuckDB oracles replay the expression math).
+    * The test tree's `ReferenceForms.perRowSignaturesExpr` keeps the
+    * HOF-expression reference form — the executable specification the
+    * kernel is property-tested against (OperatorSpec), which is also
+    * the kernel-vs-oracle agreement proof (the DuckDB oracles replay
+    * the expression math).
     */
   private def perRowSignatures(docs: DataFrame, keyCol: String, textCol: String, k: Int): DataFrame = {
     require(k >= 1 && k <= 64, "k must be in [1, 64] (a + 63*b is the signed-64 overflow bound)")
@@ -216,25 +217,6 @@ object Dedup {
       .select(col("id").as(keyCol) +: (0 until k).map(j =>
         element_at(col("sig"), j + 1).as(s"mh$j")): _*)
   }
-
-  /** HOF-expression reference form of perRowSignatures (same hex
-    * slicing, same Kirsch–Mitzenmacher arithmetic, min-reduced with
-    * array expressions) — kept as the spec the kernel is tested
-    * against. The three projections stay separate because each alias
-    * is non-cheap and multi-referenced (CollapseProject leaves them),
-    * so every md5 runs exactly once per row.
-    */
-  private[graft] def perRowSignaturesExpr(
-      docs: DataFrame, keyCol: String, textCol: String, k: Int): DataFrame =
-    docs.select(col(keyCol).as("id"), col(textCol).as("t"))
-      .where(col("t").isNotNull)
-      .select(col("id"), transform(shingles(col("t")), s => md5(s)).as("hx"))
-      .select(col("id"), transform(col("hx"), h => struct(
-        conv(substring(h, 1, 15), 16, 10).cast("long").as("a"),
-        conv(substring(h, 17, 14), 16, 10).cast("long").as("b"))).as("ab"))
-      .select(col("id").as(keyCol) +: (0 until k).map(j =>
-        array_min(transform(col("ab"), p =>
-          (p("a") + lit(j.toLong) * p("b")).bitwiseAND(lit(MinhashMask)))).as(s"mh$j")): _*)
 
   /** MinHash signature per arbitrary entity key (document, source,
     * domain, …). Because a minhash union is an elementwise min, the
@@ -402,34 +384,6 @@ object Dedup {
       .select(col("id"),
         graft.functions.TextKernelFunctions.simhash(col("t")).as("simhash"))
 
-  /** HOF-expression reference form of the simhash sketch (the word
-    * values materialized once, 16 packed two-lane folds, the
-    * 2·s_i > n identity) — the executable spec the kernel is tested
-    * against.
-    */
-  private[graft] def simhashTableExpr(
-      docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val v = docs.select(col(idCol).as("id"), col(textCol).as("t"))
-      .where(col("t").isNotNull)
-      .select(col("id"),
-        transform(TextAnalysis.words(col("t")), w => TextAnalysis.wordValue(w)).as("vals"))
-    val lanes = (0 until 16).map { i =>
-      aggregate(col("vals"), lit(0L), (acc, x) =>
-        acc + shiftright(x, i).bitwiseAND(lit(1L)) +
-          shiftleft(shiftright(x, i + 16).bitwiseAND(lit(1L)), 32)).as(s"p$i")
-    }
-    val withLanes = v.select(
-      col("id") +: size(col("vals")).cast("long").as("n") +: lanes: _*)
-    val mask = lit((1L << 32) - 1)
-    withLanes.select(col("id"),
-      (0 until 16).map { i =>
-        val sLo = col(s"p$i").bitwiseAND(mask)
-        val sHi = shiftright(col(s"p$i"), 32)
-        when(sLo * 2 > col("n"), lit(1L << i)).otherwise(lit(0L)) +
-          when(sHi * 2 > col("n"), lit(1L << (i + 16))).otherwise(lit(0L))
-      }.reduce(_ + _).as("simhash"))
-  }
-
   /** SimHash near-dup candidates: block on the top byte, then exact
     * Hamming ≤ `maxHamming` via popcount(xor). Integer-only.
     */
@@ -547,14 +501,15 @@ object Dedup {
   /** Broadcast fast path for the candidate-VERIFICATION regime —
     * pairs (and therefore the docs they touch) small enough to
     * broadcast, which LSH/blocking candidate sets are by
-    * construction. Plan: semi-join-prune the element sets to the
-    * paired ids, broadcast the pruned (id, elems, n) table once
-    * (ReuseExchange dedups the two identical broadcast subplans), and
-    * compute each pair's intersection with the sorted-merge count
-    * kernel ([[graft.functions.SetKernels]]; arrays sorted once per
-    * doc before the broadcast) — ZERO shuffles, no eager
-    * materialization, no per-pair allocation, one map-side pass over
-    * the pairs.
+    * construction. `prunedSets` holds only the paired ids:
+    * `overlapAuto` prunes them at the scan with the driver-known id
+    * set (`prunedKernelSets`). Plan: broadcast the pruned
+    * (id, elems, n) table once (ReuseExchange dedups the two identical
+    * broadcast subplans), and compute each pair's intersection with
+    * the sorted-merge count kernel ([[graft.functions.SetKernels]];
+    * arrays sorted once per doc before the broadcast) — ZERO shuffles,
+    * no eager materialization, no per-pair allocation, one map-side
+    * pass over the pairs.
     *
     * Collision fine print: the two plans agree exactly unless two
     * DISTINCT grams of one document collide to the same 60-bit hash
@@ -568,30 +523,10 @@ object Dedup {
     * divergence is collision-level noise, not a semantics difference
     * (OperatorSpec asserts plan equality on real corpora).
     *
-    * Use `setOverlap` (the exploded-hash plan) when the pair set is
-    * beyond broadcast size — its shuffle is bounded by set
-    * cardinality × 16 B and never materializes an array per pair.
-    * `shingleOverlap`/`charNgramOverlap` auto-select by the pairs'
-    * distinct-id count ([[CompactVerifyMaxIds]]).
-    */
-  def setOverlapCompact(sets: DataFrame, pairs: DataFrame): DataFrame = {
-    // .distinct() is LOAD-BEARING at scale: what gets broadcast must
-    // be bounded by DISTINCT ids (the gate's quantity), not by the
-    // pair count — a cross-join-shaped pair frame reuses ~26k ids
-    // across 82M pairs, and broadcasting the raw projection built a
-    // 164M-row driver-side table at sf10 (the OOM the gate existed to
-    // prevent). The distinct's partial aggregation makes its exchange
-    // id-bounded too: each map task emits at most nIds rows, so the
-    // one shuffle this adds carries KBs, not the pair frame.
-    val ids = pairs.select(col("id_a").as("id"))
-      .union(pairs.select(col("id_b").as("id"))).distinct()
-    setOverlapPruned(sets.join(broadcast(ids), Seq("id"), "left_semi"), pairs)
-  }
-
-  /** The broadcast verify join over element sets ALREADY restricted to
-    * the paired ids (the last stage of setOverlapCompact, split out so
-    * overlapAuto's driver-known-ids path can prune at the SCAN and
-    * skip the semi-join stage entirely).
+    * `setOverlap` (the exploded-hash plan) serves pair sets beyond
+    * broadcast size — its shuffle is bounded by set cardinality × 16 B
+    * and never materializes an array per pair. `overlapAuto` selects
+    * by the pairs' distinct-id count ([[CompactVerifyMaxIds]]).
     */
   private def setOverlapPruned(prunedSets: DataFrame, pairs: DataFrame): DataFrame = {
     // sort ONCE PER DOC here (before the broadcast), so the per-PAIR
@@ -1245,7 +1180,7 @@ object Dedup {
               .crossJoin(probeSide.where(col("probe_id").isNotNull))
           else all.join(probeSide, col("probe_id") < col("cand_id"))
         joined
-          .where(Similarity.pairCosine(spark) > threshold)
+          .where(Similarity.pairCosine > threshold)
           .select(col("probe_id").cast("long").as("probe_id"),
             col("cand_id").cast("long").as("cand_id"))
     }

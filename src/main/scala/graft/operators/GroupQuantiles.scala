@@ -105,7 +105,6 @@ object GroupQuantiles {
       groupCols: Seq[String],
       valueCol: String,
       sketchK: Int): DataFrame = {
-    val spark = df.sparkSession
     val valueField = df.schema(valueCol)
     val floating = valueField.dataType match {
       case DoubleType | FloatType => true
@@ -117,7 +116,7 @@ object GroupQuantiles {
         count(lit(1)).as("__n"),
         count(when(v.isNull, 1)).as("__nulls"),
         count(when(nanCond, 1)).as("__nans"),
-        KllFunctions.kllSketch(spark, v, sketchK).as("__sk"))
+        KllFunctions.kllSketch(v, sketchK).as("__sk"))
   }
 
   /** Pass-1 stats through one bounded collect: the rows when at most

@@ -89,10 +89,9 @@ object Ranking {
       case t => throw graft.core.UserException(
         s"topKPerGroup: id column `$idCol` must be integral, got ${t.sql}")
     }
-    val spark = df.sparkSession
     df.groupBy(groupCols.map(col): _*)
       .agg(graft.functions.TopKFunctions.topK(
-        spark, col(orderCol), col(idCol), k).as("__tk"))
+        col(orderCol), col(idCol), k).as("__tk"))
       .select(groupCols.map(col) :+ posexplode(col("__tk")).as(Seq("__pos", "__e")): _*)
       .select(groupCols.map(col) ++ Seq(
         (col("__pos") + 1).cast("long").as(rkCol),

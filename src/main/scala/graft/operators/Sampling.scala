@@ -90,13 +90,12 @@ object Sampling {
   def stratifiedExactK(
       df: DataFrame, stratumCols: Seq[String], keyCol: String, k: Int): DataFrame = {
     require(stratumCols.nonEmpty, "at least one stratum column")
-    val spark = df.sparkSession
     val rank = conv(substring(md5(col(keyCol).cast("string")), 1, 13), 16, 10)
       .cast("double")
     df.where(col(keyCol).isNotNull)
       .groupBy(stratumCols.map(col): _*)
       .agg(graft.functions.TopKFunctions.topKKey(
-        spark, negate(rank), col(keyCol), k).as("__tk"))
+        negate(rank), col(keyCol), k).as("__tk"))
       .select(stratumCols.map(col) :+ explode(col("__tk")).as("__e"): _*)
       .select(stratumCols.map(col) :+ col(s"__e.cand_key").as(keyCol): _*)
   }
@@ -167,7 +166,6 @@ object Sampling {
       df: DataFrame, stratumCols: Seq[String], keyCol: String, weightCol: String,
       k: Int, coin: Column): DataFrame = {
     require(stratumCols.nonEmpty, "at least one stratum column")
-    val spark = df.sparkSession
     val w = col(weightCol).cast("double")
     // race key e = -ln(u)/w; the heap keeps MAX sim, so sim = -e =
     // ln(u)/w (IEEE negation is exact — the order is the oracle's).
@@ -178,7 +176,7 @@ object Sampling {
         col(weightCol).isNotNull && !isnan(w) && col(weightCol) > lit(0))
       .groupBy(stratumCols.map(col): _*)
       .agg(graft.functions.TopKFunctions.topKKey(
-        spark, sim, col(keyCol), k).as("__tk"))
+        sim, col(keyCol), k).as("__tk"))
       .select(stratumCols.map(col) :+ explode(col("__tk")).as("__e"): _*)
       .select(stratumCols.map(col) :+ col(s"__e.cand_key").as(keyCol): _*)
   }

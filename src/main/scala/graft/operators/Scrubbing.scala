@@ -19,10 +19,10 @@ object Scrubbing {
     * empty/whitespace-only text dropped, such docs score zeros/0.0):
     * the explode + two-groupBy + join-back formulation this replaces
     * paid two exchanges of word-count rows; here nothing shuffles at
-    * any corpus size. `repetitionStatsExpr` keeps that formulation as
-    * the executable spec (OperatorSpec asserts agreement — which is
-    * the oracle-agreement proof, the DuckDB oracle replaying the
-    * grouped form).
+    * any corpus size. The test tree's `ReferenceForms.repetitionStatsExpr`
+    * keeps that formulation as the executable spec (OperatorSpec
+    * asserts agreement — which is the oracle-agreement proof, the
+    * DuckDB oracle replaying the grouped form).
     */
   def repetitionStats(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     Dedup.rebalance(docs.select(col(idCol).as("id"), col(textCol).as("t")))
@@ -34,27 +34,6 @@ object Scrubbing {
         when(coalesce(col("rs.n_words"), lit(0L)) > 0L,
           col("rs.top_count").cast("double") / col("rs.n_words").cast("double"))
           .otherwise(lit(0.0)).as("top_ratio"))
-
-  /** The explode + two-groupBy + join-back reference form of
-    * repetitionStats — kept as the spec the kernel is tested against.
-    */
-  private[graft] def repetitionStatsExpr(
-      docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val ex = docs.select(col(idCol).as("id"), col(textCol).as("t"))
-      .select(col("id"), explode(TextAnalysis.words(trim(col("t")))).as("w"))
-      .where(col("w") =!= "")
-    val wc = ex.groupBy("id", "w").agg(count(lit(1)).as("c"))
-    val stats = wc.groupBy("id").agg(
-      sum(col("c")).cast("long").as("n_words"),
-      max(col("c")).cast("long").as("top_count"))
-    docs.select(col(idCol).as("id")).join(stats, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("n_words"), lit(0L)).as("n_words"),
-        coalesce(col("top_count"), lit(0L)).as("top_count"),
-        when(col("n_words") > 0L,
-          col("top_count").cast("double") / col("n_words").cast("double"))
-          .otherwise(lit(0.0)).as("top_ratio"))
-  }
 
   /** PII patterns chosen to mean the same thing in Java regex (Spark)
     * and RE2 (DuckDB): no backreferences, no lookaround.

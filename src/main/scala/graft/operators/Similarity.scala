@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.SparkBridge
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (SURVEY.md §7.5).
@@ -51,10 +51,10 @@ object Similarity {
     * full-length norms (the mathematically saner choice) and the
     * bit-identity claim does not apply.
     */
-  private[graft] def pairCosine(spark: SparkSession): Column = {
+  private[graft] def pairCosine: Column = {
     val denom = col("probe_norm") * col("cand_norm")
     when(denom === 0.0, 0.0)
-      .otherwise(VectorFunctions.dot(spark, col("probe_vec"), col("cand_vec")) / denom)
+      .otherwise(VectorFunctions.dot(col("probe_vec"), col("cand_vec")) / denom)
   }
 
   /** `(<role>_id, <role>_vec, <role>_norm)` of an (id, vector) frame:
@@ -68,7 +68,7 @@ object Similarity {
       df: DataFrame, idCol: String, vecCol: String, role: String,
       prep: DataFrame => DataFrame = identity): DataFrame =
     prep(df.select(col(idCol).as(s"${role}_id"), col(vecCol).as(s"${role}_vec")))
-      .withColumn(s"${role}_norm", VectorFunctions.norm2(df.sparkSession, col(s"${role}_vec")))
+      .withColumn(s"${role}_norm", VectorFunctions.norm2(col(s"${role}_vec")))
 
   /** Per-probe (rank, cand_id, sim) for the k best candidates of a
     * joined pair frame, scored round([[pairCosine]], 6) (rounding makes
@@ -85,11 +85,10 @@ object Similarity {
     * exchange is corpus-size-free.
     */
   private def rankTopK(pairs: DataFrame, k: Int): DataFrame = {
-    val spark = pairs.sparkSession
-    pairs.withColumn("sim", round(pairCosine(spark), 6))
+    pairs.withColumn("sim", round(pairCosine, 6))
       .groupBy("probe_id")
       .agg(graft.functions.TopKFunctions
-        .topK(spark, col("sim"), col("cand_id"), k).as("tk"))
+        .topK(col("sim"), col("cand_id"), k).as("tk"))
       .select(col("probe_id"), posexplode(col("tk")).as(Seq("pos", "e")))
       // probe_id cast long: the embedded kernels emit BIGINT ids, so
       // every regime must (the output schema is part of the contract
@@ -459,11 +458,10 @@ object Similarity {
   /** Sign-bit signature against `planes` literal hyperplanes of
     * dimension `dims`; one small integer per row, map-side only.
     */
-  def lshSignature(df: DataFrame, vec: Column, planes: Int, dims: Int): Column = {
-    val spark = df.sparkSession
+  def lshSignature(vec: Column, planes: Int, dims: Int): Column = {
     val v = vec.cast("array<double>")
     (0 until planes).map { p =>
-      val dotp = VectorFunctions.dot(spark, v, typedlit(planeVector(p, dims)))
+      val dotp = VectorFunctions.dot(v, typedlit(planeVector(p, dims)))
       when(dotp >= 0, lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
   }
@@ -530,7 +528,6 @@ object Similarity {
       maxChunkedProbes: Int = 1 << 20,
       maxCollectBytes: Long = 512L << 20,
       includeSelf: Boolean = false): DataFrame = {
-    val spark = corpus.sparkSession
     // Coarse quantizer: nCentroids vectors collected to the driver
     // (metadata-scale) and embedded as literals, so list assignment is
     // a pure map-side expression — no shuffle touches the corpus until
@@ -546,7 +543,7 @@ object Similarity {
       */
     def nearestLists(vec: Column, n: Int): Column = {
       val scored = array(centroids.zipWithIndex.map { case (c, p) =>
-        struct((-VectorFunctions.dot(spark, vec, typedlit(c))).as("negs"),
+        struct((-VectorFunctions.dot(vec, typedlit(c))).as("negs"),
           lit(p).as("id"))
       }.toSeq: _*)
       slice(transform(array_sort(scored), s => s.getField("id")), 1, n)
@@ -692,9 +689,9 @@ object Similarity {
             .headOption.map(_.getInt(0)))
           .getOrElse(0)
         val probeSide = normedSide(probes, probeIdCol, probeVecCol, "probe")
-          .withColumn("sig", lshSignature(probes, col("probe_vec"), planes, dims))
+          .withColumn("sig", lshSignature(col("probe_vec"), planes, dims))
         val cands = normedSide(corpus, corpusIdCol, corpusVecCol, "cand", Dedup.rebalance)
-          .withColumn("sig", lshSignature(corpus, col("cand_vec"), planes, dims))
+          .withColumn("sig", lshSignature(col("cand_vec"), planes, dims))
         bucketTopK(cands, probeSide, "sig", 1L << math.min(planes, 62), k, includeSelf)
     }
   }

@@ -45,18 +45,12 @@ object TextAnalysis {
     * h_i = (h_{i-1} * 31 + v(w_i)) mod P, h_0 = 0.
     * Order-sensitive (unlike a bag-of-words hash), so reordered
     * near-duplicates fingerprint differently. Evaluated by the
-    * compiled TextKernels.fingerprint kernel; `fingerprintExpr` keeps
-    * the HOF fold the oracle replays (OperatorSpec asserts agreement).
+    * compiled TextKernels.fingerprint kernel; the test tree's
+    * `ReferenceForms.fingerprintExpr` keeps the HOF fold the oracle
+    * replays (OperatorSpec asserts agreement).
     */
   def fingerprint(text: Column): Column =
     graft.functions.TextKernelFunctions.fingerprint(text)
-
-  /** HOF-expression reference form of the fingerprint fold. */
-  private[graft] def fingerprintExpr(text: Column): Column =
-    aggregate(
-      transform(words(text), w => wordValue(w)),
-      lit(0L),
-      (acc, v) => pmod(acc * lit(31L) + v, lit(FingerprintMod)))
 
   /** Language markers: tiny per-language stopword lists. A real
     * pipeline swaps in character-n-gram profiles; the operator shape

@@ -911,7 +911,7 @@ object Queries {
         val o = tbl(s, d, "orders")
         o.groupBy("o_orderpriority").agg(
           graft.functions.SketchFunctions
-            .thetaDistinct(s, col("o_custkey"), lgK = 16).as("approx_cust"))
+            .thetaDistinct(col("o_custkey"), lgK = 16).as("approx_cust"))
       },
       Some("""SELECT o_orderpriority, COUNT(DISTINCT o_custkey) AS approx_cust
              |FROM orders GROUP BY o_orderpriority""".stripMargin)),
@@ -1091,11 +1091,11 @@ object Queries {
           .withColumn("day", graft.functions.TimeFunctions.utcDay(ev0))
         val daily = ev.groupBy("event_type", "day").agg(
           graft.functions.SketchFunctions
-            .thetaSketch(s, col("user_id"), lgK = 16).as("sk"))
+            .thetaSketch(col("user_id"), lgK = 16).as("sk"))
         daily.groupBy("event_type").agg(
           count(lit(1)).cast("long").as("n_days"),
           graft.functions.SketchFunctions
-            .thetaUnion(s, col("sk"), lgK = 16).as("distinct_users_est"))
+            .thetaUnion(col("sk"), lgK = 16).as("distinct_users_est"))
       },
       Some("""WITH e AS (SELECT event_type, user_id,
              |  CAST(epoch_ms(ts) // 86400000 AS BIGINT) AS day FROM events)
@@ -1119,14 +1119,14 @@ object Queries {
           .withColumn("day", graft.functions.TimeFunctions.utcDay(ev0))
         val daily = ev.groupBy("event_type", "day").agg(
           graft.functions.KllFunctions
-            .kllSketch(s, col("value"), k = 65535).as("sk"))
+            .kllSketch(col("value"), k = 65535).as("sk"))
         daily.groupBy("event_type").agg(
           count(lit(1)).cast("long").as("n_days"),
           graft.functions.KllFunctions
-            .kllUnion(s, col("sk"), k = 65535).as("usk"))
+            .kllUnion(col("sk"), k = 65535).as("usk"))
           .select(col("event_type"), col("n_days"),
-            graft.functions.KllFunctions.kllQuantile(s, col("usk"), 0.5).as("p50_est"),
-            graft.functions.KllFunctions.kllQuantile(s, col("usk"), 0.95).as("p95_est"))
+            graft.functions.KllFunctions.kllQuantile(col("usk"), 0.5).as("p50_est"),
+            graft.functions.KllFunctions.kllQuantile(col("usk"), 0.95).as("p95_est"))
       },
       Some("""WITH e AS (SELECT event_type, value,
              |  CAST(epoch_ms(ts) // 86400000 AS BIGINT) AS day FROM events)
@@ -1380,9 +1380,9 @@ object Queries {
           .where(length(col("word")) > 0)
         toks.groupBy("lang")
           .agg(graft.functions.FreqFunctions
-            .freqSketch(s, col("word")).as("sk"))
+            .freqSketch(col("word")).as("sk"))
           .select(col("lang"), explode(
-            graft.functions.FreqFunctions.freqItems(s, col("sk"), 10L)).as("f"))
+            graft.functions.FreqFunctions.freqItems(col("sk"), 10L)).as("f"))
           .select(col("lang"), col("f.item").as("word"),
             col("f.estimate").as("n"))
       },

@@ -36,7 +36,7 @@ class AnnIndexSpec extends AnyFunSuite {
       .map(_.getSeq[Double](0))
     def listOf(vec: org.apache.spark.sql.Column) = {
       val scored = array(centroids.zipWithIndex.map { case (c, p) =>
-        struct((-VectorFunctions.dot(spark, vec, typedlit(c))).as("negs"),
+        struct((-VectorFunctions.dot(vec, typedlit(c))).as("negs"),
           lit(p).as("id"))
       }.toSeq: _*)
       element_at(transform(array_sort(scored), s => s.getField("id")), 1)
@@ -67,11 +67,11 @@ class AnnIndexSpec extends AnyFunSuite {
     val probe = indexed.where($"vec_id" === 123L).select(
       $"embedding".as("probe_vec"), $"list_id".as("probe_list")).collect()(0)
     val cands = t.read().where($"list_id" === probe.getInt(1) && $"vec_id" =!= 123L)
-      .withColumn("sim", VectorFunctions.cosine(spark, $"embedding",
+      .withColumn("sim", VectorFunctions.cosine($"embedding",
         typedlit(probe.getSeq[Float](0).map(_.toDouble)).cast("array<float>")))
     val best = cands.orderBy($"sim".desc, $"vec_id").select("vec_id").as[Long].head()
     val brute = emb.where($"vec_id" =!= 123L)
-      .withColumn("sim", VectorFunctions.cosine(spark, $"embedding",
+      .withColumn("sim", VectorFunctions.cosine($"embedding",
         typedlit(probe.getSeq[Float](0).map(_.toDouble)).cast("array<float>")))
       .withColumn("list_id", listOf($"embedding"))
       .orderBy($"sim".desc, $"vec_id")

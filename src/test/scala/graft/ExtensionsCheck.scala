@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 
 /** Subprocess target for RunnerSpec's extensions test: a JVM whose
   * ONLY graft wiring is `--conf spark.sql.extensions=graft.GraftExtensions`
@@ -70,6 +70,17 @@ object ExtensionsCheck {
         "kernel counts off")
       // 'Ab, cd7 cd7': tokens A|b|,|cd|7|cd|7 = 7; uniq words Ab,/cd7 = 2
       require(tk.getLong(8) == 7L && tk.getLong(9) == 2L, "text stats off")
+      // the names whose Column helpers Similarity, Ranking, Sampling
+      // and Dedup build: the same table injects them for pure SQL
+      val ck = spark.sql(
+        """SELECT graft_top_k(CAST(id AS DOUBLE), id, 3) AS tk,
+          |       graft_top_k_key(CAST(id AS DOUBLE), CAST(id AS STRING), 2) AS tkk,
+          |       first(graft_norm2(array(3.0d, 4.0d))) AS n,
+          |       first(graft_sorted_intersect_count(array(1L, 2L, 3L), array(2L, 3L, 4L))) AS si
+          |FROM ext_check""".stripMargin).head()
+      require(ck.getSeq[Row](0).map(_.getLong(0)) == Seq(999L, 998L, 997L), "top_k off")
+      require(ck.getSeq[Row](1).map(_.getString(0)) == Seq("999", "998"), "top_k_key off")
+      require(ck.getDouble(2) == 5.0 && ck.getInt(3) == 2, "norm2 / intersect off")
       // the injected parser + catalog pair: maintenance SQL end to end
       spark.sql("CREATE TABLE graft.default.ext_m (id BIGINT) USING graft")
       spark.sql("INSERT INTO graft.default.ext_m VALUES (1)")

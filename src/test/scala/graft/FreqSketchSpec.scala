@@ -18,8 +18,8 @@ class FreqSketchSpec extends AnyFunSuite {
     val data = zipf(2000, 50) // 50 distinct << 1024 counters: no purge
     val df = data.toDF("w")
     val truth = data.groupBy(identity).map { case (w, ws) => w -> ws.size.toLong }
-    val got = df.agg(FreqFunctions.freqSketch(spark, $"w").as("sk"))
-      .select(explode(FreqFunctions.freqItems(spark, $"sk", 40L)).as("f"))
+    val got = df.agg(FreqFunctions.freqSketch($"w").as("sk"))
+      .select(explode(FreqFunctions.freqItems($"sk", 40L)).as("f"))
       .select($"f.item", $"f.estimate")
       .as[(String, Long)].collect().toMap
     val expected = truth.filter(_._2 >= 40)
@@ -38,8 +38,8 @@ class FreqSketchSpec extends AnyFunSuite {
     val epsN = (3.5 / 64 * data.size).toLong
     val thresh = epsN + 1000
     val df = data.toDF("w")
-    val sk = df.agg(FreqFunctions.freqSketch(spark, $"w", 64).as("sk"))
-    val got = sk.select(explode(FreqFunctions.freqItems(spark, $"sk", thresh)).as("f"))
+    val sk = df.agg(FreqFunctions.freqSketch($"w", 64).as("sk"))
+    val got = sk.select(explode(FreqFunctions.freqItems($"sk", thresh)).as("f"))
       .select($"f.item", $"f.estimate").as[(String, Long)].collect().toMap
     val mustHave = truth.filter(_._2 >= thresh).keySet
     assert(mustHave.nonEmpty) // the probe must bind on something
@@ -59,21 +59,20 @@ class FreqSketchSpec extends AnyFunSuite {
     val shard = Seq(s1.map(("a", _)), s2.map(("b", _))).flatten.toDF("shard", "w")
     // per-shard sketches persisted as binary, then rolled up
     val perShard = shard.groupBy("shard")
-      .agg(FreqFunctions.freqSketch(spark, $"w").as("sk"))
+      .agg(FreqFunctions.freqSketch($"w").as("sk"))
     val rolled = perShard
-      .agg(FreqFunctions.freqUnion(spark, $"sk").as("sk"))
-      .select(explode(FreqFunctions.freqItems(spark, $"sk", 50L)).as("f"))
+      .agg(FreqFunctions.freqUnion($"sk").as("sk"))
+      .select(explode(FreqFunctions.freqItems($"sk", 50L)).as("f"))
       .select($"f.item", $"f.estimate").as[(String, Long)].collect().toMap
     val full = data.toDF("w")
-      .agg(FreqFunctions.freqSketch(spark, $"w").as("sk"))
-      .select(explode(FreqFunctions.freqItems(spark, $"sk", 50L)).as("f"))
+      .agg(FreqFunctions.freqSketch($"w").as("sk"))
+      .select(explode(FreqFunctions.freqItems($"sk", 50L)).as("f"))
       .select($"f.item", $"f.estimate").as[(String, Long)].collect().toMap
     assert(rolled == full)
     assert(full.nonEmpty)
   }
 
   test("SQL path: registered names work end-to-end; bad literals fail at analysis") {
-    FreqFunctions.register(spark)
     zipf(500, 10).toDF("w").createOrReplaceTempView("freq_in")
     val rows = spark.sql(
       """SELECT f.item, f.estimate
@@ -85,7 +84,7 @@ class FreqSketchSpec extends AnyFunSuite {
     val withNulls = spark.sql(
       "SELECT graft_freq_sketch(CASE WHEN w = 'item1' THEN NULL ELSE w END) sk FROM freq_in")
     val est = withNulls
-      .select(explode(FreqFunctions.freqItems(spark, $"sk", 1L)).as("f"))
+      .select(explode(FreqFunctions.freqItems($"sk", 1L)).as("f"))
       .select($"f.item").as[String].collect()
     assert(!est.contains("item1"))
     intercept[Exception] {
@@ -97,9 +96,6 @@ class FreqSketchSpec extends AnyFunSuite {
   }
 
   test("wrong-typed inputs fail at ANALYSIS, not silently miscount") {
-    FreqFunctions.register(spark)
-    graft.functions.SketchFunctions.register(spark)
-    graft.functions.KllFunctions.register(spark)
     Seq((Array[Byte](1, 2), 1.5, "a")).toDF("b", "d", "w")
       .createOrReplaceTempView("freq_types")
     // binary child would count JVM identity strings ("[B@...")

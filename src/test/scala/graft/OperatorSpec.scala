@@ -18,12 +18,11 @@ class OperatorSpec extends AnyFunSuite {
       (3L, Array(0.0f, 0.0f), Array(1.0f, 1.0f)), // zero vector
     ).toDF("id", "a", "b")
     val out = df.select($"id",
-      VectorFunctions.cosine(spark, $"a", $"b").as("c")).orderBy("id").collect()
+      VectorFunctions.cosine($"a", $"b").as("c")).orderBy("id").collect()
     assert(math.abs(out(0).getDouble(1)) < 1e-15)
     assert(math.abs(out(1).getDouble(1) - 1.0) < 1e-12)
     assert(out(2).getDouble(1) == 0.0) // zero-norm guard
-    // registered for SQL too
-    VectorFunctions.register(spark)
+    // injected for SQL too
     df.createOrReplaceTempView("vecs")
     val sq = spark.sql(
       "SELECT graft_dot(cast(a as array<double>), cast(b as array<double>)) d FROM vecs WHERE id = 2")
@@ -41,10 +40,10 @@ class OperatorSpec extends AnyFunSuite {
       (i, if (i % 17 == 0) Array.fill(d)(0.0f) else mk(), mk())
     }
     val df = rows.toDF("id", "a", "b")
-    val denom = VectorFunctions.norm2(spark, $"a") * VectorFunctions.norm2(spark, $"b")
+    val denom = VectorFunctions.norm2($"a") * VectorFunctions.norm2($"b")
     val split = when(denom === 0.0, 0.0)
-      .otherwise(VectorFunctions.dot(spark, $"a", $"b") / denom)
-    val diff = df.select(VectorFunctions.cosine(spark, $"a", $"b").as("fused"),
+      .otherwise(VectorFunctions.dot($"a", $"b") / denom)
+    val diff = df.select(VectorFunctions.cosine($"a", $"b").as("fused"),
         split.as("split"))
       .where(not($"fused" <=> $"split")).count()
     assert(diff == 0, "split cosine must be bit-identical to the fused kernel")
@@ -418,7 +417,7 @@ class OperatorSpec extends AnyFunSuite {
     val df = rows.toDF("probe_id", "sim", "cand_id").repartition(16)
     for (k <- Seq(1, 5, 23)) {
       val viaAgg = df.groupBy("probe_id")
-        .agg(TopKFunctions.topK(spark, $"sim", $"cand_id", k).as("tk"))
+        .agg(TopKFunctions.topK($"sim", $"cand_id", k).as("tk"))
         .select($"probe_id", posexplode($"tk").as(Seq("pos", "e")))
         .select($"probe_id", ($"pos" + 1).cast("long").as("rank"),
           $"e.cand_id".as("cand_id"), $"e.sim".as("sim"))
@@ -430,7 +429,6 @@ class OperatorSpec extends AnyFunSuite {
         s"k=$k mismatch")
     }
     // SQL surface + null sims never rank
-    TopKFunctions.register(spark)
     df.limit(100).withColumn("sim", when($"cand_id" % 2 === 0, $"sim"))
       .createOrReplaceTempView("topk_in")
     val sql = spark.sql(
@@ -456,7 +454,7 @@ class OperatorSpec extends AnyFunSuite {
       (1L, Double.PositiveInfinity, 5L), (1L, Double.NegativeInfinity, 6L))
     val df = rows.toDF("probe_id", "sim", "cand_id").coalesce(1)
     val tk = df.groupBy("probe_id")
-      .agg(TopKFunctions.topK(spark, $"sim", $"cand_id", 3).as("tk"))
+      .agg(TopKFunctions.topK($"sim", $"cand_id", 3).as("tk"))
       .select(explode($"tk").as("e"))
       .select($"e.cand_id", $"e.sim").collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
@@ -466,7 +464,7 @@ class OperatorSpec extends AnyFunSuite {
     val kdf = Seq(("s", Double.NaN, "zz-nan"), ("s", 2.0, "a"), ("s", 1.0, "b"),
       ("s", 3.0, "c")).toDF("g", "sim", "key").coalesce(1)
     val ktk = kdf.groupBy("g")
-      .agg(TopKFunctions.topKKey(spark, $"sim", $"key", 2).as("tk"))
+      .agg(TopKFunctions.topKKey($"sim", $"key", 2).as("tk"))
       .select(explode($"tk").as("e")).select($"e.cand_key").collect()
       .map(_.getString(0))
     assert(ktk.toSeq == Seq("c", "a"), s"NaN key-agg leak: ${ktk.toSeq}")
@@ -763,7 +761,7 @@ class OperatorSpec extends AnyFunSuite {
       (1L, Option.empty[Double], 14L)
     ).toDF("probe_id", "sim", "cand_id")
     val out = df.groupBy("probe_id")
-      .agg(TopKFunctions.topK(spark, $"sim", $"cand_id", 4).as("tk"))
+      .agg(TopKFunctions.topK($"sim", $"cand_id", 4).as("tk"))
       .select(explode($"tk").as("e"))
       .select($"e.cand_id", $"e.sim").orderBy($"sim".desc).collect()
     assert(out.length == 2, s"expected 2 ranked rows, got ${out.length}")
@@ -807,20 +805,19 @@ class OperatorSpec extends AnyFunSuite {
   test("theta-sketch distinct: within 2% of exact, merges across groups") {
     val orders = spark.read.parquet("/root/testdata/sf0.01/orders.parquet")
     val got = orders.select(
-      graft.functions.SketchFunctions.thetaDistinct(spark, $"o_custkey").as("approx"))
+      graft.functions.SketchFunctions.thetaDistinct($"o_custkey").as("approx"))
       .head().getLong(0)
     val exact = orders.select(countDistinct($"o_custkey")).head().getLong(0)
     assert(math.abs(got - exact).toDouble / exact < 0.02, s"approx=$got exact=$exact")
     // grouped + partial-merge path
     val grouped = orders.groupBy("o_orderstatus").agg(
-      graft.functions.SketchFunctions.thetaDistinct(spark, $"o_custkey").as("approx"),
+      graft.functions.SketchFunctions.thetaDistinct($"o_custkey").as("approx"),
       countDistinct($"o_custkey").as("exact"))
       .as[(String, Long, Long)].collect()
     grouped.foreach { case (st, a, e) =>
       assert(math.abs(a - e).toDouble / e < 0.05, s"$st approx=$a exact=$e")
     }
     // SQL surface
-    graft.functions.SketchFunctions.register(spark)
     orders.createOrReplaceTempView("orders_v")
     val viaSql = spark.sql(
       "SELECT graft_theta_distinct(o_custkey) FROM orders_v").head().getLong(0)
@@ -1312,7 +1309,7 @@ class OperatorSpec extends AnyFunSuite {
     for (n <- Seq(2, 13)) {
       val mismatches = docs.select(
         Decontamination.wordNgramHashes(col("text"), n).as("kernel"),
-        Decontamination.wordNgramHashesExpr(col("text"), n).as("hof"))
+        ReferenceForms.wordNgramHashesExpr(col("text"), n).as("hof"))
         .where(not(col("kernel") === col("hof"))).count()
       assert(mismatches == 0, s"kernel != HOF fold at n=$n")
     }
@@ -1335,7 +1332,7 @@ class OperatorSpec extends AnyFunSuite {
       ).toDF("doc_id", "text"))
 
     // minhash signatures: kernel vs expression form, all k columns
-    val sigK = Dedup.perRowSignaturesExpr(docs, "doc_id", "text", 8)
+    val sigK = ReferenceForms.perRowSignaturesExpr(docs, "doc_id", "text", 8)
     val sigE = Dedup.minhashSignatures(docs, "doc_id", "text", 8)
       .withColumnRenamed("id", "doc_id")
     assert(sigK.exceptAll(sigE).isEmpty && sigE.exceptAll(sigK).isEmpty,
@@ -1343,7 +1340,7 @@ class OperatorSpec extends AnyFunSuite {
 
     // simhash: kernel vs expression form
     val shK = Dedup.simhashTable(docs, "doc_id", "text")
-    val shE = Dedup.simhashTableExpr(docs, "doc_id", "text")
+    val shE = ReferenceForms.simhashTableExpr(docs, "doc_id", "text")
     assert(shK.exceptAll(shE).isEmpty && shE.exceptAll(shK).isEmpty,
       "simhash kernel != HOF form")
 
@@ -1370,13 +1367,13 @@ class OperatorSpec extends AnyFunSuite {
 
     // fingerprint: kernel vs the HOF fold
     val fpK = docs.select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp"))
-    val fpE = docs.select(col("doc_id"), TextAnalysis.fingerprintExpr(col("text")).as("fp"))
+    val fpE = docs.select(col("doc_id"), ReferenceForms.fingerprintExpr(col("text")).as("fp"))
     assert(fpK.exceptAll(fpE).isEmpty && fpE.exceptAll(fpK).isEmpty,
       "fingerprint kernel != HOF form")
 
     // repetition stats: kernel vs the explode + two-groupBy form
     val rsK = Scrubbing.repetitionStats(docs, "doc_id", "text")
-    val rsE = Scrubbing.repetitionStatsExpr(docs, "doc_id", "text")
+    val rsE = ReferenceForms.repetitionStatsExpr(docs, "doc_id", "text")
     assert(rsK.exceptAll(rsE).isEmpty && rsE.exceptAll(rsK).isEmpty,
       "repetition kernel != grouped form")
     // and the kernel form is exchange-free
@@ -1614,13 +1611,13 @@ class OperatorSpec extends AnyFunSuite {
     val vals = (1L to 20000L).map(i => (f"2024-01-${1 + (i % 10)}%02d", i.toDouble))
       .toDF("day", "v")
     val daily = vals.groupBy("day")
-      .agg(KllFunctions.kllSketch(spark, $"v").as("sk")).cache()
+      .agg(KllFunctions.kllSketch($"v").as("sk")).cache()
     try {
       assert(daily.count() == 10)
       // union of per-day sketches answers quantiles over the full range
-      val merged = daily.agg(KllFunctions.kllUnion(spark, $"sk").as("usk"))
+      val merged = daily.agg(KllFunctions.kllUnion($"sk").as("usk"))
       val Seq(p50, p95) = Seq(0.5, 0.95).map(q =>
-        merged.select(KllFunctions.kllQuantile(spark, $"usk", q))
+        merged.select(KllFunctions.kllQuantile($"usk", q))
           .as[Double].head())
       // values are 1..20000 uniform: exact p50=10000, p95=19000; KLL
       // k=200 normalized rank error ~1.65% at 99% confidence and the
@@ -1630,8 +1627,8 @@ class OperatorSpec extends AnyFunSuite {
       assert(math.abs(p95 - 19000.0) <= 700, s"p95=$p95")
       // a sketch over a day SUBSET answers that subset's quantiles
       val half = daily.where($"day" <= "2024-01-05")
-        .agg(KllFunctions.kllUnion(spark, $"sk").as("usk"))
-        .select(KllFunctions.kllQuantile(spark, $"usk", 0.5)).as[Double].head()
+        .agg(KllFunctions.kllUnion($"sk").as("usk"))
+        .select(KllFunctions.kllQuantile($"usk", 0.5)).as[Double].head()
       val exactHalf = vals.where($"day" <= "2024-01-05")
         .stat.approxQuantile("v", Array(0.5), 0.0).head
       assert(math.abs(half - exactHalf) <= 700, s"subset p50=$half vs $exactHalf")
@@ -1640,7 +1637,6 @@ class OperatorSpec extends AnyFunSuite {
 
   test("KLL quantile rank argument: NULL rejected cleanly, foldable cast accepted") {
     import graft.functions.KllFunctions
-    KllFunctions.register(spark)
     val df = Seq(1.0, 2.0, 3.0).toDF("v")
     df.createOrReplaceTempView("kll_args_v")
     // NULL literal: the intended argument error, not an NPE
@@ -1658,8 +1654,8 @@ class OperatorSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("q must be in [0, 1]"))
     // TINYINT input converts losslessly
     val tiny = df.select($"v".cast("byte").as("b"))
-      .agg(KllFunctions.kllSketch(spark, $"b").as("sk"))
-      .select(KllFunctions.kllQuantile(spark, $"sk", 1.0)).as[Double].head()
+      .agg(KllFunctions.kllSketch($"b").as("sk"))
+      .select(KllFunctions.kllQuantile($"sk", 1.0)).as[Double].head()
     assert(tiny == 3.0)
   }
 
@@ -1671,13 +1667,13 @@ class OperatorSpec extends AnyFunSuite {
     // q52 regimes, pinned here independent of testdata SF)
     val ev = (1L to 40000L).map(i => (s"t${i % 4}", i)).toDF("g", "u")
     val perG = ev.groupBy("g").agg(
-      SketchFunctions.thetaDistinct(spark, $"u", lgK = 16).as("est"),
+      SketchFunctions.thetaDistinct($"u", lgK = 16).as("est"),
       countDistinct($"u").as("exact")).as[(String, Long, Long)].collect()
     assert(perG.nonEmpty)
     perG.foreach { case (g, est, exact) => assert(est == exact, s"$g: $est != $exact") }
     val viaStored = ev.groupBy("g")
-      .agg(SketchFunctions.thetaSketch(spark, $"u", lgK = 16).as("sk"))
-      .agg(SketchFunctions.thetaUnion(spark, $"sk", lgK = 16)).as[Long].head()
+      .agg(SketchFunctions.thetaSketch($"u", lgK = 16).as("sk"))
+      .agg(SketchFunctions.thetaUnion($"sk", lgK = 16)).as[Long].head()
     assert(viaStored == 40000L)
 
     // KLL, k >= total n: the rolled-up sketch is the full sample and
@@ -1688,15 +1684,15 @@ class OperatorSpec extends AnyFunSuite {
     val data = Seq.fill(6000)(math.floor(rnd.nextDouble() * 500) / 10.0 - 25.0)
     val kdf = data.zipWithIndex.map { case (v, i) => (s"d${i % 3}", v) }.toDF("day", "v")
     val usk = kdf.groupBy("day")
-      .agg(KllFunctions.kllSketch(spark, $"v", k = 8192).as("sk"))
-      .agg(KllFunctions.kllUnion(spark, $"sk", k = 8192).as("usk"))
+      .agg(KllFunctions.kllSketch($"v", k = 8192).as("sk"))
+      .agg(KllFunctions.kllUnion($"sk", k = 8192).as("usk"))
       .cache()
     try {
       val sorted = data.sorted
       def inclusive(q: Double): Double =
         sorted(math.max(0, math.ceil(q * sorted.size).toInt - 1))
       Seq(0.0, 0.1, 0.25, 0.5, 0.77, 0.95, 1.0).foreach { q =>
-        val got = usk.select(KllFunctions.kllQuantile(spark, $"usk", q)).as[Double].head()
+        val got = usk.select(KllFunctions.kllQuantile($"usk", q)).as[Double].head()
         assert(got == inclusive(q), s"q=$q: $got != ${inclusive(q)}")
       }
     } finally usk.unpersist()
@@ -1710,20 +1706,20 @@ class OperatorSpec extends AnyFunSuite {
     // build: one binary sketch per day (the summary table an ingest job
     // appends — new days never touch old rows)
     val daily = events.groupBy("day")
-      .agg(SketchFunctions.thetaSketch(spark, $"user_id").as("sk"))
+      .agg(SketchFunctions.thetaSketch($"user_id").as("sk"))
       .cache()
     assert(daily.count() == 10)
     // query: distinct over any day range = union of stored sketches
     val est = daily.where($"day" <= "2024-01-05")
-      .agg(SketchFunctions.thetaUnion(spark, $"sk")).as[Long].head()
+      .agg(SketchFunctions.thetaUnion($"sk")).as[Long].head()
     val exact = events.where($"day" <= "2024-01-05")
       .select(countDistinct($"user_id")).as[Long].head()
     assert(math.abs(est - exact) <= math.max(2, exact / 50),
       s"estimate $est vs exact $exact")
     // multi-level rollup: day sketches → one month sketch → same estimate
     val monthly = daily
-      .agg(SketchFunctions.thetaUnionSketch(spark, $"sk").as("sk"))
-      .agg(SketchFunctions.thetaUnion(spark, $"sk")).as[Long].head()
+      .agg(SketchFunctions.thetaUnionSketch($"sk").as("sk"))
+      .agg(SketchFunctions.thetaUnion($"sk")).as[Long].head()
     val exactAll = events.select(countDistinct($"user_id")).as[Long].head()
     assert(math.abs(monthly - exactAll) <= math.max(2, exactAll / 50))
     daily.unpersist()

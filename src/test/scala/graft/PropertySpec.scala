@@ -241,13 +241,13 @@ class PropertySpec extends AnyFunSuite {
         assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
           s"$what diverged at seed=$seed")
       same(Dedup.minhashSignatures(docs, "doc_id", "text", 8).withColumnRenamed("id", "doc_id"),
-        Dedup.perRowSignaturesExpr(docs, "doc_id", "text", 8), "minhash")
+        ReferenceForms.perRowSignaturesExpr(docs, "doc_id", "text", 8), "minhash")
       same(Dedup.simhashTable(docs, "doc_id", "text"),
-        Dedup.simhashTableExpr(docs, "doc_id", "text"), "simhash")
+        ReferenceForms.simhashTableExpr(docs, "doc_id", "text"), "simhash")
       same(Scrubbing.repetitionStats(docs, "doc_id", "text"),
-        Scrubbing.repetitionStatsExpr(docs, "doc_id", "text"), "repetition")
+        ReferenceForms.repetitionStatsExpr(docs, "doc_id", "text"), "repetition")
       same(docs.select(TextAnalysis.fingerprint(col("text"))),
-        docs.select(TextAnalysis.fingerprintExpr(col("text"))), "fingerprint")
+        docs.select(ReferenceForms.fingerprintExpr(col("text"))), "fingerprint")
       same(
         docs.select(col("doc_id"),
           explode(graft.functions.TextKernelFunctions.shingleHashes(col("text")))),
@@ -265,7 +265,7 @@ class PropertySpec extends AnyFunSuite {
         docs.select(col("doc_id"),
           explode(Decontamination.wordNgramHashes(col("text"), 5))),
         docs.select(col("doc_id"),
-          explode(Decontamination.wordNgramHashesExpr(col("text"), 5))),
+          explode(ReferenceForms.wordNgramHashesExpr(col("text"), 5))),
         "gram hashes")
       same(TextAnalysis.textStats(docs, "doc_id", "text"),
         docs.select(col("doc_id"),
