@@ -70,7 +70,12 @@ object DumpQueryPlans {
     sys.exit(2)
   }
 
-  private def session(cpus: String): SparkSession = {
+  /** local[n] with n shuffle partitions; n is `SPARK_GRAFT_CPUS`, default
+    * 4 in both modes, so a dump made without the variable prints the
+    * same exchanges as PLANS.md.
+    */
+  private def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkEntry.configure(
       SparkSession.builder()
         .master(s"local[$cpus]")
@@ -101,7 +106,7 @@ object DumpQueryPlans {
         s"known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
       sys.exit(2)
     }
-    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = session()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
@@ -117,7 +122,7 @@ object DumpQueryPlans {
   }
 
   private def plansMd(out: String, sfDir: String): Unit = {
-    val spark = session("4")
+    val spark = session()
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val sb = new StringBuilder
@@ -142,7 +147,7 @@ object DumpQueryPlans {
     // sf10-safe shape. What to check: the pair side is a real join
     // subtree (no LocalRelation), the kernel projection sits over the
     // FULL corpus scan, and the verify join broadcasts the id set.
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = graft.sources.ParquetSchema.read(spark, Seq(s"$sfDir/documents.parquet"))
     val ids = docs.select(col("doc_id")).limit(600)
     val bigPairs = ids.as("a").join(ids.as("b"), col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))

@@ -28,7 +28,7 @@ object Queries {
       oracle: Option[String])
 
   private def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.ParquetSchema.read(spark, Seq(s"$dir/$name.parquet"))
 
   /** decimal money helpers shared by the TPC-H-ish queries. These are
     * CAST(x AS DECIMAL(p,2)) in kernel form (MoneyCastExpr): values

@@ -36,7 +36,8 @@ object StagedCsv {
 
   /** Parquet multi-file scan (S2): schema is self-describing
     * (/root/reference/src/component.py:79-81).
+    * [[ParquetSchema]] reads it from the first footer on the driver.
     */
   def readParquet(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.parquet(paths: _*)
+    ParquetSchema.read(spark, paths)
 }

@@ -91,19 +91,38 @@ class RunnerSpec extends AnyFunSuite {
     assert(e.getMessage.contains("primary keys"))
   }
 
-  test("file inputs: parquet multi-file scan path") {
+  /** A datadir whose in/files holds one single-part parquet file per
+    * id range, with columns (id, v).
+    */
+  private def parquetDataDir(ranges: (Long, Long)*): Path = {
     val dd = tmp()
     val fdir = dd.resolve("in/files"); Files.createDirectories(fdir)
-    spark.range(5).select($"id", ($"id" * 2).as("v"))
-      .coalesce(1).write.parquet(fdir.resolve("p1").toString)
-    // move the part file up as a direct .parquet input
-    val part = Files.list(fdir.resolve("p1")).iterator()
-    val found = collection.mutable.Buffer[Path]()
-    part.forEachRemaining(p => if (p.toString.endsWith(".parquet")) found += p)
-    Files.move(found.head, fdir.resolve("data1.parquet"))
+    ranges.zipWithIndex.foreach { case ((lo, hi), i) =>
+      val out = dd.resolve(s"p$i")
+      spark.range(lo, hi).select($"id", ($"id" * 2).as("v"))
+        .coalesce(1).write.parquet(out.toString)
+      // move the part file up as a direct .parquet input
+      val part = Files.list(out).iterator()
+      val found = collection.mutable.Buffer[Path]()
+      part.forEachRemaining(p => if (p.toString.endsWith(".parquet")) found += p)
+      Files.move(found.head, fdir.resolve(s"data$i.parquet"))
+    }
+    dd
+  }
+
+  test("file inputs: parquet multi-file scan path") {
+    val dd = parquetDataDir((0L, 5L))
     val dest = dd.resolve("lake")
     Runner.run(spark, Config(), dd, dest)
     assert(new LakeTable(spark, dest).read().count() == 5)
+  }
+
+  test("file inputs: loading in/files runs no Spark job before the write") {
+    val dd = parquetDataDir((10L, 15L), (20L, 25L))
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(JobTrace.traced(spark) { df = Runner.loadInput(spark, dd) }.jobs == 0)
+    assert(df.schema == spark.read.parquet(Runner.parquetInputs(dd): _*).schema)
+    assert(df.count() == 10)
   }
 
   test("dedup-on-ingest drops the sample fixture's duplicate rows") {
