@@ -22,9 +22,7 @@ import scala.jdk.CollectionConverters._
 final case class DataDirConfig(
     action: String,
     config: Config,
-) {
-  def isRun: Boolean = action == "run"
-}
+)
 
 object DataDirConfig {
   private val mapper = new ObjectMapper()

@@ -32,9 +32,6 @@ final case class TableDef(
       */
     sliced: Boolean = false,
 ) {
-  /** Single-file accessor kept for the common unsliced case. */
-  def csvPath: Option[String] = dataPaths.headOption
-
   def baseTypeOf(col: String): String = baseTypes.getOrElse(col, "STRING")
 
   /** Target Spark schema in manifest column order. */

@@ -219,8 +219,6 @@ object VectorFunctions {
     SqlFunction.of[DotProduct]("graft_dot", 2)(e => DotProduct(e(0), e(1))),
     SqlFunction.of[Norm2]("graft_norm2", 1)(e => Norm2(e(0))))
 
-  private def asDouble(c: Column): Column = c.cast("array<double>")
-
   /** Cosine similarity computed in double. Float arrays are consumed
     * natively (exact widening inside the kernel loop — no per-row
     * array<double> materialization); see [[VectorKernel]].
@@ -228,10 +226,6 @@ object VectorFunctions {
   def cosine(a: Column, b: Column): Column = column(CosineSimilarity(expression(a), expression(b)))
 
   def dot(a: Column, b: Column): Column = column(DotProduct(expression(a), expression(b)))
-
-  /** L2 norm via built-ins (used rarely; not on the hot path). */
-  def l2Norm(c: Column): Column =
-    sqrt(aggregate(asDouble(c), lit(0.0), (acc, x) => acc + x * x))
 
   /** Codegen'd L2 norm — the per-side cosine denominator half (see
     * [[Norm2]]); pair scorers combine it with [[dot]] for a one-loop

@@ -465,8 +465,8 @@ final class LakeTable(spark: SparkSession, val path: Path) {
     val dvFiles = files.filter(_.dv.isDefined)
     if (dvFiles.isEmpty) return scanDf
     import spark.implicits._
-    val maskMaxRows = spark.conf.getOption(LakeTable.DvMaskMaxRowsKey)
-      .map(_.toLong).getOrElse(LakeTable.DvMaskMaxRowsDefault)
+    val maskMaxRows = graft.core.SessionConf.nonNegativeLong(
+      spark, LakeTable.DvMaskMaxRowsKey, LakeTable.DvMaskMaxRowsDefault)
     // Tier 1 gates on BOTH the referenced cardinality sum and the DV
     // parquets' summed bytes: under the cumulative-superset contract a
     // DV parquet can hold far more rows (for fids superseded by later

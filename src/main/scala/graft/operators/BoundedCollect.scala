@@ -187,24 +187,30 @@ private[graft] object BoundedCollect {
     */
   val GateBytes: Long = 64L << 20
 
+  /** One bounded collect of `df`: its rows when they fit the caps,
+    * else a frame over the very RDD the gate ran. `df` is computed
+    * ONCE either way: past the caps the frame's shuffle map stages (an
+    * aggregate's corpus scan) are already done and are skipped, not
+    * recomputed — without the cache-build job and the memory a
+    * `persist` costs.
+    */
+  def collectOrFrame(df: DataFrame, maxRows: Long, maxBytes: Long): Either[Collected, DataFrame] = {
+    val (rdd, schema) = rowsOf(df)
+    collect(rdd, schema, maxRows, maxBytes) match {
+      case c: Collected => Left(c)
+      case _: Overflow => Right(SparkBridge.rowsFrame(df.sparkSession, rdd, schema))
+    }
+  }
+
   /** `left` joined with a small, data-dependent `right` (a quota, a
-    * vocabulary) through one bounded collect of `right` under
+    * vocabulary) through [[collectOrFrame]] of `right` under
     * (`maxRows`, [[GateBytes]]): when it fits, the rows join back as a
     * broadcast LocalRelation, so `left` never shuffles; past either cap
-    * the planner (and AQE at runtime) sizes the join itself. `right`
-    * is computed ONCE on both paths: past the caps the join reads the
-    * very RDD the gate ran, whose shuffle map stages (an aggregate's
-    * corpus scan) are already done and are skipped, not recomputed —
-    * without the cache-build job and the memory a `persist` costs.
+    * the planner (and AQE at runtime) sizes the join itself.
     */
   def joinBack(
       left: DataFrame, right: DataFrame, cond: Column, joinType: String,
-      maxRows: Int): DataFrame = {
-    val (rdd, schema) = rowsOf(right)
-    collect(rdd, schema, maxRows, GateBytes) match {
-      case c: Collected => left.join(broadcast(c.toFrame(left.sparkSession)), cond, joinType)
-      case _: Overflow =>
-        left.join(SparkBridge.rowsFrame(left.sparkSession, rdd, schema), cond, joinType)
-    }
-  }
+      maxRows: Int): DataFrame =
+    left.join(collectOrFrame(right, maxRows, GateBytes)
+      .fold(c => broadcast(c.toFrame(left.sparkSession)), identity), cond, joinType)
 }

@@ -1,24 +1,35 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField}
 import org.apache.spark.storage.StorageLevel
 
-/** Distributed connected components — the clustering step a dedup
-  * pipeline runs AFTER candidate-pair generation (MinHash/SimHash give
-  * near-duplicate PAIRS; keeping one document per duplicate CLUSTER
-  * needs the transitive closure of those pairs).
+/** Connected components — the clustering step a dedup pipeline runs
+  * AFTER candidate-pair generation (MinHash/SimHash give near-duplicate
+  * PAIRS; keeping one document per duplicate CLUSTER needs the
+  * transitive closure of those pairs).
   *
-  * Algorithm: alternating large-star / small-star (Kiveris et al.,
-  * "Connected Components in MapReduce and Beyond", SoCC 2014). Each
-  * round is two relational passes (explode edges by endpoint, groupBy
-  * node, re-emit edges toward the neighborhood minimum), and the edge
-  * set provably converges to per-component stars in O(log²  n) rounds —
-  * unlike naive label propagation, whose round count is the graph
-  * DIAMETER (a 1M-node chain needs 1M rounds; star-contraction needs
-  * ~20). Every pass is a hash shuffle on node id: no driver-side graph,
-  * no adjacency lists collected anywhere, so a round scales to
-  * billions of edges exactly like any other groupBy.
+  * Both paths reduce the distinct edge set to its star forest: one
+  * (vertex, component minimum) edge per non-root vertex.
+  *
+  * Small graphs (the common case): ONE [[BoundedCollect]] of the
+  * distinct edges under `smallGraphMaxEdges` rows and
+  * [[BoundedCollect.GateBytes]] bytes, a union-find pass on the driver
+  * ([[minRootStars]]), and the stars go back as a broadcast
+  * LocalRelation. No fingerprint, no persist, no single-task stage.
+  *
+  * Past either cap: alternating large-star / small-star (Kiveris et
+  * al., "Connected Components in MapReduce and Beyond", SoCC 2014),
+  * starting from a frame over the very RDD the gate ran, so the edge
+  * frame's map stages are skipped, not recomputed. Each round is two
+  * relational passes (explode edges by endpoint, groupBy node, re-emit
+  * edges toward the neighborhood minimum), and the edge set provably
+  * converges to per-component stars in O(log² n) rounds — unlike naive
+  * label propagation, whose round count is the graph DIAMETER (a
+  * 1M-node chain needs 1M rounds; star-contraction needs ~20). Every
+  * pass is a hash shuffle on node id, so a round scales to billions of
+  * edges exactly like any other groupBy.
   *
   * Between rounds the edge set is re-persisted and its lineage cut
   * (reliable `checkpoint` when the session has a checkpoint dir — the
@@ -57,25 +68,37 @@ object ConnectedComponents {
     relink.where(col("u") =!= col("v")).distinct()
   }
 
+  /** Edge-count cap of the small-graph path: up to this many distinct
+    * edges (and [[BoundedCollect.GateBytes]] of them, about 2.8M
+    * (long, long) rows, which binds first) the closure is ONE bounded
+    * collect and a driver-side union-find instead of distributed
+    * contraction rounds — each round is 4 shuffle stages + a
+    * convergence job, pure overhead when the edge set fits the driver
+    * (measured in the r10 q47 sf10 decomposition, where crossing the
+    * old 1M threshold accounted for most of a 21× jump). Pass 0 to
+    * force the distributed path.
+    */
+  val DefaultSmallGraphMaxEdges: Long = 4000000L
+
+  /** ids are contracted as longs; a silent cast would null out
+    * string/UUID ids and "succeed" with one (null,null) row — fail
+    * loudly instead (hash non-numeric ids to longs upstream).
+    */
+  private def requireIntegral(op: String, fields: StructField*): Unit =
+    fields.foreach { f =>
+      if (!Set[DataType](ByteType, ShortType, IntegerType, LongType)(f.dataType))
+        throw new IllegalArgumentException(
+          s"$op requires integral ids; column ${f.name} is " +
+            s"${f.dataType.simpleString} (hash it to a long first)")
+    }
+
   /** Component label for every vertex: (id, component) where component
     * is the minimum vertex id in the connected component. `edges` is an
     * undirected pair list (id_a, id_b) in its first two columns;
     * `vertices` supplies the full id universe so isolated vertices
-    * label themselves.
+    * label themselves: the distinct vertex set left-joined to the
+    * star forest.
     */
-  /** Edge-count threshold below which the transitive closure runs as
-    * ONE union-find task instead of distributed contraction rounds —
-    * the AQE-style runtime adaptivity decision: each distributed round
-    * is 4 shuffle stages + a convergence job, pure overhead when the
-    * deduplicated edge set fits a single task comfortably (4M edges =
-    * 64 MB of long pairs; the single-task union-find pass costs ~1-2 s
-    * where ONE distributed round costs more — measured in the r10
-    * q47 sf10 decomposition, where crossing the old 1M threshold
-    * accounted for most of a 21× jump). Pass 0 to force the
-    * distributed path.
-    */
-  val DefaultSmallGraphMaxEdges: Long = 4000000L
-
   def labels(vertices: DataFrame, idCol: String, edges: DataFrame): DataFrame =
     labels(vertices, idCol, edges, DefaultSmallGraphMaxEdges)
 
@@ -84,7 +107,39 @@ object ConnectedComponents {
       idCol: String,
       edges: DataFrame,
       smallGraphMaxEdges: Long): DataFrame = {
-    val spark = vertices.sparkSession
+    requireIntegral("ConnectedComponents", vertices.schema(idCol))
+    val s = stars(edges, smallGraphMaxEdges)
+    vertices.select(col(idCol).cast("long").as("id")).distinct()
+      .join(s.select(col("u").as("id"), col("v").as("component")), Seq("id"), "left")
+      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+  }
+
+  /** The star forest of `edges`' components: one (u, v) row per
+    * non-root vertex u, v its component's minimum id. Within the caps a
+    * broadcast LocalRelation; past them the converged contraction.
+    */
+  private def stars(edges: DataFrame, smallGraphMaxEdges: Long): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val Seq(ea, eb) = edges.columns.take(2).toSeq
+    requireIntegral("ConnectedComponents", edges.schema(ea), edges.schema(eb))
+    val distinctEdges = edges
+      .select(col(ea).cast("long").as("u"), col(eb).cast("long").as("v"))
+      .where(col("u") =!= col("v")).distinct()
+    BoundedCollect.collectOrFrame(distinctEdges, smallGraphMaxEdges, BoundedCollect.GateBytes) match {
+      // union-by-min-root makes each tree's root the component minimum,
+      // so these are the distributed path's stars (spec-compared)
+      case Left(c) => broadcast(
+        minRootStars(c.rows.iterator.map(r => (r.getLong(0), r.getLong(1)))).toSeq.toDF("u", "v"))
+      case Right(frame) => contract(frame)
+    }
+  }
+
+  /** The distributed large-/small-star rounds over a distinct edge
+    * frame (u, v), run to convergence.
+    */
+  private def contract(edges: DataFrame): DataFrame = {
+    val spark = edges.sparkSession
     val hasCkptDir = spark.sparkContext.getCheckpointDir.isDefined
     // Lineage cut with an explicit release handle: each round persists
     // ONE RDD instance and unpersists the superseded round once the
@@ -101,23 +156,6 @@ object ConnectedComponents {
         rdd.persist(StorageLevel.MEMORY_AND_DISK)
         (spark.createDataFrame(rdd, df.schema), () => { rdd.unpersist(blocking = false); () })
       }
-
-    val Seq(ea, eb) = edges.columns.take(2).toSeq
-    // ids are contracted as longs; a silent cast would null out
-    // string/UUID ids and "succeed" with one (null,null) row — fail
-    // loudly instead (hash non-numeric ids to longs upstream)
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val integral = Set[org.apache.spark.sql.types.DataType](
-      ByteType, ShortType, IntegerType, LongType)
-    (Seq(vertices.schema(idCol)) ++ Seq(edges.schema(ea), edges.schema(eb)))
-      .foreach { f =>
-        if (!integral(f.dataType))
-          throw new IllegalArgumentException(
-            s"ConnectedComponents requires integral ids; column ${f.name} is " +
-              s"${f.dataType.simpleString} (hash it to a long first)")
-      }
-    var (e, release) = cut(edges.select(col(ea).cast("long").as("u"), col(eb).cast("long").as("v"))
-      .where(col("u") =!= col("v")).distinct())
     // Convergence = identical edge set across a round. Both sides are
     // distinct (u,v) sets, so compare a one-pass fingerprint
     // (cardinality, sum of per-edge hashes): one tiny aggregation job
@@ -132,29 +170,9 @@ object ConnectedComponents {
       val r = df.agg(count(lit(1)), sum(xxhash64(col("u"), col("v")))).collect()(0)
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    var sig = fingerprint(e)
+    var (e, release) = cut(edges)
+    var sig = fingerprint(e) // materializes `e`
     var converged = sig._1 == 0L
-    // Small-graph fast path: the deduplicated edge set fits one task,
-    // so a single union-find pass (union-by-min-root + path
-    // compression, O(E α)) replaces every contraction round — one job
-    // instead of rounds × (4 shuffle stages + a convergence job). The
-    // labels are identical to the distributed path's (spec-compared):
-    // union-by-min-root makes each tree's root the component minimum.
-    if (!converged && sig._1 <= smallGraphMaxEdges) {
-      import spark.implicits._
-      val flat = e.select(col("u"), col("v")).as[(Long, Long)]
-        .coalesce(1)
-        .mapPartitions(minRootStars)
-        .toDF("u", "v")
-      val (stars, releaseStars) = cut(flat)
-      // checkpoint() is already eager; the persist branch needs an
-      // action to materialize blocks BEFORE freeing e they derive from
-      if (!hasCkptDir) stars.count()
-      release()
-      e = stars
-      release = releaseStars
-      converged = true
-    }
     var rounds = 0
     val maxRounds = 50
     while (!converged && rounds < maxRounds) {
@@ -175,16 +193,14 @@ object ConnectedComponents {
       throw new IllegalStateException(
         s"ConnectedComponents did not converge within $maxRounds rounds " +
           s"(${sig._1} edges remain); labels would be unreliable")
-    // After convergence small-star output is a star per component:
-    // u → component min. Isolated vertices keep their own id.
-    val verts = vertices.select(col(idCol).cast("long").as("id")).distinct()
-    verts.join(e.select(col("u").as("id"), col("v").as("component")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+    // after convergence small-star output is a star per component
+    e
   }
 
-  /** Partition-local union-find (union-by-min-root + path compression,
-    * O(E α)) over one partition's edges, shared by the [[labels]]
-    * small-graph fast path and [[spanningForest]]: one `(vertex, root)`
+  /** Union-find (union-by-min-root + path compression, O(E α)) over an
+    * edge iterator, shared by the small-graph path (on the driver, over
+    * the collected edges) and [[spanningForest]] (in each task, over
+    * its partition's edges): one `(vertex, root)`
     * star edge per non-root vertex seen, each root its tree's minimum
     * id. Roots never enter the map, so no self-edge is emitted.
     */
@@ -234,15 +250,7 @@ object ConnectedComponents {
     val spark = edges.sparkSession
     import spark.implicits._
     val Seq(ea, eb) = edges.columns.take(2).toSeq
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val integral = Set[org.apache.spark.sql.types.DataType](
-      ByteType, ShortType, IntegerType, LongType)
-    Seq(edges.schema(ea), edges.schema(eb)).foreach { f =>
-      if (!integral(f.dataType))
-        throw new IllegalArgumentException(
-          s"spanningForest requires integral ids; column ${f.name} is " +
-            s"${f.dataType.simpleString} (hash it to a long first)")
-    }
+    requireIntegral("spanningForest", edges.schema(ea), edges.schema(eb))
     edges.select(col(ea).cast("long"), col(eb).cast("long"))
       .where(col(ea) =!= col(eb)) // drops self-loops AND null endpoints
       .as[(Long, Long)]
@@ -251,15 +259,17 @@ object ConnectedComponents {
   }
 
   /** Min-id dedup applied: the rows of `rows` whose `idCol` is the
-    * minimum id of its connected component over `vertices` (id column
-    * `idCol`) and `edges` — the kept representative per near-dup
-    * cluster, as one left-semi join back onto `rows`.
+    * minimum id of its connected component over `edges` — the kept
+    * representative per near-dup cluster. A row is kept unless its id
+    * is null or a non-root of the star forest: one `left_anti` join
+    * onto `rows` (a broadcast within the small-graph caps), so `rows`
+    * never shuffles and rows sharing an id all survive together.
     */
-  def keepMinIds(rows: DataFrame, idCol: String, vertices: DataFrame, edges: DataFrame): DataFrame = {
-    val keep = labels(vertices, idCol, edges)
-      .where(col("id") === col("component"))
-      .select(col("id").as(idCol))
-    rows.join(keep, Seq(idCol), "left_semi")
+  def keepMinIds(rows: DataFrame, idCol: String, edges: DataFrame): DataFrame = {
+    requireIntegral("ConnectedComponents", rows.schema(idCol))
+    val nonRoots = stars(edges, DefaultSmallGraphMaxEdges).select(col("u").as("__cc_non_root"))
+    rows.where(col(idCol).isNotNull)
+      .join(nonRoots, col(idCol).cast("long") === col("__cc_non_root"), "left_anti")
   }
 
   /** Duplicate-cluster summary: one row per component with its size and

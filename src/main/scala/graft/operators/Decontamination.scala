@@ -22,20 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Decontamination {
 
-  /** Word n-grams of a text column; degenerate texts (< n words)
-    * collapse to the whole text — same convention as Dedup.shingles.
-    * (Kept as the string-gram surface; the contamination check itself
-    * hashes with `wordNgramHashes` below, which never materializes the
-    * gram strings.)
-    */
-  def wordNgrams(text: Column, n: Int): Column = {
-    val ws = TextAnalysis.words(text)
-    when(size(ws) < n, array(text)).otherwise(
-      transform(sequence(lit(1), size(ws) - (n - 1)), i =>
-        concat_ws(" ", (0 until n).map(o =>
-          element_at(ws, i + o)): _*)))
-  }
-
   /** Double polynomial rolling-hash moduli/multipliers: two
     * independent 30-bit folds over per-word 30-bit md5 values combine
     * to a 60-bit gram hash. All intermediates stay < 2^35, so the

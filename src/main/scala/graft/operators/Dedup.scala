@@ -405,11 +405,13 @@ object Dedup {
   /** The whole near-dup pipeline applied: MinHash-LSH candidate pairs
     * → connected components → keep the minimum-id representative of
     * every cluster. Returns the deduplicated corpus — the surviving
-    * rows with docs' exact schema and column order (left-semi join).
+    * rows with docs' exact schema and column order (left-anti join).
     *
-    * No cache to manage: bandingPairs consumes the signatures exactly
-    * once, and ConnectedComponents.labels materializes (and
-    * lineage-cuts) the pair graph itself before its convergence loop.
+    * No cache to manage: the signatures are computed exactly once, by
+    * the one bounded collect of the distinct edge set that
+    * ConnectedComponents.keepMinIds runs (past its caps the contraction
+    * rounds read the RDD that collect ran); within the caps the kept
+    * rows are `docs` anti-joined to the broadcast non-root ids.
     */
   def dedupCorpus(
       docs: DataFrame,
@@ -421,7 +423,7 @@ object Dedup {
     // closure is identical and edge growth stays linear in corpus
     // size where all-pairs grows with near-dup cluster size SQUARED
     val edges = lshClusterEdges(docs, idCol, textCol, k, bands)
-    ConnectedComponents.keepMinIds(docs, idCol, docs, edges)
+    ConnectedComponents.keepMinIds(docs, idCol, edges)
   }
 
   /** Exact set-overlap counts for candidate pairs, computed with the
@@ -1006,7 +1008,7 @@ object Dedup {
       bands: Int = 4,
       minJaccard: Double = 0.5): DataFrame = {
     val edges = lshVerifiedClusterEdges(docs, idCol, textCol, k, bands, minJaccard)
-    ConnectedComponents.keepMinIds(docs, idCol, docs, edges)
+    ConnectedComponents.keepMinIds(docs, idCol, edges)
   }
 
   /** Char n-gram Jaccard stats for candidate pairs — the char-level

@@ -234,7 +234,7 @@ object Similarity {
       "Use lshTopKFrames/ivfTopKFrames (bucket equi-joins) at this " +
       s"scale, raise the caps, or set $AnnForceJoinKey=true to submit " +
       "the join anyway."
-    if (spark.conf.getOption(AnnForceJoinKey).exists(_.toBoolean)) log.warn(msg)
+    if (graft.core.SessionConf.boolean(spark, AnnForceJoinKey, default = false)) log.warn(msg)
     else throw new graft.core.UserException(msg)
   }
 

@@ -3,7 +3,6 @@ package graft.operators
 import graft.core.TableDef
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
 
 /** The cast-and-rename projection (P2/P3 in SURVEY.md §2.4) — the only
   * scalar expression in the reference's whole data path:
@@ -26,12 +25,6 @@ object StageCast {
       col(s"_c$i").cast(f.dataType).as(f.name)
     }.toSeq: _*)
   }
-
-  /** Cast a named DataFrame to a target schema column-by-column
-    * (parquet/file inputs, where names already exist).
-    */
-  def toSchema(df: DataFrame, schema: StructType): DataFrame =
-    df.select(schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
 
   /** Round-trip through an all-string stage and back — the exact
     * shape of reference entry point B (stage table of STRINGs, then

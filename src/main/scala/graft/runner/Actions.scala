@@ -1,10 +1,7 @@
 package graft.runner
 
-import graft.core.{BaseTypes, TableDef}
-import graft.lake.LakeTable
+import graft.core.TableDef
 import org.apache.spark.sql.SparkSession
-
-import java.nio.file.Path
 
 /** Sync actions (SURVEY.md §2.8, C1-C5): the component's query-less
   * metadata API, returning `SelectElement`-shaped (value, label) lists
@@ -44,11 +41,4 @@ object Actions {
     */
   def listTableColumns(table: TableDef): Seq[SelectElement] =
     table.columns.map(c => SelectElement(c, s"$c (${table.baseTypeOf(c)})"))
-
-  /** Columns of an existing lake table, with recovered base types. */
-  def listLakeTableColumns(spark: SparkSession, path: Path): Seq[SelectElement] = {
-    val snap = new LakeTable(spark, path).snapshotNow
-    snap.schema.fields.toSeq.map(f =>
-      SelectElement(f.name, s"${f.name} (${BaseTypes.fromSpark(f.dataType)})"))
-  }
 }

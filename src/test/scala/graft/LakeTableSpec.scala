@@ -326,6 +326,26 @@ class LakeTableSpec extends AnyFunSuite {
     assert(viaMask.map(r => (r.getLong(0), r.getString(1), r.getDouble(2))) == expect)
   }
 
+  test("a malformed DV mask tier conf fails with a UserException naming key and value") {
+    val t = LakeTable.forPath(spark, tmpTable())
+    t.write((1L to 100L).map(i => (i, s"v$i")).toDF("id", "v"), "append")
+    t.alterSetProperties(Map("graft.merge.mode" -> "merge-on-read"))
+    t.delete($"id" % 10 === 0)
+    assert(t.hasDeletionVectors)
+    for (bad <- Seq("lots", "-1", "1.5")) {
+      spark.conf.set(LakeTable.DvMaskMaxRowsKey, bad)
+      try {
+        val ex = intercept[UserException](t.read())
+        assert(ex.getMessage.contains(LakeTable.DvMaskMaxRowsKey) &&
+          ex.getMessage.contains(s"'$bad'"), ex.getMessage)
+      } finally spark.conf.unset(LakeTable.DvMaskMaxRowsKey)
+    }
+    // a Long past Int range is a valid row count
+    spark.conf.set(LakeTable.DvMaskMaxRowsKey, "4294967296")
+    try assert(t.read().count() == 90L)
+    finally spark.conf.unset(LakeTable.DvMaskMaxRowsKey)
+  }
+
   test("fully-gutted files are pruned from the scan list, not masked") {
     val t = LakeTable.forPath(spark, tmpTable())
     t.write((1L to 4000L).map(i => (i, s"v$i")).toDF("id", "v"), "append")

@@ -2510,6 +2510,31 @@ class OperatorSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
+  test("a malformed ANN force-join conf fails with a UserException naming key and value") {
+    val rnd = new scala.util.Random(5)
+    val emb = (1L to 30L).map(i => (i, Array.fill(4)(rnd.nextGaussian()))).toDF("id", "vec")
+    def overCap() = Similarity.bruteForceTopK(emb, "id", "vec", lit(true),
+      k = 2, maxEmbeddedProbes = 3, maxChunkedProbes = 10)
+    for (bad <- Seq("yes", "1", "")) {
+      spark.conf.set(Similarity.AnnForceJoinKey, bad)
+      try {
+        val ex = intercept[graft.core.UserException](overCap())
+        assert(ex.getMessage.contains(Similarity.AnnForceJoinKey) &&
+          ex.getMessage.contains(s"'$bad'"), ex.getMessage)
+      } finally spark.conf.unset(Similarity.AnnForceJoinKey)
+    }
+    // any case of true/false parses
+    spark.conf.set(Similarity.AnnForceJoinKey, "TRUE")
+    try {
+      val single = Similarity.bruteForceTopK(emb, "id", "vec", lit(true), k = 2)
+      val joined = overCap()
+      assert(joined.except(single).isEmpty && single.except(joined).isEmpty)
+    } finally spark.conf.unset(Similarity.AnnForceJoinKey)
+    spark.conf.set(Similarity.AnnForceJoinKey, "False")
+    try assert(!intercept[graft.core.UserException](overCap()).getMessage.contains("'False'"))
+    finally spark.conf.unset(Similarity.AnnForceJoinKey)
+  }
+
   test("ANN output schema is regime-independent: INT ids widen to BIGINT in every regime") {
     val rnd = new scala.util.Random(37)
     // INT ids (not long): r15's regimes disagreed on the output type
