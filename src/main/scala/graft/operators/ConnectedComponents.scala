@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SparkBridge
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField}
 import org.apache.spark.storage.StorageLevel
 
@@ -14,10 +18,11 @@ import org.apache.spark.storage.StorageLevel
   * (vertex, component minimum) edge per non-root vertex.
   *
   * Small graphs (the common case): ONE [[BoundedCollect]] of the
-  * distinct edges under `smallGraphMaxEdges` rows and
-  * [[BoundedCollect.GateBytes]] bytes, a union-find pass on the driver
-  * ([[minRootStars]]), and the stars go back as a broadcast
-  * LocalRelation. No fingerprint, no persist, no single-task stage.
+  * distinct edges under [[BoundedCollect.GateBytes]] bytes (about 2.8M
+  * edges; a `smallGraphMaxEdges` row cap when one is passed), a
+  * union-find pass on the driver ([[minRootStars]]), and the stars go
+  * back as a broadcast LocalRelation. No fingerprint, no persist, no
+  * single-task stage.
   *
   * Past either cap: alternating large-star / small-star (Kiveris et
   * al., "Connected Components in MapReduce and Beyond", SoCC 2014),
@@ -68,17 +73,18 @@ object ConnectedComponents {
     relink.where(col("u") =!= col("v")).distinct()
   }
 
-  /** Edge-count cap of the small-graph path: up to this many distinct
-    * edges (and [[BoundedCollect.GateBytes]] of them, about 2.8M
-    * (long, long) rows, which binds first) the closure is ONE bounded
+  /** Edge-count cap of the small-graph path. By default only the byte
+    * cap applies: within [[BoundedCollect.GateBytes]] of distinct edges
+    * (64 MB, about 2.8M (long, long) rows) the closure is ONE bounded
     * collect and a driver-side union-find instead of distributed
     * contraction rounds — each round is 4 shuffle stages + a
     * convergence job, pure overhead when the edge set fits the driver
     * (measured in the r10 q47 sf10 decomposition, where crossing the
-    * old 1M threshold accounted for most of a 21× jump). Pass 0 to
-    * force the distributed path.
+    * old 1M threshold accounted for most of a 21× jump). Pass a
+    * smaller cap to bound the rows too, 0 to force the distributed
+    * path.
     */
-  val DefaultSmallGraphMaxEdges: Long = 4000000L
+  val DefaultSmallGraphMaxEdges: Long = Long.MaxValue
 
   /** ids are contracted as longs; a silent cast would null out
     * string/UUID ids and "succeed" with one (null,null) row — fail
@@ -120,19 +126,44 @@ object ConnectedComponents {
     */
   private def stars(edges: DataFrame, smallGraphMaxEdges: Long): DataFrame = {
     val spark = edges.sparkSession
-    import spark.implicits._
     val Seq(ea, eb) = edges.columns.take(2).toSeq
     requireIntegral("ConnectedComponents", edges.schema(ea), edges.schema(eb))
     val distinctEdges = edges
       .select(col(ea).cast("long").as("u"), col(eb).cast("long").as("v"))
       .where(col("u") =!= col("v")).distinct()
     BoundedCollect.collectOrFrame(distinctEdges, smallGraphMaxEdges, BoundedCollect.GateBytes) match {
-      // union-by-min-root makes each tree's root the component minimum,
-      // so these are the distributed path's stars (spec-compared)
-      case Left(c) => broadcast(
-        minRootStars(c.rows.iterator.map(r => (r.getLong(0), r.getLong(1)))).toSeq.toDF("u", "v"))
+      case Left(c) => broadcast(driverStars(spark, c.rows))
       case Right(frame) => contract(frame)
     }
+  }
+
+  /** The small-graph stars: [[minRootStars]] over the collected edge
+    * rows on the driver (union-by-min-root makes each tree's root the
+    * component minimum, so these are the distributed path's stars —
+    * spec-compared), as a LocalRelation of (u, v) rows.
+    *
+    * Each edge row is released as the union-find reads it, and the
+    * stars go straight into the relation's row array, so the driver
+    * never holds the edge rows, the union-find map and the stars all
+    * at once. Measured heap on a 1M-edge matching (the worst case: one
+    * non-root per edge): the collected rows take about 90 bytes per
+    * 24-byte edge row, and the map plus the star rows about 155 bytes
+    * per non-root vertex, which is the peak. Non-roots never outnumber
+    * the edges, so at the 64 MB cap (about 2.8M edges) the peak is at
+    * most about 440 MB. Executing the broadcast then copies the stars
+    * into its hashed relation.
+    */
+  private def driverStars(spark: SparkSession, rows: Array[InternalRow]): DataFrame = {
+    val edges = Iterator.range(0, rows.length).map { i =>
+      val r = rows(i)
+      rows(i) = null
+      (r.getLong(0), r.getLong(1))
+    }
+    val stars = minRootStars(edges).map { case (u, v) => InternalRow(u, v) }.toArray
+    SparkBridge.ofRows(spark, LocalRelation(
+      Seq(AttributeReference("u", LongType, nullable = false)(),
+        AttributeReference("v", LongType, nullable = false)()),
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(stars)))
   }
 
   /** The distributed large-/small-star rounds over a distinct edge
